@@ -3,7 +3,6 @@ package graft.pipeline
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
-import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructField, StructType}
 
 /**
  * Streaming exact deduplication over a document stream: the online
@@ -25,9 +24,6 @@ import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructFiel
  */
 object StreamDedup {
 
-  private val stagedSchema = StructType(Seq(
-    StructField("doc_id", LongType), StructField("fp", StringType)))
-
   /** The off-heap state store for corpus-cardinality state: exact
     * dedup holds ~one entry per unique document, which on the default
     * HDFS-backed (on-heap) provider is an executor-memory bound at
@@ -43,52 +39,43 @@ object StreamDedup {
     * one-shot harness, not concurrent). */
   @volatile private[graft] var lastStateMetrics: Option[(Long, Long)] = None
 
-  /** Sub-files staged per micro-batch: each chunk is written as up to
-    * this many range files and the source consumes them together
-    * (`maxFilesPerTrigger = subFiles`), so a trigger's read/map stage
-    * has one task PER FILE instead of one task per batch — the serial
-    * per-trigger map was the scale bottleneck (a 100 TB chunk is one
-    * task when staged as one file). Derived from the session's slots,
-    * never a constant: at low core counts this degrades to the old
-    * one-file shape. Decisions are chunking-invariant (spec-pinned),
-    * so grouping k range files per trigger preserves the doc_id-ordered
-    * replay contract as long as every batch is a contiguous id range —
-    * which consecutive range files are by construction. */
+  /** Range files staged per micro-batch, as [[graft.ReplayStage]]'s
+    * `filesPerChunk`: each chunk is written as up to this many doc_id
+    * range files and one trigger consumes them together, so a
+    * trigger's read/map stage has one task PER FILE instead of one task
+    * per batch — the serial per-trigger map was the scale bottleneck (a
+    * 100 TB chunk is one task when staged as one file).
+    *
+    * The bound is `slots / nChunks` tasks per trigger, by decision: the
+    * total file count stays at about one per slot, so a chunk fills
+    * `1 / nChunks` of the session (at 32 cores and 8 chunks, 4 of 32
+    * slots), and at low core counts this degrades to the one-file
+    * shape. Full per-trigger fill (`slots` files per chunk) would
+    * multiply the staged files by `nChunks` for the same triggers.
+    * Decisions are chunking-invariant (spec-pinned), and consecutive
+    * range files keep every batch a contiguous doc_id range.
+    *
+    * The TS streams (anomaly, sessions, GROUPBY, sketch, monitors,
+    * compaction, TSBS ingest) keep one file per chunk: sub-chunking them
+    * would change their per-trigger partitioning, and no benchmark
+    * workload runs those operators to show it pays. */
   private def subFilesPerChunk(spark: SparkSession, nChunks: Int): Int =
     math.max(1, spark.sparkContext.defaultParallelism / math.max(1, nChunks))
 
-  /** Range-stages `df` (already keyed by ascending `doc_id`) as
-    * `nChunks` doc_id-contiguous chunk groups of `sub` files each and
-    * stamps ascending mtimes in range order, so `maxFilesPerTrigger =
-    * sub` replays exactly the chunk groups: batch i = files
-    * [i*sub, (i+1)*sub) = one contiguous doc_id range. Empty range
-    * partitions write no file; consecutive grouping stays contiguous
-    * regardless, so a short tail group only shifts batch boundaries,
-    * never id order. */
-  private def stageRangeChunks(df: DataFrame, srcStage: String,
-      nChunks: Int, sub: Int): Unit = {
-    df.repartitionByRange(nChunks * sub, col("doc_id"))
-      .write.mode("overwrite").parquet(srcStage)
-    val files = new java.io.File(srcStage).listFiles()
-      .filter(_.getName.startsWith("part-")).sortBy(_.getName)
-    require(files.nonEmpty && files.length <= nChunks * sub,
-      s"staging produced ${files.length} files for $nChunks chunks x $sub")
-    files.zipWithIndex.foreach { case (f, i) =>
-      f.setLastModified(1000000000000L + i * 60000L)
-    }
-  }
+  /** `df` (keyed by `doc_id`) replayed in `nChunks` ascending doc_id
+    * ranges of [[subFilesPerChunk]] files each. */
+  private def replayByDocId(spark: SparkSession, df: DataFrame,
+      nChunks: Int): DataFrame =
+    graft.ReplayStage(df, Seq(col("doc_id")), nChunks,
+      subFilesPerChunk(spark, nChunks)).stream
 
-  /** First-arrival winners per fingerprint over a staged file stream:
-    * `(fp, doc_id)`. `srcStage` files replay `subFiles` per
-    * micro-batch in mtime (= doc_id range) order. State per fp = the
-    * min doc_id seen (a bare Long — primitive state encodes without
+  /** First-arrival winners per fingerprint over a doc_id-ordered
+    * `(doc_id, fp)` replay: `(fp, doc_id)`. State per fp = the min
+    * doc_id seen (a bare Long — primitive state encodes without
     * bean/case-class codegen). */
-  private def runDedup(spark: SparkSession, srcStage: String,
-      subFiles: Int): DataFrame = {
+  private def runDedup(spark: SparkSession, staged: DataFrame): DataFrame = {
     import spark.implicits._
-    val out = spark.readStream.schema(stagedSchema)
-      .option("maxFilesPerTrigger", subFiles.toString)
-      .parquet(srcStage)
+    val out = staged
       .as[(Long, String)]
       .groupByKey(_._2)
       .flatMapGroupsWithState(
@@ -138,10 +125,7 @@ object StreamDedup {
         if (useRocksDb) RocksDbProvider
         else spark.conf.get("spark.sql.streaming.stateStore.providerClass")) {
     val docs = Text.loadDocuments(spark, dir)
-    val srcStage = graft.Scratch.dir("graft_sdedup_src_").resolve("stage").toString
-    val sub = subFilesPerChunk(spark, nChunks)
-    stageRangeChunks(Text.fingerprint(docs), srcStage, nChunks, sub)
-    runDedup(spark, srcStage, sub)
+    runDedup(spark, replayByDocId(spark, Text.fingerprint(docs), nChunks))
   } }
 
   /** Oracle: ascending replay makes the streaming winner the global
@@ -203,10 +187,6 @@ object StreamDedup {
       .select(col("doc_id"), col("bb.band"), col("bb.bucket"))
   }
 
-  private val gateSchema = StructType(Seq(
-    StructField("doc_id", LongType), StructField("band", IntegerType),
-    StructField("bucket", StringType)))
-
   /**
    * Online near-dup admission gate — the production crawl-ingest
    * shape: a document is ADMITTED iff none of its MinHash band
@@ -226,12 +206,9 @@ object StreamDedup {
    * Emits `(doc_id, band, clash)` per band row into an append log;
    * the read side folds to `(doc_id, n_clash, kept)`.
    */
-  private def runGate(spark: SparkSession, srcStage: String,
-      subFiles: Int): DataFrame = {
+  private def runGate(spark: SparkSession, staged: DataFrame): DataFrame = {
     import spark.implicits._
-    val out = spark.readStream.schema(gateSchema)
-      .option("maxFilesPerTrigger", subFiles.toString)
-      .parquet(srcStage)
+    val out = staged
       .as[(Long, Int, String)]
       .groupByKey(r => (r._2, r._3))
       .flatMapGroupsWithState(
@@ -276,11 +253,8 @@ object StreamDedup {
         if (useRocksDb) RocksDbProvider
         else spark.conf.get("spark.sql.streaming.stateStore.providerClass")) {
     val docs = Text.loadDocuments(spark, dir)
-    val srcStage = graft.Scratch.dir("graft_sgate_src_").resolve("stage").toString
-    val sub = subFilesPerChunk(spark, nChunks)
-    stageRangeChunks(bandBucketsMd5(docs, numHashes, bandRows),
-      srcStage, nChunks, sub)
-    runGate(spark, srcStage, sub)
+    runGate(spark,
+      replayByDocId(spark, bandBucketsMd5(docs, numHashes, bandRows), nChunks))
   } }
 
   /** The shared toks→shingles→signatures→band-buckets CTE chain over

@@ -568,7 +568,7 @@ object Compaction {
    * (tsdb.c:621-668) at micro-batch granularity.
    *
    * The source is staged into `nChunks` files replayed one per
-   * micro-batch (`maxFilesPerTrigger=1`). By default chunks are TS
+   * micro-batch ([[graft.ReplayStage]]). By default chunks are TS
    * RANGES — the realistic mostly-in-order arrival, under which each
    * batch recomputes only its own new buckets and total work ≈ one full
    * materialization. `oooSplit=true` stages hash-split chunks instead,
@@ -609,40 +609,31 @@ object Compaction {
       }
     // ONE staging job: range-partition by chunk id (values 0..n-1 map
     // monotonically to part-00000..n files) instead of n filtered
-    // full-source scans; file mtimes are then stamped in chunk order so
-    // the file source replays them as intended (it orders by mtime).
+    // full-source scans; the replay stage stamps file mtimes in chunk
+    // order so the file source replays them as intended.
     // (series, ts) trail the range key: sampling over the 0..n-1 chunk
     // ids ALONE has too few distinct values and can merge two ids into
     // one partition (ADVICE r05 — observed at nChunks=5 on the small
     // fixture); with the fine-grained tail the sampler always finds n
-    // distinct cut points, and __c leading keeps files chunk-ordered.
-    // Chunk boundaries are APPROXIMATE (ADVICE r06): sampled range
-    // bounds can land mid-chunk, so file i may carry a fringe of the
-    // adjacent chunk's rows — the nChunks check below catches merged
-    // ids, not fringes. Replay correctness doesn't care (the spec pins
-    // split-independence); only per-file accounting is approximate.
-    samples.withColumn("__c", chunkOf)
-      .repartitionByRange(nChunks, col("__c"), col("series"), col("ts"))
-      .drop("__c") // staging column must not leak into the staged files
-      .write.mode("overwrite").parquet(srcStage)
-    locally {
-      val files = new java.io.File(srcStage).listFiles()
-        .filter(f => f.getName.startsWith("part-")).sortBy(_.getName)
-      // the range partitioner's SAMPLED bounds could merge two chunk
-      // ids into one file (ADVICE r05) — then replay granularity, and
-      // any per-batch accounting derived from it (ScaleProbe divides by
-      // nChunks), silently shrinks; fail loudly instead
-      require(files.length == nChunks,
-        s"staging produced ${files.length} files for $nChunks chunks " +
-          s"(range bounds merged chunk ids, or the source under $dir is too small)")
-      files.zipWithIndex.foreach { case (f, i) =>
-        f.setLastModified(1000000000000L + i * 60000L)
-      }
-    }
+    // distinct cut points, and the chunk id leading keeps files
+    // chunk-ordered. Chunk boundaries are APPROXIMATE:
+    // sampled range bounds can land mid-chunk, so file i may carry a
+    // fringe of the adjacent chunk's rows — the nChunks check below
+    // catches merged ids, not fringes. Replay correctness doesn't care
+    // (the spec pins split-independence); only per-file accounting is
+    // approximate. The stage lives under `workDir` next to the logs, so
+    // a caller can read each chunk's files back.
+    val staged = graft.ReplayStage(samples,
+      Seq(chunkOf, col("series"), col("ts")), nChunks, dir = srcStage)
+    // the range partitioner's SAMPLED bounds could merge two chunk ids
+    // into one file — then replay granularity, and any
+    // per-batch accounting derived from it (ScaleProbe divides by
+    // nChunks), silently shrinks; fail loudly instead
+    require(staged.files == nChunks,
+      s"staging produced ${staged.files} files for $nChunks chunks " +
+        s"(range bounds merged chunk ids, or the source under $dir is too small)")
     val bkt = TSModel.bucketStart(col("ts"), rule.bucketMs, rule.alignMs)
-    val q = spark.readStream.schema(sampleSchema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(srcStage)
+    val q = staged.stream
       .writeStream.outputMode("append")
       .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
         batch.withColumn("__bkt", bkt)

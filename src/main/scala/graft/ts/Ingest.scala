@@ -202,16 +202,13 @@ object Ingest {
     * through the merge-on-read sink: every batch's emissions append to
     * `sinkDir` stamped with the batch id; the read side resolves each
     * (series, ts) by the duplicate policy over (batch_id, seq) order.
-    * `maxFilesPerTrigger=1` forces one micro-batch per file so
-    * cross-batch state is really exercised. */
+    * [[graft.ReplayStage.reader]] replays one file per micro-batch, in
+    * mtime order, so cross-batch state is really exercised. */
   def streamingIngestOnce(
       spark: SparkSession, srcDir: String, sinkDir: String, dupPolicy: String,
       ignoreMaxTimeDiff: Long = 0L, ignoreMaxValDiff: Double = 0.0): DataFrame =
       Compaction.withStatePartitions(spark, 8) {
-    val src = spark.readStream
-      .schema(Compaction.sampleSchema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(srcDir)
+    val src = graft.ReplayStage.reader(spark, srcDir, Compaction.sampleSchema)
     runIngest(spark, src, sinkDir, dupPolicy, ignoreMaxTimeDiff, ignoreMaxValDiff)
   }
 

@@ -155,20 +155,7 @@ object SketchStore {
     var s = samples.select(col("series"), col("ts"), col("value"))
     fromMs.foreach(f => s = s.filter(col("ts") >= f))
     toMs.foreach(t => s = s.filter(col("ts") <= t))
-    val srcStage = graft.Scratch.dir("graft_sketch_src_").resolve("stage").toString
-    s.repartitionByRange(nChunks, col("ts"))
-      .write.mode("overwrite").parquet(srcStage)
-    locally {
-      val files = new java.io.File(srcStage).listFiles()
-        .filter(_.getName.startsWith("part-")).sortBy(_.getName)
-      files.zipWithIndex.foreach { case (f, i) =>
-        f.setLastModified(1000000000000L + i * 60000L)
-      }
-    }
-    val qy = spark.readStream
-      .schema(Compaction.sampleSchema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(srcStage)
+    val qy = graft.ReplayStage(s, Seq(col("ts")), nChunks).stream
       .writeStream
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
         // first batch bootstraps; later ones fold in — identical state

@@ -32,18 +32,39 @@ object StreamAnomaly {
   /** minimum prior samples before a score is meaningful */
   val MinPrefix = 5
 
-  /** Read a foreachBatch parquet sink with a known schema. A run that
-    * flags zero rows writes no part files, so schema inference would
-    * throw — return an empty frame of the declared schema instead. */
-  private def readSink(
-      spark: SparkSession, sinkDir: String,
-      schema: org.apache.spark.sql.types.StructType): DataFrame = {
-    val d = new java.io.File(sinkDir)
-    val parts = Option(d.listFiles()).getOrElse(Array.empty)
-      .exists(_.getName.startsWith("part-"))
-    if (parts) spark.read.schema(schema).parquet(sinkDir)
-    else spark.createDataFrame(
-      spark.sparkContext.emptyRDD[Row], schema)
+  /** Drain `out` through a foreachBatch parquet sink and read it back
+    * with `out`'s schema. A run that emits no rows writes no part files,
+    * so schema inference would throw — return an empty frame of that
+    * schema instead. */
+  private[ts] def drain(spark: SparkSession, out: DataFrame): DataFrame = {
+    val sinkDir = graft.Scratch.dir("graft_sanom_").resolve("out").toString
+    out.writeStream.outputMode("append")
+      .foreachBatch { (batch: Dataset[Row], _: Long) =>
+        batch.write.mode("append").parquet(sinkDir)
+        ()
+      }
+      .trigger(Trigger.AvailableNow())
+      .start()
+      .awaitTermination()
+    val parts = Option(new java.io.File(sinkDir).listFiles())
+      .getOrElse(Array.empty).exists(_.getName.startsWith("part-"))
+    if (parts) spark.read.schema(out.schema).parquet(sinkDir)
+    else spark.createDataFrame(spark.sparkContext.emptyRDD[Row], out.schema)
+  }
+
+  /** The in-range, non-NaN `(series, ts, value)` samples, widened by
+    * `keyed`, replayed in up to `nChunks` ts-ordered micro-batches, one
+    * file per trigger (the TS streaming family's staging discipline).
+    * An input with fewer distinct ts than `nChunks` stages fewer files,
+    * and so fewer triggers, like every other replay. */
+  private def replay(
+      samples: DataFrame, fromMs: Option[Long], toMs: Option[Long],
+      nChunks: Int)(keyed: DataFrame => DataFrame = identity): DataFrame = {
+    var s = samples.filter(!isnan(col("value")))
+    fromMs.foreach(f => s = s.filter(col("ts") >= f))
+    toMs.foreach(t => s = s.filter(col("ts") <= t))
+    graft.ReplayStage(keyed(s.select(col("series"), col("ts"), col("value"))),
+      Seq(col("ts")), nChunks).stream
   }
 
   /** Run `body` under the requested state-store provider (RocksDB =
@@ -57,19 +78,16 @@ object StreamAnomaly {
       if (useRocksDb) graft.pipeline.StreamDedup.RocksDbProvider
       else spark.conf.get("spark.sql.streaming.stateStore.providerClass"))(body)
 
-  private def runZscore(
-      spark: SparkSession, srcStage: String, threshold: Double): DataFrame = {
+  /** One-shot replay of a samples frame in `nChunks` time-ordered
+    * micro-batches through the streaming scorer. */
+  def zscoreStreamOnce(
+      spark: SparkSession, samples: DataFrame, threshold: Double,
+      fromMs: Option[Long] = None, toMs: Option[Long] = None,
+      nChunks: Int = 8, useRocksDb: Boolean = false): DataFrame =
+      Compaction.withStatePartitions(spark, 8) {
+      withProvider(spark, useRocksDb) {
     import spark.implicits._
-    val out = spark.readStream
-      .schema(org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("series",
-          org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("ts",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("value",
-          org.apache.spark.sql.types.DoubleType))))
-      .option("maxFilesPerTrigger", "1")
-      .parquet(srcStage)
+    val out = replay(samples, fromMs, toMs, nChunks)()
       .as[(String, Long, Double)]
       .groupByKey(_._1)
       .flatMapGroupsWithState(
@@ -100,45 +118,7 @@ object StreamAnomaly {
           flagged.iterator
       }
       .toDF("series", "ts", "value", "z_value")
-    val sinkDir = graft.Scratch.dir("graft_sanom_").resolve("out").toString
-    val q = out.writeStream.outputMode("append")
-      .foreachBatch { (batch: Dataset[Row], _: Long) =>
-        batch.write.mode("append").parquet(sinkDir)
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    readSink(spark, sinkDir, out.schema)
-  }
-
-  /** One-shot replay of a samples frame in `nChunks` time-ordered
-    * micro-batches through the streaming scorer (the TS streaming
-    * family's staging discipline: range-partition by ts, mtime-ordered
-    * files, one file per trigger). */
-  def zscoreStreamOnce(
-      spark: SparkSession, samples: DataFrame, threshold: Double,
-      fromMs: Option[Long] = None, toMs: Option[Long] = None,
-      nChunks: Int = 8, useRocksDb: Boolean = false): DataFrame =
-      Compaction.withStatePartitions(spark, 8) {
-      withProvider(spark, useRocksDb) {
-    var s = samples.filter(!isnan(col("value")))
-    fromMs.foreach(f => s = s.filter(col("ts") >= f))
-    toMs.foreach(t => s = s.filter(col("ts") <= t))
-    val srcStage = graft.Scratch.dir("graft_sanom_src_").resolve("stage").toString
-    s.select(col("series"), col("ts"), col("value"))
-      .repartitionByRange(nChunks, col("ts"))
-      .write.mode("overwrite").parquet(srcStage)
-    locally {
-      val files = new java.io.File(srcStage).listFiles()
-        .filter(_.getName.startsWith("part-")).sortBy(_.getName)
-      require(files.length == nChunks,
-        s"staging produced ${files.length} files for $nChunks chunks")
-      files.zipWithIndex.foreach { case (f, i) =>
-        f.setLastModified(1000000000000L + i * 60000L)
-      }
-    }
-    runZscore(spark, srcStage, threshold)
+    drain(spark, out)
   } }
 
   /**
@@ -158,42 +138,14 @@ object StreamAnomaly {
       Compaction.withStatePartitions(spark, 8) {
       withProvider(spark, useRocksDb) {
     import spark.implicits._
-    var s = samples.filter(!isnan(col("value")))
-    fromMs.foreach(f => s = s.filter(col("ts") >= f))
-    toMs.foreach(t => s = s.filter(col("ts") <= t))
-    val keyed = Seasonal.withSeason(s, mode)
-      .select(col("series"), col("ts"), col("value"), col("season"))
-    val srcStage = graft.Scratch.dir("graft_sseas_src_").resolve("stage").toString
-    keyed.repartitionByRange(nChunks, col("ts"))
-      .write.mode("overwrite").parquet(srcStage)
-    locally {
-      val files = new java.io.File(srcStage).listFiles()
-        .filter(_.getName.startsWith("part-")).sortBy(_.getName)
-      require(files.length == nChunks,
-        s"staging produced ${files.length} files for $nChunks chunks")
-      files.zipWithIndex.foreach { case (f, i) =>
-        f.setLastModified(1000000000000L + i * 60000L)
-      }
-    }
-    val out = spark.readStream
-      .schema(org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("series",
-          org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("ts",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("value",
-          org.apache.spark.sql.types.DoubleType),
-        org.apache.spark.sql.types.StructField("season",
-          org.apache.spark.sql.types.LongType))))
-      .option("maxFilesPerTrigger", "1")
-      .parquet(srcStage)
+    val out = replay(samples, fromMs, toMs, nChunks)(Seasonal.withSeason(_, mode))
       .as[(String, Long, Double, Long)]
       .groupByKey(r => (r._1, r._4))
       .flatMapGroupsWithState(
         OutputMode.Append, GroupStateTimeout.NoTimeout) {
         (key: (String, Long), rows: Iterator[(String, Long, Double, Long)],
          state: GroupState[(Long, Double, Double)]) =>
-          // Welford (n, mean, M2) — see runZscore for why not sumsq.
+          // Welford (n, mean, M2) — see zscoreStreamOnce for why not sumsq.
           var (n, mean, m2) = state.getOption.getOrElse((0L, 0.0, 0.0))
           val flagged = scala.collection.mutable.ArrayBuffer
             .empty[(String, Long, Double, Long, Double)]
@@ -215,16 +167,7 @@ object StreamAnomaly {
           flagged.iterator
       }
       .toDF("series", "ts", "value", "season", "s_value")
-    val sinkDir = graft.Scratch.dir("graft_sseas_").resolve("out").toString
-    val q = out.writeStream.outputMode("append")
-      .foreachBatch { (batch: Dataset[Row], _: Long) =>
-        batch.write.mode("append").parquet(sinkDir)
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    readSink(spark, sinkDir, out.schema)
+    drain(spark, out)
   } }
 
   /** Oracle for [[seasonalStreamOnce]]: prefix stats as a cumulative
@@ -273,32 +216,7 @@ object StreamAnomaly {
       withProvider(spark, useRocksDb) {
     import spark.implicits._
     require(q >= 0 && q <= 1 && span > 0)
-    var s = samples.filter(!isnan(col("value")))
-    fromMs.foreach(f => s = s.filter(col("ts") >= f))
-    toMs.foreach(t => s = s.filter(col("ts") <= t))
-    val srcStage = graft.Scratch.dir("graft_srq_src_").resolve("stage").toString
-    s.select(col("series"), col("ts"), col("value"))
-      .repartitionByRange(nChunks, col("ts"))
-      .write.mode("overwrite").parquet(srcStage)
-    locally {
-      val files = new java.io.File(srcStage).listFiles()
-        .filter(_.getName.startsWith("part-")).sortBy(_.getName)
-      require(files.length == nChunks,
-        s"staging produced ${files.length} files for $nChunks chunks")
-      files.zipWithIndex.foreach { case (f, i) =>
-        f.setLastModified(1000000000000L + i * 60000L)
-      }
-    }
-    val out = spark.readStream
-      .schema(org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("series",
-          org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("ts",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("value",
-          org.apache.spark.sql.types.DoubleType))))
-      .option("maxFilesPerTrigger", "1")
-      .parquet(srcStage)
+    val out = replay(samples, fromMs, toMs, nChunks)()
       .as[(String, Long, Double)]
       .groupByKey(_._1)
       .flatMapGroupsWithState(
@@ -323,16 +241,7 @@ object StreamAnomaly {
           outRows.iterator
       }
       .toDF("series", "ts", "value", "rq_value")
-    val sinkDir = graft.Scratch.dir("graft_srq_").resolve("out").toString
-    val qy = out.writeStream.outputMode("append")
-      .foreachBatch { (batch: Dataset[Row], _: Long) =>
-        batch.write.mode("append").parquet(sinkDir)
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    qy.awaitTermination()
-    readSink(spark, sinkDir, out.schema)
+    drain(spark, out)
   } }
 
   /**
@@ -360,32 +269,7 @@ object StreamAnomaly {
       Compaction.withStatePartitions(spark, 8) {
       withProvider(spark, useRocksDb) {
     import spark.implicits._
-    var s = samples.filter(!isnan(col("value")))
-    fromMs.foreach(f => s = s.filter(col("ts") >= f))
-    toMs.foreach(t => s = s.filter(col("ts") <= t))
-    val srcStage = graft.Scratch.dir("graft_scusum_src_").resolve("stage").toString
-    s.select(col("series"), col("ts"), col("value"))
-      .repartitionByRange(nChunks, col("ts"))
-      .write.mode("overwrite").parquet(srcStage)
-    locally {
-      val files = new java.io.File(srcStage).listFiles()
-        .filter(_.getName.startsWith("part-")).sortBy(_.getName)
-      require(files.length == nChunks,
-        s"staging produced ${files.length} files for $nChunks chunks")
-      files.zipWithIndex.foreach { case (f, i) =>
-        f.setLastModified(1000000000000L + i * 60000L)
-      }
-    }
-    val out = spark.readStream
-      .schema(org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("series",
-          org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("ts",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("value",
-          org.apache.spark.sql.types.DoubleType))))
-      .option("maxFilesPerTrigger", "1")
-      .parquet(srcStage)
+    val out = replay(samples, fromMs, toMs, nChunks)()
       .as[(String, Long, Double)]
       .groupByKey(_._1)
       .flatMapGroupsWithState(
@@ -393,7 +277,7 @@ object StreamAnomaly {
         (series: String, rows: Iterator[(String, Long, Double)],
          state: GroupState[(Long, Double, Double, Double)]) =>
           // Welford (n, mean, M2) + the running normalized-deviation
-          // sum S — see runZscore for why Welford, not sumsq.
+          // sum S — see zscoreStreamOnce for why Welford, not sumsq.
           var (n, mean, m2, cs) = state.getOption.getOrElse((0L, 0.0, 0.0, 0.0))
           val flagged = scala.collection.mutable.ArrayBuffer
             .empty[(String, Long, Double, Double)]
@@ -414,16 +298,7 @@ object StreamAnomaly {
           flagged.iterator
       }
       .toDF("series", "ts", "value", "cusum_score")
-    val sinkDir = graft.Scratch.dir("graft_scusum_").resolve("out").toString
-    val q = out.writeStream.outputMode("append")
-      .foreachBatch { (batch: Dataset[Row], _: Long) =>
-        batch.write.mode("append").parquet(sinkDir)
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    readSink(spark, sinkDir, out.schema)
+    drain(spark, out)
   } }
 
   /** Oracle for [[cusumStreamOnce]]: prefix stats from one cumulative

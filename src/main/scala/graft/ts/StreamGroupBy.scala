@@ -420,21 +420,9 @@ object StreamGroupBy {
       nChunks: Int = 4,
       chunkCol: org.apache.spark.sql.Column = col("ts")): DataFrame =
     Compaction.withStatePartitions(spark, 8) {
-      val srcStage = graft.Scratch.dir("graft_sgbtwa_src_").resolve("stage").toString
-      samples.select(col("series"), col("ts"), col("value"))
-        .repartitionByRange(nChunks, chunkCol)
-        .write.mode("overwrite").parquet(srcStage)
-      locally {
-        val files = new java.io.File(srcStage).listFiles()
-          .filter(_.getName.startsWith("part-")).sortBy(_.getName)
-        files.zipWithIndex.foreach { case (f, i) =>
-          f.setLastModified(1000000000000L + i * 60000L)
-        }
-      }
-      val schema = samples.select(
-        col("series"), col("ts"), col("value")).schema
-      val stream = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(srcStage)
+      val stream = graft.ReplayStage(
+        samples.select(col("series"), col("ts"), col("value")),
+        Seq(chunkCol), nChunks).stream
       val streamed = mrangeGroupByTwaPartialsStream(
         stream, seriesToGroup, bucketMs, 0L, fromMs, toMs)
       val sinkDir = graft.Scratch.dir("graft_sgbtwa_snk_").resolve("log").toString
@@ -468,21 +456,9 @@ object StreamGroupBy {
       nChunks: Int = 4,
       chunkCol: org.apache.spark.sql.Column = col("ts")): DataFrame =
     Compaction.withStatePartitions(spark, 8) {
-      val srcStage = graft.Scratch.dir("graft_sgb_src_").resolve("stage").toString
-      samples.select(col("series"), col("ts"), col("value"))
-        .repartitionByRange(nChunks, chunkCol)
-        .write.mode("overwrite").parquet(srcStage)
-      locally {
-        val files = new java.io.File(srcStage).listFiles()
-          .filter(_.getName.startsWith("part-")).sortBy(_.getName)
-        files.zipWithIndex.foreach { case (f, i) =>
-          f.setLastModified(1000000000000L + i * 60000L)
-        }
-      }
-      val schema = samples.select(
-        col("series"), col("ts"), col("value")).schema
-      val stream = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(srcStage)
+      val stream = graft.ReplayStage(
+        samples.select(col("series"), col("ts"), col("value")),
+        Seq(chunkCol), nChunks).stream
       val streamed = mrangeGroupByStreamMulti(stream, seriesToGroup,
         groupByLabel, aggs, reducer, bucketMs, 0L, fromMs, toMs)
       val sinkDir = graft.Scratch.dir("graft_sgb_snk_").resolve("log").toString

@@ -1,8 +1,8 @@
 package graft.ts
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /**
  * Multi-monitor streaming pass — ONE stateful stream serving several
@@ -180,33 +180,11 @@ object StreamMonitors {
     var s = samples
     fromMs.foreach(f => s = s.filter(col("ts") >= f))
     toMs.foreach(t => s = s.filter(col("ts") <= t))
-    val srcStage = graft.Scratch.dir("graft_smon_src_").resolve("stage").toString
-    Seasonal.withSeason(s.select(col("series"), col("ts"), col("value")),
-        seasonalMode)
-      .repartitionByRange(nChunks, col("ts"))
-      .write.mode("overwrite").parquet(srcStage)
-    locally {
-      val files = new java.io.File(srcStage).listFiles()
-        .filter(_.getName.startsWith("part-")).sortBy(_.getName)
-      require(files.length <= nChunks,
-        s"staging produced ${files.length} files for $nChunks chunks")
-      files.zipWithIndex.foreach { case (f, i) =>
-        f.setLastModified(1000000000000L + i * 60000L)
-      }
-    }
     val minPrefix = StreamAnomaly.MinPrefix
-    val out = spark.readStream
-      .schema(org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("series",
-          org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("ts",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("value",
-          org.apache.spark.sql.types.DoubleType),
-        org.apache.spark.sql.types.StructField("season",
-          org.apache.spark.sql.types.LongType))))
-      .option("maxFilesPerTrigger", "1")
-      .parquet(srcStage)
+    val out = graft.ReplayStage(
+        Seasonal.withSeason(s.select(col("series"), col("ts"), col("value")),
+          seasonalMode),
+        Seq(col("ts")), nChunks).stream
       .as[(String, Long, Double, Long)]
       .groupByKey(_._1)
       .flatMapGroupsWithState(
@@ -361,19 +339,7 @@ object StreamMonitors {
           outRows.iterator
       }
       .toDF("op", "series", "ts", "value", "score", "l1", "d1")
-    val sinkDir = graft.Scratch.dir("graft_smon_").resolve("out").toString
-    val qy = out.writeStream.outputMode("append")
-      .foreachBatch { (batch: Dataset[Row], _: Long) =>
-        batch.write.mode("append").parquet(sinkDir)
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    qy.awaitTermination()
-    val parts = Option(new java.io.File(sinkDir).listFiles())
-      .getOrElse(Array.empty).exists(_.getName.startsWith("part-"))
-    if (parts) spark.read.schema(out.schema).parquet(sinkDir)
-    else spark.createDataFrame(spark.sparkContext.emptyRDD[Row], out.schema)
+    StreamAnomaly.drain(spark, out)
   } }
 
   /** The z-score monitor's slice — [[StreamAnomaly.zscoreStreamOnce]]'s

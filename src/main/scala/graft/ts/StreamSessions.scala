@@ -1,8 +1,7 @@
 package graft.ts
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /**
  * Streaming session windows — the ONLINE twin of [[Sessions.sessionRange]]
@@ -63,10 +62,8 @@ object StreamSessions {
     var s = samples
     fromMs.foreach(f => s = s.filter(col("ts") >= f))
     toMs.foreach(t => s = s.filter(col("ts") <= t))
-    val staged = s.select(col("series"), col("ts"), col("value"))
-    val srcStage = graft.Scratch.dir("graft_ssess_src_").resolve("stage").toString
-    staged.repartitionByRange(nChunks, col("ts"))
-      .write.mode("overwrite").parquet(srcStage)
+    val staged = graft.ReplayStage(s.select(col("series"), col("ts"), col("value")),
+      Seq(col("ts")), nChunks)
     // the sentinel must outrun every real session's end + gap. Read
     // max(ts) off the STAGED files with parquet aggregate pushdown —
     // footer statistics only — instead of a second full scan of the
@@ -74,44 +71,22 @@ object StreamSessions {
     // this one-shot pays, cut to ~nothing (r14 #6 floor work).
     val maxTs = Compaction.withConf(spark,
         "spark.sql.parquet.aggregatePushdown", "true") {
-      spark.read.parquet(srcStage).agg(max(col("ts"))).collect()(0) match {
+      spark.read.parquet(staged.dir).agg(max(col("ts"))).collect()(0) match {
         case r if r.isNullAt(0) => 0L
         case r                  => r.getLong(0)
       }
     }
-    def partFiles() = new java.io.File(srcStage).listFiles()
-      .filter(_.getName.startsWith("part-"))
-    val dataNames = partFiles().map(_.getName).toSet
+    val dataNames = graft.ReplayStage.partFiles(staged.dir).map(_.getName).toSet
     val sentinelTs = maxTs + 2 * gapMs + 86400000L
     Seq((Sentinel, sentinelTs, 0.0)).toDF2(spark)
-      .write.mode("append").parquet(srcStage)
-    locally {
-      // mtime order = replay order: data chunks in ts order (their
-      // part numbers follow the range partitioning), sentinel LAST —
-      // it must not advance the watermark before real data plays.
-      val files = partFiles()
-      // <=, not ==: repartitionByRange on a tiny/empty in-range frame
-      // legally emits fewer than nChunks part files (empty partitions
-      // write nothing); mtime ordering only needs the files that exist.
-      require(files.length <= nChunks + 1,
-        s"staging produced ${files.length} files for $nChunks chunks + sentinel")
-      val (data, sentinel) = files.partition(f => dataNames(f.getName))
-      data.sortBy(_.getName).zipWithIndex.foreach { case (f, i) =>
-        f.setLastModified(1000000000000L + i * 60000L)
-      }
-      sentinel.foreach(
-        _.setLastModified(1000000000000L + files.length * 60000L))
-    }
-    val out = spark.readStream
-      .schema(org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("series",
-          org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("ts",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("value",
-          org.apache.spark.sql.types.DoubleType))))
-      .option("maxFilesPerTrigger", "1")
-      .parquet(srcStage)
+      .write.mode("append").parquet(staged.dir)
+    // mtime order = replay order: the data chunks were stamped in ts
+    // order at staging, the sentinel plays LAST — it must not advance
+    // the watermark before real data plays. The stream lists its files
+    // only once it starts, so it picks the sentinel up.
+    graft.ReplayStage.partFiles(staged.dir).filterNot(f => dataNames(f.getName))
+      .zipWithIndex.foreach { case (f, i) => graft.ReplayStage.stamp(f, staged.files + i) }
+    val out = staged.stream
       .withColumn("event_time", timestamp_millis(col("ts")))
       .withWatermark("event_time", "0 milliseconds")
       .groupBy(col("series"),
@@ -122,21 +97,7 @@ object StreamSessions {
         count(lit(1)).as("n_samples"),
         Aggs.expr(agg, col("value"), col("ts")))
       .drop("session_window")
-    val sinkDir = graft.Scratch.dir("graft_ssess_").resolve("out").toString
-    val q = out.writeStream.outputMode("append")
-      .foreachBatch { (batch: Dataset[Row], _: Long) =>
-        batch.write.mode("append").parquet(sinkDir)
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    val parts = Option(new java.io.File(sinkDir).listFiles())
-      .getOrElse(Array.empty).exists(_.getName.startsWith("part-"))
-    val res =
-      if (parts) spark.read.schema(out.schema).parquet(sinkDir)
-      else spark.createDataFrame(spark.sparkContext.emptyRDD[Row], out.schema)
-    res.filter(col("series") =!= Sentinel)
+    StreamAnomaly.drain(spark, out).filter(col("series") =!= Sentinel)
   } }
 
   /**
@@ -164,30 +125,8 @@ object StreamSessions {
     var s = samples
     fromMs.foreach(f => s = s.filter(col("ts") >= f))
     toMs.foreach(t => s = s.filter(col("ts") <= t))
-    val srcStage = graft.Scratch.dir("graft_sgaps_src_").resolve("stage").toString
-    s.select(col("series"), col("ts"))
-      .repartitionByRange(nChunks, col("ts"))
-      .write.mode("overwrite").parquet(srcStage)
-    locally {
-      val files = new java.io.File(srcStage).listFiles()
-        .filter(_.getName.startsWith("part-")).sortBy(_.getName)
-      // <= (see sessionStreamOnce): a near-empty in-range input can
-      // stage fewer part files than nChunks; the batch twin returns an
-      // empty frame for the same input, so must we.
-      require(files.length <= nChunks,
-        s"staging produced ${files.length} files for $nChunks chunks")
-      files.zipWithIndex.foreach { case (f, i) =>
-        f.setLastModified(1000000000000L + i * 60000L)
-      }
-    }
-    val out = spark.readStream
-      .schema(org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("series",
-          org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("ts",
-          org.apache.spark.sql.types.LongType))))
-      .option("maxFilesPerTrigger", "1")
-      .parquet(srcStage)
+    val out = graft.ReplayStage(s.select(col("series"), col("ts")),
+        Seq(col("ts")), nChunks).stream
       .as[(String, Long)]
       .groupByKey(_._1)
       .flatMapGroupsWithState(
@@ -207,19 +146,7 @@ object StreamSessions {
           gaps.result().iterator
       }
       .toDF("series", "gap_start", "gap_end", "gap_ms")
-    val sinkDir = graft.Scratch.dir("graft_sgaps_").resolve("out").toString
-    val q = out.writeStream.outputMode("append")
-      .foreachBatch { (batch: Dataset[Row], _: Long) =>
-        batch.write.mode("append").parquet(sinkDir)
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    val parts = Option(new java.io.File(sinkDir).listFiles())
-      .getOrElse(Array.empty).exists(_.getName.startsWith("part-"))
-    if (parts) spark.read.schema(out.schema).parquet(sinkDir)
-    else spark.createDataFrame(spark.sparkContext.emptyRDD[Row], out.schema)
+    StreamAnomaly.drain(spark, out)
   } }
 
   /** Session-window state lives in the session-window store; provider

@@ -317,18 +317,9 @@ object Tsbs {
    * trigger — duplicates of one timestamp always share a chunk.
    */
   def ingestOnce(spark: SparkSession, sfDir: String, nChunks: Int = 4): DataFrame = {
-    val base = graft.Scratch.dir("graft_tsbs_ingest_")
-    val srcDir = base.resolve("src").toString
-    val sinkDir = base.resolve("sink").toString
-    cpuSamples(spark, sfDir)
-      .repartitionByRange(nChunks, col("ts"))
-      .write.mode("overwrite").parquet(srcDir)
-    val files = new java.io.File(srcDir).listFiles()
-      .filter(_.getName.startsWith("part-")).sortBy(_.getName)
-    files.zipWithIndex.foreach { case (f, i) =>
-      f.setLastModified(1000000000000L + i * 60000L)
-    }
-    Ingest.streamingIngestOnce(spark, srcDir, sinkDir, "MAX")
+    val staged = graft.ReplayStage(cpuSamples(spark, sfDir), Seq(col("ts")), nChunks)
+    val sinkDir = graft.Scratch.dir("graft_tsbs_ingest_").resolve("sink").toString
+    Ingest.streamingIngestOnce(spark, staged.dir, sinkDir, "MAX")
   }
 
   private[graft] def ingestSql: String =

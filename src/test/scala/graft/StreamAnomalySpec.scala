@@ -347,6 +347,46 @@ class StreamAnomalySpec extends AnyFunSuite {
     assert(got.nonEmpty)
   }
 
+  test("fewer distinct ts than nChunks: all four streams == their batch twins") {
+    // 3 distinct timestamps replayed as nChunks = 8: the range stage
+    // writes only 3 files, which must shorten the replay, not fail it
+    val df = Seq(("a", 0L, 1.0), ("a", 0L, 2.0), ("a", 0L, 1.5),
+      ("a", 1L, 1.0), ("a", 1L, 2.0), ("a", 1L, 1.2),
+      ("a", 2L, 1.1), ("a", 2L, 9.0),
+      ("b", 0L, 5.0), ("b", 1L, 5.0), ("b", 1L, 6.0), ("b", 2L, 5.5))
+      .toDF("series", "ts", "value")
+    def keys(d: org.apache.spark.sql.DataFrame) =
+      d.collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).toSet
+    val W = org.apache.spark.sql.expressions.Window
+    val byArrival = W.partitionBy(col("series")).orderBy(col("ts"), col("value"))
+    val wPre = byArrival.rowsBetween(W.unboundedPreceding, -1)
+    val pre = df
+      .withColumn("mu", avg(col("value")).over(wPre))
+      .withColumn("sigma", stddev_pop(col("value")).over(wPre))
+      .withColumn("n", count(lit(1)).over(wPre))
+    val scored = col("n") >= StreamAnomaly.MinPrefix && col("sigma") > 0
+    val z = (col("value") - col("mu")) / col("sigma")
+    val zExp = keys(pre.filter(scored && abs(z) >= 2.0))
+    assert(zExp.nonEmpty)
+    assert(keys(StreamAnomaly.zscoreStreamOnce(spark, df, 2.0, nChunks = 8)) == zExp)
+    // every row falls on one weekday, so each series is one cohort
+    assert(keys(StreamAnomaly.seasonalStreamOnce(spark, df, 2.0, "dow",
+      nChunks = 8)) == zExp)
+    val cExp = keys(pre
+      .withColumn("cs", sum(when(scored, z).otherwise(lit(0.0)))
+        .over(byArrival.rowsBetween(W.unboundedPreceding, 0)))
+      .filter(scored && abs(col("cs")) >= 3.0))
+    assert(cExp.nonEmpty)
+    assert(keys(StreamAnomaly.cusumStreamOnce(spark, df, 3.0, nChunks = 8)) == cExp)
+    def rq(d: org.apache.spark.sql.DataFrame) =
+      d.collect().map(r => ((r.getString(0), r.getLong(1), r.getDouble(2)), r.getDouble(3))).toMap
+    val rqGot = rq(StreamAnomaly.rollingQuantileStreamOnce(spark, df,
+      q = 0.5, span = 3, nChunks = 8))
+    val rqExp = rq(graft.ts.Rolling.rollingQuantile(df, 0.5, 3))
+    assert(rqGot.keySet == rqExp.keySet && rqExp.size == 12)
+    rqGot.foreach { case (k, v) => assert(math.abs(v - rqExp(k)) < 1e-12, s"$k: $v vs ${rqExp(k)}") }
+  }
+
   test("streaming rolling quantile: ring state truncates across batches") {
     // 6 values, span 3, 3 chunks of 2: the window at ts=5 must be the
     // trailing [3,4,5] even though [0,1,2,3] arrived in earlier batches
