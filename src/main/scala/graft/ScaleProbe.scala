@@ -199,8 +199,8 @@ object ScaleProbe {
 
     // 5. streaming ingest (r05: the spillable-fold shape) over the N×
     //    samples replayed as 3 micro-batches — N× rows per batch, so
-    //    the per-batch fold, tail-frame join and sink write all scale
-    //    with batch volume; wall time should stay ~linear in N.
+    //    the union-seeded fold, its one pinned exchange and the sink
+    //    write all scale with batch volume; wall ~linear in N.
     val ingSrc = s"$work/ing_src"
     if (!cached || !new java.io.File(ingSrc).exists()) {
       TSModel.samples(spark, work).repartition(3)

@@ -1,6 +1,6 @@
 package graft.ts
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
@@ -40,36 +40,34 @@ import org.apache.spark.sql.types._
  * Dataset and the stateful exec only requires key ordering — so it
  * would have to materialize and sort each series' micro-batch rows on
  * the executor heap (`rows.toSeq.sortBy`, the r04 memory-spike
- * finding). Here each batch instead left-joins the O(series) tail
- * frame (series, lastTs, lastValue), repartitions by series and sorts
- * (series, ts, value) with a SPILLABLE SortExec, and one
- * `mapPartitions` folds every series streamingly with O(1) memory —
- * a hot series in a large trigger spills to disk instead of buffering.
- * Emission is an append log resolved merge-on-read by the duplicate
- * policy over (batch_id, seq) order; the tail frame advances by the
- * fold's per-series final state and is localCheckpoint'd per batch,
- * exactly like the TWA runner's dest.
+ * finding). Here each trigger makes ONE pass: the O(series) tail frame
+ * (series, lastTs, lastValue) is unioned into the batch as seed rows,
+ * one PINNED by-series exchange (`defaultParallelism` partitions,
+ * REPARTITION_BY_NUM: AQE does not coalesce it, the Trend/Fanout fix)
+ * feeds a SPILLABLE SortExec on (series, seed first, ts, value), and
+ * one `mapPartitions` folds every series from its seed with O(1)
+ * memory. Every series the fold sees flushes its tail row, touched or
+ * not, so the next tail is the `is_tail` slice of the batch's single
+ * `localCheckpoint`. The trade: one batch's emissions stay pinned in
+ * that checkpoint until the next trigger replaces the tail. Emission
+ * is an append log resolved merge-on-read by the duplicate policy over
+ * (batch_id, seq) order.
  */
 object Ingest {
 
-  /** Tail-state frame schema (reference Series fields lastTimestamp /
-    * lastValue, src/tsdb.h:69-70): one row per series ever accepted. */
-  private val tailSchema: StructType = StructType(Seq(
-    StructField("series", StringType), StructField("lastTs", LongType),
-    StructField("lastValue", DoubleType)))
-
   /**
    * Per-batch core: fold `batch` in (ts, value) order per series,
-   * seeded from `tail` (series, lastTs, lastValue), applying the
-   * IGNORE gate and the tail-duplicate policy. Returns one combined
+   * seeded from `tail` (one row per series ever accepted: series,
+   * lastTs, lastValue — reference Series fields, src/tsdb.h:69-70),
+   * applying the IGNORE gate and the tail-duplicate policy. Returns one combined
    * frame `(series, ts, value, seq, is_tail)`: emission rows
    * (is_tail=false, seq = per-series acceptance order within the
-   * batch) plus each touched series' final tail state (is_tail=true,
-   * ts=lastTs, value=lastValue) — so ONE job materializes both and the
-   * caller slices. The fold itself is a constant-memory iterator: the
-   * only per-series allocation is the tail tuple.
+   * batch) plus the final tail state of every series in `batch` or
+   * `tail` (is_tail=true, ts=lastTs, value=lastValue) — so ONE job
+   * materializes both and the caller slices. The fold itself is a
+   * constant-memory iterator: the only per-series state is the tail.
    */
-  private[ts] def processBatch(
+  private[graft] def processBatch(
       batch: DataFrame, tail: DataFrame, dupPolicy: String,
       ignoreMaxTimeDiff: Long, ignoreMaxValDiff: Double): DataFrame = {
     val spark = batch.sparkSession
@@ -79,16 +77,14 @@ object Ingest {
       s"unknown duplicate policy $dupPolicy")
     val ignoreOn = policy == "LAST" && (ignoreMaxTimeDiff > 0 || ignoreMaxValDiff > 0)
     val seeded = batch
-      .select(col("series"), col("ts"), col("value"))
-      .join(tail, Seq("series"), "left")
-      .repartition(col("series"))
-      .sortWithinPartitions(col("series"), col("ts"), col("value"))
-      .select(col("series"), col("ts"), col("value"),
-        col("lastTs"), col("lastValue"))
-      .as[(String, Long, Double, Option[Long], Option[Double])]
+      .select(col("series"), col("ts"), col("value"), lit(false).as("seed"))
+      .unionByName(tail.select(col("series"), col("lastTs").as("ts"),
+        col("lastValue").as("value"), lit(true).as("seed")))
+      .repartition(spark.sparkContext.defaultParallelism, col("series"))
+      .sortWithinPartitions(col("series"), col("seed").desc, col("ts"), col("value"))
+      .as[(String, Long, Double, Boolean)]
     seeded.mapPartitions { it =>
       new scala.collection.AbstractIterator[(String, Long, Double, Int, Boolean)] {
-        private val in = it
         private val q = scala.collection.mutable.Queue.empty[(String, Long, Double, Int, Boolean)]
         private var cur: String = null
         private var lastTs = 0L
@@ -104,16 +100,17 @@ object Ingest {
         private def emit(ts: Long, v: Double): Unit = {
           q.enqueue((cur, ts, v, seqNo, false)); seqNo += 1
         }
-        private def step(row: (String, Long, Double, Option[Long], Option[Double])): Unit = {
-          val (s, ts, v, seedTs, seedV) = row
+        private def step(row: (String, Long, Double, Boolean)): Unit = {
+          val (s, ts, v, seed) = row
           if (s != cur) {
             flushTail()
             cur = s; seqNo = 0
-            hasLast = seedTs.isDefined
-            lastTs = seedTs.getOrElse(Long.MinValue)
-            lastValue = seedV.getOrElse(Double.NaN)
+            hasLast = false; lastTs = Long.MinValue; lastValue = Double.NaN
           }
-          if (!hasLast || ts > lastTs) {
+          if (seed) {
+            // the series' stored tail sorts first: it is the start state
+            lastTs = ts; lastValue = v; hasLast = true
+          } else if (!hasLast || ts > lastTs) {
             // in-order append: IGNORE gate, then accept
             if (!gate(ts, v)) { emit(ts, v); lastTs = ts; lastValue = v; hasLast = true }
           } else if (ts == lastTs) {
@@ -140,7 +137,7 @@ object Ingest {
           }
         }
         def hasNext: Boolean = {
-          while (q.isEmpty && in.hasNext) step(in.next())
+          while (q.isEmpty && it.hasNext) step(it.next())
           if (q.isEmpty && cur != null) { flushTail(); cur = null }
           q.nonEmpty
         }
@@ -166,36 +163,35 @@ object Ingest {
       sink.withColumn("__arr", struct(col("batch_id"), col("seq"))),
       dupPolicy, seqCol = "__arr")
 
+  /** The append log under `sinkDir` resolved by `dupPolicy`, read with its
+    * declared schema: no footer-inference job, and a drifted column fails. */
+  private[graft] def readSink(spark: SparkSession, sinkDir: String, dupPolicy: String): DataFrame =
+    resolveSink(spark.read.schema(Compaction.sampleSchema.add("seq", IntegerType)
+      .add("batch_id", LongType)).parquet(sinkDir), dupPolicy)
+
   /** Drive `stream` through [[processBatch]] with a driver-held tail
     * frame, appending each batch's emissions to `sinkDir` stamped with
     * the batch id, then resolve merge-on-read. */
   private def runIngest(
       spark: SparkSession, stream: DataFrame, sinkDir: String, dupPolicy: String,
       ignoreMaxTimeDiff: Long, ignoreMaxValDiff: Double): DataFrame = {
-    import org.apache.spark.sql.Dataset
-    var tail: DataFrame = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[Row], tailSchema)
+    import spark.implicits._
+    var tail = Seq.empty[(String, Long, Double)].toDF("series", "lastTs", "lastValue")
     val q = stream.writeStream.outputMode("append")
       .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        val combined = processBatch(
-          batch, tail, dupPolicy, ignoreMaxTimeDiff, ignoreMaxValDiff)
-          .localCheckpoint()
+        val combined = processBatch(batch, tail, dupPolicy, ignoreMaxTimeDiff,
+          ignoreMaxValDiff).localCheckpoint()
         combined.filter(!col("is_tail"))
           .select(col("series"), col("ts"), col("value"), col("seq"),
             lit(batchId).as("batch_id"))
           .write.mode("append").parquet(sinkDir)
-        val newTail = combined.filter(col("is_tail"))
+        tail = combined.filter(col("is_tail"))
           .select(col("series"), col("ts").as("lastTs"), col("value").as("lastValue"))
-        tail = tail
-          .join(newTail.select(col("series")), Seq("series"), "left_anti")
-          .unionByName(newTail)
-          .localCheckpoint()
-        ()
       }
       .trigger(Trigger.AvailableNow())
       .start()
     q.awaitTermination()
-    resolveSink(spark.read.parquet(sinkDir), dupPolicy)
+    readSink(spark, sinkDir, dupPolicy)
   }
 
   /** One-shot run against existing sample parquet under `srcDir`,
@@ -207,18 +203,15 @@ object Ingest {
   def streamingIngestOnce(
       spark: SparkSession, srcDir: String, sinkDir: String, dupPolicy: String,
       ignoreMaxTimeDiff: Long = 0L, ignoreMaxValDiff: Double = 0.0): DataFrame =
-      Compaction.withStatePartitions(spark, 8) {
-    val src = graft.ReplayStage.reader(spark, srcDir, Compaction.sampleSchema)
-    runIngest(spark, src, sinkDir, dupPolicy, ignoreMaxTimeDiff, ignoreMaxValDiff)
-  }
+    runIngest(spark, graft.ReplayStage.reader(spark, srcDir, Compaction.sampleSchema),
+      sinkDir, dupPolicy, ignoreMaxTimeDiff, ignoreMaxValDiff)
 
   /** The events fixture replayed through the streaming ingest with the
     * IGNORE filter on — must equal the batch [[WritePath.ignoreFilter]]
     * (and its recursive-CTE oracle). */
   def eventsIngestOnce(
       spark: SparkSession, dir: String, sinkDir: String,
-      maxTimeDiff: Long, maxValDiff: Double): DataFrame =
-      Compaction.withStatePartitions(spark, 8) {
+      maxTimeDiff: Long, maxValDiff: Double): DataFrame = {
     val out = runIngest(spark, Compaction.eventsStream(spark, dir), sinkDir, "LAST",
       maxTimeDiff, maxValDiff)
     // the guard is LAZY since r17 (rides the returned plan — see

@@ -2,6 +2,7 @@ package graft.ts
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, LongType, TimestampNTZType, TimestampType}
 
 /**
  * Core data model: the Spark-native equivalent of the reference's
@@ -36,9 +37,10 @@ object TSModel {
     *    legacy conf, as a raw LONG of epoch-ns. Integer DIV keeps exact
     *    ms — a double roundtrip would lose precision at 1.7e18 ns.
     *  - timestamp[us] no-tz → TIMESTAMP_NTZ: converted with
-    *    `timestampdiff` against the NTZ epoch — exact and independent
-    *    of the session timezone (an `unix_millis(cast)` would shift by
-    *    the session zone on non-UTC sessions).
+    *    `timestampdiff` against the epoch, the NTZ→TIMESTAMP cast and
+    *    the diff both pinned to UTC — exact and independent of the
+    *    session timezone (the implicit cast takes the session zone, so
+    *    a wall time inside a DST gap came out an hour late).
     *  - timestamp[us/ms] with tz → TIMESTAMP: `unix_millis` is exact.
     * Any OTHER encoding throws at plan time — a new regeneration must
     * fail loudly, never misparse units (see FixtureSchemaSpec).
@@ -52,11 +54,15 @@ object TSModel {
     * shared dispatch used by the batch loaders AND the streaming
     * readers (r8: a second hand-maintained copy in the streaming path
     * misparsed us as ns and corrupted results silently). */
-  private[graft] def tsMsFor(dt: org.apache.spark.sql.types.DataType): Column = dt match {
-    case org.apache.spark.sql.types.LongType => expr("ts DIV 1000000")
-    case org.apache.spark.sql.types.TimestampNTZType =>
-      expr("timestampdiff(MILLISECOND, TIMESTAMP_NTZ '1970-01-01 00:00:00', ts)")
-    case org.apache.spark.sql.types.TimestampType => unix_millis(col("ts"))
+  private[graft] def tsMsFor(dt: DataType): Column = dt match {
+    case LongType => expr("ts DIV 1000000")
+    case TimestampNTZType =>
+      import org.apache.spark.sql.catalyst.expressions.{Cast, Literal, TimestampDiff}
+      import org.apache.spark.sql.GraftColumnBridge.{column, expression}
+      val utc = Some("UTC")
+      column(TimestampDiff("MILLISECOND", Literal(0L, TimestampType),
+        Cast(expression(col("ts")), TimestampType, utc), utc))
+    case TimestampType => unix_millis(col("ts"))
     case other => throw new IllegalArgumentException(
       s"events.ts has unsupported physical type $other — extend TSModel.tsMsFor " +
         "(refusing to guess a unit; see r8 us-as-ns silent corruption)")
@@ -125,14 +131,14 @@ object TSModel {
     // never as post-Project ms filters. An inclusive ms bound t covers
     // every finer-grained value that floors to t (ns: +999999, us: +999).
     ev.schema("ts").dataType match {
-      case org.apache.spark.sql.types.LongType => // raw epoch-ns
+      case LongType => // raw epoch-ns
         fromMs.foreach(f => ev = ev.filter(col("ts") >= f * 1000000L))
         toMs.foreach(t => ev = ev.filter(col("ts") <= t * 1000000L + 999999L))
-      case org.apache.spark.sql.types.TimestampNTZType =>
+      case TimestampNTZType =>
         // NTZ literals (LocalDateTime) compare zone-independently
         fromMs.foreach(f => ev = ev.filter(col("ts") >= lit(msToLdt(f, 0))))
         toMs.foreach(t => ev = ev.filter(col("ts") <= lit(msToLdt(t, 999))))
-      case org.apache.spark.sql.types.TimestampType =>
+      case TimestampType =>
         fromMs.foreach(f =>
           ev = ev.filter(col("ts") >= lit(java.time.Instant.ofEpochMilli(f))))
         toMs.foreach(t =>

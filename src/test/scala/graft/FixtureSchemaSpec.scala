@@ -68,6 +68,18 @@ class FixtureSchemaSpec extends AnyFunSuite {
       "series" -> StringType, "ts" -> LongType, "value" -> DoubleType))
   }
 
+  test("TIMESTAMP_NTZ epoch-ms is zone-free, also inside a DST gap") {
+    import spark.implicits._
+    // 2024-03-10 02:30 does not exist in America/Los_Angeles (spring
+    // forward); a cast in the session zone would land an hour late
+    val ntz = Seq("2024-03-10 02:30:00", "2024-07-01 12:00:00", "1970-01-01 00:00:00")
+      .toDF("s").select(to_timestamp_ntz(col("s")).as("ts"))
+    val got = Compaction.withConf(spark, "spark.sql.session.timeZone", "America/Los_Angeles") {
+      ntz.select(TSModel.tsMsFor(TimestampNTZType)).as[Long].collect().toSeq
+    }
+    assert(got == Seq(1710037800000L, 1719835200000L, 0L))
+  }
+
   test("orders time-series mapping stays in the TPC-H date range") {
     val o = spark.read.parquet(s"$sf/orders.parquet")
     val ts = o.schema("o_orderdate").dataType match {

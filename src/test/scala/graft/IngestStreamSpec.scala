@@ -26,28 +26,31 @@ class IngestStreamSpec extends AnyFunSuite {
   test("SUM tail duplicates and OOO upserts across three micro-batches") {
     val src = tmp("ing_src_")
     val sink = tmp("ing_sink_")
-    stage(src, Seq(("A", 1000L, 10.0), ("A", 2000L, 100.0)))
+    stage(src, Seq(("A", 1000L, 10.0), ("A", 2000L, 100.0), ("H", 700L, 3.0)))
     stage(src, Seq(("A", 2000L, 5.0), ("A", 3000L, 7.0), ("B", 500L, 1.0)))
-    stage(src, Seq(("A", 1500L, 42.0), ("A", 3000L, 8.0)))
+    stage(src, Seq(("A", 1500L, 42.0), ("A", 3000L, 8.0), ("H", 700L, 4.0)))
     val got = Ingest.streamingIngestOnce(spark, src, sink, "SUM")
       .collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).toSet
     // batch 2: 2000 is the tail -> 100+5; batch 3: 1500 is OOO (upsert
-    // as-is), 3000 is the tail -> 7+8
+    // as-is), 3000 is the tail -> 7+8; H skips batch 2, so its tail
+    // reaches batch 3 only as a seed: 700 is the tail -> 3+4
     assert(got == Set(
       ("A", 1000L, 10.0), ("A", 1500L, 42.0), ("A", 2000L, 105.0),
-      ("A", 3000L, 15.0), ("B", 500L, 1.0)))
+      ("A", 3000L, 15.0), ("B", 500L, 1.0), ("H", 700L, 7.0)))
   }
 
   test("IGNORE state persists across micro-batches under LAST policy") {
     val src = tmp("ign_src_")
     val sink = tmp("ign_sink_")
-    stage(src, Seq(("C", 1000L, 10.0)))
+    stage(src, Seq(("C", 1000L, 10.0), ("K", 1000L, 10.0)))
     stage(src, Seq(("C", 1100L, 10.2))) // near-dup of batch-1 tail: dropped
-    stage(src, Seq(("C", 1200L, 50.0))) // value moved: kept
+    // value moved: kept; K skipped batch 2, and its near-dup tail
+    // duplicate is gated against the batch-1 tail carried as a seed
+    stage(src, Seq(("C", 1200L, 50.0), ("K", 1000L, 10.3)))
     val got = Ingest.streamingIngestOnce(spark, src, sink, "LAST",
       ignoreMaxTimeDiff = 500L, ignoreMaxValDiff = 0.5)
       .collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).toSet
-    assert(got == Set(("C", 1000L, 10.0), ("C", 1200L, 50.0)))
+    assert(got == Set(("C", 1000L, 10.0), ("C", 1200L, 50.0), ("K", 1000L, 10.0)))
   }
 
   test("FIRST policy keeps the stored tail value") {
@@ -196,6 +199,38 @@ class IngestStreamSpec extends AnyFunSuite {
     // batch contract: filter-only — both gate survivors remain; compose
     // applyDupPolicy for one-row-per-ts semantics
     assert(batch == Set(("E", 1000L, 10.0), ("E", 1000L, 99.0)))
+  }
+
+  test("one pass per batch: the tail seeds by union through one pinned exchange") {
+    val batch = Seq(("A", 2000L, 1.0), ("B", 10L, 2.0)).toDF("series", "ts", "value")
+    val tail = Seq(("A", 1000L, 5.0), ("C", 7L, 3.0)).toDF("series", "lastTs", "lastValue")
+    val out = Ingest.processBatch(batch, tail, "LAST", 0L, 0.0)
+    val plan = out.queryExecution.executedPlan match {
+      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => a.initialPlan
+      case p => p
+    }
+    assert(plan.collect { case j: org.apache.spark.sql.execution.joins.BaseJoinExec => j }
+      .isEmpty, plan.treeString)
+    val ex = plan.collect {
+      case s: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec => s
+    }
+    assert(ex.size == 1, plan.treeString)
+    assert(ex.head.shuffleOrigin ==
+      org.apache.spark.sql.execution.exchange.REPARTITION_BY_NUM)
+    assert(ex.head.outputPartitioning.numPartitions == spark.sparkContext.defaultParallelism)
+    // every series the fold sees, touched or not, flushes its tail
+    val tails = out.filter(col("is_tail"))
+      .select("series", "ts", "value").as[(String, Long, Double)].collect().toSet
+    assert(tails == Set(("A", 2000L, 1.0), ("B", 10L, 2.0), ("C", 7L, 3.0)))
+  }
+
+  test("a drifted append log (BIGINT seq) fails at resolve") {
+    val sink = tmp("drift_sink_")
+    Seq(("A", 1000L, 1.0, 0L, 0L)).toDF("series", "ts", "value", "seq", "batch_id")
+      .write.parquet(sink)
+    val e = intercept[Exception](Ingest.readSink(spark, sink, "LAST").collect())
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage).contains("seq")), e)
   }
 
   test("events replay through streaming ingest equals the batch ignore filter") {
