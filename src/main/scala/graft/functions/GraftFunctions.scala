@@ -117,10 +117,13 @@ object GraftFunctions {
   // statement's tree, where Catalyst optimizes it like any subquery.
   //
   // Data contract: the session temp views `graft_samples`
-  // (series STRING, ts BIGINT-ms, value DOUBLE) and — for ts_mrange —
-  // `graft_labels` (series, labels MAP<STRING,STRING>) must exist; a
-  // missing view is a loud analysis error. All arguments must be
-  // literals (they select the plan, not row values).
+  // (series STRING, ts BIGINT-ms, value DOUBLE) and — for the label
+  // functions — `graft_labels` (series, labels MAP<STRING,STRING>) must
+  // exist; a missing view is a loud analysis error. `graft_labels` is
+  // expected to be driver-resident (TSModel.labels / Multi.labelIndex),
+  // so label filters are evaluated on the driver and ts_queryindex runs
+  // no Spark job. All arguments must be literals (they select the plan,
+  // not row values).
   // -----------------------------------------------------------------
 
   /** The samples / labels views the ts_* TVFs read. */

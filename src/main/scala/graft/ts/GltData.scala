@@ -94,13 +94,14 @@ object GltData {
       .csv(samplesPath)
 
   /** Real label maps per series (metric/city/country/latitude/longitude;
-    * `metric` genuinely absent on the uncertainty series). */
+    * `metric` genuinely absent on the uncertainty series), as the
+    * driver-resident label index of [[Multi.labelIndex]]. */
   def labels(spark: SparkSession): DataFrame =
-    spark.read.schema("series STRING, lkey STRING, lvalue STRING")
+    Multi.labelIndex(spark.read.schema("series STRING, lkey STRING, lvalue STRING")
       .csv(labelsPath)
       .groupBy(col("series"))
       .agg(map_from_entries(collect_list(struct(col("lkey"), col("lvalue"))))
-        .as("labels"))
+        .as("labels")))
 
   lazy val samplesCte: String =
     s"""WITH samples AS (

@@ -9,11 +9,16 @@ import org.apache.spark.sql.functions._
  * (reference: §2.5/§2.7 of SURVEY.md; module.c:624-688, 2132-2265,
  * resultset.c:125-277, indexer.c:132-170).
  *
- * Scale design: label filtering is a plain filter on the O(#series)
- * labels DataFrame followed by a **broadcast** semi-join into the
- * samples scan — the Catalyst equivalent of the reference's posting-dict
- * intersection (reference: indexer.c:396-434, smallest-predicate-first);
- * no shuffle of the big side. GROUPBY/REDUCE is the canonical two-level
+ * Scale design: the O(#series) labels DataFrame is a driver-resident
+ * index ([[labelIndex]]), the analogue of the reference's in-memory
+ * posting dicts (reference: indexer.c:132-170). Label filtering is a
+ * plain filter on it, which Catalyst folds into a new local relation
+ * at optimization time, so TS.QUERYINDEX runs no Spark job; the
+ * matched set then enters the samples scan as a **broadcast** semi-join
+ * — the Catalyst equivalent of the reference's posting-dict
+ * intersection (reference: indexer.c:396-434, smallest-predicate-first).
+ * No shuffle of the big side, and the events table is read once per
+ * query, for its samples only. GROUPBY/REDUCE is the canonical two-level
  * aggregation: Catalyst's partial/final split plays the reference's
  * shard-mapper/coordinator roles (reference: libmr_commands.c:672-701).
  */
@@ -65,6 +70,16 @@ object Multi {
       case NotInSet(l, vs) => g(l).isNull || !g(l).isInCollection(vs)
     }
   }
+
+  /** The label index as a driver-resident relation: `labels` (O(#series)
+    * rows) is collected ONCE, here, and comes back as a `LocalRelation`.
+    * Filters and projections over it fold into a new local relation at
+    * optimization time (no Spark job); aggregates and broadcast joins
+    * read the driver rows instead of scanning the source. The frame is
+    * a snapshot: rows written to the source after this call are not in
+    * it. */
+  def labelIndex(labels: DataFrame): DataFrame =
+    labels.sparkSession.createDataFrame(labels.collectAsList(), labels.schema)
 
   /** Matching series for a conjunction of label predicates
     * (TS.QUERYINDEX, reference: module.c:299-337). */
@@ -124,8 +139,10 @@ object Multi {
     // GROUPBY without REDUCE is an arity error at parse time
     // (reference: query_language.c:1017-1023 WrongArity reply)
     require(reducer.nonEmpty, "wrong number of arguments for 'TS.MRANGE' command")
-    require(!Seq("first", "last", "twa").contains(reducer),
-      s"$reducer is not a valid GROUPBY reducer") // reference: query_language.c:825-841
+    // reducer names are case-insensitive, like aggregator names
+    val red = reducer.toLowerCase(java.util.Locale.ROOT)
+    require(!Seq("first", "last", "twa").contains(red),
+      s"$red is not a valid GROUPBY reducer") // reference: query_language.c:825-841
     // parse-time incompatibility (reference: query_language.c:1003-1007)
     require(!excludeEmpty, "TSDB: EXCLUDEEMPTY is not allowed with GROUPBY")
     requireInclusive(preds)
@@ -149,11 +166,11 @@ object Multi {
       samples.join(lbl, Seq("series"), "left_semi"), args)
     val valueCols = if (args.aggs.isEmpty) Seq("value") else args.aggs.map(Aggs.colName)
     val reduceExprs = valueCols.map(c =>
-      Aggs.expr(reducer, col(c), col("ts")).as(s"__red_$c"))
+      Aggs.expr(red, col(c), col("ts")).as(s"__red_$c"))
     val reduced = perSeries.join(lbl, Seq("series"))
       .groupBy(col("lv"), col("ts"))
       .agg(reduceExprs.head, reduceExprs.tail: _*)
-    val fill = if (Set("count", "countnan", "countall").contains(reducer)) lit(0.0)
+    val fill = if (Set("count", "countnan", "countall").contains(red)) lit(0.0)
                else lit(Double.NaN)
     reduced.select(
       (concat(lit(s"$groupByLabel="), col("lv")).as("series") +:

@@ -41,7 +41,9 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
  *
  * Scale shape: the label filter and group mapping is a stream-static
  * BROADCAST join (the index is O(#series), the same assumption every
- * batch MRANGE makes); state per key is O(series in that group), key
+ * batch MRANGE makes) whose static side is the driver-resident
+ * [[TSModel.labels]], so no trigger re-reads the events table for
+ * it; state per key is O(series in that group), key
  * count is O(groups × open buckets) — retention-bounded in
  * production, and the update-mode log sink keeps per-batch output
  * O(touched keys), the [[Compaction.streamingDownsampleUpdateOnce]]

@@ -18,17 +18,11 @@ import org.apache.spark.sql.types.{DataType, LongType, TimestampNTZType, Timesta
  * built so that the `series`/`ts` predicates reach the parquet scan
  * (partition pruning + row-group min/max skipping play the role of the
  * reference's rax chunk-seek, reference: src/series_iterator.c:21-138).
- * The labels DataFrame is O(#series) — tiny relative to samples — and is
- * always broadcast when joined.
+ * The labels DataFrame is O(#series) — tiny relative to samples — kept
+ * in driver memory and always broadcast when joined.
  */
 object TSModel {
 
-  /** Canonical samples mapping over the driver fixture `events` table
-    * (see FIXTURES.md §2.1): series = event_type + "_" + user_id.
-    * `unix_millis` keeps timestamps as exact epoch-ms longs (the
-    * reference's native unit, reference: src/consts.h:38-39), avoiding
-    * timezone semantics entirely.
-    */
   /** The fixture's `ts` physical encoding is NOT stable across
     * regenerations (r8: it silently switched from TIMESTAMP(NANOS) to
     * timestamp[us]-no-tz), so every reader dispatches on the OBSERVED
@@ -70,6 +64,12 @@ object TSModel {
 
   private def tsMs(df: DataFrame): Column = tsMsFor(df.schema("ts").dataType)
 
+  /** Canonical samples mapping over the driver fixture `events` table
+    * (see FIXTURES.md §2.1): series = event_type + "_" + user_id.
+    * Timestamps come out as exact epoch-ms longs through [[tsMsFor]]
+    * (the reference's native unit, reference: src/consts.h:38-39),
+    * independent of the session timezone.
+    */
   def samples(spark: SparkSession, sfDir: String): DataFrame = {
     val ev = events(spark, sfDir)
     ev.select(
@@ -94,11 +94,6 @@ object TSModel {
       .bucketBy(buckets, "series").sortBy("series", "ts")
       .saveAsTable(table)
 
-  /** Labels DataFrame: one row per series with a MAP<STRING,STRING> of
-    * label name -> value (reference: src/tsdb.h:71-73). Derived from the
-    * series-key components of the fixture. O(#series) rows — always
-    * broadcastable.
-    */
   /**
    * Pushdown-friendly samples loader: series-key and time-range
    * predicates are decomposed onto the *source* columns
@@ -170,15 +165,23 @@ object TSModel {
       col("event_id").as("seq"))
   }
 
+  /** Labels DataFrame: one row per series with a MAP<STRING,STRING> of
+    * label name -> value (reference: src/tsdb.h:71-73), derived from
+    * the series-key components of the fixture. It is the driver-resident
+    * label index of [[Multi.labelIndex]]: the O(#series) rows are
+    * collected once, when `labels` is called, so label lookups never
+    * re-read the events table. A fixture rewritten after the call needs
+    * a fresh call, as with [[Catalog.labelsDf]].
+    */
   def labels(spark: SparkSession, sfDir: String): DataFrame =
-    events(spark, sfDir)
+    Multi.labelIndex(events(spark, sfDir)
       .select(col("event_type"), col("user_id"))
       .distinct()
       .select(
         concat_ws("_", col("event_type"), col("user_id")).as("series"),
         map(
           lit("type"), col("event_type"),
-          lit("user"), col("user_id").cast("string")).as("labels"))
+          lit("user"), col("user_id").cast("string")).as("labels")))
 
   /** DuckDB-oracle equivalent of [[samples]] as a CTE, prepended to every
     * oracle SQL so the driver's DuckDB run sees the same long format. */

@@ -77,4 +77,28 @@ class OptionGrammarSpec extends AnyFunSuite {
       groupByLabel = "type", reducer = "max")
     assert(mtvf.collect().toSeq == mapi.collect().toSeq)
   }
+
+  test("GROUPBY reducers are case-insensitive in both ts_mrange forms") {
+    graft.functions.GraftFunctions.register(spark)
+    TSModel.samples(spark, sf).createOrReplaceTempView(graft.functions.GraftFunctions.SamplesView)
+    TSModel.labels(spark, sf).createOrReplaceTempView(graft.functions.GraftFunctions.LabelsView)
+    val from = T0; val to = T0 + 20 * DAY
+    def optionForm(red: String) = s"SELECT * FROM ts_mrange('type=click', $from, $to, " +
+      s"'AGGREGATION avg 3600000 GROUPBY user REDUCE $red')"
+    def positionalForm(red: String) =
+      s"SELECT * FROM ts_mrange('type=click', $from, $to, 'avg', 3600000, 'user', '$red')"
+    def rows(q: String) = spark.sql(q).collect().map(_.toString).sorted.toSeq
+    val lower = rows(optionForm("max"))
+    assert(lower.nonEmpty)
+    assert(rows(optionForm("MAX")) == lower)
+    assert(rows(positionalForm("max")) == lower)
+    assert(rows(positionalForm("MAX")) == lower)
+    // an upper-case invalid reducer gets the reducer check, not "unknown aggregator"
+    for (q <- Seq(optionForm("LAST"), positionalForm("LAST"))) {
+      val e = intercept[Exception](spark.sql(q).collect())
+      val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).map(_.getMessage)
+      assert(msgs.exists(m => m != null && m.contains("last is not a valid GROUPBY reducer")),
+        s"$q: ${e.getMessage}")
+    }
+  }
 }
