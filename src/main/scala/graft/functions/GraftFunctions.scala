@@ -1,13 +1,15 @@
 package graft.functions
 
-import org.apache.spark.sql.{GraftSessionBridge, SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.{DataFrame, GraftSessionBridge, SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.FunctionRegistry.FunctionBuilder
 import org.apache.spark.sql.catalyst.analysis.TableFunctionRegistry.TableFunctionBuilder
-import org.apache.spark.sql.catalyst.expressions._
+import org.apache.spark.sql.catalyst.expressions.{Divide, Expression, ExpressionInfo, Literal, Multiply, Pmod, Subtract}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions.{col, expr}
 import org.apache.spark.sql.types._
+import graft.pipeline._
+import graft.ts._
 
 /**
  * SQL surface for the engine's custom Catalyst kernels.
@@ -156,6 +158,12 @@ object GraftFunctions {
     }
   }
 
+  private def literalInt(fn: String, e: Expression, what: String): Int = {
+    val v = literalLong(fn, e, what)
+    require(v.isValidInt, s"$fn: $what must fit an INT, got $v")
+    v.toInt
+  }
+
   private def literalDouble(fn: String, e: Expression, what: String): Double = {
     require(e.foldable, s"$fn: $what must be a numeric literal")
     e.eval(null) match {
@@ -173,1177 +181,605 @@ object GraftFunctions {
     SparkSession.getActiveSession.getOrElse(
       throw new IllegalStateException(s"$fn: no active SparkSession"))
 
-  /** Whitespace-separated reference FILTER predicates
-    * (l=v l!=v l=(a,b) l!=(a,b) l= l!=). */
-  private def parsePreds(fn: String, e: Expression): Seq[graft.ts.Multi.LabelPred] =
-    literalString(fn, e, "label filter")
-      .split("\\s+").filter(_.nonEmpty).toSeq.map(graft.ts.Multi.parsePred)
+  // ---- TVF signatures ----------------------------------------------
+  // Every TVF is declared as `tvf(name, signature) { (spark, args) => df }`.
+  // A signature is slots separated by whitespace, each `name:kind`:
+  //   str     any non-null literal's text
+  //   opts    a STRING literal: the reference's TS.RANGE option grammar
+  //   agg     an aggregator name, lowercased
+  //   keys    a whitespace-separated list
+  //   preds   whitespace-separated FILTER predicates (Multi.parsePred:
+  //           l=v l!=v l=(a,b) l!=(a,b) l= l!=)
+  //   long    an INT/BIGINT literal
+  //   int     as long, but the value must fit an Int
+  //   double  any numeric literal
+  // `[ ... ]` is an optional trailing group, given whole or not at all;
+  // its slots may carry a default (`[align_ms:long=0]`), a slot without
+  // one is simply absent (`Args.opt`). `|` separates alternatives, chosen
+  // by argument count alone, so their arity sets must be disjoint. The
+  // arity check, the per-slot literal parsing, the error texts and the
+  // ExpressionInfo usage all come from the signature, which is parsed
+  // once, when this object is initialised.
 
-  /** Shared RangeArgs assembly for both TVFs:
-    * (from, to[, agg, bucket_ms[, align_ms]]), or — when the 4th
-    * positional argument is a STRING — (from, to, 'options...') with
-    * the reference's own TS.RANGE option grammar
-    * (RangeQuery.parseOptions: AGGREGATION/ALIGN/BUCKETTIMESTAMP/
-    * EMPTY/COUNT/LATEST/REV/FILTER_BY_TS/FILTER_BY_VALUE). */
-  private def tvfRangeArgs(fn: String, args: Seq[Expression], off: Int): graft.ts.RangeQuery.RangeArgs = {
-    val from = literalLong(fn, args(off), "from")
-    val to = literalLong(fn, args(off + 1), "to")
-    if (args.length == off + 2)
-      graft.ts.RangeQuery.RangeArgs(from = Some(from), to = Some(to))
-    else if (args.length == off + 3 && args(off + 2).dataType == StringType)
-      graft.ts.RangeQuery.parseOptions(
-        literalString(fn, args(off + 2), "options"), Some(from), Some(to))
-    else
-      graft.ts.RangeQuery.RangeArgs(from = Some(from), to = Some(to),
-        aggs = Seq(literalString(fn, args(off + 2), "aggregator")),
-        bucketMs = literalLong(fn, args(off + 3), "bucket_ms"),
-        alignMs = if (args.length > off + 4) literalLong(fn, args(off + 4), "align_ms") else 0L)
+  /** How one slot kind reads a literal argument, and a default's text. */
+  private final case class Kind(read: (String, Expression, String) => Any, parse: String => Any)
+
+  private def words(s: String): Seq[String] = s.split("\\s+").toSeq.filter(_.nonEmpty)
+
+  private def textKind(f: String => Any) = Kind((fn, e, what) => f(literalString(fn, e, what)), f)
+
+  private val kinds: Map[String, Kind] = Map(
+    "str" -> textKind(identity),
+    "opts" -> Kind({ (fn, e, what) =>
+      require(e.dataType == StringType, s"$fn: $what must be a literal string")
+      literalString(fn, e, what)
+    }, identity),
+    "agg" -> textKind(_.toLowerCase(java.util.Locale.ROOT)),
+    "keys" -> textKind(words),
+    "preds" -> textKind(words(_).map(Multi.parsePred)),
+    "long" -> Kind(literalLong, _.toLong),
+    "int" -> Kind(literalInt, _.toInt),
+    "double" -> Kind(literalDouble, _.toDouble))
+
+  private final case class Slot(name: String, kind: Kind, default: Option[Any])
+
+  /** One alternative: its slots in order and the argument counts it takes
+    * (the required slots, plus each optional group in turn). */
+  private final case class Form(slots: Seq[Slot], arities: Seq[Int])
+
+  private val SlotToken = """(\w+):(\w+)(?:=(\S*))?""".r
+
+  private def parseForm(fn: String, text: String): Form = {
+    val slots = Seq.newBuilder[Slot]
+    val arities = Seq.newBuilder[Int]
+    var n = 0
+    var inGroup = false
+    var sawGroup = false
+    """\[|\]|[^\s\[\]]+""".r.findAllIn(text).foreach {
+      case "[" =>
+        require(!inGroup, s"$fn: nested [ in signature '$text'")
+        arities += n; inGroup = true; sawGroup = true
+      case "]" =>
+        require(inGroup, s"$fn: unmatched ] in signature '$text'")
+        inGroup = false
+      case SlotToken(name, kind, default) =>
+        val k = kinds.getOrElse(kind, throw new IllegalArgumentException(
+          s"$fn: unknown slot kind '$kind' in signature '$text'"))
+        require(inGroup || !sawGroup, s"$fn: required slot $name follows an optional group")
+        require(default == null || inGroup, s"$fn: required slot $name cannot take a default")
+        slots += Slot(name, k, Option(default).map(k.parse)); n += 1
+      case other => throw new IllegalArgumentException(s"$fn: bad signature token '$other'")
+    }
+    require(!inGroup, s"$fn: unclosed [ in signature '$text'")
+    arities += n
+    val form = Form(slots.result(), arities.result())
+    require(form.slots.map(_.name).distinct.size == n, s"$fn: duplicate slot name in '$text'")
+    form
   }
 
+  /** A TVF call's parsed arguments, by slot name. */
+  final class Args private[functions] (val fn: String, values: Map[String, Any]) {
+    def has(name: String): Boolean = values.contains(name)
+    def opt[T](name: String): Option[T] = values.get(name).map(_.asInstanceOf[T])
+    private def get[T](name: String): T = opt[T](name).getOrElse(
+      throw new NoSuchElementException(s"$fn: no argument '$name'"))
+    def str(name: String): String = get[String](name)
+    def long(name: String): Long = get[Long](name)
+    def int(name: String): Int = get[Int](name)
+    def double(name: String): Double = get[Double](name)
+    def keys(name: String): Seq[String] = get[Seq[String]](name)
+    def preds(name: String): Seq[Multi.LabelPred] = get[Seq[Multi.LabelPred]](name)
+    def from: Option[Long] = Some(long("from"))
+    def to: Option[Long] = Some(long("to"))
+  }
+
+  private[graft] def tvf(name: String, signature: String)(body: (SparkSession, Args) => DataFrame)
+      : (FunctionIdentifier, ExpressionInfo, TableFunctionBuilder) = {
+    val alternatives = signature.split('|').toSeq.map(_.trim)
+    val byArity = alternatives.flatMap { text =>
+      val form = parseForm(name, text)
+      form.arities.map(_ -> form)
+    }
+    val arities = byArity.map(_._1).sorted
+    require(arities.distinct.size == arities.size,
+      s"$name: signature alternatives must take distinct argument counts: $signature")
+    val formOf = byArity.toMap
+    val usage = alternatives.map(a => s"$name($a)").mkString(" | ")
+    (FunctionIdentifier(name),
+      new ExpressionInfo(GraftFunctions.getClass.getName, null, name, usage, ""),
+      { args: Seq[Expression] =>
+        nargs(name, arities, args)
+        val form = formOf(args.length)
+        val values = form.slots.zipWithIndex.flatMap { case (slot, i) =>
+          if (i < args.length) Some(slot.name -> slot.kind.read(name, args(i), slot.name))
+          else slot.default.map(slot.name -> _)
+        }
+        GraftSessionBridge.logicalPlan(body(activeSession(name), new Args(name, values.toMap)))
+      })
+  }
+
+  /** The range commands' two forms after the key slot: (from, to[,
+    * 'options']) with the reference's TS.RANGE option grammar
+    * (RangeQuery.parseOptions: AGGREGATION/ALIGN/BUCKETTIMESTAMP/EMPTY/
+    * COUNT/LATEST/REV/FILTER_BY_TS/FILTER_BY_VALUE), or the positional
+    * (from, to, agg, bucket_ms[, align_ms]). */
+  private def rangeSig(key: String): String =
+    s"$key from:long to:long [options:opts] | " +
+      s"$key from:long to:long agg:agg bucket_ms:long [align_ms:long=0]"
+
+  /** `align_ms` is read optionally: ts_mrange's 7-arg GROUPBY form has no
+    * such slot and aligns at 0. */
+  private def rangeArgs(a: Args): RangeQuery.RangeArgs =
+    if (a.has("agg"))
+      RangeQuery.RangeArgs(from = a.from, to = a.to, aggs = Seq(a.str("agg")),
+        bucketMs = a.long("bucket_ms"), alignMs = a.opt[Long]("align_ms").getOrElse(0L))
+    else RangeQuery.parseOptions(a.opt[String]("options").getOrElse(""), a.from, a.to)
+
+  private val GroupByClause = "(?i)\\bGROUPBY\\s+(\\S+)\\s+REDUCE\\s+(\\S+)".r
+
+  private def samples(spark: SparkSession): DataFrame = spark.table(SamplesView)
+  private def docs(spark: SparkSession): DataFrame = spark.table(DocumentsView)
+
+  /** The pipeline TVFs' query-id list ('q1 q2 ...'). */
+  private def queryIds(a: Args): Seq[Long] = {
+    val ids = a.keys("queries").map(_.toLong)
+    require(ids.nonEmpty, s"${a.fn}: at least one query id is required")
+    ids
+  }
+
+  /** Past MaxPairWindows, the matrix-profile TVFs route through STOMP. */
+  private def maxWindows(a: Args): Int =
+    a.opt[Int]("max_windows").getOrElse(MatrixProfile.MaxPairWindows)
+
+  /** Subtracting `center` sketches (value − center): the natural form for
+    * telemetry around a setpoint, and what lets an all-positive fixture
+    * drive all three stores of the signed DDSketch. */
+  private def centered(spark: SparkSession, a: Args): DataFrame =
+    samples(spark).withColumn("value", col("value") - a.double("center"))
+
   val tableFunctions: Seq[(FunctionIdentifier, ExpressionInfo, TableFunctionBuilder)] = Seq(
-    // ts_range('series', from, to[, 'agg', bucket_ms[, align_ms]])
-    // or ts_range('series', from, to, '<reference option grammar>')
-    (FunctionIdentifier("ts_range"), info("ts_range"), { args: Seq[Expression] =>
-      nargs("ts_range", Seq(3, 4, 5, 6), args)
-      val series = literalString("ts_range", args.head, "series key")
-      val spark = activeSession("ts_range")
-      val samples = spark.table(SamplesView).filter(col("series") === series)
-      GraftSessionBridge.logicalPlan(
-        graft.ts.RangeQuery.range(samples, tvfRangeArgs("ts_range", args, 1)))
-    }),
-    // ts_mrange('label_filter ...', from, to[, 'agg', bucket_ms
-    //           [, 'groupby_label', 'reducer']])
-    // filter syntax = the reference's FILTER predicates, whitespace-
-    // separated (l=v l!=v l=(a,b) l!=(a,b) l= l!=); the 7-arg form is
-    // TS.MRANGE ... GROUPBY label REDUCE reducer
-    // the 4-arg form takes the reference option grammar, optionally
-    // including its GROUPBY label REDUCE reducer clause
-    (FunctionIdentifier("ts_mrange"), info("ts_mrange"), { args: Seq[Expression] =>
-      nargs("ts_mrange", Seq(3, 4, 5, 6, 7), args)
-      val preds = parsePreds("ts_mrange", args.head)
+    tvf("ts_range", rangeSig("series:str")) { (s, a) =>
+      RangeQuery.range(samples(s).filter(col("series") === a.str("series")), rangeArgs(a))
+    },
+    // TS.MRANGE: the 7-arg form and a GROUPBY clause inside the option
+    // string are both TS.MRANGE ... GROUPBY label REDUCE reducer
+    tvf("ts_mrange", rangeSig("filter:preds") +
+        " | filter:preds from:long to:long agg:agg bucket_ms:long groupby:str reducer:str") { (s, a) =>
+      val preds = a.preds("filter")
       require(preds.nonEmpty, "ts_mrange: at least one label predicate is required")
-      val spark = activeSession("ts_mrange")
-      val samples = spark.table(SamplesView)
-      val labels = spark.table(LabelsView)
-      // GROUPBY/REDUCE arrives either positionally (7-arg form) or as
-      // a clause inside the option string (reference grammar)
-      val optGroupBy: Option[(String, String, graft.ts.RangeQuery.RangeArgs)] =
-        if (args.length == 7)
-          Some((literalString("ts_mrange", args(5), "GROUPBY label"),
-            literalString("ts_mrange", args(6), "reducer"),
-            tvfRangeArgs("ts_mrange", args.take(5), 1)))
-        else if (args.length == 4 && args(3).dataType == StringType) {
-          val raw = literalString("ts_mrange", args(3), "options")
-          val from = literalLong("ts_mrange", args(1), "from")
-          val to = literalLong("ts_mrange", args(2), "to")
-          "(?i)\\bGROUPBY\\s+(\\S+)\\s+REDUCE\\s+(\\S+)".r.findFirstMatchIn(raw).map { g =>
-            (g.group(1), g.group(2), graft.ts.RangeQuery.parseOptions(
-              raw.substring(0, g.start) + " " + raw.substring(g.end), Some(from), Some(to)))
-          }
-        } else None
-      val df = optGroupBy match {
-        case Some((gl, red, ra)) =>
-          graft.ts.Multi.mrangeGroupBy(samples, labels, preds, ra,
-            groupByLabel = gl, reducer = red)
-        case None =>
-          graft.ts.Multi.mrange(samples, labels, preds,
-            tvfRangeArgs("ts_mrange", args, 1))
+      val groupBy =
+        if (a.has("groupby")) Some((a.str("groupby"), a.str("reducer"), rangeArgs(a)))
+        else a.opt[String]("options").flatMap { raw =>
+          GroupByClause.findFirstMatchIn(raw).map(g => (g.group(1), g.group(2),
+            RangeQuery.parseOptions(raw.substring(0, g.start) + " " + raw.substring(g.end), a.from, a.to)))
+        }
+      groupBy match {
+        case Some((label, reducer, ra)) => Multi.mrangeGroupBy(samples(s), s.table(LabelsView),
+          preds, ra, groupByLabel = label, reducer = reducer)
+        case None => Multi.mrange(samples(s), s.table(LabelsView), preds, rangeArgs(a))
       }
-      GraftSessionBridge.logicalPlan(df)
-    }),
-    // ts_get('key') — TS.GET: last sample of one series
-    (FunctionIdentifier("ts_get"), info("ts_get"), { args: Seq[Expression] =>
-      nargs("ts_get", Seq(1), args)
-      val spark = activeSession("ts_get")
-      GraftSessionBridge.logicalPlan(graft.ts.Multi.get(
-        spark.table(SamplesView), literalString("ts_get", args.head, "series key")))
-    }),
-    // ts_mget('<FILTER preds>') — TS.MGET over the label index
-    (FunctionIdentifier("ts_mget"), info("ts_mget"), { args: Seq[Expression] =>
-      nargs("ts_mget", Seq(1), args)
-      val spark = activeSession("ts_mget")
-      GraftSessionBridge.logicalPlan(graft.ts.Multi.mget(
-        spark.table(SamplesView), spark.table(LabelsView),
-        parsePreds("ts_mget", args.head)))
-    }),
-    // ts_queryindex('<FILTER preds>') — TS.QUERYINDEX
-    (FunctionIdentifier("ts_queryindex"), info("ts_queryindex"), { args: Seq[Expression] =>
-      nargs("ts_queryindex", Seq(1), args)
-      val spark = activeSession("ts_queryindex")
-      GraftSessionBridge.logicalPlan(graft.ts.Multi.queryIndex(
-        spark.table(LabelsView), parsePreds("ts_queryindex", args.head)))
-    }),
-    // ts_querylabels('label'[, '<FILTER preds>']) — TS.QUERYLABELS
-    // (distinct values of one label, optionally over a filtered set)
-    (FunctionIdentifier("ts_querylabels"), info("ts_querylabels"), { args: Seq[Expression] =>
-      nargs("ts_querylabels", Seq(1, 2), args)
-      val spark = activeSession("ts_querylabels")
-      val preds = if (args.length == 2) parsePreds("ts_querylabels", args(1)) else Nil
-      GraftSessionBridge.logicalPlan(graft.ts.Multi.queryLabelValues(
-        spark.table(LabelsView),
-        literalString("ts_querylabels", args.head, "label name"), preds))
-    }),
-    // ts_info(['key']) — TS.INFO core stats; the 0-arg form surveys
-    // every series (engine extension: INFO is per-key in the text
-    // protocol only because RESP replies are per-key)
-    (FunctionIdentifier("ts_info"), info("ts_info"), { args: Seq[Expression] =>
-      nargs("ts_info", Seq(0, 1), args)
-      val spark = activeSession("ts_info")
-      val samples = spark.table(SamplesView)
-      val scoped = if (args.isEmpty) samples
-        else samples.filter(col("series") === literalString("ts_info", args.head, "series key"))
-      GraftSessionBridge.logicalPlan(graft.ts.Multi.info(scoped))
-    }),
-    // ts_nrange('k1 k2 ...', from, to[, 'agg', bucket_ms[, align_ms]])
-    // or ('k1 k2 ...', from, to, '<option grammar>') — TS.NRANGE pivot
-    (FunctionIdentifier("ts_nrange"), info("ts_nrange"), { args: Seq[Expression] =>
-      nargs("ts_nrange", Seq(3, 4, 5, 6), args)
-      val keys = literalString("ts_nrange", args.head, "key list")
-        .split("\\s+").filter(_.nonEmpty).toSeq
-      require(keys.nonEmpty, "ts_nrange: at least one series key is required")
-      val spark = activeSession("ts_nrange")
-      GraftSessionBridge.logicalPlan(graft.ts.Multi.nrange(
-        spark.table(SamplesView), keys, tvfRangeArgs("ts_nrange", args, 1)))
-    }),
+    },
+    // TS.GET: last sample of one series
+    tvf("ts_get", "series:str") { (s, a) => Multi.get(samples(s), a.str("series")) },
+    tvf("ts_mget", "filter:preds") { (s, a) =>
+      Multi.mget(samples(s), s.table(LabelsView), a.preds("filter"))
+    },
+    tvf("ts_queryindex", "filter:preds") { (s, a) =>
+      Multi.queryIndex(s.table(LabelsView), a.preds("filter"))
+    },
+    // TS.QUERYLABELS: distinct values of one label, optionally over a
+    // filtered set
+    tvf("ts_querylabels", "label:str [filter:preds=]") { (s, a) =>
+      Multi.queryLabelValues(s.table(LabelsView), a.str("label"), a.preds("filter"))
+    },
+    // TS.INFO core stats; the 0-arg form surveys every series (engine
+    // extension: INFO is per-key in the text protocol only because RESP
+    // replies are per-key)
+    tvf("ts_info", "[series:str]") { (s, a) =>
+      val rows = samples(s)
+      Multi.info(a.opt[String]("series").fold(rows)(k => rows.filter(col("series") === k)))
+    },
+    // TS.NRANGE pivot over a key list
+    tvf("ts_nrange", rangeSig("keys:keys")) { (s, a) =>
+      require(a.keys("keys").nonEmpty, "ts_nrange: at least one series key is required")
+      Multi.nrange(samples(s), a.keys("keys"), rangeArgs(a))
+    },
     // ---- beyond-reference window extensions as TVFs (round 9) ----
-    // ts_sliding(from, to, 'agg', window_ms, hop_ms[, align_ms])
-    (FunctionIdentifier("ts_sliding"), info("ts_sliding"), { args: Seq[Expression] =>
-      nargs("ts_sliding", Seq(5, 6), args)
-      val spark = activeSession("ts_sliding")
-      GraftSessionBridge.logicalPlan(graft.ts.Sliding.slidingRange(
-        spark.table(SamplesView),
-        literalString("ts_sliding", args(2), "aggregator"),
-        literalLong("ts_sliding", args(3), "window_ms"),
-        literalLong("ts_sliding", args(4), "hop_ms"),
-        if (args.length > 5) literalLong("ts_sliding", args(5), "align_ms") else 0L,
-        Some(literalLong("ts_sliding", args(0), "from")),
-        Some(literalLong("ts_sliding", args(1), "to"))))
-    }),
-    // ts_session(from, to, 'agg', gap_ms)
-    (FunctionIdentifier("ts_session"), info("ts_session"), { args: Seq[Expression] =>
-      nargs("ts_session", Seq(4), args)
-      val spark = activeSession("ts_session")
-      GraftSessionBridge.logicalPlan(graft.ts.Sessions.sessionRange(
-        spark.table(SamplesView),
-        literalString("ts_session", args(2), "aggregator"),
-        literalLong("ts_session", args(3), "gap_ms"),
-        Some(literalLong("ts_session", args(0), "from")),
-        Some(literalLong("ts_session", args(1), "to"))))
-    }),
-    // ts_rate(from, to, bucket_ms[, align_ms]) — delta + per-second rate
-    (FunctionIdentifier("ts_rate"), info("ts_rate"), { args: Seq[Expression] =>
-      nargs("ts_rate", Seq(3, 4), args)
-      val spark = activeSession("ts_rate")
-      GraftSessionBridge.logicalPlan(graft.ts.Rates.deltaRate(
-        spark.table(SamplesView),
-        literalLong("ts_rate", args(2), "bucket_ms"),
-        if (args.length > 3) literalLong("ts_rate", args(3), "align_ms") else 0L,
-        Some(literalLong("ts_rate", args(0), "from")),
-        Some(literalLong("ts_rate", args(1), "to"))))
-    }),
-    // ts_increase(from, to, bucket_ms[, align_ms]) — reset-aware growth
-    (FunctionIdentifier("ts_increase"), info("ts_increase"), { args: Seq[Expression] =>
-      nargs("ts_increase", Seq(3, 4), args)
-      val spark = activeSession("ts_increase")
-      GraftSessionBridge.logicalPlan(graft.ts.Rates.increase(
-        spark.table(SamplesView),
-        literalLong("ts_increase", args(2), "bucket_ms"),
-        if (args.length > 3) literalLong("ts_increase", args(3), "align_ms") else 0L,
-        Some(literalLong("ts_increase", args(0), "from")),
-        Some(literalLong("ts_increase", args(1), "to"))))
-    }),
-    // ts_irate(from, to, bucket_ms[, align_ms]) — instant rate family
-    (FunctionIdentifier("ts_irate"), info("ts_irate"), { args: Seq[Expression] =>
-      nargs("ts_irate", Seq(3, 4), args)
-      val spark = activeSession("ts_irate")
-      GraftSessionBridge.logicalPlan(graft.ts.Rates.instant(
-        spark.table(SamplesView),
-        literalLong("ts_irate", args(2), "bucket_ms"),
-        if (args.length > 3) literalLong("ts_irate", args(3), "align_ms") else 0L,
-        Some(literalLong("ts_irate", args(0), "from")),
-        Some(literalLong("ts_irate", args(1), "to"))))
-    }),
-    // ts_hampel(from, to, span, k) — rolling-median/MAD outlier filter
-    (FunctionIdentifier("ts_hampel"), info("ts_hampel"),
-        { args: Seq[Expression] =>
-      nargs("ts_hampel", Seq(4), args)
-      val spark = activeSession("ts_hampel")
-      GraftSessionBridge.logicalPlan(graft.ts.Rolling.hampel(
-        spark.table(SamplesView),
-        literalLong("ts_hampel", args(2), "span").toInt,
-        literalDouble("ts_hampel", args(3), "k"),
-        fromMs = Some(literalLong("ts_hampel", args(0), "from")),
-        toMs = Some(literalLong("ts_hampel", args(1), "to"))))
-    }),
-    // ts_burn_rate(from, to, short_ms, long_ms, hop_ms, budget_per_sec,
-    // threshold) — multi-window SLO burn-rate alerts (SRE rule)
-    (FunctionIdentifier("ts_burn_rate"), info("ts_burn_rate"),
-        { args: Seq[Expression] =>
-      nargs("ts_burn_rate", Seq(7), args)
-      val spark = activeSession("ts_burn_rate")
-      GraftSessionBridge.logicalPlan(graft.ts.Rates.burnRate(
-        spark.table(SamplesView),
-        literalLong("ts_burn_rate", args(2), "short_ms"),
-        literalLong("ts_burn_rate", args(3), "long_ms"),
-        literalLong("ts_burn_rate", args(4), "hop_ms"),
-        literalDouble("ts_burn_rate", args(5), "budget_per_sec"),
-        literalDouble("ts_burn_rate", args(6), "threshold"),
-        fromMs = Some(literalLong("ts_burn_rate", args(0), "from")),
-        toMs = Some(literalLong("ts_burn_rate", args(1), "to"))))
-    }),
-    // ts_gaps(from, to, threshold_ms) — inter-arrival gap report
-    (FunctionIdentifier("ts_gaps"), info("ts_gaps"), { args: Seq[Expression] =>
-      nargs("ts_gaps", Seq(3), args)
-      val spark = activeSession("ts_gaps")
-      GraftSessionBridge.logicalPlan(graft.ts.Sessions.gaps(
-        spark.table(SamplesView),
-        literalLong("ts_gaps", args(2), "threshold_ms"),
-        Some(literalLong("ts_gaps", args(0), "from")),
-        Some(literalLong("ts_gaps", args(1), "to"))))
-    }),
-    // ts_decompose(from, to, bucket_ms, period) — trend/seasonal/remainder
-    (FunctionIdentifier("ts_decompose"), info("ts_decompose"), { args: Seq[Expression] =>
-      nargs("ts_decompose", Seq(4), args)
-      val spark = activeSession("ts_decompose")
-      GraftSessionBridge.logicalPlan(graft.ts.Seasonal.decompose(
-        spark.table(SamplesView),
-        literalLong("ts_decompose", args(2), "bucket_ms"),
-        literalLong("ts_decompose", args(3), "period").toInt,
-        Some(literalLong("ts_decompose", args(0), "from")),
-        Some(literalLong("ts_decompose", args(1), "to"))))
-    }),
-    // ts_forecast(from, to, sf, tf, horizon, step_ms) — Holt projection
-    (FunctionIdentifier("ts_forecast"), info("ts_forecast"), { args: Seq[Expression] =>
-      nargs("ts_forecast", Seq(6), args)
-      val spark = activeSession("ts_forecast")
-      GraftSessionBridge.logicalPlan(graft.ts.Smoothing.holtForecast(
-        spark.table(SamplesView),
-        literalDouble("ts_forecast", args(2), "sf"),
-        literalDouble("ts_forecast", args(3), "tf"),
-        literalLong("ts_forecast", args(4), "horizon").toInt,
-        literalLong("ts_forecast", args(5), "step_ms"),
-        Some(literalLong("ts_forecast", args(0), "from")),
-        Some(literalLong("ts_forecast", args(1), "to"))))
-    }),
-    // ts_ccf('a', 'b', from, to, bucket_ms, max_lag) — cross-correlation
-    (FunctionIdentifier("ts_ccf"), info("ts_ccf"), { args: Seq[Expression] =>
-      nargs("ts_ccf", Seq(6), args)
-      val spark = activeSession("ts_ccf")
-      GraftSessionBridge.logicalPlan(graft.ts.AsOf.ccf(
-        spark.table(SamplesView),
-        literalString("ts_ccf", args(0), "series a"),
-        literalString("ts_ccf", args(1), "series b"),
-        literalLong("ts_ccf", args(4), "bucket_ms"),
-        literalLong("ts_ccf", args(5), "max_lag").toInt,
-        fromMs = Some(literalLong("ts_ccf", args(2), "from")),
-        toMs = Some(literalLong("ts_ccf", args(3), "to"))))
-    }),
-    // ts_dtw('s1 s2 s3', from, to, bucket_ms) — DTW pair distances
-    (FunctionIdentifier("ts_dtw"), info("ts_dtw"), { args: Seq[Expression] =>
-      nargs("ts_dtw", Seq(4), args)
-      val spark = activeSession("ts_dtw")
-      val keys = literalString("ts_dtw", args(0), "series list")
-        .split("\\s+").filter(_.nonEmpty).toSeq
-      GraftSessionBridge.logicalPlan(graft.ts.Dtw.pairwise(
-        spark.table(SamplesView),
-        literalLong("ts_dtw", args(3), "bucket_ms"), keys,
-        Some(literalLong("ts_dtw", args(1), "from")),
-        Some(literalLong("ts_dtw", args(2), "to"))))
-    }),
-    // ts_dtw_nearest('probe', from, to, bucket_ms, k) — profile search
-    (FunctionIdentifier("ts_dtw_nearest"), info("ts_dtw_nearest"), { args: Seq[Expression] =>
-      nargs("ts_dtw_nearest", Seq(5), args)
-      val spark = activeSession("ts_dtw_nearest")
-      GraftSessionBridge.logicalPlan(graft.ts.Dtw.nearest(
-        spark.table(SamplesView),
-        literalLong("ts_dtw_nearest", args(3), "bucket_ms"),
-        literalString("ts_dtw_nearest", args(0), "probe series"),
-        literalLong("ts_dtw_nearest", args(4), "k").toInt,
-        Some(literalLong("ts_dtw_nearest", args(1), "from")),
-        Some(literalLong("ts_dtw_nearest", args(2), "to"))))
-    }),
-    // ts_resets(from, to, bucket_ms[, align_ms]) — counter-reset count
-    (FunctionIdentifier("ts_resets"), info("ts_resets"), { args: Seq[Expression] =>
-      nargs("ts_resets", Seq(3, 4), args)
-      val spark = activeSession("ts_resets")
-      GraftSessionBridge.logicalPlan(graft.ts.Rates.resets(
-        spark.table(SamplesView),
-        literalLong("ts_resets", args(2), "bucket_ms"),
-        if (args.length > 3) literalLong("ts_resets", args(3), "align_ms") else 0L,
-        Some(literalLong("ts_resets", args(0), "from")),
-        Some(literalLong("ts_resets", args(1), "to"))))
-    }),
-    // ts_quantiles(from, to, bucket_ms, 'q1,q2,...') — exact quantiles
-    (FunctionIdentifier("ts_quantiles"), info("ts_quantiles"), { args: Seq[Expression] =>
-      nargs("ts_quantiles", Seq(4, 5), args)
-      val qs = literalString("ts_quantiles", args(3), "quantile list")
-        .split(",").map(_.trim).filter(_.nonEmpty).map(_.toDouble).toSeq
-      val spark = activeSession("ts_quantiles")
-      GraftSessionBridge.logicalPlan(graft.ts.Quantiles.bucketQuantiles(
-        spark.table(SamplesView), qs,
-        literalLong("ts_quantiles", args(2), "bucket_ms"),
-        if (args.length > 4) literalLong("ts_quantiles", args(4), "align_ms") else 0L,
-        Some(literalLong("ts_quantiles", args(0), "from")),
-        Some(literalLong("ts_quantiles", args(1), "to"))))
-    }),
+    tvf("ts_sliding", "from:long to:long agg:agg window_ms:long hop_ms:long [align_ms:long=0]") { (s, a) =>
+      Sliding.slidingRange(samples(s), a.str("agg"), a.long("window_ms"), a.long("hop_ms"),
+        a.long("align_ms"), a.from, a.to)
+    },
+    tvf("ts_session", "from:long to:long agg:agg gap_ms:long") { (s, a) =>
+      Sessions.sessionRange(samples(s), a.str("agg"), a.long("gap_ms"), a.from, a.to)
+    },
+    // delta + per-second rate
+    tvf("ts_rate", "from:long to:long bucket_ms:long [align_ms:long=0]") { (s, a) =>
+      Rates.deltaRate(samples(s), a.long("bucket_ms"), a.long("align_ms"), a.from, a.to)
+    },
+    // reset-aware growth
+    tvf("ts_increase", "from:long to:long bucket_ms:long [align_ms:long=0]") { (s, a) =>
+      Rates.increase(samples(s), a.long("bucket_ms"), a.long("align_ms"), a.from, a.to)
+    },
+    // instant rate family
+    tvf("ts_irate", "from:long to:long bucket_ms:long [align_ms:long=0]") { (s, a) =>
+      Rates.instant(samples(s), a.long("bucket_ms"), a.long("align_ms"), a.from, a.to)
+    },
+    // rolling-median/MAD outlier filter
+    tvf("ts_hampel", "from:long to:long span:int k:double") { (s, a) =>
+      Rolling.hampel(samples(s), a.int("span"), a.double("k"), fromMs = a.from, toMs = a.to)
+    },
+    // multi-window SLO burn-rate alerts (SRE rule)
+    tvf("ts_burn_rate", "from:long to:long short_ms:long long_ms:long hop_ms:long " +
+        "budget_per_sec:double threshold:double") { (s, a) =>
+      Rates.burnRate(samples(s), a.long("short_ms"), a.long("long_ms"), a.long("hop_ms"),
+        a.double("budget_per_sec"), a.double("threshold"), fromMs = a.from, toMs = a.to)
+    },
+    // inter-arrival gap report
+    tvf("ts_gaps", "from:long to:long threshold_ms:long") { (s, a) =>
+      Sessions.gaps(samples(s), a.long("threshold_ms"), a.from, a.to)
+    },
+    // trend/seasonal/remainder
+    tvf("ts_decompose", "from:long to:long bucket_ms:long period:int") { (s, a) =>
+      Seasonal.decompose(samples(s), a.long("bucket_ms"), a.int("period"), a.from, a.to)
+    },
+    // Holt projection
+    tvf("ts_forecast", "from:long to:long sf:double tf:double horizon:int step_ms:long") { (s, a) =>
+      Smoothing.holtForecast(samples(s), a.double("sf"), a.double("tf"), a.int("horizon"),
+        a.long("step_ms"), a.from, a.to)
+    },
+    // cross-correlation
+    tvf("ts_ccf", "a:str b:str from:long to:long bucket_ms:long max_lag:int") { (s, a) =>
+      AsOf.ccf(samples(s), a.str("a"), a.str("b"), a.long("bucket_ms"), a.int("max_lag"),
+        fromMs = a.from, toMs = a.to)
+    },
+    // DTW pair distances
+    tvf("ts_dtw", "keys:keys from:long to:long bucket_ms:long") { (s, a) =>
+      Dtw.pairwise(samples(s), a.long("bucket_ms"), a.keys("keys"), a.from, a.to)
+    },
+    // profile search
+    tvf("ts_dtw_nearest", "probe:str from:long to:long bucket_ms:long k:int") { (s, a) =>
+      Dtw.nearest(samples(s), a.long("bucket_ms"), a.str("probe"), a.int("k"), a.from, a.to)
+    },
+    // counter-reset count
+    tvf("ts_resets", "from:long to:long bucket_ms:long [align_ms:long=0]") { (s, a) =>
+      Rates.resets(samples(s), a.long("bucket_ms"), a.long("align_ms"), a.from, a.to)
+    },
+    // exact quantiles; `quantiles` is 'q1,q2,...'
+    tvf("ts_quantiles", "from:long to:long bucket_ms:long quantiles:str [align_ms:long=0]") { (s, a) =>
+      val qs = a.str("quantiles").split(",").map(_.trim).filter(_.nonEmpty).map(_.toDouble).toSeq
+      Quantiles.bucketQuantiles(samples(s), qs, a.long("bucket_ms"), a.long("align_ms"), a.from, a.to)
+    },
     // ---- round-10 analytics extensions as TVFs ----
-    // ts_zscore(from, to, threshold) — per-series z-score outliers
-    (FunctionIdentifier("ts_zscore"), info("ts_zscore"), { args: Seq[Expression] =>
-      nargs("ts_zscore", Seq(3), args)
-      val spark = activeSession("ts_zscore")
-      GraftSessionBridge.logicalPlan(graft.ts.Anomaly.zscore(
-        spark.table(SamplesView),
-        literalDouble("ts_zscore", args(2), "threshold"),
-        Some(literalLong("ts_zscore", args(0), "from")),
-        Some(literalLong("ts_zscore", args(1), "to"))))
-    }),
-    // ts_mad(from, to, threshold) — robust modified-z outliers
-    (FunctionIdentifier("ts_mad"), info("ts_mad"), { args: Seq[Expression] =>
-      nargs("ts_mad", Seq(3), args)
-      val spark = activeSession("ts_mad")
-      GraftSessionBridge.logicalPlan(graft.ts.Anomaly.mad(
-        spark.table(SamplesView),
-        literalDouble("ts_mad", args(2), "threshold"),
-        Some(literalLong("ts_mad", args(0), "from")),
-        Some(literalLong("ts_mad", args(1), "to"))))
-    }),
-    // ts_trend(from, to, predict_at_ms) — per-series OLS + forecast
-    (FunctionIdentifier("ts_trend"), info("ts_trend"), { args: Seq[Expression] =>
-      nargs("ts_trend", Seq(3), args)
-      val spark = activeSession("ts_trend")
-      GraftSessionBridge.logicalPlan(graft.ts.Trend.fit(
-        spark.table(SamplesView),
-        literalLong("ts_trend", args(2), "predict_at_ms"),
-        Some(literalLong("ts_trend", args(0), "from")),
-        Some(literalLong("ts_trend", args(1), "to"))))
-    }),
-    // ts_histogram(from, to, lo, hi, nbins) — fixed-width value bins
-    (FunctionIdentifier("ts_histogram"), info("ts_histogram"), { args: Seq[Expression] =>
-      nargs("ts_histogram", Seq(5), args)
-      val spark = activeSession("ts_histogram")
-      GraftSessionBridge.logicalPlan(graft.ts.Histogram.valueHistogram(
-        spark.table(SamplesView),
-        literalDouble("ts_histogram", args(2), "lo"),
-        literalDouble("ts_histogram", args(3), "hi"),
-        literalLong("ts_histogram", args(4), "nbins").toInt,
-        Some(literalLong("ts_histogram", args(0), "from")),
-        Some(literalLong("ts_histogram", args(1), "to"))))
-    }),
-    // ts_histogram_quantile(from, to, lo, hi, nbins, q) — quantile
-    // estimate interpolated from the bounded histogram (PromQL shape)
-    (FunctionIdentifier("ts_histogram_quantile"),
-        info("ts_histogram_quantile"), { args: Seq[Expression] =>
-      nargs("ts_histogram_quantile", Seq(6), args)
-      val spark = activeSession("ts_histogram_quantile")
-      GraftSessionBridge.logicalPlan(graft.ts.Histogram.histogramQuantile(
-        spark.table(SamplesView),
-        literalDouble("ts_histogram_quantile", args(2), "lo"),
-        literalDouble("ts_histogram_quantile", args(3), "hi"),
-        literalLong("ts_histogram_quantile", args(4), "nbins").toInt,
-        literalDouble("ts_histogram_quantile", args(5), "q"),
-        Some(literalLong("ts_histogram_quantile", args(0), "from")),
-        Some(literalLong("ts_histogram_quantile", args(1), "to"))))
-    }),
-    // ts_ddsketch_quantile(from, to, gamma, q) — the DDSketch
-    // log-bucketed relative-error quantile (integer moments + the
-    // [gamma^b, gamma^(b+1)) bracket)
-    (FunctionIdentifier("ts_ddsketch_quantile"),
-        info("ts_ddsketch_quantile"), { args: Seq[Expression] =>
-      nargs("ts_ddsketch_quantile", Seq(4), args)
-      val spark = activeSession("ts_ddsketch_quantile")
-      GraftSessionBridge.logicalPlan(graft.ts.Histogram.ddsketchQuantile(
-        spark.table(SamplesView),
-        literalDouble("ts_ddsketch_quantile", args(2), "gamma"),
-        literalDouble("ts_ddsketch_quantile", args(3), "q"),
-        Some(literalLong("ts_ddsketch_quantile", args(0), "from")),
-        Some(literalLong("ts_ddsketch_quantile", args(1), "to"))))
-    }),
-    // ts_ddsketch_windowed(from, to, gamma, window_ms) — one DDSketch
-    // per (series, tumbling window): the materialized per-interval
-    // quantile-sketch table
-    (FunctionIdentifier("ts_ddsketch_windowed"),
-        info("ts_ddsketch_windowed"), { args: Seq[Expression] =>
-      nargs("ts_ddsketch_windowed", Seq(4), args)
-      val spark = activeSession("ts_ddsketch_windowed")
-      GraftSessionBridge.logicalPlan(graft.ts.Histogram.ddsketchWindowed(
-        spark.table(SamplesView),
-        literalDouble("ts_ddsketch_windowed", args(2), "gamma"),
-        literalLong("ts_ddsketch_windowed", args(3), "window_ms"),
-        Some(literalLong("ts_ddsketch_windowed", args(0), "from")),
-        Some(literalLong("ts_ddsketch_windowed", args(1), "to"))))
-    }),
-    // ts_ddsketch_signed(from, to, gamma[, center]) — the THREE-STORE
-    // signed DDSketch (VLDB'19 §2.2: negative/zero/positive stores).
-    // The optional `center` sketches (value − center): the natural
-    // form for telemetry distributed around a setpoint, and what lets
-    // an all-positive fixture drive all three stores.
-    (FunctionIdentifier("ts_ddsketch_signed"),
-        info("ts_ddsketch_signed"), { args: Seq[Expression] =>
-      nargs("ts_ddsketch_signed", Seq(3, 4), args)
-      val spark = activeSession("ts_ddsketch_signed")
-      val center = if (args.length > 3)
-        literalDouble("ts_ddsketch_signed", args(3), "center") else 0.0
-      GraftSessionBridge.logicalPlan(graft.ts.Histogram.ddsketchHistogramSigned(
-        spark.table(SamplesView)
-          .withColumn("value", col("value") - center),
-        literalDouble("ts_ddsketch_signed", args(2), "gamma"),
-        Some(literalLong("ts_ddsketch_signed", args(0), "from")),
-        Some(literalLong("ts_ddsketch_signed", args(1), "to"))))
-    }),
-    // ts_ddsketch_signed_quantile(from, to, gamma, q[, center]) — the
-    // value-ordered three-store walk (negatives by descending
+    // per-series z-score outliers
+    tvf("ts_zscore", "from:long to:long threshold:double") { (s, a) =>
+      Anomaly.zscore(samples(s), a.double("threshold"), a.from, a.to)
+    },
+    // robust modified-z outliers
+    tvf("ts_mad", "from:long to:long threshold:double") { (s, a) =>
+      Anomaly.mad(samples(s), a.double("threshold"), a.from, a.to)
+    },
+    // per-series OLS + forecast
+    tvf("ts_trend", "from:long to:long predict_at_ms:long") { (s, a) =>
+      Trend.fit(samples(s), a.long("predict_at_ms"), a.from, a.to)
+    },
+    // fixed-width value bins
+    tvf("ts_histogram", "from:long to:long lo:double hi:double nbins:int") { (s, a) =>
+      Histogram.valueHistogram(samples(s), a.double("lo"), a.double("hi"), a.int("nbins"), a.from, a.to)
+    },
+    // quantile estimate interpolated from the bounded histogram (PromQL shape)
+    tvf("ts_histogram_quantile", "from:long to:long lo:double hi:double nbins:int q:double") { (s, a) =>
+      Histogram.histogramQuantile(samples(s), a.double("lo"), a.double("hi"), a.int("nbins"),
+        a.double("q"), a.from, a.to)
+    },
+    // the DDSketch log-bucketed relative-error quantile (integer moments +
+    // the [gamma^b, gamma^(b+1)) bracket)
+    tvf("ts_ddsketch_quantile", "from:long to:long gamma:double q:double") { (s, a) =>
+      Histogram.ddsketchQuantile(samples(s), a.double("gamma"), a.double("q"), a.from, a.to)
+    },
+    // one DDSketch per (series, tumbling window): the materialized
+    // per-interval quantile-sketch table
+    tvf("ts_ddsketch_windowed", "from:long to:long gamma:double window_ms:long") { (s, a) =>
+      Histogram.ddsketchWindowed(samples(s), a.double("gamma"), a.long("window_ms"), a.from, a.to)
+    },
+    // the THREE-STORE signed DDSketch (VLDB'19 §2.2: negative/zero/positive
+    // stores) of (value − center)
+    tvf("ts_ddsketch_signed", "from:long to:long gamma:double [center:double=0]") { (s, a) =>
+      Histogram.ddsketchHistogramSigned(centered(s, a), a.double("gamma"), a.from, a.to)
+    },
+    // the value-ordered three-store walk (negatives by descending
     // magnitude, zeros, positives ascending)
-    (FunctionIdentifier("ts_ddsketch_signed_quantile"),
-        info("ts_ddsketch_signed_quantile"), { args: Seq[Expression] =>
-      nargs("ts_ddsketch_signed_quantile", Seq(4, 5), args)
-      val spark = activeSession("ts_ddsketch_signed_quantile")
-      val center = if (args.length > 4)
-        literalDouble("ts_ddsketch_signed_quantile", args(4), "center") else 0.0
-      GraftSessionBridge.logicalPlan(graft.ts.Histogram.ddsketchQuantileSigned(
-        spark.table(SamplesView)
-          .withColumn("value", col("value") - center),
-        literalDouble("ts_ddsketch_signed_quantile", args(2), "gamma"),
-        literalDouble("ts_ddsketch_signed_quantile", args(3), "q"),
-        Some(literalLong("ts_ddsketch_signed_quantile", args(0), "from")),
-        Some(literalLong("ts_ddsketch_signed_quantile", args(1), "to"))))
-    }),
-    // ts_ddsketch_collapsed(from, to, gamma, max_buckets) — the
-    // bounded-size collapsing store (VLDB'19 §2.4): at most
+    tvf("ts_ddsketch_signed_quantile", "from:long to:long gamma:double q:double [center:double=0]") { (s, a) =>
+      Histogram.ddsketchQuantileSigned(centered(s, a), a.double("gamma"), a.double("q"), a.from, a.to)
+    },
+    // the bounded-size collapsing store (VLDB'19 §2.4): at most
     // max_buckets buckets per series, lower buckets deterministically
-    // folded into the floor bucket (the TVF is the collapsing form;
-    // the strict loud-reject form is Column-API-only since its only
+    // folded into the floor bucket (the TVF is the collapsing form; the
+    // strict loud-reject form is Column-API-only since its only
     // observable is an error)
-    (FunctionIdentifier("ts_ddsketch_collapsed"),
-        info("ts_ddsketch_collapsed"), { args: Seq[Expression] =>
-      nargs("ts_ddsketch_collapsed", Seq(4), args)
-      val spark = activeSession("ts_ddsketch_collapsed")
-      GraftSessionBridge.logicalPlan(graft.ts.Histogram.ddsketchHistogramCollapsed(
-        spark.table(SamplesView),
-        literalDouble("ts_ddsketch_collapsed", args(2), "gamma"),
-        literalLong("ts_ddsketch_collapsed", args(3), "max_buckets").toInt,
-        strict = false,
-        Some(literalLong("ts_ddsketch_collapsed", args(0), "from")),
-        Some(literalLong("ts_ddsketch_collapsed", args(1), "to"))))
-    }),
-    // ts_ddsketch_signed_windowed(from, to, gamma, window_ms[, center])
-    // — one three-store sketch per (series, tumbling window)
-    (FunctionIdentifier("ts_ddsketch_signed_windowed"),
-        info("ts_ddsketch_signed_windowed"), { args: Seq[Expression] =>
-      nargs("ts_ddsketch_signed_windowed", Seq(4, 5), args)
-      val spark = activeSession("ts_ddsketch_signed_windowed")
-      val center = if (args.length > 4)
-        literalDouble("ts_ddsketch_signed_windowed", args(4), "center") else 0.0
-      GraftSessionBridge.logicalPlan(graft.ts.Histogram.ddsketchWindowedSigned(
-        spark.table(SamplesView)
-          .withColumn("value", col("value") - center),
-        literalDouble("ts_ddsketch_signed_windowed", args(2), "gamma"),
-        literalLong("ts_ddsketch_signed_windowed", args(3), "window_ms"),
-        Some(literalLong("ts_ddsketch_signed_windowed", args(0), "from")),
-        Some(literalLong("ts_ddsketch_signed_windowed", args(1), "to"))))
-    }),
-    // ts_lttb(from, to, bucket_ms[, align_ms]) — parallel LTTB pick
-    (FunctionIdentifier("ts_lttb"), info("ts_lttb"), { args: Seq[Expression] =>
-      nargs("ts_lttb", Seq(3, 4), args)
-      val spark = activeSession("ts_lttb")
-      GraftSessionBridge.logicalPlan(graft.ts.Lttb.downsample(
-        spark.table(SamplesView),
-        literalLong("ts_lttb", args(2), "bucket_ms"),
-        if (args.length > 3) literalLong("ts_lttb", args(3), "align_ms") else 0L,
-        Some(literalLong("ts_lttb", args(0), "from")),
-        Some(literalLong("ts_lttb", args(1), "to"))))
-    }),
-    // ts_ewma(from, to, alpha[, span]) — windowed EWM smoothing
-    (FunctionIdentifier("ts_ewma"), info("ts_ewma"), { args: Seq[Expression] =>
-      nargs("ts_ewma", Seq(3, 4), args)
-      val spark = activeSession("ts_ewma")
-      GraftSessionBridge.logicalPlan(graft.ts.Smoothing.ewma(
-        spark.table(SamplesView),
-        literalDouble("ts_ewma", args(2), "alpha"),
-        if (args.length > 3) literalLong("ts_ewma", args(3), "span").toInt else 32,
-        Some(literalLong("ts_ewma", args(0), "from")),
-        Some(literalLong("ts_ewma", args(1), "to"))))
-    }),
-    // ts_cusum(from, to, threshold) — CUSUM change detection
-    (FunctionIdentifier("ts_cusum"), info("ts_cusum"), { args: Seq[Expression] =>
-      nargs("ts_cusum", Seq(3), args)
-      val spark = activeSession("ts_cusum")
-      GraftSessionBridge.logicalPlan(graft.ts.Changepoint.cusum(
-        spark.table(SamplesView),
-        literalDouble("ts_cusum", args(2), "threshold"),
-        Some(literalLong("ts_cusum", args(0), "from")),
-        Some(literalLong("ts_cusum", args(1), "to"))))
-    }),
-    // ts_changepoint(from, to, bucket_ms, levels, min_size) — offline
-    // changepoint localization by binary segmentation of the bucket grid
-    (FunctionIdentifier("ts_changepoint"), info("ts_changepoint"),
-        { args: Seq[Expression] =>
-      nargs("ts_changepoint", Seq(5), args)
-      val spark = activeSession("ts_changepoint")
-      GraftSessionBridge.logicalPlan(graft.ts.Changepoint.binseg(
-        spark.table(SamplesView),
-        literalLong("ts_changepoint", args(2), "bucket_ms"),
-        literalLong("ts_changepoint", args(3), "levels").toInt,
-        literalLong("ts_changepoint", args(4), "min_size").toInt,
-        fromMs = Some(literalLong("ts_changepoint", args(0), "from")),
-        toMs = Some(literalLong("ts_changepoint", args(1), "to"))))
-    }),
-    // ts_theilsen(from, to, bucket_ms) — Theil-Sen robust trend
-    // (median pairwise slope + median-residual intercept) per series
-    (FunctionIdentifier("ts_theilsen"), info("ts_theilsen"),
-        { args: Seq[Expression] =>
-      nargs("ts_theilsen", Seq(3), args)
-      val spark = activeSession("ts_theilsen")
-      GraftSessionBridge.logicalPlan(graft.ts.Trend.theilSen(
-        spark.table(SamplesView),
-        literalLong("ts_theilsen", args(2), "bucket_ms"),
-        fromMs = Some(literalLong("ts_theilsen", args(0), "from")),
-        toMs = Some(literalLong("ts_theilsen", args(1), "to"))))
-    }),
-    // ts_asof('left', 'right', from, to[, tolerance_ms]) — as-of join
-    (FunctionIdentifier("ts_asof"), info("ts_asof"), { args: Seq[Expression] =>
-      nargs("ts_asof", Seq(4, 5), args)
-      val spark = activeSession("ts_asof")
-      GraftSessionBridge.logicalPlan(graft.ts.AsOf.asofJoin(
-        spark.table(SamplesView),
-        literalString("ts_asof", args(0), "left series key"),
-        literalString("ts_asof", args(1), "right series key"),
-        if (args.length > 4) Some(literalLong("ts_asof", args(4), "tolerance_ms")) else None,
-        Some(literalLong("ts_asof", args(2), "from")),
-        Some(literalLong("ts_asof", args(3), "to"))))
-    }),
-    // ts_seasonal(from, to, 'hod'|'dow'[, threshold]) — profile when
-    // no threshold is given, cohort anomaly otherwise
-    (FunctionIdentifier("ts_seasonal"), info("ts_seasonal"), { args: Seq[Expression] =>
-      nargs("ts_seasonal", Seq(3, 4), args)
-      val spark = activeSession("ts_seasonal")
-      val mode = literalString("ts_seasonal", args(2), "mode")
-      GraftSessionBridge.logicalPlan(
-        if (args.length > 3)
-          graft.ts.Seasonal.anomaly(spark.table(SamplesView),
-            literalDouble("ts_seasonal", args(3), "threshold"), mode,
-            fromMs = Some(literalLong("ts_seasonal", args(0), "from")),
-            toMs = Some(literalLong("ts_seasonal", args(1), "to")))
-        else
-          graft.ts.Seasonal.profile(spark.table(SamplesView), mode,
-            Some(literalLong("ts_seasonal", args(0), "from")),
-            Some(literalLong("ts_seasonal", args(1), "to"))))
-    }),
-    // ts_rolling_quantile(from, to, q, span)
-    (FunctionIdentifier("ts_rolling_quantile"), info("ts_rolling_quantile"), { args: Seq[Expression] =>
-      nargs("ts_rolling_quantile", Seq(4), args)
-      val spark = activeSession("ts_rolling_quantile")
-      GraftSessionBridge.logicalPlan(graft.ts.Rolling.rollingQuantile(
-        spark.table(SamplesView),
-        literalDouble("ts_rolling_quantile", args(2), "quantile"),
-        literalLong("ts_rolling_quantile", args(3), "span").toInt,
-        Some(literalLong("ts_rolling_quantile", args(0), "from")),
-        Some(literalLong("ts_rolling_quantile", args(1), "to"))))
-    }),
-    // ts_winsorize(from, to, q_lo, q_hi)
-    (FunctionIdentifier("ts_winsorize"), info("ts_winsorize"), { args: Seq[Expression] =>
-      nargs("ts_winsorize", Seq(4), args)
-      val spark = activeSession("ts_winsorize")
-      GraftSessionBridge.logicalPlan(graft.ts.Rolling.winsorize(
-        spark.table(SamplesView),
-        literalDouble("ts_winsorize", args(2), "q_lo"),
-        literalDouble("ts_winsorize", args(3), "q_hi"),
-        Some(literalLong("ts_winsorize", args(0), "from")),
-        Some(literalLong("ts_winsorize", args(1), "to"))))
-    }),
-    // ts_resample(from, to, step_ms[, align_ms]) — linear interpolation
-    // onto the step grid (the Resample.linear operator's SQL form)
-    (FunctionIdentifier("ts_resample"), info("ts_resample"), { args: Seq[Expression] =>
-      nargs("ts_resample", Seq(3, 4), args)
-      val spark = activeSession("ts_resample")
-      GraftSessionBridge.logicalPlan(graft.ts.Resample.linear(
-        spark.table(SamplesView),
-        literalLong("ts_resample", args(2), "step_ms"),
-        if (args.length > 3) literalLong("ts_resample", args(3), "align_ms") else 0L,
-        Some(literalLong("ts_resample", args(0), "from")),
-        Some(literalLong("ts_resample", args(1), "to"))))
-    }),
-    // ts_corr('a', 'b', from, to, bucket_ms[, align_ms]) —
+    tvf("ts_ddsketch_collapsed", "from:long to:long gamma:double max_buckets:int") { (s, a) =>
+      Histogram.ddsketchHistogramCollapsed(samples(s), a.double("gamma"), a.int("max_buckets"),
+        strict = false, a.from, a.to)
+    },
+    // one three-store sketch per (series, tumbling window)
+    tvf("ts_ddsketch_signed_windowed",
+        "from:long to:long gamma:double window_ms:long [center:double=0]") { (s, a) =>
+      Histogram.ddsketchWindowedSigned(centered(s, a), a.double("gamma"), a.long("window_ms"),
+        a.from, a.to)
+    },
+    // parallel LTTB pick
+    tvf("ts_lttb", "from:long to:long bucket_ms:long [align_ms:long=0]") { (s, a) =>
+      Lttb.downsample(samples(s), a.long("bucket_ms"), a.long("align_ms"), a.from, a.to)
+    },
+    // windowed EWM smoothing
+    tvf("ts_ewma", "from:long to:long alpha:double [span:int=32]") { (s, a) =>
+      Smoothing.ewma(samples(s), a.double("alpha"), a.int("span"), a.from, a.to)
+    },
+    // CUSUM change detection
+    tvf("ts_cusum", "from:long to:long threshold:double") { (s, a) =>
+      Changepoint.cusum(samples(s), a.double("threshold"), a.from, a.to)
+    },
+    // offline changepoint localization by binary segmentation of the
+    // bucket grid
+    tvf("ts_changepoint", "from:long to:long bucket_ms:long levels:int min_size:int") { (s, a) =>
+      Changepoint.binseg(samples(s), a.long("bucket_ms"), a.int("levels"), a.int("min_size"),
+        fromMs = a.from, toMs = a.to)
+    },
+    // Theil-Sen robust trend (median pairwise slope + median-residual
+    // intercept) per series
+    tvf("ts_theilsen", "from:long to:long bucket_ms:long") { (s, a) =>
+      Trend.theilSen(samples(s), a.long("bucket_ms"), fromMs = a.from, toMs = a.to)
+    },
+    // as-of join
+    tvf("ts_asof", "left:str right:str from:long to:long [tolerance_ms:long]") { (s, a) =>
+      AsOf.asofJoin(samples(s), a.str("left"), a.str("right"), a.opt[Long]("tolerance_ms"),
+        a.from, a.to)
+    },
+    // mode 'hod'|'dow': the profile when no threshold is given, the
+    // cohort anomaly otherwise
+    tvf("ts_seasonal", "from:long to:long mode:str [threshold:double]") { (s, a) =>
+      if (a.has("threshold"))
+        Seasonal.anomaly(samples(s), a.double("threshold"), a.str("mode"), fromMs = a.from, toMs = a.to)
+      else Seasonal.profile(samples(s), a.str("mode"), a.from, a.to)
+    },
+    tvf("ts_rolling_quantile", "from:long to:long q:double span:int") { (s, a) =>
+      Rolling.rollingQuantile(samples(s), a.double("q"), a.int("span"), a.from, a.to)
+    },
+    tvf("ts_winsorize", "from:long to:long q_lo:double q_hi:double") { (s, a) =>
+      Rolling.winsorize(samples(s), a.double("q_lo"), a.double("q_hi"), a.from, a.to)
+    },
+    // linear interpolation onto the step grid (the Resample.linear
+    // operator's SQL form)
+    tvf("ts_resample", "from:long to:long step_ms:long [align_ms:long=0]") { (s, a) =>
+      Resample.linear(samples(s), a.long("step_ms"), a.long("align_ms"), a.from, a.to)
+    },
     // bucket-aligned Pearson correlation of two series
-    (FunctionIdentifier("ts_corr"), info("ts_corr"), { args: Seq[Expression] =>
-      nargs("ts_corr", Seq(5, 6), args)
-      val spark = activeSession("ts_corr")
-      GraftSessionBridge.logicalPlan(graft.ts.AsOf.pearson(
-        spark.table(SamplesView),
-        literalString("ts_corr", args(0), "left series key"),
-        literalString("ts_corr", args(1), "right series key"),
-        literalLong("ts_corr", args(4), "bucket_ms"),
-        if (args.length > 5) literalLong("ts_corr", args(5), "align_ms") else 0L,
-        Some(literalLong("ts_corr", args(2), "from")),
-        Some(literalLong("ts_corr", args(3), "to"))))
-    }),
-    // ts_delta_rate(from, to, bucket_ms[, align_ms]) — alias of
-    // ts_rate under the operator's API name (deltaRate)
-    (FunctionIdentifier("ts_delta_rate"), info("ts_delta_rate"), { args: Seq[Expression] =>
-      nargs("ts_delta_rate", Seq(3, 4), args)
-      val spark = activeSession("ts_delta_rate")
-      GraftSessionBridge.logicalPlan(graft.ts.Rates.deltaRate(
-        spark.table(SamplesView),
-        literalLong("ts_delta_rate", args(2), "bucket_ms"),
-        if (args.length > 3) literalLong("ts_delta_rate", args(3), "align_ms") else 0L,
-        Some(literalLong("ts_delta_rate", args(0), "from")),
-        Some(literalLong("ts_delta_rate", args(1), "to"))))
-    }),
-    // ts_acf(from, to, max_lag) — per-series autocorrelation
-    (FunctionIdentifier("ts_acf"), info("ts_acf"), { args: Seq[Expression] =>
-      nargs("ts_acf", Seq(3), args)
-      val spark = activeSession("ts_acf")
-      GraftSessionBridge.logicalPlan(graft.ts.Trend.acf(
-        spark.table(SamplesView),
-        literalLong("ts_acf", args(2), "max_lag").toInt,
-        Some(literalLong("ts_acf", args(0), "from")),
-        Some(literalLong("ts_acf", args(1), "to"))))
-    }),
-    // ts_holt(from, to, sf, tf) — Holt double-exponential smoothing
-    (FunctionIdentifier("ts_holt"), info("ts_holt"), { args: Seq[Expression] =>
-      nargs("ts_holt", Seq(4), args)
-      val spark = activeSession("ts_holt")
-      GraftSessionBridge.logicalPlan(graft.ts.Smoothing.holt(
-        spark.table(SamplesView),
-        literalDouble("ts_holt", args(2), "sf"),
-        literalDouble("ts_holt", args(3), "tf"),
-        Some(literalLong("ts_holt", args(0), "from")),
-        Some(literalLong("ts_holt", args(1), "to"))))
-    }),
-    // ts_holt_winters(from, to, alpha, beta, gamma, m) — additive
-    // triple exponential smoothing (holt + m-slot seasonal state)
-    (FunctionIdentifier("ts_holt_winters"), info("ts_holt_winters"),
-      { args: Seq[Expression] =>
-      nargs("ts_holt_winters", Seq(6), args)
-      val spark = activeSession("ts_holt_winters")
-      GraftSessionBridge.logicalPlan(graft.ts.Smoothing.holtWinters(
-        spark.table(SamplesView),
-        literalDouble("ts_holt_winters", args(2), "alpha"),
-        literalDouble("ts_holt_winters", args(3), "beta"),
-        literalDouble("ts_holt_winters", args(4), "gamma"),
-        literalLong("ts_holt_winters", args(5), "m").toInt,
-        Some(literalLong("ts_holt_winters", args(0), "from")),
-        Some(literalLong("ts_holt_winters", args(1), "to"))))
-    }),
-    // ts_topk(from, to, k, 'agg', bucket_ms[, 'bottom']) — per-bucket
-    // cross-series top-k (bottom-k with the 6th flag argument)
-    (FunctionIdentifier("ts_topk"), info("ts_topk"), { args: Seq[Expression] =>
-      nargs("ts_topk", Seq(5, 6), args)
-      val spark = activeSession("ts_topk")
-      GraftSessionBridge.logicalPlan(graft.ts.TopK.topkSeries(
-        spark.table(SamplesView),
-        literalLong("ts_topk", args(2), "k").toInt,
-        literalString("ts_topk", args(3), "agg"),
-        literalLong("ts_topk", args(4), "bucket_ms"),
-        bottom = args.length > 5 &&
-          literalString("ts_topk", args(5), "direction") == "bottom",
-        fromMs = Some(literalLong("ts_topk", args(0), "from")),
-        toMs = Some(literalLong("ts_topk", args(1), "to"))))
-    }),
-    // ts_sax(from, to, bucket_ms) — SAX word per series
-    (FunctionIdentifier("ts_sax"), info("ts_sax"), { args: Seq[Expression] =>
-      nargs("ts_sax", Seq(3), args)
-      val spark = activeSession("ts_sax")
-      GraftSessionBridge.logicalPlan(graft.ts.Sax.saxWords(
-        spark.table(SamplesView),
-        literalLong("ts_sax", args(2), "bucket_ms"),
-        fromMs = Some(literalLong("ts_sax", args(0), "from")),
-        toMs = Some(literalLong("ts_sax", args(1), "to"))))
-    }),
-    // ts_motifs(from, to, bucket_ms, m, k) — top-k recurring SAX
-    // m-grams across the corpus
-    (FunctionIdentifier("ts_motifs"), info("ts_motifs"), { args: Seq[Expression] =>
-      nargs("ts_motifs", Seq(5), args)
-      val spark = activeSession("ts_motifs")
-      GraftSessionBridge.logicalPlan(graft.ts.Sax.motifs(
-        spark.table(SamplesView),
-        literalLong("ts_motifs", args(2), "bucket_ms"),
-        literalLong("ts_motifs", args(3), "m").toInt,
-        literalLong("ts_motifs", args(4), "k").toInt,
-        fromMs = Some(literalLong("ts_motifs", args(0), "from")),
-        toMs = Some(literalLong("ts_motifs", args(1), "to"))))
-    }),
-    // ts_hw_forecast(from, to, alpha, beta, gamma, m, horizon, step_ms)
-    // — Holt-Winters h-step projection past each series' last sample
-    (FunctionIdentifier("ts_hw_forecast"), info("ts_hw_forecast"),
-      { args: Seq[Expression] =>
-      nargs("ts_hw_forecast", Seq(8), args)
-      val spark = activeSession("ts_hw_forecast")
-      GraftSessionBridge.logicalPlan(graft.ts.Smoothing.holtWintersForecast(
-        spark.table(SamplesView),
-        literalDouble("ts_hw_forecast", args(2), "alpha"),
-        literalDouble("ts_hw_forecast", args(3), "beta"),
-        literalDouble("ts_hw_forecast", args(4), "gamma"),
-        literalLong("ts_hw_forecast", args(5), "m").toInt,
-        literalLong("ts_hw_forecast", args(6), "horizon").toInt,
-        literalLong("ts_hw_forecast", args(7), "step_ms"),
-        Some(literalLong("ts_hw_forecast", args(0), "from")),
-        Some(literalLong("ts_hw_forecast", args(1), "to"))))
-    }),
-    // ts_rolling_corr('a', 'b', from, to, bucket_ms, span) — trailing
-    // Pearson r over the two series' aligned bucket grid
-    (FunctionIdentifier("ts_rolling_corr"), info("ts_rolling_corr"),
-      { args: Seq[Expression] =>
-      nargs("ts_rolling_corr", Seq(6), args)
-      val spark = activeSession("ts_rolling_corr")
-      GraftSessionBridge.logicalPlan(graft.ts.AsOf.rollingCorr(
-        spark.table(SamplesView),
-        literalString("ts_rolling_corr", args(0), "series a"),
-        literalString("ts_rolling_corr", args(1), "series b"),
-        literalLong("ts_rolling_corr", args(4), "bucket_ms"),
-        literalLong("ts_rolling_corr", args(5), "span").toInt,
-        fromMs = Some(literalLong("ts_rolling_corr", args(2), "from")),
-        toMs = Some(literalLong("ts_rolling_corr", args(3), "to"))))
-    }),
-    // ts_backtest(from, to, split, sf, tf, horizon, bucket_ms) —
+    tvf("ts_corr", "left:str right:str from:long to:long bucket_ms:long [align_ms:long=0]") { (s, a) =>
+      AsOf.pearson(samples(s), a.str("left"), a.str("right"), a.long("bucket_ms"),
+        a.long("align_ms"), a.from, a.to)
+    },
+    // alias of ts_rate under the operator's API name (deltaRate)
+    tvf("ts_delta_rate", "from:long to:long bucket_ms:long [align_ms:long=0]") { (s, a) =>
+      Rates.deltaRate(samples(s), a.long("bucket_ms"), a.long("align_ms"), a.from, a.to)
+    },
+    // per-series autocorrelation
+    tvf("ts_acf", "from:long to:long max_lag:int") { (s, a) =>
+      Trend.acf(samples(s), a.int("max_lag"), a.from, a.to)
+    },
+    // Holt double-exponential smoothing
+    tvf("ts_holt", "from:long to:long sf:double tf:double") { (s, a) =>
+      Smoothing.holt(samples(s), a.double("sf"), a.double("tf"), a.from, a.to)
+    },
+    // additive triple exponential smoothing (holt + m-slot seasonal state)
+    tvf("ts_holt_winters", "from:long to:long alpha:double beta:double gamma:double m:int") { (s, a) =>
+      Smoothing.holtWinters(samples(s), a.double("alpha"), a.double("beta"), a.double("gamma"),
+        a.int("m"), a.from, a.to)
+    },
+    // per-bucket cross-series top-k; direction 'bottom' is bottom-k
+    tvf("ts_topk", "from:long to:long k:int agg:agg bucket_ms:long [direction:str=top]") { (s, a) =>
+      TopK.topkSeries(samples(s), a.int("k"), a.str("agg"), a.long("bucket_ms"),
+        bottom = a.str("direction") == "bottom", fromMs = a.from, toMs = a.to)
+    },
+    // SAX word per series
+    tvf("ts_sax", "from:long to:long bucket_ms:long") { (s, a) =>
+      Sax.saxWords(samples(s), a.long("bucket_ms"), fromMs = a.from, toMs = a.to)
+    },
+    // top-k recurring SAX m-grams across the corpus
+    tvf("ts_motifs", "from:long to:long bucket_ms:long m:int k:int") { (s, a) =>
+      Sax.motifs(samples(s), a.long("bucket_ms"), a.int("m"), a.int("k"), fromMs = a.from, toMs = a.to)
+    },
+    // Holt-Winters h-step projection past each series' last sample
+    tvf("ts_hw_forecast", "from:long to:long alpha:double beta:double gamma:double m:int " +
+        "horizon:int step_ms:long") { (s, a) =>
+      Smoothing.holtWintersForecast(samples(s), a.double("alpha"), a.double("beta"),
+        a.double("gamma"), a.int("m"), a.int("horizon"), a.long("step_ms"), a.from, a.to)
+    },
+    // trailing Pearson r over the two series' aligned bucket grid
+    tvf("ts_rolling_corr", "a:str b:str from:long to:long bucket_ms:long span:int") { (s, a) =>
+      AsOf.rollingCorr(samples(s), a.str("a"), a.str("b"), a.long("bucket_ms"), a.int("span"),
+        fromMs = a.from, toMs = a.to)
+    },
     // rolling-origin holt forecast evaluation (per-series mae/rmse)
-    (FunctionIdentifier("ts_backtest"), info("ts_backtest"),
-      { args: Seq[Expression] =>
-      nargs("ts_backtest", Seq(7), args)
-      val spark = activeSession("ts_backtest")
-      GraftSessionBridge.logicalPlan(graft.ts.Backtest.holtBacktest(
-        spark.table(SamplesView),
-        literalDouble("ts_backtest", args(3), "sf"),
-        literalDouble("ts_backtest", args(4), "tf"),
-        literalLong("ts_backtest", args(2), "split"),
-        literalLong("ts_backtest", args(5), "horizon").toInt,
-        literalLong("ts_backtest", args(6), "bucket_ms"),
-        Some(literalLong("ts_backtest", args(0), "from")),
-        Some(literalLong("ts_backtest", args(1), "to"))))
-    }),
-    // ts_backtest_rolling(from, to, 'o1,o2,...', sf, tf, horizon,
-    // bucket_ms) — multi-origin sweep: per (series, origin) + the
-    // pooled per-series row (origin NULL)
-    (FunctionIdentifier("ts_backtest_rolling"), info("ts_backtest_rolling"),
-      { args: Seq[Expression] =>
-      nargs("ts_backtest_rolling", Seq(7), args)
-      val origins = literalString("ts_backtest_rolling", args(2), "origin list")
-        .split(",").map(_.trim).filter(_.nonEmpty).map(_.toLong).toSeq
-      val spark = activeSession("ts_backtest_rolling")
-      GraftSessionBridge.logicalPlan(graft.ts.Backtest.holtBacktestRolling(
-        spark.table(SamplesView),
-        literalDouble("ts_backtest_rolling", args(3), "sf"),
-        literalDouble("ts_backtest_rolling", args(4), "tf"),
-        origins,
-        literalLong("ts_backtest_rolling", args(5), "horizon").toInt,
-        literalLong("ts_backtest_rolling", args(6), "bucket_ms"),
-        Some(literalLong("ts_backtest_rolling", args(0), "from")),
-        Some(literalLong("ts_backtest_rolling", args(1), "to"))))
-    }),
-    // ts_matrix_profile(from, to, bucket_ms, m) — per-window
-    // z-normalized nearest-neighbor distance profile per series
-    (FunctionIdentifier("ts_matrix_profile"), info("ts_matrix_profile"),
-      { args: Seq[Expression] =>
-      nargs("ts_matrix_profile", Seq(4, 5), args)
-      val spark = activeSession("ts_matrix_profile")
-      // optional 5th arg: max_windows — a value past MaxPairWindows is
-      // the explicit opt-in that routes through the STOMP long path
-      GraftSessionBridge.logicalPlan(graft.ts.MatrixProfile.profileAuto(
-        spark.table(SamplesView),
-        literalLong("ts_matrix_profile", args(2), "bucket_ms"),
-        literalLong("ts_matrix_profile", args(3), "m").toInt,
-        Some(literalLong("ts_matrix_profile", args(0), "from")),
-        Some(literalLong("ts_matrix_profile", args(1), "to")),
-        if (args.length > 4)
-          literalLong("ts_matrix_profile", args(4), "max_windows").toInt
-        else graft.ts.MatrixProfile.MaxPairWindows))
-    }),
-    // ts_decompose_anomaly(from, to, bucket_ms, period, threshold) —
+    tvf("ts_backtest", "from:long to:long split:long sf:double tf:double horizon:int " +
+        "bucket_ms:long") { (s, a) =>
+      Backtest.holtBacktest(samples(s), a.double("sf"), a.double("tf"), a.long("split"),
+        a.int("horizon"), a.long("bucket_ms"), a.from, a.to)
+    },
+    // multi-origin sweep over origins 'o1,o2,...': per (series, origin) +
+    // the pooled per-series row (origin NULL)
+    tvf("ts_backtest_rolling", "from:long to:long origins:str sf:double tf:double horizon:int " +
+        "bucket_ms:long") { (s, a) =>
+      val origins = a.str("origins").split(",").map(_.trim).filter(_.nonEmpty).map(_.toLong).toSeq
+      Backtest.holtBacktestRolling(samples(s), a.double("sf"), a.double("tf"), origins,
+        a.int("horizon"), a.long("bucket_ms"), a.from, a.to)
+    },
+    // per-window z-normalized nearest-neighbor distance profile per series
+    tvf("ts_matrix_profile", "from:long to:long bucket_ms:long m:int [max_windows:int]") { (s, a) =>
+      MatrixProfile.profileAuto(samples(s), a.long("bucket_ms"), a.int("m"), a.from, a.to,
+        maxWindows(a))
+    },
     // seasonal-adjusted anomaly: z-score on the decomposition remainder
-    (FunctionIdentifier("ts_decompose_anomaly"), info("ts_decompose_anomaly"),
-      { args: Seq[Expression] =>
-      nargs("ts_decompose_anomaly", Seq(5), args)
-      val spark = activeSession("ts_decompose_anomaly")
-      GraftSessionBridge.logicalPlan(graft.ts.Seasonal.remainderAnomaly(
-        spark.table(SamplesView),
-        literalLong("ts_decompose_anomaly", args(2), "bucket_ms"),
-        literalLong("ts_decompose_anomaly", args(3), "period").toInt,
-        literalDouble("ts_decompose_anomaly", args(4), "threshold"),
-        Some(literalLong("ts_decompose_anomaly", args(0), "from")),
-        Some(literalLong("ts_decompose_anomaly", args(1), "to"))))
-    }),
-    // ts_corr_matrix('k1 k2 ...', from, to, bucket_ms[, align_ms]) —
+    tvf("ts_decompose_anomaly", "from:long to:long bucket_ms:long period:int threshold:double") { (s, a) =>
+      Seasonal.remainderAnomaly(samples(s), a.long("bucket_ms"), a.int("period"),
+        a.double("threshold"), a.from, a.to)
+    },
     // pairwise Pearson over the bounded series list (numkeys-guarded)
-    (FunctionIdentifier("ts_corr_matrix"), info("ts_corr_matrix"),
-      { args: Seq[Expression] =>
-      nargs("ts_corr_matrix", Seq(4, 5), args)
-      val keys = literalString("ts_corr_matrix", args(0), "series list")
-        .split("\\s+").filter(_.nonEmpty).toSeq
-      val spark = activeSession("ts_corr_matrix")
-      GraftSessionBridge.logicalPlan(graft.ts.AsOf.pearsonMatrix(
-        spark.table(SamplesView), keys,
-        literalLong("ts_corr_matrix", args(3), "bucket_ms"),
-        if (args.length > 4) literalLong("ts_corr_matrix", args(4), "align_ms") else 0L,
-        Some(literalLong("ts_corr_matrix", args(1), "from")),
-        Some(literalLong("ts_corr_matrix", args(2), "to"))))
-    }),
-    // ts_corr_matrix_filter('<FILTER preds>', from, to, bucket_ms
-    //                       [, align_ms]) — the matrix over a
-    // label-resolved set; the numkeys guard is IN the plan (lazy
-    // assert on the matched count — no analysis-time driver action)
-    (FunctionIdentifier("ts_corr_matrix_filter"), info("ts_corr_matrix_filter"),
-      { args: Seq[Expression] =>
-      nargs("ts_corr_matrix_filter", Seq(4, 5), args)
-      val preds = parsePreds("ts_corr_matrix_filter", args.head)
-      require(preds.nonEmpty,
+    tvf("ts_corr_matrix", "keys:keys from:long to:long bucket_ms:long [align_ms:long=0]") { (s, a) =>
+      AsOf.pearsonMatrix(samples(s), a.keys("keys"), a.long("bucket_ms"), a.long("align_ms"),
+        a.from, a.to)
+    },
+    // the matrix over a label-resolved set; the numkeys guard is IN the
+    // plan (lazy assert on the matched count — no analysis-time Spark
+    // action)
+    tvf("ts_corr_matrix_filter",
+        "filter:preds from:long to:long bucket_ms:long [align_ms:long=0]") { (s, a) =>
+      require(a.preds("filter").nonEmpty,
         "ts_corr_matrix_filter: at least one label predicate is required")
-      val spark = activeSession("ts_corr_matrix_filter")
-      GraftSessionBridge.logicalPlan(graft.ts.AsOf.pearsonMatrixByFilter(
-        spark.table(SamplesView), spark.table(LabelsView), preds,
-        literalLong("ts_corr_matrix_filter", args(3), "bucket_ms"),
-        if (args.length > 4) literalLong("ts_corr_matrix_filter", args(4), "align_ms") else 0L,
-        Some(literalLong("ts_corr_matrix_filter", args(1), "from")),
-        Some(literalLong("ts_corr_matrix_filter", args(2), "to"))))
-    }),
-    // ts_mp_discords(from, to, bucket_ms, m, k) — per-series top-k
-    // largest-nn-distance windows (the anomalies)
-    (FunctionIdentifier("ts_mp_discords"), info("ts_mp_discords"),
-      { args: Seq[Expression] =>
-      nargs("ts_mp_discords", Seq(5, 6), args)
-      val spark = activeSession("ts_mp_discords")
-      GraftSessionBridge.logicalPlan(graft.ts.MatrixProfile.discords(
-        spark.table(SamplesView),
-        literalLong("ts_mp_discords", args(2), "bucket_ms"),
-        literalLong("ts_mp_discords", args(3), "m").toInt,
-        literalLong("ts_mp_discords", args(4), "k").toInt,
-        Some(literalLong("ts_mp_discords", args(0), "from")),
-        Some(literalLong("ts_mp_discords", args(1), "to")),
-        if (args.length > 5) // past MaxPairWindows → STOMP long route
-          literalLong("ts_mp_discords", args(5), "max_windows").toInt
-        else graft.ts.MatrixProfile.MaxPairWindows))
-    }),
-    // ts_mp_motifs(from, to, bucket_ms, m, k) — the dual: smallest
-    // nn-distance windows (the repeated shapes)
-    (FunctionIdentifier("ts_mp_motifs"), info("ts_mp_motifs"),
-      { args: Seq[Expression] =>
-      nargs("ts_mp_motifs", Seq(5, 6), args)
-      val spark = activeSession("ts_mp_motifs")
-      GraftSessionBridge.logicalPlan(graft.ts.MatrixProfile.motifWindows(
-        spark.table(SamplesView),
-        literalLong("ts_mp_motifs", args(2), "bucket_ms"),
-        literalLong("ts_mp_motifs", args(3), "m").toInt,
-        literalLong("ts_mp_motifs", args(4), "k").toInt,
-        Some(literalLong("ts_mp_motifs", args(0), "from")),
-        Some(literalLong("ts_mp_motifs", args(1), "to")),
-        if (args.length > 5) // past MaxPairWindows → STOMP long route
-          literalLong("ts_mp_motifs", args(5), "max_windows").toInt
-        else graft.ts.MatrixProfile.MaxPairWindows))
-    }),
-    // ts_mp_join('a', 'b', from, to, bucket_ms, m) — AB-join profile
-    (FunctionIdentifier("ts_mp_join"), info("ts_mp_join"),
-      { args: Seq[Expression] =>
-      nargs("ts_mp_join", Seq(6, 7), args)
-      val spark = activeSession("ts_mp_join")
-      GraftSessionBridge.logicalPlan(graft.ts.MatrixProfile.joinProfile(
-        spark.table(SamplesView),
-        literalLong("ts_mp_join", args(4), "bucket_ms"),
-        literalLong("ts_mp_join", args(5), "m").toInt,
-        literalString("ts_mp_join", args(0), "series a"),
-        literalString("ts_mp_join", args(1), "series b"),
-        Some(literalLong("ts_mp_join", args(2), "from")),
-        Some(literalLong("ts_mp_join", args(3), "to")),
-        if (args.length > 6) // past MaxPairWindows → STOMP AB-join
-          literalLong("ts_mp_join", args(6), "max_windows").toInt
-        else graft.ts.MatrixProfile.MaxPairWindows))
-    }),
-    // ts_matrix_profile_stomp(from, to, bucket_ms, m) — the STOMP
-    // long-profile path (same distances, O(1) per cell, no pair join;
-    // the route past the pairs path's maxWindows guard)
-    (FunctionIdentifier("ts_matrix_profile_stomp"), info("ts_matrix_profile_stomp"),
-      { args: Seq[Expression] =>
-      nargs("ts_matrix_profile_stomp", Seq(4), args)
-      val spark = activeSession("ts_matrix_profile_stomp")
-      GraftSessionBridge.logicalPlan(graft.ts.MatrixProfile.profileStomp(
-        spark.table(SamplesView),
-        literalLong("ts_matrix_profile_stomp", args(2), "bucket_ms"),
-        literalLong("ts_matrix_profile_stomp", args(3), "m").toInt,
-        Some(literalLong("ts_matrix_profile_stomp", args(0), "from")),
-        Some(literalLong("ts_matrix_profile_stomp", args(1), "to"))))
-    }),
+      AsOf.pearsonMatrixByFilter(samples(s), s.table(LabelsView), a.preds("filter"),
+        a.long("bucket_ms"), a.long("align_ms"), a.from, a.to)
+    },
+    // per-series top-k largest-nn-distance windows (the anomalies)
+    tvf("ts_mp_discords", "from:long to:long bucket_ms:long m:int k:int [max_windows:int]") { (s, a) =>
+      MatrixProfile.discords(samples(s), a.long("bucket_ms"), a.int("m"), a.int("k"),
+        a.from, a.to, maxWindows(a))
+    },
+    // the dual: smallest nn-distance windows (the repeated shapes)
+    tvf("ts_mp_motifs", "from:long to:long bucket_ms:long m:int k:int [max_windows:int]") { (s, a) =>
+      MatrixProfile.motifWindows(samples(s), a.long("bucket_ms"), a.int("m"), a.int("k"),
+        a.from, a.to, maxWindows(a))
+    },
+    // AB-join profile
+    tvf("ts_mp_join", "a:str b:str from:long to:long bucket_ms:long m:int [max_windows:int]") { (s, a) =>
+      MatrixProfile.joinProfile(samples(s), a.long("bucket_ms"), a.int("m"), a.str("a"),
+        a.str("b"), a.from, a.to, maxWindows(a))
+    },
+    // the STOMP long-profile path (same distances, O(1) per cell, no pair
+    // join; the route past the pairs path's maxWindows guard)
+    tvf("ts_matrix_profile_stomp", "from:long to:long bucket_ms:long m:int") { (s, a) =>
+      MatrixProfile.profileStomp(samples(s), a.long("bucket_ms"), a.int("m"), a.from, a.to)
+    },
     // ---- corpus-pipeline TVFs (round 13): the LLM-data half of the
     // engine becomes SQL-reachable like the ts_* family. Bench/eval
     // predicates arrive as SQL predicate strings over the documents
     // view — the same contract the DuckDB oracles already use. ----
-    // corpus_source_cap(cap) — per-source quality cap (domain
-    // balancing); the plan must keep compiling to WindowGroupLimit
-    // through the SQL route (ExtensionsSpec pins it)
-    (FunctionIdentifier("corpus_source_cap"), info("corpus_source_cap"),
-      { args: Seq[Expression] =>
-      nargs("corpus_source_cap", Seq(1), args)
-      val spark = activeSession("corpus_source_cap")
-      GraftSessionBridge.logicalPlan(graft.pipeline.CorpusPipeline.sourceCap(
-        spark.table(DocumentsView),
-        literalLong("corpus_source_cap", args(0), "cap").toInt))
-    }),
-    // corpus_contamination('bench_pred'[, min_shared]) — exact n-gram
-    // decontamination: the benchmark side is the documents-view rows
-    // matching the SQL predicate, the train side is the whole view
-    (FunctionIdentifier("corpus_contamination"), info("corpus_contamination"),
-      { args: Seq[Expression] =>
-      nargs("corpus_contamination", Seq(1, 2), args)
-      val spark = activeSession("corpus_contamination")
-      val docs = spark.table(DocumentsView)
-      GraftSessionBridge.logicalPlan(graft.pipeline.CorpusPipeline.contamination(
-        docs,
-        docs.filter(expr(literalString("corpus_contamination", args(0), "bench predicate"))),
-        if (args.length > 1) literalLong("corpus_contamination", args(1), "min_shared") else 5L))
-    }),
-    // corpus_contamination_frac('bench_pred'[, n]) — the graded
-    // (fraction-of-shingles) variant
-    (FunctionIdentifier("corpus_contamination_frac"), info("corpus_contamination_frac"),
-      { args: Seq[Expression] =>
-      nargs("corpus_contamination_frac", Seq(1, 2), args)
-      val spark = activeSession("corpus_contamination_frac")
-      val docs = spark.table(DocumentsView)
-      GraftSessionBridge.logicalPlan(graft.pipeline.CorpusPipeline.contaminationFraction(
-        docs,
-        docs.filter(expr(literalString("corpus_contamination_frac", args(0), "bench predicate"))),
-        if (args.length > 1) literalLong("corpus_contamination_frac", args(1), "n").toInt else 5))
-    }),
-    // corpus_contamination_fuzzy('bench_pred', 'train_pred'
-    //                            [, num_hashes, band_rows]) — MinHash
-    // band-bucket collision decontamination (paraphrased leakage)
-    (FunctionIdentifier("corpus_contamination_fuzzy"), info("corpus_contamination_fuzzy"),
-      { args: Seq[Expression] =>
-      nargs("corpus_contamination_fuzzy", Seq(2, 4), args)
-      val spark = activeSession("corpus_contamination_fuzzy")
-      val docs = spark.table(DocumentsView)
-      GraftSessionBridge.logicalPlan(graft.pipeline.CorpusPipeline.contaminationFuzzy(
-        docs.filter(expr(literalString("corpus_contamination_fuzzy", args(1), "train predicate"))),
-        docs.filter(expr(literalString("corpus_contamination_fuzzy", args(0), "bench predicate"))),
-        if (args.length > 2) literalLong("corpus_contamination_fuzzy", args(2), "num_hashes").toInt else 16,
-        if (args.length > 3) literalLong("corpus_contamination_fuzzy", args(3), "band_rows").toInt else 4))
-    }),
-    // ann_recall('q1 q2 ...', k, n_centroids, n_probe[, dim]) —
+    // per-source quality cap (domain balancing); the plan must keep
+    // compiling to WindowGroupLimit through the SQL route (ExtensionsSpec
+    // pins it)
+    tvf("corpus_source_cap", "cap:int") { (s, a) =>
+      CorpusPipeline.sourceCap(docs(s), a.int("cap"))
+    },
+    // exact n-gram decontamination: the benchmark side is the
+    // documents-view rows matching the SQL predicate, the train side is
+    // the whole view
+    tvf("corpus_contamination", "bench:str [min_shared:long=5]") { (s, a) =>
+      val d = docs(s)
+      CorpusPipeline.contamination(d, d.filter(expr(a.str("bench"))), a.long("min_shared"))
+    },
+    // the graded (fraction-of-shingles) variant
+    tvf("corpus_contamination_frac", "bench:str [n:int=5]") { (s, a) =>
+      val d = docs(s)
+      CorpusPipeline.contaminationFraction(d, d.filter(expr(a.str("bench"))), a.int("n"))
+    },
+    // MinHash band-bucket collision decontamination (paraphrased leakage)
+    tvf("corpus_contamination_fuzzy", "bench:str train:str [num_hashes:int=16 band_rows:int=4]") { (s, a) =>
+      val d = docs(s)
+      CorpusPipeline.contaminationFuzzy(d.filter(expr(a.str("train"))),
+        d.filter(expr(a.str("bench"))), a.int("num_hashes"), a.int("band_rows"))
+    },
     // recall@k of the probe-limited IVF path (deterministic synthetic
     // quantizer) vs brute-force ground truth over the embeddings view.
     // Splices the PLAN-ONLY ivfTopKQuantizedLazy: an analysis-time
     // builder must not run driver actions (the banded-DTW discipline),
     // and the lazy probe ranking is provably the eager one.
-    (FunctionIdentifier("ann_recall"), info("ann_recall"),
-      { args: Seq[Expression] =>
-      nargs("ann_recall", Seq(4, 5), args)
-      val spark = activeSession("ann_recall")
-      val qids = literalString("ann_recall", args(0), "query id list")
-        .split("\\s+").filter(_.nonEmpty).map(_.toLong).toSeq
-      require(qids.nonEmpty, "ann_recall: at least one query id is required")
-      val k = literalLong("ann_recall", args(1), "k").toInt
-      val nc = literalLong("ann_recall", args(2), "n_centroids").toInt
-      val np = literalLong("ann_recall", args(3), "n_probe").toInt
-      val dim = if (args.length > 4) literalLong("ann_recall", args(4), "dim").toInt else 64
-      val embs = spark.table(EmbeddingsView)
-      GraftSessionBridge.logicalPlan(graft.pipeline.Similarity.recallAtK(
-        graft.pipeline.Similarity.ivfTopKQuantizedLazy(embs, qids, k,
-          graft.pipeline.Similarity.syntheticCentroids(nc, dim), np),
-        graft.pipeline.Similarity.bruteForceTopK(embs, qids, k)))
-    }),
-    // corpus_decontaminate('bench_pred'[, min_shared]) — the
-    // flag→DROP end product: the corpus minus flagged docs
-    (FunctionIdentifier("corpus_decontaminate"), info("corpus_decontaminate"),
-      { args: Seq[Expression] =>
-      nargs("corpus_decontaminate", Seq(1, 2), args)
-      val spark = activeSession("corpus_decontaminate")
-      val docs = spark.table(DocumentsView)
-      GraftSessionBridge.logicalPlan(graft.pipeline.CorpusPipeline.decontaminatedCorpus(
-        docs,
-        docs.filter(expr(literalString("corpus_decontaminate", args(0), "bench predicate"))),
-        if (args.length > 1) literalLong("corpus_decontaminate", args(1), "min_shared") else 5L))
-    }),
-    // corpus_langid() / corpus_text_quality() / corpus_tokens() — the
-    // per-row text gates as TVFs (pure projections over the view)
-    (FunctionIdentifier("corpus_langid"), info("corpus_langid"),
-      { args: Seq[Expression] =>
-      nargs("corpus_langid", Seq(0), args)
-      val spark = activeSession("corpus_langid")
-      GraftSessionBridge.logicalPlan(
-        graft.pipeline.Text.languageId(spark.table(DocumentsView)))
-    }),
-    // corpus_source_divergence(top_n, alpha) — per-source KL/JS
-    // divergence vs the corpus unigram distribution (mix health)
-    (FunctionIdentifier("corpus_source_divergence"),
-        info("corpus_source_divergence"), { args: Seq[Expression] =>
-      nargs("corpus_source_divergence", Seq(2), args)
-      val spark = activeSession("corpus_source_divergence")
-      GraftSessionBridge.logicalPlan(graft.pipeline.Text.sourceDivergence(
-        spark.table(DocumentsView),
-        literalLong("corpus_source_divergence", args(0), "top_n").toInt,
-        literalDouble("corpus_source_divergence", args(1), "alpha")))
-    }),
-    // corpus_source_moments(top_n) — the exact integer moments grid
-    // behind corpus_source_divergence (source, word, n_sw, n_w, n_s,
-    // n_tot): the bit-stable, driver-hashable carrier of the operator
-    // (the smoothed log-sum scores can't be — explicit-moments
-    // convention, see Text.sourceDivergenceMoments)
-    (FunctionIdentifier("corpus_source_moments"),
-        info("corpus_source_moments"), { args: Seq[Expression] =>
-      nargs("corpus_source_moments", Seq(1), args)
-      val spark = activeSession("corpus_source_moments")
-      GraftSessionBridge.logicalPlan(graft.pipeline.Text.sourceDivergenceMoments(
-        spark.table(DocumentsView),
-        literalLong("corpus_source_moments", args(0), "top_n").toInt))
-    }),
-    (FunctionIdentifier("corpus_text_quality"), info("corpus_text_quality"),
-      { args: Seq[Expression] =>
-      nargs("corpus_text_quality", Seq(0), args)
-      val spark = activeSession("corpus_text_quality")
-      GraftSessionBridge.logicalPlan(
-        graft.pipeline.Text.qualityMetrics(spark.table(DocumentsView)))
-    }),
-    (FunctionIdentifier("corpus_tokens"), info("corpus_tokens"),
-      { args: Seq[Expression] =>
-      nargs("corpus_tokens", Seq(0), args)
-      val spark = activeSession("corpus_tokens")
-      GraftSessionBridge.logicalPlan(
-        graft.pipeline.Text.tokenCounts(spark.table(DocumentsView)))
-    }),
-    // corpus_stratified_sample('lang=rate lang=rate', default_rate
-    //                          [, val_fraction]) — deterministic
-    // md5-threshold sampling + train/val split
-    (FunctionIdentifier("corpus_stratified_sample"), info("corpus_stratified_sample"),
-      { args: Seq[Expression] =>
-      nargs("corpus_stratified_sample", Seq(2, 3), args)
-      val spark = activeSession("corpus_stratified_sample")
-      val rates = literalString("corpus_stratified_sample", args(0), "rate list")
-        .split("\\s+").filter(_.nonEmpty).map { kv =>
-          val Array(l, r) = kv.split("=", 2)
-          l -> r.toDouble
-        }.toMap
-      GraftSessionBridge.logicalPlan(graft.pipeline.CorpusPipeline.stratifiedSample(
-        spark.table(DocumentsView), rates,
-        literalDouble("corpus_stratified_sample", args(1), "default_rate"),
-        if (args.length > 2)
-          literalDouble("corpus_stratified_sample", args(2), "val_fraction")
-        else 0.1))
-    }),
-    // corpus_pack_sequences(budget_tokens, n_shards) — fixed-budget
-    // training-sequence packing (concat-then-chunk semantics)
-    (FunctionIdentifier("corpus_pack_sequences"), info("corpus_pack_sequences"),
-      { args: Seq[Expression] =>
-      nargs("corpus_pack_sequences", Seq(2), args)
-      val spark = activeSession("corpus_pack_sequences")
-      GraftSessionBridge.logicalPlan(graft.pipeline.CorpusPipeline.packSequences(
-        spark.table(DocumentsView),
-        literalLong("corpus_pack_sequences", args(0), "budget_tokens"),
-        literalLong("corpus_pack_sequences", args(1), "n_shards").toInt))
-    }),
-    // corpus_chunk(chunk_tokens, overlap_tokens) — sliding-window
-    // document chunking (zero-shuffle scan → project → generate)
-    (FunctionIdentifier("corpus_chunk"), info("corpus_chunk"),
-      { args: Seq[Expression] =>
-      nargs("corpus_chunk", Seq(2), args)
-      val spark = activeSession("corpus_chunk")
-      GraftSessionBridge.logicalPlan(graft.pipeline.Chunking.chunk(
-        spark.table(DocumentsView),
-        literalLong("corpus_chunk", args(0), "chunk_tokens").toInt,
-        literalLong("corpus_chunk", args(1), "overlap_tokens").toInt))
-    }),
-    // corpus_dedup_pairs(threshold, max_doc_id) — exact pairwise
-    // n-gram Jaccard over a bounded id range (the LSH paths' ground
-    // truth; the bound is the quadratic-contract guard)
-    (FunctionIdentifier("corpus_dedup_pairs"), info("corpus_dedup_pairs"),
-      { args: Seq[Expression] =>
-      nargs("corpus_dedup_pairs", Seq(2), args)
-      val spark = activeSession("corpus_dedup_pairs")
-      GraftSessionBridge.logicalPlan(graft.pipeline.Dedup.ngramJaccardPairs(
-        spark.table(DocumentsView),
-        literalDouble("corpus_dedup_pairs", args(0), "threshold"),
-        literalLong("corpus_dedup_pairs", args(1), "max_doc_id")))
-    }),
-    // corpus_dsir('target_pred', n_buckets, keep_frac) — DSIR
-    // importance resampling against the predicate-selected target set
-    (FunctionIdentifier("corpus_dsir"), info("corpus_dsir"),
-      { args: Seq[Expression] =>
-      nargs("corpus_dsir", Seq(3), args)
-      val spark = activeSession("corpus_dsir")
-      GraftSessionBridge.logicalPlan(graft.pipeline.Dsir.select(
-        spark.table(DocumentsView),
-        expr(literalString("corpus_dsir", args(0), "target predicate")),
-        literalLong("corpus_dsir", args(1), "n_buckets").toInt,
-        literalDouble("corpus_dsir", args(2), "keep_frac")))
-    }),
-    // corpus_quality_percentile(drop_frac) — the no-global-sort
-    // percentile gate; splices the PLAN-ONLY lazy variant (scalar
-    // subqueries instead of driver-side heads), provably equal
-    (FunctionIdentifier("corpus_quality_percentile"), info("corpus_quality_percentile"),
-      { args: Seq[Expression] =>
-      nargs("corpus_quality_percentile", Seq(1), args)
-      val spark = activeSession("corpus_quality_percentile")
-      GraftSessionBridge.logicalPlan(
-        graft.pipeline.CorpusPipeline.qualityPercentileKeepLazy(
-          spark.table(DocumentsView),
-          literalDouble("corpus_quality_percentile", args(0), "drop_frac")))
-    }),
-    // ann_topk('q1 q2 ...', k) — exact brute-force cosine top-k
-    (FunctionIdentifier("ann_topk"), info("ann_topk"),
-      { args: Seq[Expression] =>
-      nargs("ann_topk", Seq(2), args)
-      val spark = activeSession("ann_topk")
-      val qids = literalString("ann_topk", args(0), "query id list")
-        .split("\\s+").filter(_.nonEmpty).map(_.toLong).toSeq
-      require(qids.nonEmpty, "ann_topk: at least one query id is required")
-      GraftSessionBridge.logicalPlan(graft.pipeline.Similarity.bruteForceTopK(
-        spark.table(EmbeddingsView), qids,
-        literalLong("ann_topk", args(1), "k").toInt))
-    }),
-    // emb_label_drift() — per-label centroid cosine vs the global
-    // corpus centroid (embedding-space mix health)
-    (FunctionIdentifier("emb_label_drift"), info("emb_label_drift"),
-      { args: Seq[Expression] =>
-      nargs("emb_label_drift", Seq(0), args)
-      val spark = activeSession("emb_label_drift")
-      GraftSessionBridge.logicalPlan(
-        graft.pipeline.Similarity.labelCentroidDrift(
-          spark.table(EmbeddingsView)))
-    }),
-    // ann_ivf_topk('q1 q2 ...', k, n_centroids, n_probe[, dim]) —
+    tvf("ann_recall", "queries:keys k:int n_centroids:int n_probe:int [dim:int=64]") { (s, a) =>
+      val (embs, qids) = (s.table(EmbeddingsView), queryIds(a))
+      Similarity.recallAtK(
+        Similarity.ivfTopKQuantizedLazy(embs, qids, a.int("k"),
+          Similarity.syntheticCentroids(a.int("n_centroids"), a.int("dim")), a.int("n_probe")),
+        Similarity.bruteForceTopK(embs, qids, a.int("k")))
+    },
+    // the flag→DROP end product: the corpus minus flagged docs
+    tvf("corpus_decontaminate", "bench:str [min_shared:long=5]") { (s, a) =>
+      val d = docs(s)
+      CorpusPipeline.decontaminatedCorpus(d, d.filter(expr(a.str("bench"))), a.long("min_shared"))
+    },
+    // corpus_langid / corpus_text_quality / corpus_tokens — the per-row
+    // text gates as TVFs (pure projections over the view)
+    tvf("corpus_langid", "") { (s, _) => Text.languageId(docs(s)) },
+    // per-source KL/JS divergence vs the corpus unigram distribution (mix
+    // health)
+    tvf("corpus_source_divergence", "top_n:int alpha:double") { (s, a) =>
+      Text.sourceDivergence(docs(s), a.int("top_n"), a.double("alpha"))
+    },
+    // the exact integer moments grid behind corpus_source_divergence
+    // (source, word, n_sw, n_w, n_s, n_tot): the bit-stable,
+    // hash-comparable carrier of the operator (the smoothed log-sum
+    // scores can't be — explicit-moments convention, see
+    // Text.sourceDivergenceMoments)
+    tvf("corpus_source_moments", "top_n:int") { (s, a) =>
+      Text.sourceDivergenceMoments(docs(s), a.int("top_n"))
+    },
+    tvf("corpus_text_quality", "") { (s, _) => Text.qualityMetrics(docs(s)) },
+    tvf("corpus_tokens", "") { (s, _) => Text.tokenCounts(docs(s)) },
+    // deterministic md5-threshold sampling + train/val split; rates are
+    // 'lang=rate lang=rate'
+    tvf("corpus_stratified_sample", "rates:keys default_rate:double [val_fraction:double=0.1]") { (s, a) =>
+      val rates = a.keys("rates").map { kv =>
+        val Array(l, r) = kv.split("=", 2)
+        l -> r.toDouble
+      }.toMap
+      CorpusPipeline.stratifiedSample(docs(s), rates, a.double("default_rate"), a.double("val_fraction"))
+    },
+    // fixed-budget training-sequence packing (concat-then-chunk semantics)
+    tvf("corpus_pack_sequences", "budget_tokens:long n_shards:int") { (s, a) =>
+      CorpusPipeline.packSequences(docs(s), a.long("budget_tokens"), a.int("n_shards"))
+    },
+    // sliding-window document chunking (zero-shuffle scan → project →
+    // generate)
+    tvf("corpus_chunk", "chunk_tokens:int overlap_tokens:int") { (s, a) =>
+      Chunking.chunk(docs(s), a.int("chunk_tokens"), a.int("overlap_tokens"))
+    },
+    // exact pairwise n-gram Jaccard over a bounded id range (the LSH
+    // paths' ground truth; the bound is the quadratic-contract guard)
+    tvf("corpus_dedup_pairs", "threshold:double max_doc_id:long") { (s, a) =>
+      Dedup.ngramJaccardPairs(docs(s), a.double("threshold"), a.long("max_doc_id"))
+    },
+    // DSIR importance resampling against the predicate-selected target set
+    tvf("corpus_dsir", "target:str n_buckets:int keep_frac:double") { (s, a) =>
+      Dsir.select(docs(s), expr(a.str("target")), a.int("n_buckets"), a.double("keep_frac"))
+    },
+    // the no-global-sort percentile gate; splices the PLAN-ONLY lazy
+    // variant (scalar subqueries instead of collected heads), provably
+    // equal
+    tvf("corpus_quality_percentile", "drop_frac:double") { (s, a) =>
+      CorpusPipeline.qualityPercentileKeepLazy(docs(s), a.double("drop_frac"))
+    },
+    // exact brute-force cosine top-k
+    tvf("ann_topk", "queries:keys k:int") { (s, a) =>
+      Similarity.bruteForceTopK(s.table(EmbeddingsView), queryIds(a), a.int("k"))
+    },
+    // per-label centroid cosine vs the global corpus centroid
+    // (embedding-space mix health)
+    tvf("emb_label_drift", "") { (s, _) => Similarity.labelCentroidDrift(s.table(EmbeddingsView)) },
     // probe-limited IVF top-k (plan-only probe ranking, deterministic
     // synthetic quantizer — the same literals the oracle re-derives)
-    (FunctionIdentifier("ann_ivf_topk"), info("ann_ivf_topk"),
-      { args: Seq[Expression] =>
-      nargs("ann_ivf_topk", Seq(4, 5), args)
-      val spark = activeSession("ann_ivf_topk")
-      val qids = literalString("ann_ivf_topk", args(0), "query id list")
-        .split("\\s+").filter(_.nonEmpty).map(_.toLong).toSeq
-      require(qids.nonEmpty, "ann_ivf_topk: at least one query id is required")
-      val dim = if (args.length > 4) literalLong("ann_ivf_topk", args(4), "dim").toInt else 64
-      GraftSessionBridge.logicalPlan(graft.pipeline.Similarity.ivfTopKQuantizedLazy(
-        spark.table(EmbeddingsView), qids,
-        literalLong("ann_ivf_topk", args(1), "k").toInt,
-        graft.pipeline.Similarity.syntheticCentroids(
-          literalLong("ann_ivf_topk", args(2), "n_centroids").toInt, dim),
-        literalLong("ann_ivf_topk", args(3), "n_probe").toInt))
-    }),
-    // corpus_admit('state_dir'[, num_hashes, band_rows]) — incremental
-    // corpus admission: the documents VIEW is the new batch, verdicts
-    // against the materialized state under state_dir (either layout;
-    // the versioned manifest resolves per query)
-    (FunctionIdentifier("corpus_admit"), info("corpus_admit"),
-      { args: Seq[Expression] =>
-      nargs("corpus_admit", Seq(1, 3), args)
-      val spark = activeSession("corpus_admit")
-      GraftSessionBridge.logicalPlan(graft.pipeline.IncrementalAdmit.admit(
-        spark, spark.table(DocumentsView),
-        literalString("corpus_admit", args(0), "state_dir"),
-        if (args.length > 1) literalLong("corpus_admit", args(1), "num_hashes").toInt else 16,
-        if (args.length > 2) literalLong("corpus_admit", args(2), "band_rows").toInt else 4))
-    }),
-    // ts_dtw_nearest_banded('probe', from, to, bucket_ms, k, band) —
+    tvf("ann_ivf_topk", "queries:keys k:int n_centroids:int n_probe:int [dim:int=64]") { (s, a) =>
+      Similarity.ivfTopKQuantizedLazy(s.table(EmbeddingsView), queryIds(a), a.int("k"),
+        Similarity.syntheticCentroids(a.int("n_centroids"), a.int("dim")), a.int("n_probe"))
+    },
+    // incremental corpus admission: the documents VIEW is the new batch,
+    // verdicts against the materialized state under state_dir (either
+    // layout; the versioned manifest resolves per query)
+    tvf("corpus_admit", "state_dir:str [num_hashes:int=16 band_rows:int=4]") { (s, a) =>
+      IncrementalAdmit.admit(s, docs(s), a.str("state_dir"), a.int("num_hashes"), a.int("band_rows"))
+    },
     // Sakoe-Chiba banded profile search. Splices the PURE banded plan
     // (nearestBanded): the LB_Keogh-pruned variant is driver-eager
     // (envelope + seed-cutoff actions), which an analysis-time splice
     // must not be — and its result is provably identical.
-    (FunctionIdentifier("ts_dtw_nearest_banded"), info("ts_dtw_nearest_banded"),
-      { args: Seq[Expression] =>
-      nargs("ts_dtw_nearest_banded", Seq(6), args)
-      val spark = activeSession("ts_dtw_nearest_banded")
-      GraftSessionBridge.logicalPlan(graft.ts.Dtw.nearestBanded(
-        spark.table(SamplesView),
-        literalLong("ts_dtw_nearest_banded", args(3), "bucket_ms"),
-        literalString("ts_dtw_nearest_banded", args(0), "probe series"),
-        literalLong("ts_dtw_nearest_banded", args(4), "k").toInt,
-        literalLong("ts_dtw_nearest_banded", args(5), "band").toInt,
-        Some(literalLong("ts_dtw_nearest_banded", args(1), "from")),
-        Some(literalLong("ts_dtw_nearest_banded", args(2), "to"))))
-    }),
+    tvf("ts_dtw_nearest_banded", "probe:str from:long to:long bucket_ms:long k:int band:int") { (s, a) =>
+      Dtw.nearestBanded(samples(s), a.long("bucket_ms"), a.str("probe"), a.int("k"), a.int("band"),
+        a.from, a.to)
+    },
     // ---- round-14 corpus TVFs: the non-iterative stragglers. What
     // stays DELIBERATELY excluded from the SQL surface: classifier
     // TRAINING (corpus_classifier_*train*) and connected-component
@@ -1351,72 +787,41 @@ object GraftFunctions {
     // collect/convergence actions), which an analysis-time TVF splice
     // must never take. Their serving halves are here instead:
     // corpus_classifier_score takes a trained model's literal weights.
-    // corpus_mix_temperature(target) — sqrt-temperature source quotas;
-    // splices the PLAN-ONLY lazy variant (full per-source rank, no
-    // pre-filter checkpoint/starvation count — result identical)
-    (FunctionIdentifier("corpus_mix_temperature"), info("corpus_mix_temperature"),
-      { args: Seq[Expression] =>
-      nargs("corpus_mix_temperature", Seq(1), args)
-      val spark = activeSession("corpus_mix_temperature")
-      GraftSessionBridge.logicalPlan(graft.pipeline.CorpusPipeline.mixByTemperatureLazy(
-        spark.table(DocumentsView),
-        literalLong("corpus_mix_temperature", args(0), "target")))
-    }),
-    // corpus_boilerplate(w, min_docs) — the repeated-segment vocabulary
-    (FunctionIdentifier("corpus_boilerplate"), info("corpus_boilerplate"),
-      { args: Seq[Expression] =>
-      nargs("corpus_boilerplate", Seq(2), args)
-      val spark = activeSession("corpus_boilerplate")
-      GraftSessionBridge.logicalPlan(graft.pipeline.Dedup.boilerplateSegments(
-        spark.table(DocumentsView),
-        literalLong("corpus_boilerplate", args(0), "w").toInt,
-        literalLong("corpus_boilerplate", args(1), "min_docs").toInt))
-    }),
-    // corpus_boilerplate_clean(w, min_docs) — the stripped corpus
-    // (lazy route: AQE sizes the vocabulary side, no counted gate)
-    (FunctionIdentifier("corpus_boilerplate_clean"), info("corpus_boilerplate_clean"),
-      { args: Seq[Expression] =>
-      nargs("corpus_boilerplate_clean", Seq(2), args)
-      val spark = activeSession("corpus_boilerplate_clean")
-      GraftSessionBridge.logicalPlan(graft.pipeline.Dedup.removeBoilerplate(
-        spark.table(DocumentsView),
-        literalLong("corpus_boilerplate_clean", args(0), "w").toInt,
-        literalLong("corpus_boilerplate_clean", args(1), "min_docs").toInt,
-        lazyPlan = true))
-    }),
-    // corpus_keep(threshold, max_doc_id) — the MinHash+LSH dedup
-    // verdict: the corpus slice minus every near-dup pair's j side
-    // (lazy route: no signature checkpoint, no counted broadcasts)
-    (FunctionIdentifier("corpus_keep"), info("corpus_keep"),
-      { args: Seq[Expression] =>
-      nargs("corpus_keep", Seq(2), args)
-      val spark = activeSession("corpus_keep")
-      val maxId = literalLong("corpus_keep", args(1), "max_doc_id")
-      val docs = spark.table(DocumentsView)
-      GraftSessionBridge.logicalPlan(graft.pipeline.Dedup.dedupedCorpus(
-        docs.filter(col("doc_id") < maxId),
-        graft.pipeline.Dedup.minhashLshPairs(docs,
-          literalDouble("corpus_keep", args(0), "threshold"),
-          maxDocId = maxId, lazyPlan = true),
-        lazyPlan = true))
-    }),
-    // corpus_classifier_score('b:w b:w ...', n_buckets) — serving-side
-    // scoring with a trained model's literal weights (bucket -1 = bias;
-    // training itself is API-only — see the exclusion note above)
-    (FunctionIdentifier("corpus_classifier_score"), info("corpus_classifier_score"),
-      { args: Seq[Expression] =>
-      nargs("corpus_classifier_score", Seq(2), args)
-      val spark = activeSession("corpus_classifier_score")
-      val weights = literalString("corpus_classifier_score", args(0), "weights")
-        .split("\\s+").filter(_.nonEmpty).map { kv =>
-          val i = kv.lastIndexOf(':')
-          require(i > 0, s"corpus_classifier_score: bad weight '$kv' — want bucket:weight")
-          kv.substring(0, i).toLong -> kv.substring(i + 1).toDouble
-        }.toMap
-      GraftSessionBridge.logicalPlan(graft.pipeline.QualityClassifier.scoreWithWeights(
-        spark.table(DocumentsView), weights,
-        literalLong("corpus_classifier_score", args(1), "n_buckets").toInt))
-    })
+    // sqrt-temperature source quotas; splices the PLAN-ONLY lazy variant
+    // (full per-source rank, no pre-filter checkpoint/starvation count —
+    // result identical)
+    tvf("corpus_mix_temperature", "target:long") { (s, a) =>
+      CorpusPipeline.mixByTemperatureLazy(docs(s), a.long("target"))
+    },
+    // the repeated-segment vocabulary
+    tvf("corpus_boilerplate", "w:int min_docs:int") { (s, a) =>
+      Dedup.boilerplateSegments(docs(s), a.int("w"), a.int("min_docs"))
+    },
+    // the stripped corpus (lazy route: AQE sizes the vocabulary side, no
+    // counted gate)
+    tvf("corpus_boilerplate_clean", "w:int min_docs:int") { (s, a) =>
+      Dedup.removeBoilerplate(docs(s), a.int("w"), a.int("min_docs"), lazyPlan = true)
+    },
+    // the MinHash+LSH dedup verdict: the corpus slice minus every
+    // near-dup pair's j side (lazy route: no signature checkpoint, no
+    // counted broadcasts)
+    tvf("corpus_keep", "threshold:double max_doc_id:long") { (s, a) =>
+      val (d, maxId) = (docs(s), a.long("max_doc_id"))
+      Dedup.dedupedCorpus(d.filter(col("doc_id") < maxId),
+        Dedup.minhashLshPairs(d, a.double("threshold"), maxDocId = maxId, lazyPlan = true),
+        lazyPlan = true)
+    },
+    // serving-side scoring with a trained model's literal weights
+    // 'b:w b:w ...' (bucket -1 = bias; training itself is API-only — see
+    // the exclusion note above)
+    tvf("corpus_classifier_score", "weights:keys n_buckets:int") { (s, a) =>
+      val weights = a.keys("weights").map { kv =>
+        val i = kv.lastIndexOf(':')
+        require(i > 0, s"corpus_classifier_score: bad weight '$kv' — want bucket:weight")
+        kv.substring(0, i).toLong -> kv.substring(i + 1).toDouble
+      }.toMap
+      QualityClassifier.scoreWithWeights(docs(s), weights, a.int("n_buckets"))
+    }
   )
 
   /** Register every kernel + table function on a live session

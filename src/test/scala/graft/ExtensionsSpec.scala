@@ -94,6 +94,9 @@ class ExtensionsSpec extends AnyFunSuite {
       graft.ts.RangeQuery.RangeArgs(from = Some(T0), to = Some(T0 + 20 * DAY),
         aggs = Seq("avg"), bucketMs = 2 * DAY, alignMs = HOUR))
     assert(agg.collect().toSeq == aggApi.collect().toSeq)
+    // the positional aggregator is case-insensitive, as in the option grammar
+    val upper = spark.sql(s"SELECT * FROM ts_range('click_7', $T0, ${T0 + 20 * DAY}, 'AVG', ${2 * DAY}, $HOUR)")
+    assert(upper.collect().toSeq == aggApi.collect().toSeq)
     // non-literal argument is a loud error
     intercept[Exception](
       spark.sql(s"SELECT * FROM ts_range('click_7', CAST(rand() AS BIGINT), $T0)").collect())
@@ -112,6 +115,13 @@ class ExtensionsSpec extends AnyFunSuite {
       sorted(graft.ts.Sliding.slidingRange(samples, "sum", DAY, 6 * HOUR, 0L, Some(T0), Some(T31))))
     assert(
       sorted(spark.sql(s"SELECT * FROM ts_session($T0, $T31, 'count', ${12 * HOUR})")) ==
+      sorted(graft.ts.Sessions.sessionRange(samples, "count", 12 * HOUR, Some(T0), Some(T31))))
+    // aggregator names are case-insensitive
+    assert(
+      sorted(spark.sql(s"SELECT * FROM ts_sliding($T0, $T31, 'SUM', $DAY, ${6 * HOUR})")) ==
+      sorted(graft.ts.Sliding.slidingRange(samples, "sum", DAY, 6 * HOUR, 0L, Some(T0), Some(T31))))
+    assert(
+      sorted(spark.sql(s"SELECT * FROM ts_session($T0, $T31, 'Count', ${12 * HOUR})")) ==
       sorted(graft.ts.Sessions.sessionRange(samples, "count", 12 * HOUR, Some(T0), Some(T31))))
     assert(
       sorted(spark.sql(s"SELECT * FROM ts_rate($T0, $T31, $DAY)")) ==
@@ -211,6 +221,10 @@ class ExtensionsSpec extends AnyFunSuite {
         Some(T0), Some(T31))))
     assert(
       sorted(spark.sql(s"SELECT * FROM ts_topk($T0, $T31, 3, 'avg', $DAY)")) ==
+      sorted(graft.ts.TopK.topkSeries(samples, 3, "avg", DAY,
+        fromMs = Some(T0), toMs = Some(T31))))
+    assert(
+      sorted(spark.sql(s"SELECT * FROM ts_topk($T0, $T31, 3, 'AVG', $DAY)")) ==
       sorted(graft.ts.TopK.topkSeries(samples, 3, "avg", DAY,
         fromMs = Some(T0), toMs = Some(T31))))
     assert(
@@ -329,6 +343,10 @@ class ExtensionsSpec extends AnyFunSuite {
       graft.ts.RangeQuery.RangeArgs(from = Some(T0), to = Some(T0 + 31 * DAY),
         aggs = Seq("sum"), bucketMs = 3 * DAY))
     assert(tvf.collect().toSeq == api.collect().toSeq)
+    // the positional aggregator is case-insensitive
+    assert(spark.sql(
+      s"SELECT * FROM ts_mrange('type=click user=(2,4,6)', $T0, ${T0 + 31 * DAY}, 'SUM', ${3 * DAY})")
+      .collect().toSeq == api.collect().toSeq)
     // 7-arg GROUPBY/REDUCE form
     val g = spark.sql(
       s"SELECT * FROM ts_mrange('type=(click,view)', $T0, ${T0 + 31 * DAY}, 'avg', ${7 * DAY}, 'type', 'max')")
@@ -338,6 +356,9 @@ class ExtensionsSpec extends AnyFunSuite {
         aggs = Seq("avg"), bucketMs = 7 * DAY),
       groupByLabel = "type", reducer = "max")
     assert(g.collect().toSeq == gApi.collect().toSeq)
+    assert(spark.sql(
+      s"SELECT * FROM ts_mrange('type=(click,view)', $T0, ${T0 + 31 * DAY}, 'AVG', ${7 * DAY}, 'type', 'max')")
+      .collect().toSeq == gApi.collect().toSeq)
   }
 
   test("read-command TVFs (get / mget / queryindex / querylabels) == Column API") {
@@ -367,11 +388,14 @@ class ExtensionsSpec extends AnyFunSuite {
     assert(set(spark.sql("SELECT * FROM ts_info()")) ==
       set(graft.ts.Multi.info(samples)))
     val T0 = 1704067200000L; val DAY = 86400000L
-    assert(set(spark.sql(
-      s"SELECT * FROM ts_nrange('click_3 click_7 view_3', $T0, ${T0 + 14 * DAY}, 'avg', ${2 * DAY})")) ==
-      set(graft.ts.Multi.nrange(samples, Seq("click_3", "click_7", "view_3"),
-        graft.ts.RangeQuery.RangeArgs(from = Some(T0), to = Some(T0 + 14 * DAY),
-          aggs = Seq("avg"), bucketMs = 2 * DAY))))
+    val nrangeApi = set(graft.ts.Multi.nrange(samples, Seq("click_3", "click_7", "view_3"),
+      graft.ts.RangeQuery.RangeArgs(from = Some(T0), to = Some(T0 + 14 * DAY),
+        aggs = Seq("avg"), bucketMs = 2 * DAY)))
+    // the positional aggregator is case-insensitive
+    for (agg <- Seq("avg", "AVG"))
+      assert(set(spark.sql(
+        s"SELECT * FROM ts_nrange('click_3 click_7 view_3', $T0, ${T0 + 14 * DAY}, '$agg', ${2 * DAY})")) ==
+        nrangeApi, agg)
   }
 
   test("TVF over a native-column samples table keeps pushdown and the bucketed layout") {
