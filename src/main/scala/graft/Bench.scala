@@ -86,6 +86,8 @@ object Bench {
     } catch { case _: Throwable => None }
 
   def main(args: Array[String]): Unit = {
+    // a misspelled SPARK_GRAFT_ONLY name fails here, before any Spark work
+    val selected = SparkEntry.select(SparkEntry.onlyNames).map(q => (q.name, q.build))
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = SparkSession.builder()
@@ -136,9 +138,6 @@ object Bench {
     val committed = parseCommitted("bench_results.json")
     val forceBaseline = sys.env.get("SPARK_GRAFT_BASELINE_FORCE").contains("1")
     val loadBefore = loadAvg()
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
-    val selected = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(_.contains(n)) }
     def runTimes(name: String,
         fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): (Seq[Double], Boolean) = {
       val times = (1 to reps).iterator.map { _ =>

@@ -15,10 +15,9 @@ object Explain {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    val names = if (args.nonEmpty) args.toSeq else SparkEntry.queries.keys.toSeq.sorted
-    names.foreach { n =>
-      println(s"\n========== $n ==========")
-      try SparkEntry.queries(n)(spark, sfDir).explain("formatted")
+    SparkEntry.select(args.toSeq).foreach { q =>
+      println(s"\n========== ${q.name} ==========")
+      try q.build(spark, sfDir).explain("formatted")
       catch { case e: Throwable => println(s"explain failed: ${e.getMessage}") }
     }
     spark.stop()

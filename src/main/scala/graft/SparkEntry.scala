@@ -1,4040 +1,50 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-import graft.ts._
-import graft.ts.RangeQuery.RangeArgs
-import graft.pipeline.{Clustering, CorpusPipeline, Dedup, Multimodal, PQ, Similarity, Text}
+import graft.queries._
 
-/** Driver contract — one `queries` entry (+ DuckDB `oracleSql`) per
-  * implemented operator from SURVEY.md §2. */
+/** Driver contract: every implemented operator from SURVEY.md §2 as one
+  * registered query with its DuckDB oracle.
+  *
+  * A query is declared once, as a [[graft.queries.Q]] record holding its
+  * name, its build function `(SparkSession, sfDir) => DataFrame` and the
+  * oracle SQL that must reproduce that function's result. The records live in
+  * per-family `Seq[Q]` values in `graft.queries` (range/multi, write
+  * path and compaction, analytics, LLM pipeline, real-data and RDB
+  * goldens) plus the TSBS rows of [[graft.ts.Tsbs.registry]];
+  * [[registry]] merges them and fails on a name declared twice.
+  * `queries` and `oracleSql` are maps derived once from that registry. */
 object SparkEntry {
-
-  // epoch-ms constants for the fixture window (events: Jan 2024, UTC)
-  private val T0 = 1704067200000L            // 2024-01-01T00:00:00Z
-  private val T31 = 1706745599999L           // 2024-01-31T23:59:59.999Z
-  private val HOUR = 3600000L
-  private val DAY = 86400000L
-
-  private val oneSeries = "click_7"
-  private def seriesPred(s: String) = Some(s"series = '$s'")
-
-  // a fixed "trained elsewhere" model for the classifier-score TVF:
-  // bucket:weight literals (bucket -1 = bias), shared verbatim by the
-  // Spark call and the oracle's VALUES table
-  private val tvfScoreWeightsMap: Map[Long, Double] = Map(
-    -1L -> -0.35, 0L -> 0.8, 3L -> -0.2, 7L -> 0.5, 12L -> 1.1, 19L -> -0.6)
-  private val tvfScoreWeights: String = tvfScoreWeightsMap.toSeq.sortBy(_._1)
-    .map { case (b, w) => s"$b:$w" }.mkString(" ")
-
-  // the DTW pair set: six series present at every fixture SF
-  private val dtwSeries =
-    Seq("click_7", "click_17", "error_17", "purchase_41", "signup_78", "view_7")
-
-  /** The fixture-month samples with the [T0, T31] bounds pushed into
-    * the parquet scan in the column's NATIVE type (samplesPruned), so
-    * row groups outside the window are skipped at the source. The
-    * operators re-apply the same bounds on the derived ms column — a
-    * residual no-op filter, kept so their semantics never depend on
-    * the caller pre-filtering. */
-  private def monthSamples(s: SparkSession, dir: String): DataFrame =
-    TSModel.samplesPruned(s, dir, fromMs = Some(T0), toMs = Some(T31))
-
-  /** [[TSModel.samplesCte]] with values CENTERED (− 50.0) so the
-    * signed-sketch carriers drive all three stores on an all-positive
-    * fixture; the Spark twin applies the identical projection. */
-  private val centeredSamplesCte: String =
-    TSModel.samplesCte.replace("WITH samples AS (", "WITH samples_raw AS (") +
-      ", samples AS (SELECT series, ts, value - CAST(50.0 AS DOUBLE)" +
-      " AS value FROM samples_raw)"
-
-  /** The shared multi-monitor streaming pass the four series-keyed
-    * monitor queries slice (cached per fixture dir — the first slice
-    * pays the pass, the others read it; see StreamMonitors). */
-  private def sharedMonitors(s: SparkSession, dir: String): DataFrame =
-    graft.ts.StreamMonitors.monitorsOnce(s, monthSamples(s, dir),
-      zThreshold = 2.5, cusumThreshold = 3.0, q = 0.5, span = 10,
-      gapThresholdMs = 2 * DAY, seasonalThreshold = 2.0, seasonalMode = "dow",
-      fromMs = Some(T0), toMs = Some(T31),
-      nChunks = 2, cacheKey = Some(dir),
-      burnShortMs = 2 * DAY, burnLongMs = 7 * DAY, burnHopMs = DAY,
-      burnBudgetPerSec = 4.0e-4, burnThreshold = 1.5,
-      hampelSpan = 3, hampelK = 3.0,
-      sketchGamma = 1.05, sketchWindowMs = 7 * DAY)
-
-  /** Round-9 pin for the GOLDEN-data queries (lemire GPS ticks, GLT
-    * temperatures): their inputs are short decimals, so aggregate true
-    * values are small-denominator rationals that land EXACTLY on the
-    * driver's round-6 canonicalization halves — where a ±1 ulp
-    * summation-order difference between engines becomes a hash flip
-    * (caught in-session by the exact local gate: ts_glt_mrange_groupby
-    * at 23.8809375). Pinning both engines to the round-9 grid first
-    * maps the wobble onto ONE shared double (a ≤9-digit rational is
-    * never itself at a round-9 half), after which the driver's round-6
-    * of identical doubles is identical. Synthetic-fixture queries
-    * don't need this: their values are full-mantissa generics whose
-    * halves have ~1e-9 measure (PLANS.md round-9 table). */
-  private def pin9(df: DataFrame): DataFrame = {
-    val floats = df.schema.fields
-      .filter(_.dataType == org.apache.spark.sql.types.DoubleType)
-      .map(_.name).toSet
-    df.select(df.columns.map(c =>
-      if (floats(c)) round(col(c), 9).as(c) else col(c)): _*)
-  }
-
-  /** DuckDB twin of [[pin9]] (`* REPLACE` keeps the column order). */
-  private def pin9Sql(inner: String, floats: String*): String = {
-    val repl = floats.map(c => s"round($c, 9) AS $c").mkString(", ")
-    s"SELECT * REPLACE ($repl) FROM (\n$inner\n)"
-  }
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
     queries("ts_range_agg_avg")(spark, "/root/testdata/sf0.001")
 
-  // -------------------------------------------------------------------
-  // Query registry. Each entry is (SparkSession, sfDir) => DataFrame and
-  // has a DuckDB twin in `oracleSql` (same column names — the driver
-  // sorts columns by name before hashing).
-  // -------------------------------------------------------------------
+  lazy val registry: Seq[Q] = Q.merge(
+    RangeQueries.all, WritePathQueries.all, AnalyticsQueries.all,
+    PipelineQueries.all, GoldenQueries.all, graft.ts.Tsbs.registry)
 
-  private def rangeQ(args: RangeArgs, series: Option[String] = Some(oneSeries))
-      : (SparkSession, String) => DataFrame =
-    (s, dir) => RangeQuery.range(
-      TSModel.samplesPruned(s, dir, series.toSeq, args.from, args.to), args)
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
+    registry.map(q => q.name -> q.build).toMap
 
-  /** Single-series loader with scan-level pruning. */
-  private def one(s: SparkSession, dir: String,
-      from: Option[Long] = None, to: Option[Long] = None): DataFrame =
-    TSModel.samplesPruned(s, dir, Seq(oneSeries), from, to)
+  lazy val oracleSql: Map[String, String] =
+    registry.map(q => q.name -> q.oracle).toMap
 
-  private def rangeO(args: RangeArgs, series: Option[String] = Some(oneSeries)): String =
-    RangeQuery.rangeSql(args, series.map(k => s"series = '$k'"))
+  /** The named queries in the given order, or every query sorted by
+    * name when `names` is empty. An unknown name fails with the full
+    * list of unknown names instead of silently selecting nothing. */
+  def select(names: Seq[String]): Seq[Q] =
+    if (names.isEmpty) registry.sortBy(_.name)
+    else {
+      val byName = registry.map(q => q.name -> q).toMap
+      val unknown = names.filterNot(byName.contains)
+      require(unknown.isEmpty, s"unknown query name(s): ${unknown.mkString(", ")}")
+      names.distinct.map(byName)
+    }
 
-  private val rangeQueries: Map[String, (RangeArgs, Option[String])] = Map(
-    // TS.RANGE raw scan (reference: module.c:690-722)
-    "ts_range_raw" ->
-      (RangeArgs(from = Some(T0 + 5 * DAY), to = Some(T0 + 10 * DAY)), Some(oneSeries)),
-    // TS.RANGE AGGREGATION avg 1d (reference: filter_iterator.c:234-286)
-    "ts_range_agg_avg" ->
-      (RangeArgs(from = Some(T0), to = Some(T31), aggs = Seq("avg"), bucketMs = DAY), Some(oneSeries)),
-    // multi-aggregator single pass (reference: reply.c:291-358)
-    "ts_range_agg_multi" ->
-      (RangeArgs(from = Some(T0), to = Some(T31),
-        aggs = Seq("min", "max", "sum", "count", "first", "last", "range"),
-        bucketMs = DAY), Some(oneSeries)),
-    // std/var family (reference: compaction.c:461-553)
-    "ts_range_agg_stats" ->
-      (RangeArgs(from = Some(T0), to = Some(T31),
-        aggs = Seq("std.p", "std.s", "var.p", "var.s", "countall", "countnan"),
-        bucketMs = 2 * DAY), Some(oneSeries)),
-    // ALIGN start sentinel: buckets anchored at the query start
-    // (reference: query_language.c:531-560)
-    "ts_range_align" ->
-      (RangeArgs(from = Some(T0 + 7 * HOUR), to = Some(T31), aggs = Seq("sum"),
-        bucketMs = DAY,
-        alignMs = RangeQuery.resolveAlign("start", Some(T0 + 7 * HOUR), Some(T31))),
-        Some(oneSeries)),
-    // BUCKETTIMESTAMP mid (reference: query_language.c:283-320)
-    "ts_range_bucketts_mid" ->
-      (RangeArgs(from = Some(T0), to = Some(T31), aggs = Seq("avg"),
-        bucketMs = DAY, bucketTs = "~"), Some(oneSeries)),
-    // FILTER_BY_VALUE (reference: filter_iterator.c:195-232)
-    "ts_range_filter_value" ->
-      (RangeArgs(from = Some(T0), to = Some(T31), aggs = Seq("count", "avg"),
-        bucketMs = DAY, filterByValue = Some((50.0, 200.0))), Some(oneSeries)),
-    // REVRANGE (reference: series_iterator.c reverse paths)
-    "ts_revrange_agg" ->
-      (RangeArgs(from = Some(T0), to = Some(T31), aggs = Seq("max"),
-        bucketMs = DAY, reverse = true), Some(oneSeries)),
-    // MRANGE-style: same pipeline over every series at once
-    "ts_mrange_all_avg" ->
-      (RangeArgs(from = Some(T0), to = Some(T31), aggs = Seq("avg", "count"),
-        bucketMs = 7 * DAY), None),
-    // ALIGN end sentinel: buckets anchored at the query END
-    // (reference: query_language.c:531-560 "end"/"+")
-    "ts_range_align_end" ->
-      (RangeArgs(from = Some(T0 + 7 * HOUR), to = Some(T31 - 5 * HOUR), aggs = Seq("sum"),
-        bucketMs = DAY,
-        alignMs = RangeQuery.resolveAlign("end", Some(T0 + 7 * HOUR), Some(T31 - 5 * HOUR))),
-        Some(oneSeries)),
-    // ALIGN literal timestamp (reference: query_language.c:531-560 —
-    // any explicit ts anchors the bucket grid)
-    "ts_range_align_literal" ->
-      (RangeArgs(from = Some(T0 + 3 * HOUR), to = Some(T31), aggs = Seq("sum"),
-        bucketMs = DAY,
-        alignMs = RangeQuery.resolveAlign((T0 + 5 * HOUR).toString, None, None)),
-        Some(oneSeries)),
-    // BUCKETTIMESTAMP + (bucket END reported; reference:
-    // query_language.c:283-320 — `-` start is every other query's default)
-    "ts_range_bucketts_end" ->
-      (RangeArgs(from = Some(T0), to = Some(T31), aggs = Seq("avg"),
-        bucketMs = DAY, bucketTs = "+"), Some(oneSeries)),
-  )
-
-  /** FILTER_BY_TS needs literal timestamps that exist in the data, which
-    * differ per SF: derive the (<=128, reference: query_language.h:53)
-    * list deterministically from the series' first samples. The collect
-    * is bounded by the 128-literal contract, so it stays O(1) at any
-    * scale. The oracle derives the identical list in SQL. */
-  private def filterTsList(s: SparkSession, dir: String): Seq[Long] = {
-    one(s, dir)
-      .orderBy(col("ts")).limit(120)
-      .select(col("ts")).collect().map(_.getLong(0)).toSeq
-      .zipWithIndex.filter(_._2 % 3 == 0).map(_._1)
-  }
-  private val filterTsListSql: String =
-    s"""SELECT ts FROM (
-       |  SELECT ts, row_number() OVER (ORDER BY ts) - 1 AS rn
-       |  FROM samples WHERE series = '$oneSeries' ORDER BY ts LIMIT 120
-       |) WHERE rn % 3 = 0""".stripMargin
-
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    rangeQueries.map { case (n, (a, s)) => n -> rangeQ(a, s) } ++
-    graft.ts.Tsbs.queries ++ Map[String, (SparkSession, String) => DataFrame](
-      // FILTER_BY_TS: explicit ts list (reference: filter_iterator.c:26-188)
-      "ts_range_filter_ts" -> ((s, dir) => {
-        RangeQuery.range(one(s, dir), RangeArgs(filterByTs = filterTsList(s, dir)))
-      }),
-      // COUNT n: limit after aggregation (reference: reply.c:180-212)
-      "ts_range_count" -> ((s, dir) => {
-        RangeQuery.range(one(s, dir, Some(T0), Some(T31)), RangeArgs(from = Some(T0), to = Some(T31),
-          aggs = Seq("avg"), bucketMs = DAY, count = Some(7)))
-      }),
-      // EMPTY + TWA interpolation (reference: filter_iterator.c:307-386).
-      // No time pruning at the scan: twa boundary interpolation reads
-      // the neighbouring samples beyond [from, to].
-      "ts_range_twa_empty" -> ((s, dir) => {
-        RangeQuery.range(one(s, dir), RangeArgs(from = Some(T0), to = Some(T31),
-          aggs = Seq("twa"), bucketMs = 6 * HOUR, empty = true))
-      }),
-      // TWA (reference: compaction.c:302-459)
-      "ts_range_twa" -> ((s, dir) => {
-        RangeQuery.range(one(s, dir), RangeArgs(from = Some(T0), to = Some(T31),
-          aggs = Seq("twa"), bucketMs = DAY))
-      }),
-      // EMPTY gap fill, sum -> 0 (reference: filter_iterator.c:389-966)
-      "ts_range_empty_sum" -> ((s, dir) => {
-        RangeQuery.range(one(s, dir, Some(T0), Some(T31)), RangeArgs(from = Some(T0), to = Some(T31),
-          aggs = Seq("sum"), bucketMs = 6 * HOUR, empty = true))
-      }),
-      // EMPTY × FILTER_BY_VALUE: the spine derives from the FILTERED
-      // samples, so buckets whose samples were all filtered out drop at
-      // the edges and fill as empty in the interior (reference:
-      // tests/flow/test_ts_range_empty_filter_stress.py edge-strip cases)
-      "ts_range_empty_filter_value" -> ((s, dir) => {
-        RangeQuery.range(one(s, dir, Some(T0), Some(T31)), RangeArgs(from = Some(T0), to = Some(T31),
-          aggs = Seq("sum"), bucketMs = 6 * HOUR, empty = true,
-          filterByValue = Some((50.0, 200.0))))
-      }),
-      // EMPTY with MIXED aggregators in one pass: each column fills by
-      // its own class — sum/count -> 0, avg -> NaN, last -> LOCF
-      // (reference finalizeEmpty per-class tables, compaction.c:73-84)
-      "ts_range_empty_multi" -> ((s, dir) => {
-        RangeQuery.range(one(s, dir, Some(T0), Some(T31)), RangeArgs(from = Some(T0), to = Some(T31),
-          aggs = Seq("sum", "avg", "last", "count"), bucketMs = 6 * HOUR, empty = true))
-      }),
-      // TWA × FILTER_BY_VALUE: filtered-out samples are invisible to the
-      // boundary interpolation too (reference:
-      // tests/flow/test_ts_range_empty_filter_stress.py twa equivalence)
-      "ts_range_twa_filter_value" -> ((s, dir) => {
-        RangeQuery.range(one(s, dir), RangeArgs(from = Some(T0), to = Some(T31),
-          aggs = Seq("twa"), bucketMs = DAY, filterByValue = Some((50.0, 200.0))))
-      }),
-      // EMPTY + last -> LOCF (reference: compaction.c:115-140)
-      "ts_range_empty_locf" -> ((s, dir) => {
-        RangeQuery.range(one(s, dir, Some(T0), Some(T31)), RangeArgs(from = Some(T0), to = Some(T31),
-          aggs = Seq("last"), bucketMs = 6 * HOUR, empty = true))
-      }),
-      // ---- catalog surface (SURVEY §2.1 TS.CREATE/TS.ALTER) ----
-      // scripted create→alter→policy→createrule→deleterule lifecycle
-      // (reference: module.c:1216-1307, 1312-1464, parse_policies.c)
-      "ts_catalog_lifecycle" -> ((s, dir) => Catalog.lifecycle(s, dir)),
-      // ---- multi-series surface (SURVEY §2.5/§2.7) ----
-      // TS.QUERYINDEX (reference: module.c:299-337)
-      "ts_queryindex" -> ((s, dir) =>
-        Multi.queryIndex(TSModel.labels(s, dir),
-          Seq(Multi.parsePred("type=click"), Multi.parsePred("user!=(1,2,3)")))),
-      // TS.MGET with label filter (reference: module.c:2132-2265)
-      "ts_mget" -> ((s, dir) =>
-        Multi.mget(TSModel.samples(s, dir), TSModel.labels(s, dir),
-          Seq(Multi.parsePred("type=purchase")))),
-      // TS.GET (reference: module.c:1566-1607)
-      "ts_get" -> ((s, dir) =>
-        Multi.get(one(s, dir), oneSeries)),
-      // TS.MRANGE with label filter + per-series agg (reference: module.c:624-688)
-      "ts_mrange_filtered" -> ((s, dir) =>
-        Multi.mrange(TSModel.samples(s, dir), TSModel.labels(s, dir),
-          Seq(Multi.parsePred("type=(click,view)"), Multi.parsePred("user=(1,2,3,4,5,6,7)")),
-          RangeArgs(from = Some(T0), to = Some(T31), aggs = Seq("max"), bucketMs = 2 * DAY))),
-      // TS.MRANGE ... COUNT n: the limit applies PER SERIES
-      // (reference: reply.c:180-212)
-      "ts_mrange_count" -> ((s, dir) =>
-        Multi.mrange(TSModel.samples(s, dir), TSModel.labels(s, dir),
-          Seq(Multi.parsePred("type=(click,view)")),
-          RangeArgs(from = Some(T0), to = Some(T31), aggs = Seq("avg"),
-            bucketMs = DAY, count = Some(5)))),
-      // TS.MRANGE ... LATEST over compaction dests: in-flight bucket
-      // visible (reference: query_language.c:646-651, tsdb.c:1468-1501)
-      "ts_mrange_latest" -> ((s, dir) =>
-        Multi.mrangeDest(TSModel.samples(s, dir), TSModel.labels(s, dir),
-          Seq(Multi.parsePred("type=click")),
-          Compaction.Rule("avg", DAY), RangeArgs(latest = true))),
-      // full option-stack interplay on a dest read: LATEST surfaces the
-      // in-flight bucket, COUNT truncates per series, REVRANGE orders
-      // descending — reference applies them in exactly that order
-      // (tsdb.c:1468-1501 then reply.c:180-212)
-      "ts_mrange_latest_count_rev" -> ((s, dir) =>
-        Multi.mrangeDest(TSModel.samples(s, dir), TSModel.labels(s, dir),
-          Seq(Multi.parsePred("type=click")),
-          Compaction.Rule("avg", DAY),
-          RangeArgs(latest = true, count = Some(3), reverse = true))),
-      // same read WITHOUT the flag: the in-flight bucket must be absent
-      "ts_mrange_nolatest" -> ((s, dir) =>
-        Multi.mrangeDest(TSModel.samples(s, dir), TSModel.labels(s, dir),
-          Seq(Multi.parsePred("type=click")),
-          Compaction.Rule("avg", DAY), RangeArgs(latest = false))),
-      // TS.MGET ... LATEST (reference: module.c:2132-2265 latest path)
-      "ts_mget_latest" -> ((s, dir) =>
-        Multi.mgetDest(TSModel.samples(s, dir), TSModel.labels(s, dir),
-          Seq(Multi.parsePred("type=purchase")),
-          Compaction.Rule("max", DAY), latest = true)),
-      // TS.MRANGE GROUPBY label REDUCE (reference: module.c:467-526)
-      "ts_mrange_groupby" -> ((s, dir) =>
-        Multi.mrangeGroupBy(TSModel.samples(s, dir), TSModel.labels(s, dir),
-          Seq(Multi.parsePred("type=(click,view,purchase,signup,error)"),
-            Multi.parsePred("type!=")), // list match + CONTAINS
-          RangeArgs(from = Some(T0), to = Some(T31), aggs = Seq("avg"), bucketMs = DAY),
-          groupByLabel = "type", reducer = "sum")),
-      // streaming GROUPBY REDUCE: the same two-level reduction as a
-      // continuous stateful query over the staged event replay —
-      // update-mode log sink, merge-on-read; final state hash-matches
-      // the batch operator's oracle
-      "ts_mrange_groupby_stream" -> ((s, dir) =>
-        graft.ts.StreamGroupBy.mrangeGroupByStreamOnce(s, dir,
-          Seq(Multi.parsePred("type=(click,view,purchase,signup,error)"),
-            Multi.parsePred("type!=")),
-          groupByLabel = "type", agg = "avg", reducer = "sum",
-          bucketMs = DAY, fromMs = Some(T0), toMs = Some(T31),
-          sinkDir = graft.Scratch.dir("graft_sgb_")
-            .resolve("log").toString)),
-      // GROUPBY with a statistics-family reducer (std.p): reducer set =
-      // the aggregator classes minus first/last/twa (reference:
-      // query_language.c:825-841)
-      "ts_mrange_groupby_std" -> ((s, dir) =>
-        Multi.mrangeGroupBy(TSModel.samples(s, dir), TSModel.labels(s, dir),
-          Seq(Multi.parsePred("type=(click,view,purchase)")),
-          RangeArgs(from = Some(T0), to = Some(T31), aggs = Seq("avg"), bucketMs = 2 * DAY),
-          groupByLabel = "user", reducer = "std.p")),
-      // streaming twin of the std.p reducer: the widened composable
-      // partial set ((Σv, Σv², n) per series, reference accumulator
-      // compaction.c:461-553) run live; shares the batch oracle
-      "ts_mrange_groupby_std_stream" -> ((s, dir) =>
-        graft.ts.StreamGroupBy.mrangeGroupByStreamOnce(s, dir,
-          Seq(Multi.parsePred("type=(click,view,purchase)")),
-          groupByLabel = "user", agg = "avg", reducer = "std.p",
-          bucketMs = 2 * DAY, fromMs = Some(T0), toMs = Some(T31),
-          sinkDir = graft.Scratch.dir("graft_sgbs_")
-            .resolve("log").toString)),
-      // GROUPBY with per-series TWA aggregation: legal per the
-      // reference (twa is forbidden only as the cross-series REDUCER,
-      // query_language.c:825-841); round-9 output (stacked float
-      // reductions — trapezoid integral, then the reduce)
-      "ts_mrange_groupby_twa" -> ((s, dir) =>
-        Multi.mrangeGroupBy(TSModel.samples(s, dir), TSModel.labels(s, dir),
-          Seq(Multi.parsePred("type=(click,view,purchase)")),
-          RangeArgs(from = Some(T0), to = Some(T31), aggs = Seq("twa"), bucketMs = DAY),
-          groupByLabel = "type", reducer = "avg")
-          .select(col("series"), col("ts"),
-            round(col("twa_value"), 9).as("twa_value"))),
-      // streaming twin of per-series TWA: boundary-free partials per
-      // (series, bucket) in state, boundary interpolation + reduce at
-      // read time (the streaming-compaction TWA decomposition applied
-      // to GROUPBY); shares the batch oracle
-      "ts_mrange_groupby_twa_stream" -> ((s, dir) =>
-        graft.ts.StreamGroupBy.mrangeGroupByTwaStreamOnce(s, dir,
-          Seq(Multi.parsePred("type=(click,view,purchase)")),
-          groupByLabel = "type", reducer = "avg",
-          bucketMs = DAY, fromMs = Some(T0), toMs = Some(T31),
-          sinkDir = graft.Scratch.dir("graft_sgbt_")
-            .resolve("log").toString)),
-      // GROUPBY over EMPTY-filled per-series buckets: the reference
-      // fills each series' gaps FIRST (per-series AGGREGATION pipeline
-      // incl. EMPTY, module.c:467-526), then reduces across series —
-      // so a filled 0-bucket participates in the cross-series sum
-      "ts_mrange_groupby_empty" -> ((s, dir) =>
-        Multi.mrangeGroupBy(TSModel.samples(s, dir), TSModel.labels(s, dir),
-          Seq(Multi.parsePred("type=(click,view)")),
-          RangeArgs(from = Some(T0), to = Some(T31), aggs = Seq("sum"),
-            bucketMs = DAY, empty = true),
-          groupByLabel = "type", reducer = "sum")),
-      // GROUPBY with MULTIPLE per-series aggregators, each reduced in
-      // lockstep across the group (reference: reply.c:291-358 replays N
-      // aggregators through replyGroupedMultiRange module.c:467-526)
-      "ts_mrange_groupby_multi" -> ((s, dir) =>
-        Multi.mrangeGroupBy(TSModel.samples(s, dir), TSModel.labels(s, dir),
-          Seq(Multi.parsePred("type=(click,view,purchase)")),
-          RangeArgs(from = Some(T0), to = Some(T31), aggs = Seq("min", "max"), bucketMs = 2 * DAY),
-          groupByLabel = "type", reducer = "sum")),
-      // streaming twin of the N-aggregator lockstep reduce: every agg
-      // finalizes from the SAME per-series partials; shares the batch
-      // oracle
-      "ts_mrange_groupby_multi_stream" -> ((s, dir) =>
-        graft.ts.StreamGroupBy.mrangeGroupByStreamMultiOnce(s, dir,
-          Seq(Multi.parsePred("type=(click,view,purchase)")),
-          groupByLabel = "type", aggs = Seq("min", "max"), reducer = "sum",
-          bucketMs = 2 * DAY, fromMs = Some(T0), toMs = Some(T31),
-          sinkDir = graft.Scratch.dir("graft_sgbm_")
-            .resolve("log").toString)),
-      // WITHLABELS/SELECTED_LABELS (reference: reply.c:219-272)
-      "ts_mrange_withlabels" -> ((s, dir) => {
-        val per = Multi.mrange(TSModel.samples(s, dir), TSModel.labels(s, dir),
-          Seq(Multi.parsePred("user=(1,2,3)")),
-          RangeArgs(from = Some(T0), to = Some(T31), aggs = Seq("avg"), bucketMs = 7 * DAY))
-        per.join(broadcast(TSModel.labels(s, dir)), Seq("series"))
-          .select(col("series"), col("ts"), col("avg_value"),
-            element_at(col("labels"), "type").as("label_type"),
-            element_at(col("labels"), "user").as("label_user"))
-      }),
-      // SELECTED_LABELS with an ABSENT label (VERDICT r04 missing #3;
-      // reference reply.c:219-272: a selected label missing on a series
-      // replies null). The fixture's two labels are always present, so
-      // an optional third label is planted on the user%3==0 subset —
-      // the null label_tier rows discriminate.
-      "ts_mrange_selected_labels" -> ((s, dir) => {
-        val tiered = tieredLabels(s, dir)
-        val per = Multi.mrange(TSModel.samples(s, dir), tiered,
-          Seq(Multi.parsePred("user=(1,2,3,4,5,6)")),
-          RangeArgs(from = Some(T0), to = Some(T31), aggs = Seq("avg"), bucketMs = 7 * DAY))
-        per.join(broadcast(tiered), Seq("series"))
-          .select(col("series"), col("ts"), col("avg_value"),
-            element_at(col("labels"), "user").as("label_user"),
-            element_at(col("labels"), "tier").as("label_tier"))
-      }),
-      // TS.NRANGE pivot (snapshot-specific; reference: module.c:724-906)
-      "ts_nrange_pivot" -> ((s, dir) =>
-        Multi.nrange(TSModel.samples(s, dir), Seq("click_1", "click_2", "click_3"),
-          RangeArgs(from = Some(T0), to = Some(T31), aggs = Seq("avg"), bucketMs = DAY))),
-      // TS.NRANGE with per-key aggregator specs (snapshot-specific;
-      // reference: module.c:770-850)
-      "ts_nrange_per_key_aggs" -> ((s, dir) =>
-        Multi.nrangeSpecs(TSModel.samples(s, dir),
-          Seq("click_1" -> Seq("avg"), "click_2" -> Seq("max"), "click_3" -> Seq("count")),
-          RangeArgs(from = Some(T0), to = Some(T31), bucketMs = 2 * DAY))),
-      // TS.NREVRANGE: same pivot, descending ts (reference:
-      // module.c:724-906 reverse flag) — row SET must equal the
-      // ascending oracle's
-      "ts_nrange_pivot_rev" -> ((s, dir) =>
-        Multi.nrange(TSModel.samples(s, dir), Seq("click_1", "click_2", "click_3"),
-          RangeArgs(from = Some(T0), to = Some(T31), aggs = Seq("avg"), bucketMs = DAY,
-            reverse = true))),
-      // TS.QUERYLABELS VALUES (snapshot-specific; reference: module.c:339-465)
-      "ts_querylabels_values" -> ((s, dir) =>
-        Multi.queryLabelValues(TSModel.labels(s, dir), "type")),
-      // TS.QUERYLABELS LABELS
-      "ts_querylabels_names" -> ((s, dir) =>
-        Multi.queryLabelNames(TSModel.labels(s, dir))),
-      // TS.QUERYLABELS VALUES with FILTER: values present among the
-      // matched series only (reference: module.c:339-465)
-      "ts_querylabels_values_filtered" -> ((s, dir) =>
-        Multi.queryLabelValues(TSModel.labels(s, dir), "user",
-          Seq(Multi.parsePred("type=purchase"), Multi.parsePred("user=(1,2,3,4)")))),
-      // TS.QUERYLABELS LABELS with FILTER (reference: module.c:339-465)
-      "ts_querylabels_names_filtered" -> ((s, dir) =>
-        Multi.queryLabelNames(TSModel.labels(s, dir),
-          Seq(Multi.parsePred("type=click"), Multi.parsePred("user=(1,2,3)")))),
-      // FILTER matching NO series must yield NO label names — the
-      // discriminating case for the filter path (ADVICE r02: with every
-      // fixture series carrying both labels, a positive match can't
-      // tell a broken filter from a working one)
-      "ts_querylabels_names_nomatch" -> ((s, dir) =>
-        Multi.queryLabelNames(TSModel.labels(s, dir),
-          Seq(Multi.parsePred("type=tombstone")))),
-      // TS.INFO (reference: module.c:156-280)
-      "ts_info" -> ((s, dir) =>
-        Multi.info(TSModel.samples(s, dir))),
-      // TS.INFO full field set: retention-net counts, chunk/memory
-      // model, config echo (reference: module.c:156-280)
-      "ts_info_full" -> ((s, dir) =>
-        Multi.infoFull(TSModel.samples(s, dir), retentionMs = 10 * DAY,
-          chunkSizeBytes = 4096L, duplicatePolicy = "last")),
-      // TS.INFO DEBUG per-chunk list (reference: module.c:244-276):
-      // chunkSize 128 (legal: 48..1048576, multiple of 8) -> 8 samples
-      // per chunk, so real series span multiple chunks
-      "ts_info_debug" -> ((s, dir) =>
-        Multi.infoDebugChunks(TSModel.samples(s, dir), chunkSizeBytes = 128L)),
-      // ---- write-path semantics (SURVEY §2.2) ----
-      // duplicate policies over hour-coarsened ts (creates real dups)
-      "ts_dup_policy_last" -> ((s, dir) =>
-        WritePath.applyDupPolicy(dupSamples(s, dir), "LAST")),
-      "ts_dup_policy_first" -> ((s, dir) =>
-        WritePath.applyDupPolicy(dupSamples(s, dir), "FIRST")),
-      "ts_dup_policy_min" -> ((s, dir) =>
-        WritePath.applyDupPolicy(dupSamples(s, dir), "MIN")),
-      "ts_dup_policy_sum" -> ((s, dir) =>
-        WritePath.applyDupPolicy(dupSamples(s, dir), "SUM")),
-      "ts_dup_policy_max" -> ((s, dir) =>
-        WritePath.applyDupPolicy(dupSamples(s, dir), "MAX")),
-      // BLOCK over raw samples (no (series,ts) dups at ms granularity in
-      // the fixture): the batch passes the duplicate check unchanged
-      "ts_dup_policy_block" -> ((s, dir) =>
-        WritePath.applyDupPolicy(TSModel.samplesWithSeq(s, dir), "BLOCK")),
-      // mixed per-series policies resolved in ONE pass: each series by
-      // its catalog policy, absent -> global default (reference policy
-      // chain: ON_DUPLICATE ?: series ?: global, module.c:1014-1016)
-      "ts_dup_policy_per_series" -> ((s, dir) => {
-        val pol = TSModel.labels(s, dir).select(col("series"),
-          when(element_at(col("labels"), "type") === "click", "min")
-            .when(element_at(col("labels"), "type") === "view", "max")
-            .when(element_at(col("labels"), "type") === "purchase", "sum")
-            .when(element_at(col("labels"), "type") === "signup", "first")
-            .as("dup_policy"))  // error series: null -> global default
-        WritePath.applyDupPolicyPerSeries(dupSamples(s, dir), pol, globalPolicy = "LAST")
-      }),
-      // IGNORE insert filter (sequential; recursive-CTE oracle)
-      "ts_ignore_filter" -> ((s, dir) =>
-        WritePath.ignoreFilter(TSModel.samples(s, dir), maxTimeDiff = 12 * HOUR, maxValDiff = 50.0)),
-      // IGNORE with PER-SERIES catalog thresholds + policy gating
-      // (reference: filter_close_samples module.c:986-998 reads the
-      // series' own config; gate arms only under LAST)
-      "ts_ignore_filter_per_series" -> ((s, dir) => {
-        val t = element_at(col("labels"), "type")
-        val th = TSModel.labels(s, dir).select(col("series"),
-          when(t === "signup", "first").otherwise("last").as("dup_policy"),
-          when(t === "click", 12L * HOUR).when(t === "view", 6L * HOUR)
-            .when(t === "signup", 12L * HOUR).otherwise(0L)
-            .as("ignore_max_time_diff"),
-          when(t === "click", 50.0).when(t === "view", 20.0)
-            .when(t === "signup", 50.0).otherwise(0.0)
-            .as("ignore_max_val_diff"))
-        WritePath.ignoreFilterPerSeries(TSModel.samples(s, dir), th)
-      }),
-      // retention clamp (reference: tsdb.c:1367-1374)
-      "ts_retention" -> ((s, dir) =>
-        WritePath.retentionClamp(TSModel.samples(s, dir), retentionMs = 10 * DAY)),
-      // TS.DEL range (reference: tsdb.c:996-1084)
-      "ts_del_range" -> ((s, dir) =>
-        WritePath.deleteRange(one(s, dir), oneSeries, T0 + 10 * DAY, T0 + 20 * DAY)),
-      // TS.INCRBY replay: running counter (reference: module.c:1469-1564)
-      "ts_incrby_replay" -> ((s, dir) =>
-        WritePath.counterReplay(one(s, dir))),
-      // TS.MADD per-item outcome surface (reference: module.c:1115-1161
-      // — each triple succeeds or errors independently): ok/err per
-      // submitted item under BLOCK with a retention gate; the planted
-      // ret_a rows exercise the retention error, the hour-coarsened
-      // duplicates the BLOCK upsert error
-      "ts_madd_status" -> ((s, dir) => {
-        import s.implicits._
-        val plant = Seq(
-          ("ret_a", 100 * DAY, 1.0, 1L), ("ret_a", 5 * DAY, 2.0, 2L),
-          ("ret_a", 95 * DAY, 3.0, 3L)).toDF("series", "ts", "value", "seq")
-        WritePath.maddStatus(dupSamples(s, dir).unionByName(plant), "BLOCK",
-          retentionMs = 10 * DAY)
-      }),
-      // ---- compaction (SURVEY §2.6) ----
-      // batch-materialized rule, in-flight bucket excluded
-      "ts_compaction_batch" -> ((s, dir) =>
-        Compaction.materialize(TSModel.samples(s, dir), Compaction.Rule("avg", DAY))),
-      // LATEST: in-flight bucket surfaced (reference: tsdb.c:1468-1501)
-      "ts_compaction_latest" -> ((s, dir) =>
-        Compaction.latest(TSModel.samples(s, dir), Compaction.Rule("max", DAY))),
-      // multi-rule fan-out in ONE source scan (reference walks every
-      // attached rule per write, module.c:915-984)
-      "ts_compaction_multirule" -> ((s, dir) =>
-        Compaction.materializeAll(TSModel.samples(s, dir), Seq(
-          Compaction.Rule("avg", DAY), Compaction.Rule("max", 2 * DAY),
-          Compaction.Rule("sum", DAY)))),
-      // TWA compaction rule: boundary carry across buckets
-      // (reference: module.c:928-976)
-      "ts_compaction_twa" -> ((s, dir) =>
-        Compaction.materialize(TSModel.samples(s, dir), Compaction.Rule("twa", DAY))),
-      // mixed rule set WITH a TWA rule, still one source scan: the TWA
-      // neighbour window and the grouped fan-out share the plan
-      // (reference: module.c:915-984 walks all rules incl. TWA per write)
-      "ts_compaction_multirule_twa" -> ((s, dir) =>
-        Compaction.materializeAll(TSModel.samples(s, dir), Seq(
-          Compaction.Rule("avg", DAY), Compaction.Rule("twa", DAY),
-          Compaction.Rule("max", 2 * DAY)))),
-      // Structured Streaming downsample, run to completion on the same
-      // parquet — results must equal the batch oracle
-      "ts_compaction_stream" -> ((s, dir) =>
-        Compaction.streamingDownsampleOnce(s, dir,
-          Compaction.Rule("sum", DAY), queryName = "stream_sum_" + math.abs(dir.hashCode))),
-      // update-mode + idempotent merge-on-read sink: the scale-safe
-      // streaming shape — must converge to the same final state
-      "ts_compaction_stream_update" -> ((s, dir) =>
-        Compaction.streamingDownsampleUpdateOnce(s, dir,
-          Compaction.Rule("sum", DAY),
-          sinkDir = graft.Scratch.dir("graft_upd_")
-            .resolve("log").toString)),
-      // streaming TWA rule: per-batch boundary-free partials into a
-      // merge-on-read log (own buckets only, O(batch) per batch);
-      // neighbour interpolation resolves at read time — converges to
-      // the batch materialization and shares its oracle
-      "ts_compaction_stream_twa" -> ((s, dir) =>
-        Compaction.streamingDownsampleTwaOnce(s, dir, Compaction.Rule("twa", DAY),
-          workDir = graft.Scratch.dir("graft_stwa_").toString,
-          nChunks = 2)), // cross-batch recompute exercised; 3-batch OOO in spec
-      // MULTI-RULE streaming downsample: one stream, one stateful agg
-      // for all rules (vs R queries × R state stores), update-mode
-      // merge-on-read sink — must converge to the batch answer
-      "ts_compaction_stream_multirule" -> ((s, dir) =>
-        Compaction.streamingDownsampleAllUpdateOnce(s, dir,
-          Seq(Compaction.Rule("sum", DAY), Compaction.Rule("max", 2 * DAY)),
-          sinkDir = graft.Scratch.dir("graft_updm_")
-            .resolve("log").toString)),
-      // TS.ADD live ingest: the events fixture replayed through the
-      // stateful streaming ingest (per-series O(1) tail state, IGNORE
-      // gate, merge-on-read upsert sink) — must equal the batch ignore
-      // filter and its recursive-CTE oracle
-      "ts_ingest_stream" -> ((s, dir) =>
-        Ingest.eventsIngestOnce(s, dir,
-          sinkDir = graft.Scratch.dir("graft_ing_")
-            .resolve("log").toString,
-          maxTimeDiff = 12 * HOUR, maxValDiff = 50.0)),
-      // TS.MRANGE without AGGREGATION: label-filtered raw samples
-      "ts_mrange_raw" -> ((s, dir) =>
-        Multi.mrange(TSModel.samples(s, dir), TSModel.labels(s, dir),
-          Seq(Multi.parsePred("type=signup"), Multi.parsePred("user=(2,4,6)")),
-          RangeArgs(from = Some(T0 + 3 * DAY), to = Some(T0 + 9 * DAY)))),
-      // TS.MRANGE ... EMPTY: the gap-fill spine is computed PER SERIES
-      // (each series' lifetime ∩ query range)
-      "ts_mrange_empty" -> ((s, dir) =>
-        Multi.mrange(TSModel.samples(s, dir), TSModel.labels(s, dir),
-          Seq(Multi.parsePred("type=signup"), Multi.parsePred("user=(1,3,5)")),
-          RangeArgs(from = Some(T0), to = Some(T31), aggs = Seq("sum"),
-            bucketMs = 12 * HOUR, empty = true))),
-      // TS.MREVRANGE: descending multi-series aggregation
-      "ts_mrevrange" -> ((s, dir) =>
-        Multi.mrange(TSModel.samples(s, dir), TSModel.labels(s, dir),
-          Seq(Multi.parsePred("type=error")),
-          RangeArgs(from = Some(T0), to = Some(T31), aggs = Seq("count"),
-            bucketMs = 7 * DAY, reverse = true))),
-      // EXCLUDEEMPTY (snapshot-specific; reference: query_language.c:998-1007):
-      // series whose filtered range is empty produce no rows — the
-      // value filter empties most series; inner aggregation drops them
-      "ts_mrange_excludeempty" -> ((s, dir) =>
-        Multi.mrange(TSModel.samples(s, dir), TSModel.labels(s, dir),
-          Seq(Multi.parsePred("type=view")),
-          RangeArgs(from = Some(T0), to = Some(T31), aggs = Seq("max"),
-            bucketMs = 31 * DAY, filterByValue = Some((250.0, 10000.0))))),
-      // Higher-cardinality series source: orders as (customer, order-date,
-      // total) time series — same engine, different table (FIXTURES §2.2)
-      "ts_orders_mrange_avg" -> ((s, dir) => {
-        val samples = ordersSamples(s, dir)
-        RangeQuery.range(samples, RangeArgs(aggs = Seq("avg", "count"), bucketMs = 28 * DAY))
-      }),
-      "ts_orders_mget" -> ((s, dir) => {
-        val samples = ordersSamples(s, dir)
-        samples.groupBy(col("series"))
-          .agg(max(struct(col("ts").as("t"), col("value").as("v"))).as("s"))
-          .select(col("series"), col("s.t").as("ts"), col("s.v").as("value"))
-      }),
-      // TS.READ cursor read (snapshot-specific; reference: module.c:1609-2130)
-      "ts_read_cursor" -> ((s, dir) =>
-        Read.cursor(one(s, dir, Some(T0 + 15 * DAY)), oneSeries,
-          cursorTs = T0 + 15 * DAY, maxCount = 50)),
-      // TS.READ from the `-` sentinel bounded by MAX_COUNT
-      // (reference: module.c:1609-2130 max_count clamp)
-      "ts_read_max_count" -> ((s, dir) => {
-        val samples = one(s, dir)
-        Read.cursor(samples, oneSeries,
-          cursorTs = Read.resolveCursor(samples, oneSeries, "-"), maxCount = 25)
-      }),
-      // ---- LLM-pipeline operators (SURVEY §7 phase 6) ----
-      "text_tokens" -> ((s, dir) => Text.tokenCounts(Text.loadDocuments(s, dir))),
-      "text_quality" -> ((s, dir) => Text.qualityMetrics(Text.loadDocuments(s, dir))),
-      "text_langid" -> ((s, dir) => Text.languageId(Text.loadDocuments(s, dir))),
-      "text_fingerprint" -> ((s, dir) => Text.fingerprint(Text.loadDocuments(s, dir))),
-      "dedup_exact" -> ((s, dir) => Dedup.exact(Text.loadDocuments(s, dir))),
-      // quadratic ground truth on a bounded id range
-      "dedup_ngram_jaccard" -> ((s, dir) =>
-        Dedup.ngramJaccardPairs(Text.loadDocuments(s, dir), 0.5, maxDocId = 300)),
-      // MinHash+LSH against the SAME quadratic oracle: banding recall at
-      // the planted-dup similarity is ~1, so results must coincide
-      "dedup_minhash_lsh" -> ((s, dir) =>
-        Dedup.minhashLshPairs(Text.loadDocuments(s, dir), 0.5, maxDocId = 300)),
-      // full-table LSH path — hash-matches the exact quadratic oracle
-      // (planted-dup recall is deterministically 1; see oracleSql note)
-      "dedup_minhash_lsh_full" -> ((s, dir) =>
-        Dedup.minhashLshPairs(Text.loadDocuments(s, dir), 0.5)),
-      // full simhash pipeline (bit sums -> sign -> 4-chunk banding ->
-      // hamming verify) against an exact quadratic DuckDB oracle; the
-      // token hash is the engine-portable md5 variant so the oracle can
-      // replay it bit-for-bit (the xxhash64 default is spec-covered)
-      "dedup_simhash_pairs" -> ((s, dir) =>
-        Dedup.simhashPairs(Text.loadDocuments(s, dir), maxDist = 3,
-          tokenHash = Dedup.md5Hash64)),
-      "dedup_embedding_cosine" -> ((s, dir) =>
-        Dedup.embeddingCosinePairs(Similarity.loadEmbeddings(s, dir), 0.4, maxVecId = 300)),
-      // eval-set decontamination: corpus docs sharing >= 5 3-gram
-      // shingles with a (broadcast) benchmark set — here the first 3
-      // fixture docs, so their planted near-dups must be flagged
-      "pipeline_contamination" -> ((s, dir) => {
-        val docs = Text.loadDocuments(s, dir)
-        CorpusPipeline.contamination(docs, docs.filter(col("doc_id") < 3), minShared = 5L)
-      }),
-      // two-phase scale variant: Bloom prefilter (map-side, codegen'd)
-      // + exact shuffle join on survivors — result identical to the
-      // exact operator (no false negatives; join kills the fpp), so
-      // it shares the oracle derivation
-      // the flag→DROP end product: the corpus with every flagged doc
-      // (and the benchmark items themselves) removed — what a training
-      // run actually consumes after the scan
-      "pipeline_decontaminate" -> ((s, dir) => {
-        val docs = Text.loadDocuments(s, dir)
-        CorpusPipeline.decontaminatedCorpus(
-          docs, docs.filter(col("doc_id") < 3), minShared = 5L)
-      }),
-      "pipeline_contamination_bloom" -> ((s, dir) => {
-        val docs = Text.loadDocuments(s, dir)
-        CorpusPipeline.contaminationBloom(docs, docs.filter(col("doc_id") < 3),
-          minShared = 5L)
-      }),
-      // graded contamination: per-doc FRACTION of distinct 5-gram
-      // shingles seen in the benchmark set (the GPT-3 appendix-C /
-      // Llama metric) — the number a pipeline thresholds, vs the
-      // boolean flag above
-      "pipeline_contamination_frac" -> ((s, dir) => {
-        val docs = Text.loadDocuments(s, dir)
-        CorpusPipeline.contaminationFraction(
-          docs, docs.filter(col("doc_id") < 3), n = 5)
-      }),
-      // FUZZY decontamination: train docs whose MinHash band buckets
-      // collide with a benchmark item's — catches lightly-paraphrased
-      // eval leakage that falls below the exact shingle threshold;
-      // md5 signatures make the gate decisions themselves replayable
-      "pipeline_contamination_fuzzy" -> ((s, dir) => {
-        val docs = Text.loadDocuments(s, dir)
-        CorpusPipeline.contaminationFuzzy(
-          docs.filter(col("doc_id") >= 50L), docs.filter(col("doc_id") < 50L))
-      }),
-      // near-dup regime (cos >= 0.95): 4 x 16-bit bands keep random
-      // collisions ~2e-4 of pairs, so candidate generation stays
-      // sub-quadratic at any corpus size. The fixture has no true
-      // cos>=0.95 pairs, so the query plants labeled near-copies
-      // (vec_id + 10^7, first coord nudged) of the first 10 vectors —
-      // the LSH must recover exactly those pairs.
-      "dedup_cosine_lsh" -> ((s, dir) => {
-        val embs = Similarity.loadEmbeddings(s, dir)
-        val planted = embs.filter(col("vec_id") < 10)
-          .select((col("vec_id") + 10000000L).as("vec_id"),
-            concat(array(element_at(col("embedding"), 1) + lit(0.001f)),
-              slice(col("embedding"), 2, 1000000)).as("embedding"))
-        Similarity.cosineLshPairs(
-          embs.select("vec_id", "embedding").unionByName(planted),
-          0.95, nBits = 64, bandBits = 16)
-      }),
-      // corpus-level word frequency (classic distributed wordcount)
-      "text_word_freq" -> ((s, dir) =>
-        Text.wordFrequency(Text.loadDocuments(s, dir), k = 20)),
-      // Zipf slope over the top-100 words: corpus-health diagnostic
-      // (slope ~ -1 = natural text; ~0 = boilerplate flood)
-      "text_zipf_fit" -> ((s, dir) =>
-        Text.zipfFit(Text.loadDocuments(s, dir), topN = 100)),
-      // per-source divergence vs the corpus unigram distribution over
-      // the top-300 vocab — the mix-health outlier detector (a
-      // templated/foreign source is a KL spike before it is a quality
-      // or langid verdict). The driver-hashed carrier is the exact
-      // integer moments grid (source, word, n_sw, n_w, n_s, n_tot):
-      // the smoothed log-sum scores themselves can't be bit-stable
-      // across engines (libm log + engine-defined sum order), so they
-      // are derived views spec-tested with tolerance instead
-      // (explicit-moments convention, see Text.sourceDivergence).
-      "text_source_divergence" -> ((s, dir) =>
-        Text.sourceDivergenceMoments(Text.loadDocuments(s, dir),
-          topN = 300)),
-      // the dedup end-product: corpus with near-dups removed (bounded
-      // id range so the quadratic oracle can rebuild the same pair set)
-      "dedup_corpus_keep" -> ((s, dir) => {
-        val docs = Text.loadDocuments(s, dir)
-        Dedup.dedupedCorpus(
-          docs.filter(col("doc_id") < 300).select(col("doc_id"), col("n_chars")),
-          Dedup.minhashLshPairs(docs, 0.5, maxDocId = 300))
-      }),
-      // the end-to-end corpus build: language gate -> quality gates ->
-      // exact dedup -> near-dup component removal, one declarative chain
-      "pipeline_corpus_filter" -> ((s, dir) => {
-        val docs = Text.loadDocuments(s, dir)
-        graft.pipeline.CorpusPipeline.filteredCorpus(docs,
-          Dedup.ngramJaccardPairs(docs, 0.5, maxDocId = 300))
-      }),
-      // deterministic data mixing: per-language keep rates + stable
-      // train/val split from md5-prefix hashing (no RNG state)
-      // per-source quality cap (domain balancing): keep the best 10
-      // docs per source by alpha-ratio; compiles to WindowGroupLimit
-      // (partial top-cap before the shuffle)
-      "pipeline_source_cap" -> ((s, dir) =>
-        CorpusPipeline.sourceCap(Text.loadDocuments(s, dir), cap = 10)),
-      "pipeline_stratified_sample" -> ((s, dir) =>
-        graft.pipeline.CorpusPipeline.stratifiedSample(
-          Text.loadDocuments(s, dir), Map("en" -> 0.8), defaultRate = 0.25)),
-      // percentile quality gate via the bounded score histogram — the
-      // no-global-sort threshold shape (drop the worst quarter)
-      "pipeline_quality_percentile" -> ((s, dir) =>
-        graft.pipeline.CorpusPipeline.qualityPercentileKeep(
-          Text.loadDocuments(s, dir), dropFrac = 0.25)),
-      // sequence packing: documents -> fixed-token-budget training
-      // bins, contiguous fill per shard (concat-then-chunk semantics)
-      "pipeline_pack_sequences" -> ((s, dir) =>
-        graft.pipeline.CorpusPipeline.packSequences(
-          Text.loadDocuments(s, dir), budgetTokens = 2048L, nShards = 8)),
-      // sqrt-temperature source mixing: per-source quotas filled in
-      // deterministic hash order
-      "pipeline_mix_temperature" -> ((s, dir) =>
-        graft.pipeline.CorpusPipeline.mixByTemperature(
-          Text.loadDocuments(s, dir), target = 300L)),
-      // document chunking: fixed 16-token windows, 4-token overlap —
-      // the sliding-splitter contract, zero-shuffle scan→explode plan
-      "pipeline_chunk_documents" -> ((s, dir) =>
-        graft.pipeline.Chunking.chunk(
-          Text.loadDocuments(s, dir), chunkTokens = 16, overlapTokens = 4)),
-      // DSIR importance resampling (Xie et al. 2023): hashed-unigram
-      // log-likelihood ratio vs the English subset as target, keep the
-      // top 30% by weight (exact-percentile cut, round-9 tie collapse)
-      "pipeline_dsir_select" -> ((s, dir) =>
-        graft.pipeline.Dsir.select(
-          Text.loadDocuments(s, dir), targetPred = col("lang") === "en",
-          nBuckets = 64, keepFrac = 0.3)),
-      // linear quality classifier (fastText/CCNet-gate shape): 3
-      // deterministic full-batch GD steps of logistic regression on
-      // hashed unigram features; the oracle REPLAYS the optimization
-      // as unrolled CTEs and must land on the same weights / kept set
-      "pipeline_classifier_weights" -> ((s, dir) =>
-        graft.pipeline.QualityClassifier.train(
-          Text.loadDocuments(s, dir), labelPred = col("lang") === "en",
-          nBuckets = 32, iters = 5, lr = 4.0)),
-      // train-once/score-many: the model comes from the per-process
-      // cache (first call trains; pipeline_classifier_weights keeps
-      // paying the REAL train wall every rep — cost attributed, not
-      // hidden, the StreamMonitors convention); result spec-pinned
-      // bit-equal to the fresh-train route
-      "pipeline_classifier_filter" -> ((s, dir) =>
-        graft.pipeline.QualityClassifier.scoreFilter(
-          Text.loadDocuments(s, dir), labelPred = col("lang") === "en",
-          nBuckets = 32, iters = 5, lr = 4.0, keepFrac = 0.3,
-          cacheKey = Some(dir))),
-      // sampled-training escape hatch: same GD, md5-ordered bounded
-      // draw (the pq_codes_sampled pattern) — oracle replays the draw
-      "pipeline_classifier_sampled" -> ((s, dir) =>
-        graft.pipeline.QualityClassifier.trainSampled(
-          Text.loadDocuments(s, dir), labelPred = col("lang") === "en",
-          nBuckets = 32, iters = 5, lr = 4.0, sampleMax = 300)),
-      // cluster-canonical dedup: connected components over the near-dup
-      // pair graph (min reachable id), vs a transitive-closure oracle
-      "dedup_cc_canonical" -> ((s, dir) => {
-        val docs = Text.loadDocuments(s, dir)
-        Dedup.ccCanonicalMapping(
-          docs.filter(col("doc_id") < 300),
-          Dedup.ngramJaccardPairs(docs, 0.5, maxDocId = 300))
-      }),
-      // cross-source dedup priority: within each near-dup component keep
-      // the most-trusted source's doc, not the min-id canonical. The map
-      // is chosen so that at sf0.01 it actually inverts 5 of the 7
-      // components' winners vs min-id and leaves one priority tie to the
-      // doc_id tiebreak — a non-vacuous differential.
-      "dedup_priority_keep" -> ((s, dir) => {
-        val docs = Text.loadDocuments(s, dir)
-        Dedup.priorityKeep(
-          docs.filter(col("doc_id") < 300),
-          Dedup.ngramJaccardPairs(docs, 0.5, maxDocId = 300),
-          Map("src13" -> 0, "src14" -> 1, "src10" -> 2, "src5" -> 3),
-          defaultPriority = 9)
-      }),
-      // TF-IDF: per-(doc, term) counts x inverse document frequency;
-      // membership bounded by an integer predicate (cnt >= 3)
-      "text_tfidf" -> ((s, dir) =>
-        Text.tfIdf(Text.loadDocuments(s, dir))),
-      // corpus card: exact interpolated percentiles of token counts
-      "text_corpus_stats" -> ((s, dir) =>
-        Text.corpusStats(Text.loadDocuments(s, dir))),
-      // per-lang vocabulary via HLL++ sketch, contract verified
-      // in-engine (the approx-quantile escape-hatch pattern)
-      "text_vocab_approx" -> ((s, dir) =>
-        // deterministic columns only (see text_heavy_hitters_approx)
-        Text.vocabApproxChecked(Text.loadDocuments(s, dir))
-          .select(col("lang"), col("n_vocab"))),
-      // heavy-hitter words with the Count-Min overestimate contract —
-      // the frequency sketch completing the Bloom/HLL/CMS trio
-      "text_heavy_hitters_approx" -> ((s, dir) =>
-        // deterministic columns only: the sketch verdict + margin are
-        // spec-asserted (PipelineSpec), so a probabilistic miss reads
-        // as a tolerance failure, never a hash mismatch
-        Text.heavyHittersApprox(Text.loadDocuments(s, dir))
-          .select(col("word"), col("n_exact"), col("rnk"))),
-      // PII/URL redaction pass with byte-exact digests
-      "text_redact" -> ((s, dir) => Text.redact(Text.loadDocuments(s, dir))),
-      // Gopher-style repetition quality signals
-      "text_repetition" -> ((s, dir) => Text.repetition(Text.loadDocuments(s, dir))),
-      // character-distribution entropy: gibberish/boilerplate signal
-      // astral-plane docs planted on both sides (ADVICE r04): emoji and
-      // musical symbols are outside the BMP, so this row discriminates
-      // UTF-16-code-unit counting from codepoint counting
-      "text_char_entropy" -> ((s, dir) => {
-        import s.implicits._
-        val plant = entropyPlantDocs.toDF("doc_id", "text")
-        Text.charEntropy(Text.loadDocuments(s, dir)
-          .select(col("doc_id"), col("text")).unionByName(plant))
-      }),
-      // SemDeDup-shape semantic near-dup: nearest-centroid clustering
-      // (compiled projection) + within-cluster cosine verification —
-      // literal quantizer makes the cluster restriction hash-checkable
-      "dedup_semantic_pairs" -> ((s, dir) =>
-        Similarity.semanticPairs(Similarity.loadEmbeddings(s, dir), 0.4,
-          Similarity.syntheticCentroids(16, 64))),
-      // duplicated 15-word spans across docs (Lee et al. substring
-      // dedup at n-gram granularity)
-      "dedup_span_ngrams" -> ((s, dir) =>
-        Dedup.duplicatedSpans(Text.loadDocuments(s, dir))),
-      // unigram-LM negative log-likelihood: the perplexity-filter shape
-      "text_unigram_logprob" -> ((s, dir) =>
-        Text.unigramLogProb(Text.loadDocuments(s, dir))),
-      // interpolated bigram LM NLL (CCNet/KenLM perplexity-filter
-      // shape, order 2): word-order-aware quality signal; the oracle
-      // re-derives the whole model from the same corpus
-      "text_bigram_logprob" -> ((s, dir) =>
-        Text.bigramLogProb(Text.loadDocuments(s, dir), lambda = 0.7)),
-      // per-domain URL counts: the domain-blocklist curation signal
-      // (URL-bearing docs planted identically on both sides — the
-      // synthetic fixture text has none, and 0 == 0 proves nothing)
-      "text_domain_freq" -> ((s, dir) => {
-        import s.implicits._
-        val plant = domainPlantTexts.zipWithIndex
-          .map { case (t, i) => (9000000L + i, t) }.toDF("doc_id", "text")
-        Text.domainFrequency(
-          Text.loadDocuments(s, dir).select(col("doc_id"), col("text"))
-            .unionByName(plant), k = 20)
-      }),
-      "ann_topk" -> ((s, dir) =>
-        Similarity.bruteForceTopK(Similarity.loadEmbeddings(s, dir), annQueryIds, k = 5)),
-      // serving path: external literal query vectors (not corpus rows)
-      "ann_serving_topk" -> ((s, dir) =>
-        Similarity.bruteForceTopKExternal(Similarity.loadEmbeddings(s, dir),
-          Similarity.syntheticQueries(4, 64), k = 5)),
-      // probe-limited IVF with a deterministic literal quantizer: the
-      // oracle re-derives assignment + probe lists + restricted top-k
-      // in SQL from the same centroid literals, so the approximate
-      // path itself is hash-checked (trained-quantizer recall is
-      // spec-covered: PipelineSpec "IVF top-k achieves high recall")
-      "ann_ivf_topk" -> ((s, dir) =>
-        Similarity.ivfTopKQuantized(Similarity.loadEmbeddings(s, dir), annQueryIds,
-          k = 5, Similarity.syntheticCentroids(16, 64), nProbe = 4)),
-      // ANN operability: recall@k of the probe-limited IVF path vs the
-      // brute-force ground truth — the approximation QUALITY itself as
-      // an oracle-checked query (both rankings re-derived relationally)
-      "ann_recall_ivf" -> ((s, dir) => {
-        val embs = Similarity.loadEmbeddings(s, dir)
-        Similarity.recallAtK(
-          Similarity.ivfTopKQuantized(embs, annQueryIds, k = 5,
-            Similarity.syntheticCentroids(16, 64), nProbe = 4),
-          Similarity.bruteForceTopK(embs, annQueryIds, k = 5))
-      }),
-      // the evaluator's any-index-family contract made concrete: the
-      // SAME recall join scoring the PQ-ADC and SQ8 compressed-domain
-      // rankings (what compression costs in recall, per query) —
-      // oracle = each family's own relational ranking twin wrapped in
-      // the shared recallSql hit join
-      "ann_recall_pq" -> ((s, dir) => {
-        val embs = Similarity.loadEmbeddings(s, dir)
-        Similarity.recallAtK(
-          PQ.adcTopK(embs, annQueryIds, k = 5, m = 4, ksub = 8, iters = 2),
-          Similarity.bruteForceTopK(embs, annQueryIds, k = 5))
-      }),
-      "ann_recall_sq8" -> ((s, dir) => {
-        val embs = Similarity.loadEmbeddings(s, dir)
-        Similarity.recallAtK(
-          graft.pipeline.SQ.adcTopK(embs, annQueryIds, k = 5),
-          Similarity.bruteForceTopK(embs, annQueryIds, k = 5))
-      }),
-      // the 1-bit extreme: sign binarization + Hamming ranking — what
-      // 16x compression and popcount search cost in recall, per query
-      "ann_recall_binary" -> ((s, dir) => {
-        val embs = Similarity.loadEmbeddings(s, dir)
-        Similarity.recallAtK(
-          graft.pipeline.BQ.hammingTopK(embs, annQueryIds, k = 5),
-          Similarity.bruteForceTopK(embs, annQueryIds, k = 5))
-      }),
-      // ... and the three IVF+compression hybrids: probe pruning AND
-      // quantization stacked — the full production trade measured
-      "ann_recall_ivfpq" -> ((s, dir) => {
-        val embs = Similarity.loadEmbeddings(s, dir)
-        Similarity.recallAtK(
-          PQ.ivfAdcTopK(embs, annQueryIds, k = 5, m = 4, ksub = 8, iters = 2,
-            coarse = Similarity.syntheticCentroids(16, 64), nProbe = 4),
-          Similarity.bruteForceTopK(embs, annQueryIds, k = 5))
-      }),
-      "ann_recall_ivfpq_residual" -> ((s, dir) => {
-        val embs = Similarity.loadEmbeddings(s, dir)
-        Similarity.recallAtK(
-          PQ.ivfAdcResidualTopK(embs, annQueryIds, k = 5,
-            m = 4, ksub = 8, iters = 2,
-            coarse = Similarity.syntheticCentroids(16, 64), nProbe = 4),
-          Similarity.bruteForceTopK(embs, annQueryIds, k = 5))
-      }),
-      "ann_recall_ivfsq8" -> ((s, dir) => {
-        val embs = Similarity.loadEmbeddings(s, dir)
-        Similarity.recallAtK(
-          graft.pipeline.SQ.ivfSq8TopK(embs, annQueryIds, k = 5,
-            coarse = Similarity.syntheticCentroids(16, 64), nProbe = 4),
-          Similarity.bruteForceTopK(embs, annQueryIds, k = 5))
-      }),
-      // materialized IVF index (parquet partitionBy(cid)) probed with
-      // nProbe == nCentroids: every inverted list read -> exactly brute
-      // force, so the whole index round-trip hash-checks against the
-      // brute-force oracle; partition pruning is spec-asserted at
-      // nProbe < nCentroids (PipelineSpec)
-      "ann_ivf_full_probe" -> ((s, dir) =>
-        Similarity.ivfIndexTopK(Similarity.loadEmbeddings(s, dir), annQueryIds,
-          k = 5, indexDir = graft.Scratch.dir("graft_ivf_")
-            .resolve("index").toString,
-          nCentroids = 16, nProbe = 16)._1),
-      // product quantization (Jégou et al. 2011): the memory-side ANN
-      // scale path — codebook training (per-subspace L2 Lloyd via the
-      // augmented-dot NearestCentroid trick), encoding (one compiled
-      // projection), and ADC top-k (m table lookups per vector, no
-      // embedding read at query time). Both the codes and the ranking
-      // are re-derived end-to-end by the DuckDB oracle.
-      "pq_codes" -> ((s, dir) =>
-        PQ.codes(Similarity.loadEmbeddings(s, dir), m = 4, ksub = 8, iters = 2)),
-      // the 100-TB training path as an oracle-checked query: codebooks
-      // learned on the md5-ordered bounded sample (one corpus pass
-      // total), encode over the full corpus; the oracle re-derives the
-      // draw + per-subspace Lloyd + encode chain in DuckDB
-      "pq_codes_sampled" -> ((s, dir) =>
-        PQ.codesSampled(Similarity.loadEmbeddings(s, dir),
-          m = 4, ksub = 8, iters = 2, sampleMax = 64)),
-      "ann_pq_adc" -> ((s, dir) =>
-        PQ.adcTopK(Similarity.loadEmbeddings(s, dir), annQueryIds, k = 5,
-          m = 4, ksub = 8, iters = 2)),
-      // SQ8 scalar quantization (FAISS SQ8 shape): per-dim uint8 codes
-      // against corpus min/max bounds, search on the reconstructed
-      // vectors — single-pass training, zero-shuffle encode
-      "sq8_codes" -> ((s, dir) =>
-        graft.pipeline.SQ.codes(Similarity.loadEmbeddings(s, dir))),
-      "ann_sq8_topk" -> ((s, dir) =>
-        graft.pipeline.SQ.adcTopK(Similarity.loadEmbeddings(s, dir),
-          annQueryIds, k = 5)),
-      // binary sign codes + packed-word popcount Hamming ranking
-      "ann_binary_topk" -> ((s, dir) =>
-        graft.pipeline.BQ.hammingTopK(Similarity.loadEmbeddings(s, dir),
-          annQueryIds, k = 5)),
-      // two-stage serving: Hamming shortlist over the packed codes,
-      // exact-cosine re-rank of ONLY the shortlist — the production
-      // binary-index shape, recall measured next to the 1-stage path
-      "ann_binary_rerank_topk" -> ((s, dir) =>
-        graft.pipeline.BQ.rerankTopK(Similarity.loadEmbeddings(s, dir),
-          annQueryIds, k = 5, shortlist = 20)),
-      "ann_recall_binary_rerank" -> ((s, dir) => {
-        val embs = Similarity.loadEmbeddings(s, dir)
-        Similarity.recallAtK(
-          graft.pipeline.BQ.rerankTopK(embs, annQueryIds, k = 5, shortlist = 20),
-          Similarity.bruteForceTopK(embs, annQueryIds, k = 5))
-      }),
-      // per-label centroid cosine vs the global centroid — the
-      // embedding-space mix-health diagnostic (stray cluster /
-      // mislabeled shard / wrong-encoder detector)
-      "emb_label_drift" -> ((s, dir) =>
-        Similarity.labelCentroidDrift(Similarity.loadEmbeddings(s, dir))),
-      // IVF + ADC composition (IVFADC minus residuals): coarse-list
-      // pruning over the deterministic literal quantizer, ADC scoring
-      // only the probed lists' codes — the pruning AND the compressed
-      // scoring are both re-derived by the oracle
-      "ann_ivfpq_topk" -> ((s, dir) =>
-        PQ.ivfAdcTopK(Similarity.loadEmbeddings(s, dir), annQueryIds, k = 5,
-          m = 4, ksub = 8, iters = 2,
-          coarse = Similarity.syntheticCentroids(16, 64), nProbe = 4)),
-      // full IVFADC: codebooks quantize RESIDUALS v - coarse(v); a
-      // query's ADC tables become per-probed-list
-      "ann_ivfpq_residual_topk" -> ((s, dir) =>
-        PQ.ivfAdcResidualTopK(Similarity.loadEmbeddings(s, dir), annQueryIds,
-          k = 5, m = 4, ksub = 8, iters = 2,
-          coarse = Similarity.syntheticCentroids(16, 64), nProbe = 4)),
-      // IVF-SQ8 (FAISS "IVF,SQ8"): coarse pruning + per-dimension
-      // SQ8 decode within the probed lists — one checkpointed
-      // (codes, cid) table, ONE scan for all queries
-      "ann_ivf_sq8_topk" -> ((s, dir) =>
-        graft.pipeline.SQ.ivfSq8TopK(Similarity.loadEmbeddings(s, dir),
-          annQueryIds, k = 5,
-          coarse = Similarity.syntheticCentroids(16, 64), nProbe = 4)),
-      // SQL-surface route (GraftFunctions / SparkSessionExtensions):
-      // the SAME compiled kernels invoked from spark.sql text — the
-      // registered-function registry checked end-to-end against the
-      // DuckDB oracle. Distinct query ids from ann_topk. The float
-      // embedding column rides through vec_cosine's implicit
-      // array<float> -> array<double> coercion (no manual CAST).
-      "ann_sql_topk" -> ((s, dir) => {
-        graft.functions.GraftFunctions.register(s)
-        Similarity.loadEmbeddings(s, dir).createOrReplaceTempView("graft_sql_embeddings")
-        s.sql(
-          s"""WITH q AS (
-             |  SELECT vec_id AS query_id, embedding AS qv
-             |  FROM graft_sql_embeddings WHERE vec_id IN (${sqlAnnQueryIds.mkString(",")})
-             |), scored AS (
-             |  SELECT q.query_id, e.vec_id AS neighbor_id,
-             |         vec_cosine(e.embedding, q.qv) AS cos
-             |  FROM graft_sql_embeddings e JOIN q ON e.vec_id <> q.query_id
-             |), ranked AS (
-             |  SELECT query_id, neighbor_id, cos,
-             |         row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id ASC) AS rank
-             |  FROM scored
-             |) SELECT query_id, neighbor_id, cos, rank FROM ranked WHERE rank <= 5""".stripMargin)
-      }),
-      // whole-operator SQL: TS.RANGE itself as a registered
-      // table-valued function (injectTableFunction) — the builder
-      // splices the engine's own DataFrame plan into the calling SQL
-      // statement at analysis time, so SQL users get the identical
-      // code path (and Catalyst optimizes it like any subquery)
-      "ts_sql_tvf_range" -> ((s, dir) => {
-        graft.functions.GraftFunctions.register(s)
-        TSModel.samples(s, dir)
-          .createOrReplaceTempView(graft.functions.GraftFunctions.SamplesView)
-        s.sql(s"SELECT * FROM ts_range('$oneSeries', $T0, $T31, 'max', ${2 * DAY}, $HOUR)")
-      }),
-      // TS.MRANGE as a TVF: reference FILTER predicate syntax in the
-      // first argument, label resolution + per-series aggregation by
-      // the same Multi.mrange plan the Column API uses
-      "ts_sql_tvf_mrange" -> ((s, dir) => {
-        graft.functions.GraftFunctions.register(s)
-        TSModel.samples(s, dir)
-          .createOrReplaceTempView(graft.functions.GraftFunctions.SamplesView)
-        TSModel.labels(s, dir)
-          .createOrReplaceTempView(graft.functions.GraftFunctions.LabelsView)
-        s.sql(s"SELECT * FROM ts_mrange('type=click user=(2,4,6)', $T0, $T31, 'max', ${3 * DAY})")
-      }),
-      // source adapter end-to-end: canonical samples dumped to CSV,
-      // re-normalized by Sources.fromCsv (declared ms unit + epoch
-      // guard), then run through the ordinary range pipeline — the
-      // oracle reads the ORIGINAL parquet, so the whole round trip
-      // (write, declared-schema read, unit dispatch) hash-checks
-      "ts_source_csv_range" -> ((s, dir) => {
-        val tmp = graft.Scratch.dir("graft_src_q_").toString
-        TSModel.samples(s, dir)
-          .select(col("series").as("k"), col("ts").as("t"), col("value").as("v"))
-          .write.option("header", "true").mode("overwrite").csv(tmp)
-        val src = Sources.requireEpochWindow(
-          Sources.fromCsv(s, tmp, "k", "t", "v", Sources.Millis),
-          1600000000000L, 1800000000000L)
-        RangeQuery.range(src.filter(col("series") === oneSeries),
-          RangeArgs(from = Some(T0), to = Some(T31),
-            aggs = Seq("avg", "count"), bucketMs = 3 * DAY))
-      }),
-      // TS.MGET through the TVF surface (left-join null-row contract
-      // identical to ts_mget's Column route)
-      "ts_sql_tvf_mget" -> ((s, dir) => {
-        graft.functions.GraftFunctions.register(s)
-        TSModel.samples(s, dir)
-          .createOrReplaceTempView(graft.functions.GraftFunctions.SamplesView)
-        TSModel.labels(s, dir)
-          .createOrReplaceTempView(graft.functions.GraftFunctions.LabelsView)
-        s.sql("SELECT * FROM ts_mget('user=(1,3,5)')")
-      }),
-      // TS.NRANGE through the TVF surface (explicit key list, pivot)
-      "ts_sql_tvf_nrange" -> ((s, dir) => {
-        graft.functions.GraftFunctions.register(s)
-        TSModel.samples(s, dir)
-          .createOrReplaceTempView(graft.functions.GraftFunctions.SamplesView)
-        s.sql(s"SELECT * FROM ts_nrange('click_2 click_4 view_1', $T0, $T31, 'sum', ${2 * DAY})")
-      }),
-      // 7-arg TVF form: TS.MRANGE ... GROUPBY label REDUCE reducer
-      "ts_sql_tvf_mrange_groupby" -> ((s, dir) => {
-        graft.functions.GraftFunctions.register(s)
-        TSModel.samples(s, dir)
-          .createOrReplaceTempView(graft.functions.GraftFunctions.SamplesView)
-        TSModel.labels(s, dir)
-          .createOrReplaceTempView(graft.functions.GraftFunctions.LabelsView)
-        s.sql(s"SELECT * FROM ts_mrange('type=(click,view)', $T0, $T31, 'avg', ${7 * DAY}, 'type', 'max')")
-      }),
-      // the engine's bucket arithmetic (ts_bucket = the reference's
-      // CalcBucketStart) registered as a SQL function and driven from
-      // pure SQL text over the samples view — a user can express a
-      // bucketed range aggregation without touching the Column API
-      "ts_sql_range_agg" -> ((s, dir) => {
-        graft.functions.GraftFunctions.register(s)
-        TSModel.samples(s, dir).createOrReplaceTempView("graft_sql_samples")
-        s.sql(
-          s"""SELECT series, ts_bucket(ts, ${6 * HOUR}L, ${HOUR}L) AS bucket,
-             |       avg(value) AS avg_value, max(value) AS max_value,
-             |       count(value) AS cnt
-             |FROM graft_sql_samples
-             |WHERE NOT isnan(value) AND ts BETWEEN $T0 AND ${T0 + 7 * DAY}
-             |  AND series LIKE 'click%'
-             |GROUP BY series, bucket
-             |ORDER BY series, bucket""".stripMargin)
-      }),
-      "mm_features" -> ((s, dir) =>
-        Multimodal.extractFeatures(Multimodal.pack(Text.loadDocuments(s, dir)))
-          .select(col("media_id"), col("n_bytes"), col("mean_byte"))),
-      // multimodal resize: NN-resample every media item to a fixed-size
-      // thumbnail (decode kernel stubbed; plumbing real)
-      "mm_resize" -> ((s, dir) =>
-        Multimodal.resize(Multimodal.pack(Text.loadDocuments(s, dir)))),
-      // multimodal frame sampling: fixed-size frames, every 4th kept
-      "mm_frame_sample" -> ((s, dir) =>
-        Multimodal.frameSample(Multimodal.pack(Text.loadDocuments(s, dir)))),
-      // REAL image decode: synthesize lossless PNGs (pixels = doc md5
-      // digest), decode with the JDK's own codec (javax.imageio), and
-      // measure pixel stats the oracle re-derives from the digest
-      "mm_decode_real" -> ((s, dir) =>
-        Multimodal.decodeImages(Multimodal.packImages(Text.loadDocuments(s, dir)))),
-      // REAL resize: decode -> 2x NN upscale -> re-encode -> decode
-      "mm_resize_real" -> ((s, dir) =>
-        Multimodal.resizeImages(Multimodal.packImages(Text.loadDocuments(s, dir)), 2)),
-      // image near-dup via perceptual dHash over the REAL decode:
-      // banded fingerprint join (never all-pairs); the oracle computes
-      // the QUADRATIC ground truth — two algorithms must agree
-      "mm_image_phash_pairs" -> ((s, dir) =>
-        Multimodal.imagePhashPairs(
-          Multimodal.packImages(Text.loadDocuments(s, dir)), maxDist = 3)),
-      // REAL audio decode: synthesize lossless WAVs (PCM samples = doc
-      // md5 digest), parse with the JDK's own codec
-      // (javax.sound.sampled) and measure amplitude stats
-      "mm_audio_decode_real" -> ((s, dir) =>
-        Multimodal.decodeAudio(Multimodal.packAudio(Text.loadDocuments(s, dir)))),
-      // REAL audio resample: decode -> decimate 2x -> re-encode at the
-      // halved rate -> decode again
-      "mm_audio_resample_real" -> ((s, dir) =>
-        Multimodal.resampleAudio(Multimodal.packAudio(Text.loadDocuments(s, dir)), 2)),
-      // REAL video keyframe sampling: length-prefixed PNG frame stream,
-      // every 2nd frame goes through a genuine ImageIO decode (dropped
-      // frames are byte-skipped, never decoded)
-      "mm_video_frames_real" -> ((s, dir) =>
-        Multimodal.sampleVideoFrames(Multimodal.packVideo(Text.loadDocuments(s, dir), 4), 2)),
-
-      // streaming exact dedup: first-arrival-wins per content
-      // fingerprint via flatMapGroupsWithState, 8 ordered micro-batches
-      // — must equal the batch canonical (min doc_id per fp)
-      "dedup_stream_exact" -> ((s, dir) =>
-        // 2 chunks: the replay is chunking-independent (spec-pinned at
-        // higher counts), so extra triggers buy no coverage — only the
-        // AvailableNow per-batch floor; 2 still exercises cross-batch
-        // state (batch 2 consults batch 1's)
-        graft.pipeline.StreamDedup.documentsDedupOnce(s, dir, nChunks = 2)),
-      // online NEAR-dup admission gate: MinHash band-bucket collision
-      // against all previously-seen docs (rejected docs still poison
-      // their buckets); md5-based signature so the oracle replays the
-      // exact buckets — the gate decisions themselves are hash-checked
-      "dedup_stream_minhash_gate" -> ((s, dir) =>
-        // 2 chunks (see dedup_stream_exact): same verdicts, minimal
-        // AvailableNow trigger floor
-        graft.pipeline.StreamDedup.documentsMinhashGateOnce(s, dir, nChunks = 2)),
-
-      // incremental corpus admission: a NEW batch (doc_id >= 400)
-      // admitted against MATERIALIZED prior state (exact fingerprints
-      // + minhash band buckets from parquet — nothing recomputed over
-      // the old corpus); must equal the oracle's one-shot ordered
-      // replay over old ∪ new
-      "dedup_incremental_admit" -> ((s, dir) => {
-        val docs = graft.pipeline.Text.loadDocuments(s, dir)
-        val stateDir = graft.Scratch.dir("graft_admit_").toString
-        graft.pipeline.IncrementalAdmit.writeState(
-          s, docs.filter(col("doc_id") < 400L), stateDir)
-        graft.pipeline.IncrementalAdmit.admit(
-          s, docs.filter(col("doc_id") >= 400L), stateDir)
-      }),
-
-      // the 3-batch admission CHAIN end-to-end (admit → state fold →
-      // admit → …) on the VERSIONED manifest layout — the production
-      // crawl loop as one oracle-checked query: the union of per-batch
-      // verdicts must equal the oracle's one-shot ordered replay at the
-      // first split, for this and any other batching (the spec's
-      // batching-independence contract, here held against DuckDB)
-      "dedup_incremental_chain" -> ((s, dir) => {
-        val docs = graft.pipeline.Text.loadDocuments(s, dir)
-        val stateDir = graft.Scratch.dir("graft_admit_chain_q_").toString
-        graft.pipeline.IncrementalAdmit.writeStateVersioned(
-          s, docs.filter(col("doc_id") < 300L), stateDir)
-        val batches = Seq((300L, 370L), (370L, 440L), (440L, Long.MaxValue))
-        batches.zipWithIndex.map { case ((lo, hi), i) =>
-          val b = docs.filter(col("doc_id") >= lo && col("doc_id") < hi)
-          // one step = verdicts (pinned before the fold mutates the
-          // manifest) + state fold, sharing ONE evaluation of the
-          // batch's fingerprint/band-bucket frames (r18 — the separate
-          // admit + updateState calls re-ran both md5 chains per batch;
-          // the last fold has no next reader, so it is skipped)
-          graft.pipeline.IncrementalAdmit.admitAndFold(
-            s, b, stateDir, fold = i < batches.size - 1)
-        }.reduce(_ unionByName _)
-      }),
-
-      // CCNet/RefinedWeb-style boilerplate removal at fixed word-window
-      // granularity: the repeated-segment vocabulary, and the corpus
-      // with those segments stripped (order-preserving reassembly)
-      "dedup_boilerplate_segments" -> ((s, dir) =>
-        Dedup.boilerplateSegments(Text.loadDocuments(s, dir))),
-      "dedup_boilerplate_clean" -> ((s, dir) =>
-        Dedup.removeBoilerplate(Text.loadDocuments(s, dir))),
-
-      // fully-distributed spherical k-means (2 Lloyd refinements,
-      // deterministic init/ties) — the corpus-scale clustering step of
-      // SemDeDup-style curation; assignment + occupancy surfaces
-      "cluster_kmeans_assign" -> ((s, dir) =>
-        Clustering.kmeansAssign(Similarity.loadEmbeddings(s, dir))),
-      "cluster_kmeans_sizes" -> ((s, dir) =>
-        Clustering.kmeansSizes(Similarity.loadEmbeddings(s, dir))),
-      // sample-trained Lloyd, full-corpus assignment — the production
-      // composition at 100 TB, hash-checked against the DuckDB replay
-      // of the same md5-ordered draw
-      "cluster_kmeans_assign_sampled" -> ((s, dir) =>
-        Clustering.kmeansAssignSampled(Similarity.loadEmbeddings(s, dir),
-          k = 10, iters = 2, sampleMax = 64)),
-      // SemDeDup over the DISTRIBUTED k-means quantizer (composition:
-      // Lloyd training -> NearestCentroid restriction -> cosine verify)
-      "dedup_semantic_kmeans" -> ((s, dir) => {
-        val embs = Similarity.loadEmbeddings(s, dir)
-        Similarity.semanticPairs(embs, 0.4, Clustering.kmeansCentroids(embs))
-      }),
-
-      // sliding (hopping) windows — beyond-reference extension (§2.8:
-      // the reference aggregates tumbling-only): 1d rolling avg/count
-      // emitted every 6h over the whole fixture month
-      "ts_range_sliding" -> ((s, dir) =>
-        Sliding.slidingRange(monthSamples(s, dir), "avg",
-          windowMs = DAY, hopMs = 6 * HOUR, fromMs = Some(T0), toMs = Some(T31))),
-      "ts_range_sliding_count" -> ((s, dir) =>
-        Sliding.slidingRange(monthSamples(s, dir), "count",
-          windowMs = DAY, hopMs = 6 * HOUR, fromMs = Some(T0), toMs = Some(T31))),
-
-      // the window extensions through the SQL TVF route — identical
-      // plans to the Column API, registered via SparkSessionExtensions
-      "ts_sql_tvf_sliding" -> ((s, dir) => {
-        graft.functions.GraftFunctions.register(s)
-        TSModel.samples(s, dir)
-          .createOrReplaceTempView(graft.functions.GraftFunctions.SamplesView)
-        s.sql(s"SELECT * FROM ts_sliding($T0, $T31, 'avg', $DAY, ${6 * HOUR})")
-      }),
-      "ts_sql_tvf_session" -> ((s, dir) => {
-        graft.functions.GraftFunctions.register(s)
-        TSModel.samples(s, dir)
-          .createOrReplaceTempView(graft.functions.GraftFunctions.SamplesView)
-        s.sql(s"SELECT * FROM ts_session($T0, $T31, 'avg', ${12 * HOUR})")
-      }),
-      "ts_sql_tvf_rate" -> ((s, dir) => {
-        graft.functions.GraftFunctions.register(s)
-        TSModel.samples(s, dir)
-          .createOrReplaceTempView(graft.functions.GraftFunctions.SamplesView)
-        s.sql(s"SELECT * FROM ts_rate($T0, $T31, $DAY)")
-      }),
-      "ts_sql_tvf_resets" -> ((s, dir) => {
-        graft.functions.GraftFunctions.register(s)
-        TSModel.samples(s, dir)
-          .createOrReplaceTempView(graft.functions.GraftFunctions.SamplesView)
-        s.sql(s"SELECT * FROM ts_resets($T0, $T31, ${2 * DAY})")
-      }),
-      "ts_sql_tvf_increase" -> ((s, dir) => {
-        graft.functions.GraftFunctions.register(s)
-        TSModel.samples(s, dir)
-          .createOrReplaceTempView(graft.functions.GraftFunctions.SamplesView)
-        s.sql(s"SELECT * FROM ts_increase($T0, $T31, ${2 * DAY})")
-      }),
-      "ts_sql_tvf_irate" -> ((s, dir) => {
-        graft.functions.GraftFunctions.register(s)
-        TSModel.samples(s, dir)
-          .createOrReplaceTempView(graft.functions.GraftFunctions.SamplesView)
-        s.sql(s"SELECT * FROM ts_irate($T0, $T31, ${2 * DAY})")
-      }),
-      "ts_sql_tvf_gaps" -> ((s, dir) => {
-        graft.functions.GraftFunctions.register(s)
-        TSModel.samples(s, dir)
-          .createOrReplaceTempView(graft.functions.GraftFunctions.SamplesView)
-        s.sql(s"SELECT * FROM ts_gaps($T0, $T31, ${3 * DAY})")
-      }),
-      "ts_sql_tvf_decompose" -> ((s, dir) => {
-        graft.functions.GraftFunctions.register(s)
-        TSModel.samples(s, dir)
-          .createOrReplaceTempView(graft.functions.GraftFunctions.SamplesView)
-        s.sql(s"SELECT * FROM ts_decompose($T0, $T31, $DAY, 5)")
-      }),
-      "ts_sql_tvf_forecast" -> ((s, dir) => {
-        graft.functions.GraftFunctions.register(s)
-        TSModel.samples(s, dir)
-          .createOrReplaceTempView(graft.functions.GraftFunctions.SamplesView)
-        s.sql(s"SELECT * FROM ts_forecast($T0, $T31, 0.5, 0.2, 5, ${12 * HOUR})")
-      }),
-      "ts_sql_tvf_dtw" -> ((s, dir) => {
-        graft.functions.GraftFunctions.register(s)
-        TSModel.samples(s, dir)
-          .createOrReplaceTempView(graft.functions.GraftFunctions.SamplesView)
-        s.sql(s"SELECT * FROM ts_dtw('${dtwSeries.mkString(" ")}', $T0, $T31, ${2 * DAY})")
-      }),
-      "ts_sql_tvf_dtw_nearest" -> ((s, dir) => {
-        graft.functions.GraftFunctions.register(s)
-        TSModel.samples(s, dir)
-          .createOrReplaceTempView(graft.functions.GraftFunctions.SamplesView)
-        s.sql(s"SELECT * FROM ts_dtw_nearest('view_3', $T0, $T31, ${2 * DAY}, 6)")
-      }),
-      "ts_sql_tvf_ccf" -> ((s, dir) => {
-        graft.functions.GraftFunctions.register(s)
-        TSModel.samples(s, dir)
-          .createOrReplaceTempView(graft.functions.GraftFunctions.SamplesView)
-        s.sql(s"SELECT * FROM ts_ccf('click_3', 'view_3', $T0, $T31, ${2 * DAY}, 5)")
-      }),
-      "ts_sql_tvf_quantiles" -> ((s, dir) => {
-        graft.functions.GraftFunctions.register(s)
-        TSModel.samples(s, dir)
-          .createOrReplaceTempView(graft.functions.GraftFunctions.SamplesView)
-        s.sql(s"SELECT * FROM ts_quantiles($T0, $T31, $DAY, '0.5,0.9,0.99')")
-      }),
-      // round-10 analytics TVFs (distinct parameters from their
-      // Column-API twins, so the two routes cannot mask each other)
-      "ts_sql_tvf_mad" -> ((s, dir) => {
-        graft.functions.GraftFunctions.register(s)
-        TSModel.samples(s, dir)
-          .createOrReplaceTempView(graft.functions.GraftFunctions.SamplesView)
-        s.sql(s"SELECT * FROM ts_mad($T0, $T31, 1.8)")
-      }),
-      "ts_sql_tvf_trend" -> ((s, dir) => {
-        graft.functions.GraftFunctions.register(s)
-        TSModel.samples(s, dir)
-          .createOrReplaceTempView(graft.functions.GraftFunctions.SamplesView)
-        s.sql(s"SELECT * FROM ts_trend($T0, $T31, ${T31 + 14 * DAY})")
-      }),
-      "ts_sql_tvf_lttb" -> ((s, dir) => {
-        graft.functions.GraftFunctions.register(s)
-        TSModel.samples(s, dir)
-          .createOrReplaceTempView(graft.functions.GraftFunctions.SamplesView)
-        s.sql(s"SELECT * FROM ts_lttb($T0, $T31, ${2 * DAY})")
-      }),
-      "ts_sql_tvf_cusum" -> ((s, dir) => {
-        graft.functions.GraftFunctions.register(s)
-        TSModel.samples(s, dir)
-          .createOrReplaceTempView(graft.functions.GraftFunctions.SamplesView)
-        s.sql(s"SELECT * FROM ts_cusum($T0, $T31, 0.8)")
-      }),
-      "ts_sql_tvf_changepoint" -> ((s, dir) => {
-        graft.functions.GraftFunctions.register(s)
-        TSModel.samples(s, dir)
-          .createOrReplaceTempView(graft.functions.GraftFunctions.SamplesView)
-        s.sql(s"SELECT * FROM ts_changepoint($T0, $T31, ${2 * DAY}, 3, 3)")
-      }),
-      "ts_sql_tvf_theilsen" -> ((s, dir) => {
-        graft.functions.GraftFunctions.register(s)
-        TSModel.samples(s, dir)
-          .createOrReplaceTempView(graft.functions.GraftFunctions.SamplesView)
-        s.sql(s"SELECT * FROM ts_theilsen($T0, $T31, ${2 * DAY})")
-      }),
-      "ts_sql_tvf_hampel" -> ((s, dir) => {
-        graft.functions.GraftFunctions.register(s)
-        TSModel.samples(s, dir)
-          .createOrReplaceTempView(graft.functions.GraftFunctions.SamplesView)
-        s.sql(s"SELECT * FROM ts_hampel($T0, $T31, 5, 3.0)")
-      }),
-      "ts_sql_tvf_burn_rate" -> ((s, dir) => {
-        graft.functions.GraftFunctions.register(s)
-        TSModel.samples(s, dir)
-          .createOrReplaceTempView(graft.functions.GraftFunctions.SamplesView)
-        s.sql(s"SELECT * FROM ts_burn_rate($T0, $T31, $DAY, ${7 * DAY}, $DAY, 3.0e-4, 2.0)")
-      }),
-      "ts_sql_tvf_asof" -> ((s, dir) => {
-        graft.functions.GraftFunctions.register(s)
-        TSModel.samples(s, dir)
-          .createOrReplaceTempView(graft.functions.GraftFunctions.SamplesView)
-        s.sql(s"SELECT * FROM ts_asof('view_3', 'click_5', $T0, $T31, ${3 * DAY})")
-      }),
-      "ts_sql_tvf_seasonal" -> ((s, dir) => {
-        graft.functions.GraftFunctions.register(s)
-        TSModel.samples(s, dir)
-          .createOrReplaceTempView(graft.functions.GraftFunctions.SamplesView)
-        s.sql(s"SELECT * FROM ts_seasonal($T0, $T31, 'dow', 1.7)")
-      }),
-      "ts_sql_tvf_winsorize" -> ((s, dir) => {
-        graft.functions.GraftFunctions.register(s)
-        TSModel.samples(s, dir)
-          .createOrReplaceTempView(graft.functions.GraftFunctions.SamplesView)
-        s.sql(s"SELECT * FROM ts_winsorize($T0, $T31, 0.1, 0.9)")
-      }),
-      "ts_sql_tvf_zscore" -> ((s, dir) => {
-        graft.functions.GraftFunctions.register(s)
-        TSModel.samples(s, dir)
-          .createOrReplaceTempView(graft.functions.GraftFunctions.SamplesView)
-        s.sql(s"SELECT * FROM ts_zscore($T0, $T31, 2.3)")
-      }),
-      "ts_sql_tvf_holt" -> ((s, dir) => {
-        graft.functions.GraftFunctions.register(s)
-        TSModel.samples(s, dir)
-          .createOrReplaceTempView(graft.functions.GraftFunctions.SamplesView)
-        s.sql(s"SELECT * FROM ts_holt($T0, $T31, 0.5, 0.2)")
-      }),
-      "ts_sql_tvf_holt_winters" -> ((s, dir) => {
-        graft.functions.GraftFunctions.register(s)
-        TSModel.samples(s, dir)
-          .createOrReplaceTempView(graft.functions.GraftFunctions.SamplesView)
-        s.sql(s"SELECT * FROM ts_holt_winters($T0, $T31, 0.5, 0.3, 0.4, 24)")
-      }),
-      "ts_sql_tvf_topk" -> ((s, dir) => {
-        graft.functions.GraftFunctions.register(s)
-        TSModel.samples(s, dir)
-          .createOrReplaceTempView(graft.functions.GraftFunctions.SamplesView)
-        s.sql(s"SELECT * FROM ts_topk($T0, $T31, 4, 'max', ${2 * DAY})")
-      }),
-      "ts_sql_tvf_sax" -> ((s, dir) => {
-        graft.functions.GraftFunctions.register(s)
-        TSModel.samples(s, dir)
-          .createOrReplaceTempView(graft.functions.GraftFunctions.SamplesView)
-        s.sql(s"SELECT * FROM ts_sax($T0, $T31, ${3 * DAY})")
-      }),
-      // GROUPBY with per-series TWA through the SQL surface: the
-      // existing ts_mrange TVF 7-arg form takes any RangeArgs agg, so
-      // the round-12 capability needs no new function — this query
-      // pins the route end-to-end against the shared oracle
-      "ts_sql_tvf_mrange_groupby_twa" -> ((s, dir) => {
-        graft.functions.GraftFunctions.register(s)
-        TSModel.samples(s, dir)
-          .createOrReplaceTempView(graft.functions.GraftFunctions.SamplesView)
-        TSModel.labels(s, dir)
-          .createOrReplaceTempView(graft.functions.GraftFunctions.LabelsView)
-        s.sql(
-          s"""SELECT series, ts, round(twa_value, 9) AS twa_value
-             |FROM ts_mrange('type=(click,view,purchase)', $T0, $T31,
-             |               'twa', $DAY, 'type', 'avg')""".stripMargin)
-      }),
-      "ts_sql_tvf_backtest" -> ((s, dir) => {
-        graft.functions.GraftFunctions.register(s)
-        TSModel.samples(s, dir)
-          .createOrReplaceTempView(graft.functions.GraftFunctions.SamplesView)
-        s.sql(s"SELECT * FROM ts_backtest($T0, $T31, ${T0 + 14 * DAY}, 0.4, 0.3, 5, ${2 * DAY})")
-      }),
-      "ts_sql_tvf_backtest_rolling" -> ((s, dir) => {
-        graft.functions.GraftFunctions.register(s)
-        TSModel.samples(s, dir)
-          .createOrReplaceTempView(graft.functions.GraftFunctions.SamplesView)
-        s.sql(s"SELECT * FROM ts_backtest_rolling($T0, $T31, " +
-          s"'${T0 + 12 * DAY},${T0 + 20 * DAY}', 0.4, 0.3, 4, ${2 * DAY})")
-      }),
-
-      // ---- round-13: the corpus-pipeline half of the engine through
-      // the SQL surface (the ts_* family's TVF discipline — distinct
-      // parameters from the Column-API twins so routes cannot mask
-      // each other; ExtensionsSpec pins TVF == API and the plan shape)
-      "pipeline_sql_tvf_source_cap" -> ((s, dir) => {
-        graft.functions.GraftFunctions.register(s)
-        Text.loadDocuments(s, dir)
-          .createOrReplaceTempView(graft.functions.GraftFunctions.DocumentsView)
-        s.sql("SELECT * FROM corpus_source_cap(7)")
-      }),
-      "pipeline_sql_tvf_decontaminate" -> ((s, dir) => {
-        graft.functions.GraftFunctions.register(s)
-        Text.loadDocuments(s, dir)
-          .createOrReplaceTempView(graft.functions.GraftFunctions.DocumentsView)
-        s.sql("SELECT * FROM corpus_decontaminate('doc_id < 5', 3)")
-      }),
-      // ---- round-14: the non-iterative TVF stragglers (distinct
-      // params from the Column-API twins, same discipline as above)
-      "pipeline_sql_tvf_mix_temperature" -> ((s, dir) => {
-        graft.functions.GraftFunctions.register(s)
-        Text.loadDocuments(s, dir)
-          .createOrReplaceTempView(graft.functions.GraftFunctions.DocumentsView)
-        s.sql("SELECT * FROM corpus_mix_temperature(200)")
-      }),
-      "pipeline_sql_tvf_boilerplate" -> ((s, dir) => {
-        graft.functions.GraftFunctions.register(s)
-        Text.loadDocuments(s, dir)
-          .createOrReplaceTempView(graft.functions.GraftFunctions.DocumentsView)
-        s.sql("SELECT * FROM corpus_boilerplate(4, 4)")
-      }),
-      "pipeline_sql_tvf_boilerplate_clean" -> ((s, dir) => {
-        graft.functions.GraftFunctions.register(s)
-        Text.loadDocuments(s, dir)
-          .createOrReplaceTempView(graft.functions.GraftFunctions.DocumentsView)
-        s.sql("SELECT * FROM corpus_boilerplate_clean(4, 4)")
-      }),
-      "pipeline_sql_tvf_keep" -> ((s, dir) => {
-        graft.functions.GraftFunctions.register(s)
-        Text.loadDocuments(s, dir)
-          .createOrReplaceTempView(graft.functions.GraftFunctions.DocumentsView)
-        s.sql("SELECT * FROM corpus_keep(0.6, 250)")
-      }),
-      "pipeline_sql_tvf_classifier_score" -> ((s, dir) => {
-        graft.functions.GraftFunctions.register(s)
-        Text.loadDocuments(s, dir)
-          .createOrReplaceTempView(graft.functions.GraftFunctions.DocumentsView)
-        s.sql(s"SELECT * FROM corpus_classifier_score('$tvfScoreWeights', 32)")
-      }),
-      "ts_sql_tvf_corr_matrix" -> ((s, dir) => {
-        graft.functions.GraftFunctions.register(s)
-        TSModel.samples(s, dir)
-          .createOrReplaceTempView(graft.functions.GraftFunctions.SamplesView)
-        s.sql(s"SELECT * FROM ts_corr_matrix('click_12 view_142 click_17 click_90', " +
-          s"$T0, $T31, ${2 * DAY})")
-      }),
-      "ts_sql_tvf_decompose_anomaly" -> ((s, dir) => {
-        graft.functions.GraftFunctions.register(s)
-        TSModel.samples(s, dir)
-          .createOrReplaceTempView(graft.functions.GraftFunctions.SamplesView)
-        s.sql(s"SELECT * FROM ts_decompose_anomaly($T0, $T31, $DAY, 5, 1.2)")
-      }),
-      "ts_sql_tvf_corr_matrix_filter" -> ((s, dir) => {
-        graft.functions.GraftFunctions.register(s)
-        TSModel.samples(s, dir)
-          .createOrReplaceTempView(graft.functions.GraftFunctions.SamplesView)
-        TSModel.labels(s, dir)
-          .createOrReplaceTempView(graft.functions.GraftFunctions.LabelsView)
-        s.sql(s"SELECT * FROM ts_corr_matrix_filter('user=(12,50,142)', $T0, $T31, ${2 * DAY})")
-      }),
-      "pipeline_sql_tvf_contamination" -> ((s, dir) => {
-        graft.functions.GraftFunctions.register(s)
-        Text.loadDocuments(s, dir)
-          .createOrReplaceTempView(graft.functions.GraftFunctions.DocumentsView)
-        s.sql("SELECT * FROM corpus_contamination('doc_id < 4', 4)")
-      }),
-      "pipeline_sql_tvf_contamination_frac" -> ((s, dir) => {
-        graft.functions.GraftFunctions.register(s)
-        Text.loadDocuments(s, dir)
-          .createOrReplaceTempView(graft.functions.GraftFunctions.DocumentsView)
-        s.sql("SELECT * FROM corpus_contamination_frac('doc_id < 4', 4)")
-      }),
-      "pipeline_sql_tvf_contamination_fuzzy" -> ((s, dir) => {
-        graft.functions.GraftFunctions.register(s)
-        Text.loadDocuments(s, dir)
-          .createOrReplaceTempView(graft.functions.GraftFunctions.DocumentsView)
-        s.sql("SELECT * FROM corpus_contamination_fuzzy('doc_id < 40', 'doc_id >= 40')")
-      }),
-      "pipeline_sql_tvf_ann_recall" -> ((s, dir) => {
-        graft.functions.GraftFunctions.register(s)
-        Similarity.loadEmbeddings(s, dir)
-          .createOrReplaceTempView(graft.functions.GraftFunctions.EmbeddingsView)
-        s.sql(s"SELECT * FROM ann_recall('${annQueryIds.mkString(" ")}', 5, 16, 3)")
-      }),
-      // the no-arg projection gates compose with outer SQL predicates —
-      // the filter lands ON TOP of the spliced plan, proving the TVF
-      // result is a first-class relation (and keeping the rows distinct
-      // from the API twins')
-      "pipeline_sql_tvf_langid" -> ((s, dir) => {
-        graft.functions.GraftFunctions.register(s)
-        Text.loadDocuments(s, dir)
-          .createOrReplaceTempView(graft.functions.GraftFunctions.DocumentsView)
-        s.sql("SELECT * FROM corpus_langid() WHERE doc_id < 450")
-      }),
-      "pipeline_sql_tvf_source_divergence" -> ((s, dir) => {
-        graft.functions.GraftFunctions.register(s)
-        Text.loadDocuments(s, dir)
-          .createOrReplaceTempView(graft.functions.GraftFunctions.DocumentsView)
-        s.sql("SELECT * FROM corpus_source_moments(200)")
-      }),
-      "pipeline_sql_tvf_quality" -> ((s, dir) => {
-        graft.functions.GraftFunctions.register(s)
-        Text.loadDocuments(s, dir)
-          .createOrReplaceTempView(graft.functions.GraftFunctions.DocumentsView)
-        s.sql("SELECT * FROM corpus_text_quality() WHERE doc_id >= 50")
-      }),
-      "pipeline_sql_tvf_tokens" -> ((s, dir) => {
-        graft.functions.GraftFunctions.register(s)
-        Text.loadDocuments(s, dir)
-          .createOrReplaceTempView(graft.functions.GraftFunctions.DocumentsView)
-        s.sql("SELECT * FROM corpus_tokens() WHERE doc_id % 2 = 0")
-      }),
-      "pipeline_sql_tvf_stratified" -> ((s, dir) => {
-        graft.functions.GraftFunctions.register(s)
-        Text.loadDocuments(s, dir)
-          .createOrReplaceTempView(graft.functions.GraftFunctions.DocumentsView)
-        s.sql("SELECT * FROM corpus_stratified_sample('en=0.5', 0.3)")
-      }),
-      "pipeline_sql_tvf_pack" -> ((s, dir) => {
-        graft.functions.GraftFunctions.register(s)
-        Text.loadDocuments(s, dir)
-          .createOrReplaceTempView(graft.functions.GraftFunctions.DocumentsView)
-        s.sql("SELECT * FROM corpus_pack_sequences(1024, 4)")
-      }),
-      "pipeline_sql_tvf_chunk" -> ((s, dir) => {
-        graft.functions.GraftFunctions.register(s)
-        Text.loadDocuments(s, dir)
-          .createOrReplaceTempView(graft.functions.GraftFunctions.DocumentsView)
-        s.sql("SELECT * FROM corpus_chunk(24, 8)")
-      }),
-      "pipeline_sql_tvf_dedup_pairs" -> ((s, dir) => {
-        graft.functions.GraftFunctions.register(s)
-        Text.loadDocuments(s, dir)
-          .createOrReplaceTempView(graft.functions.GraftFunctions.DocumentsView)
-        s.sql("SELECT * FROM corpus_dedup_pairs(0.6, 250)")
-      }),
-      "pipeline_sql_tvf_dsir" -> ((s, dir) => {
-        graft.functions.GraftFunctions.register(s)
-        Text.loadDocuments(s, dir)
-          .createOrReplaceTempView(graft.functions.GraftFunctions.DocumentsView)
-        s.sql("SELECT * FROM corpus_dsir('lang = ''en''', 32, 0.4)")
-      }),
-      // splices the PLAN-ONLY percentile gate (scalar subqueries, no
-      // driver heads) — the oracle is the same relational derivation
-      "pipeline_sql_tvf_quality_percentile" -> ((s, dir) => {
-        graft.functions.GraftFunctions.register(s)
-        Text.loadDocuments(s, dir)
-          .createOrReplaceTempView(graft.functions.GraftFunctions.DocumentsView)
-        s.sql("SELECT * FROM corpus_quality_percentile(0.4)")
-      }),
-      "pipeline_sql_tvf_ann_topk" -> ((s, dir) => {
-        graft.functions.GraftFunctions.register(s)
-        Similarity.loadEmbeddings(s, dir)
-          .createOrReplaceTempView(graft.functions.GraftFunctions.EmbeddingsView)
-        s.sql("SELECT * FROM ann_topk('0 194 388', 4)")
-      }),
-      "pipeline_sql_tvf_label_drift" -> ((s, dir) => {
-        graft.functions.GraftFunctions.register(s)
-        Similarity.loadEmbeddings(s, dir)
-          .createOrReplaceTempView(graft.functions.GraftFunctions.EmbeddingsView)
-        s.sql("SELECT * FROM emb_label_drift() WHERE n_vecs >= 45")
-      }),
-      "pipeline_sql_tvf_ann_ivf" -> ((s, dir) => {
-        graft.functions.GraftFunctions.register(s)
-        Similarity.loadEmbeddings(s, dir)
-          .createOrReplaceTempView(graft.functions.GraftFunctions.EmbeddingsView)
-        s.sql("SELECT * FROM ann_ivf_topk('97 291 485', 4, 16, 2)")
-      }),
-      // incremental admission through SQL: the documents VIEW is the
-      // new batch; prior state (versioned layout) is bootstrapped
-      // driver-side, then the TVF consults it by two key joins
-      "pipeline_sql_tvf_admit" -> ((s, dir) => {
-        graft.functions.GraftFunctions.register(s)
-        val docs = Text.loadDocuments(s, dir)
-        val stateDir = graft.Scratch.dir("graft_admit_tvf_").toString
-        graft.pipeline.IncrementalAdmit.writeStateVersioned(
-          s, docs.filter(col("doc_id") < 350L), stateDir)
-        docs.filter(col("doc_id") >= 350L)
-          .createOrReplaceTempView(graft.functions.GraftFunctions.DocumentsView)
-        s.sql(s"SELECT * FROM corpus_admit('$stateDir')")
-      }),
-      "ts_sql_tvf_matrix_profile" -> ((s, dir) => {
-        graft.functions.GraftFunctions.register(s)
-        TSModel.samples(s, dir)
-          .createOrReplaceTempView(graft.functions.GraftFunctions.SamplesView)
-        s.sql(s"SELECT * FROM ts_matrix_profile($T0, $T31, ${2 * DAY}, 5)")
-      }),
-      "ts_sql_tvf_matrix_profile_stomp" -> ((s, dir) => {
-        graft.functions.GraftFunctions.register(s)
-        TSModel.samples(s, dir)
-          .createOrReplaceTempView(graft.functions.GraftFunctions.SamplesView)
-        s.sql(s"SELECT * FROM ts_matrix_profile_stomp($T0, $T31, ${2 * DAY}, 4)")
-      }),
-      "ts_sql_tvf_mp_discords" -> ((s, dir) => {
-        graft.functions.GraftFunctions.register(s)
-        TSModel.samples(s, dir)
-          .createOrReplaceTempView(graft.functions.GraftFunctions.SamplesView)
-        s.sql(s"SELECT * FROM ts_mp_discords($T0, $T31, ${2 * DAY}, 5, 3)")
-      }),
-      "ts_sql_tvf_mp_motifs" -> ((s, dir) => {
-        graft.functions.GraftFunctions.register(s)
-        TSModel.samples(s, dir)
-          .createOrReplaceTempView(graft.functions.GraftFunctions.SamplesView)
-        s.sql(s"SELECT * FROM ts_mp_motifs($T0, $T31, ${2 * DAY}, 5, 3)")
-      }),
-      "ts_sql_tvf_mp_join" -> ((s, dir) => {
-        graft.functions.GraftFunctions.register(s)
-        TSModel.samples(s, dir)
-          .createOrReplaceTempView(graft.functions.GraftFunctions.SamplesView)
-        s.sql(s"SELECT * FROM ts_mp_join('view_15', 'click_117', $T0, $T31, $DAY, 5)")
-      }),
-      "ts_sql_tvf_dtw_banded" -> ((s, dir) => {
-        graft.functions.GraftFunctions.register(s)
-        TSModel.samples(s, dir)
-          .createOrReplaceTempView(graft.functions.GraftFunctions.SamplesView)
-        s.sql(s"SELECT * FROM ts_dtw_nearest_banded('view_7', $T0, $T31, ${2 * DAY}, 5, 2)")
-      }),
-      "ts_sql_tvf_motifs" -> ((s, dir) => {
-        graft.functions.GraftFunctions.register(s)
-        TSModel.samples(s, dir)
-          .createOrReplaceTempView(graft.functions.GraftFunctions.SamplesView)
-        s.sql(s"SELECT * FROM ts_motifs($T0, $T31, ${2 * DAY}, 3, 10)")
-      }),
-      "ts_sql_tvf_hw_forecast" -> ((s, dir) => {
-        graft.functions.GraftFunctions.register(s)
-        TSModel.samples(s, dir)
-          .createOrReplaceTempView(graft.functions.GraftFunctions.SamplesView)
-        s.sql(s"SELECT * FROM ts_hw_forecast($T0, $T31, 0.5, 0.3, 0.4, 24, 4, $DAY)")
-      }),
-      "ts_sql_tvf_rolling_corr" -> ((s, dir) => {
-        graft.functions.GraftFunctions.register(s)
-        TSModel.samples(s, dir)
-          .createOrReplaceTempView(graft.functions.GraftFunctions.SamplesView)
-        s.sql(s"SELECT * FROM ts_rolling_corr('click_3', 'view_3', $T0, $T31, ${2 * DAY}, 5)")
-      }),
-      "ts_sql_tvf_histogram" -> ((s, dir) => {
-        graft.functions.GraftFunctions.register(s)
-        TSModel.samples(s, dir)
-          .createOrReplaceTempView(graft.functions.GraftFunctions.SamplesView)
-        s.sql(s"SELECT * FROM ts_histogram($T0, $T31, 0.0, 150.0, 15)")
-      }),
-      "ts_sql_tvf_histogram_quantile" -> ((s, dir) => {
-        graft.functions.GraftFunctions.register(s)
-        TSModel.samples(s, dir)
-          .createOrReplaceTempView(graft.functions.GraftFunctions.SamplesView)
-        s.sql(s"SELECT * FROM ts_histogram_quantile($T0, $T31, 0.0, 150.0, 15, 0.5)")
-      }),
-      "ts_sql_tvf_ddsketch" -> ((s, dir) => {
-        graft.functions.GraftFunctions.register(s)
-        TSModel.samples(s, dir)
-          .createOrReplaceTempView(graft.functions.GraftFunctions.SamplesView)
-        s.sql(s"SELECT * FROM ts_ddsketch_quantile($T0, $T31, 1.05, 0.5)")
-      }),
-      "ts_sql_tvf_ddsketch_windowed" -> ((s, dir) => {
-        graft.functions.GraftFunctions.register(s)
-        TSModel.samples(s, dir)
-          .createOrReplaceTempView(graft.functions.GraftFunctions.SamplesView)
-        s.sql(s"SELECT * FROM ts_ddsketch_windowed($T0, $T31, 1.1, ${7 * DAY})")
-      }),
-      // signed-sketch family TVFs (r16 VERDICT #3 — symmetry with the
-      // Column API): center 50.0 so the all-positive fixture drives
-      // all three stores
-      "ts_sql_tvf_ddsketch_signed" -> ((s, dir) => {
-        graft.functions.GraftFunctions.register(s)
-        TSModel.samples(s, dir)
-          .createOrReplaceTempView(graft.functions.GraftFunctions.SamplesView)
-        s.sql(s"SELECT * FROM ts_ddsketch_signed($T0, $T31, 1.05, 50.0)")
-      }),
-      "ts_sql_tvf_ddsketch_signed_quantile" -> ((s, dir) => {
-        graft.functions.GraftFunctions.register(s)
-        TSModel.samples(s, dir)
-          .createOrReplaceTempView(graft.functions.GraftFunctions.SamplesView)
-        s.sql(
-          s"SELECT * FROM ts_ddsketch_signed_quantile($T0, $T31, 1.05, 0.5, 50.0)")
-      }),
-      "ts_sql_tvf_ddsketch_signed_windowed" -> ((s, dir) => {
-        graft.functions.GraftFunctions.register(s)
-        TSModel.samples(s, dir)
-          .createOrReplaceTempView(graft.functions.GraftFunctions.SamplesView)
-        s.sql(s"SELECT * FROM ts_ddsketch_signed_windowed(" +
-          s"$T0, $T31, 1.05, ${7 * DAY}, 50.0)")
-      }),
-      "ts_sql_tvf_ddsketch_collapsed" -> ((s, dir) => {
-        graft.functions.GraftFunctions.register(s)
-        TSModel.samples(s, dir)
-          .createOrReplaceTempView(graft.functions.GraftFunctions.SamplesView)
-        s.sql(s"SELECT * FROM ts_ddsketch_collapsed($T0, $T31, 1.02, 12)")
-      }),
-      "ts_sql_tvf_ewma" -> ((s, dir) => {
-        graft.functions.GraftFunctions.register(s)
-        TSModel.samples(s, dir)
-          .createOrReplaceTempView(graft.functions.GraftFunctions.SamplesView)
-        s.sql(s"SELECT * FROM ts_ewma($T0, $T31, 0.25, 12)")
-      }),
-      "ts_sql_tvf_acf" -> ((s, dir) => {
-        graft.functions.GraftFunctions.register(s)
-        TSModel.samples(s, dir)
-          .createOrReplaceTempView(graft.functions.GraftFunctions.SamplesView)
-        s.sql(s"SELECT * FROM ts_acf($T0, $T31, 5)")
-      }),
-      "ts_sql_tvf_resample" -> ((s, dir) => {
-        graft.functions.GraftFunctions.register(s)
-        TSModel.samples(s, dir)
-          .createOrReplaceTempView(graft.functions.GraftFunctions.SamplesView)
-        s.sql(s"SELECT * FROM ts_resample($T0, $T31, ${8 * HOUR})")
-      }),
-      "ts_sql_tvf_corr" -> ((s, dir) => {
-        graft.functions.GraftFunctions.register(s)
-        TSModel.samples(s, dir)
-          .createOrReplaceTempView(graft.functions.GraftFunctions.SamplesView)
-        s.sql(s"SELECT * FROM ts_corr('click_3', 'view_3', $T0, $T31, ${2 * DAY})")
-      }),
-      "ts_sql_tvf_delta_rate" -> ((s, dir) => {
-        graft.functions.GraftFunctions.register(s)
-        TSModel.samples(s, dir)
-          .createOrReplaceTempView(graft.functions.GraftFunctions.SamplesView)
-        s.sql(s"SELECT * FROM ts_delta_rate($T0, $T31, ${12 * HOUR})")
-      }),
-
-      // as-of join (beyond-reference): align view_7 values onto
-      // click_7 timestamps; Spark union+window vs DuckDB's NATIVE
-      // ASOF JOIN — two different algorithms must agree. The second
-      // variant adds a staleness tolerance.
-      "ts_asof_join" -> ((s, dir) =>
-        AsOf.asofJoin(monthSamples(s, dir), "click_7", "view_7",
-          fromMs = Some(T0), toMs = Some(T31))),
-      "ts_asof_join_tolerance" -> ((s, dir) =>
-        AsOf.asofJoin(monthSamples(s, dir), "click_7", "view_7",
-          toleranceMs = Some(2 * DAY), fromMs = Some(T0), toMs = Some(T31))),
-      // bucket-aligned Pearson correlation of two series
-      "ts_corr_pair" -> ((s, dir) =>
-        AsOf.pearson(monthSamples(s, dir), "click_7", "view_7",
-          bucketMs = DAY, fromMs = Some(T0), toMs = Some(T31))),
-      // cross-correlation at bucket lags -7..7: pearson swept over
-      // lead/lag shifts — "does B follow A by N days"; one grid agg,
-      // broadcast lag frame, one corr per lag
-      "ts_range_ccf" -> ((s, dir) =>
-        AsOf.ccf(monthSamples(s, dir), "click_7", "view_7",
-          bucketMs = DAY, maxLag = 7, fromMs = Some(T0), toMs = Some(T31))),
-      // rolling correlation over the trailing 7 aligned daily buckets:
-      // "are these two still moving together NOW" (canary primitive);
-      // five windowed moment sums on one query-bounded frame
-      "ts_rolling_corr" -> ((s, dir) =>
-        AsOf.rollingCorr(monthSamples(s, dir), "click_7", "error_17",
-          bucketMs = DAY, span = 7, fromMs = Some(T0), toMs = Some(T31))),
-      // the fleet diagnostic: pairwise Pearson over a bounded series
-      // list — one grid agg + one self-join, pairs quadratic only in
-      // the QUERY's list (numkeys-guarded), overlap count per pair
-      "ts_corr_matrix" -> ((s, dir) =>
-        AsOf.pearsonMatrix(monthSamples(s, dir),
-          Seq("click_7", "view_34", "view_15", "click_117", "view_50", "view_12"),
-          bucketMs = DAY, fromMs = Some(T0), toMs = Some(T31))),
-      // the MRANGE composition: the matrix set resolves through the
-      // label index ("all series of these users"); the numkeys guard
-      // moves into the plan (lazy assert on the matched count)
-      "ts_corr_matrix_filter" -> ((s, dir) =>
-        AsOf.pearsonMatrixByFilter(TSModel.samples(s, dir), TSModel.labels(s, dir),
-          Seq(Multi.parsePred("user=(7,15,34,117)")),
-          bucketMs = DAY, fromMs = Some(T0), toMs = Some(T31))),
-
-      // per-series z-score outliers (beyond-reference): one unordered
-      // analytic window by series, single pass
-      "ts_range_zscore" -> ((s, dir) =>
-        Anomaly.zscore(monthSamples(s, dir), threshold = 2.0,
-          fromMs = Some(T0), toMs = Some(T31))),
-
-      // linear resampling onto a 12h grid (beyond-reference UPsample:
-      // union + two frame-bounded windows, no self-join)
-      "ts_resample_linear" -> ((s, dir) =>
-        Resample.linear(monthSamples(s, dir), stepMs = 12 * HOUR,
-          fromMs = Some(T0), toMs = Some(T31))),
-
-      // exact bucket quantiles (beyond-reference): the p50/p90/p99
-      // latency surface; Spark percentile == DuckDB quantile_cont
-      "ts_range_quantiles" -> ((s, dir) =>
-        Quantiles.bucketQuantiles(monthSamples(s, dir),
-          Seq(0.5, 0.9, 0.99), bucketMs = DAY,
-          fromMs = Some(T0), toMs = Some(T31))),
-
-      // the declared hot-series APPROX escape hatches, exercised and
-      // rank-error-verified in-engine (tolerance differential — the
-      // oracle pins the exact key universe + the expected verdicts)
-      "ts_range_quantiles_approx" -> ((s, dir) =>
-        Quantiles.bucketQuantilesApproxChecked(monthSamples(s, dir),
-          q = 0.9, bucketMs = DAY, accuracy = 100,
-          fromMs = Some(T0), toMs = Some(T31))),
-      "ts_range_mad_approx" -> ((s, dir) =>
-        Anomaly.madApproxChecked(monthSamples(s, dir), accuracy = 100,
-          fromMs = Some(T0), toMs = Some(T31))),
-
-      // PromQL-style counter semantics (beyond-reference): per-bucket
-      // gauge delta + per-second rate, and reset-aware counter increase
-      "ts_range_delta_rate" -> ((s, dir) =>
-        Rates.deltaRate(monthSamples(s, dir), bucketMs = DAY,
-          fromMs = Some(T0), toMs = Some(T31))),
-      "ts_range_increase" -> ((s, dir) =>
-        Rates.increase(monthSamples(s, dir), bucketMs = DAY,
-          fromMs = Some(T0), toMs = Some(T31))),
-      // PromQL resets: per-bucket count of counter restarts (value
-      // drops vs predecessor) — completes the counter family
-      "ts_range_resets" -> ((s, dir) =>
-        Rates.resets(monthSamples(s, dir), bucketMs = DAY,
-          fromMs = Some(T0), toMs = Some(T31))),
-      // PromQL irate/idelta: the INSTANT rate family — only the last
-      // consecutive pair per bucket matters (spiky counters); argmax
-      // aggregate shares the lag window's exchange
-      "ts_range_irate" -> ((s, dir) =>
-        Rates.instant(monthSamples(s, dir), bucketMs = DAY,
-          fromMs = Some(T0), toMs = Some(T31))),
-      // Hampel filter: outliers vs the CENTERED rolling median with
-      // the window's own MAD as scale — the robust cleaning primitive
-      // (an extreme sample cannot mask itself out of its own window)
-      "ts_hampel" -> ((s, dir) =>
-        Rolling.hampel(monthSamples(s, dir), span = 3, k = 3.0,
-          fromMs = Some(T0), toMs = Some(T31))),
-      // multi-window SLO burn rate (SRE workbook rule): alert where
-      // the 7d budget burn AND its 2d tail both exceed 1.5× — long
-      // window proves significance, short proves it is still happening
-      "ts_burn_rate" -> ((s, dir) =>
-        Rates.burnRate(monthSamples(s, dir), shortMs = 2 * DAY,
-          longMs = 7 * DAY, hopMs = DAY, budgetPerSec = 4.0e-4,
-          threshold = 1.5, fromMs = Some(T0), toMs = Some(T31))),
-
-      // gap-based session windows (beyond-reference, the batch twin of
-      // session_window(gap)): activity bursts per series, 12h gap
-      "ts_range_session" -> ((s, dir) =>
-        Sessions.sessionRange(monthSamples(s, dir), "avg", gapMs = 12 * HOUR,
-          fromMs = Some(T0), toMs = Some(T31))),
-      "ts_range_session_max" -> ((s, dir) =>
-        Sessions.sessionRange(monthSamples(s, dir), "max", gapMs = 2 * DAY,
-          fromMs = Some(T0), toMs = Some(T31))),
-
-      // COMPACTION_POLICY end-to-end (VERDICT r04 missing #2): one
-      // global policy string parsed (m/M duration units per
-      // parse_policies.c:22-28 — '3600000m' is ms, '1M' is one MINUTE),
-      // expanded to auto-rules with the reference dest naming + labels
-      // + retention (tsdb.c:1109-1191; tests/flow/test_globalconfigs.py)
-      // and materialized over every fixture series in ONE source scan;
-      // the oracle re-derives the whole chain in SQL
-      "ts_compaction_policy" -> ((s, _dir) => {
-        // three rules on purpose: a 2-rule policy can't catch a broken
-        // when-chain fold (review r05 found exactly that crash)
-        val metas = Catalog.autoRules("avg:3600000m:1d;max:1M:2d;sum:2h:1d", "")
-        val rules = metas.map { case (_, rm) =>
-          Compaction.Rule(rm.agg, rm.bucketMs, rm.alignMs) }
-        // reduceRight: a left fold would call .otherwise on an
-        // already-defaulted Column and throw for policies with 3+ rules
-        def bySuffix(f: Catalog.SeriesMeta => String) = metas.map { case (meta, _) =>
-          when(col("series").endsWith(meta.series), lit(f(meta)))
-        }.reduceRight((a, b) => a.otherwise(b))
-        Compaction.materializeAll(TSModel.samples(s, _dir), rules)
-          .select(col("series"), col("ts"), col("value"),
-            bySuffix(_.labels("aggregation")).as("label_aggregation"),
-            bySuffix(_.labels("time_bucket")).as("label_time_bucket"),
-            bySuffix(_.retentionMs.toString).cast("long").as("retention_ms"))
-      }),
-
-      // ---- real-data goldens (VERDICT r04 missing #1): the reference's
-      // lemire_canada.txt float series (tests/flow/test_ts_madd.py:86-107,
-      // ts = 1..N in file order) through range/multi-agg/twa/EMPTY/
-      // dup-policy — real value distributions, not synthetics. The
-      // fixture is sfDir-independent (bundled resource), so `dir` is
-      // unused.
-      "ts_lemire_range_multi" -> ((s, _) =>
-        pin9(RangeQuery.range(RealData.lemire(s), RangeArgs(
-          aggs = Seq("min", "max", "avg", "sum", "count", "std.p"), bucketMs = 1000L)))),
-      "ts_lemire_twa" -> ((s, _) =>
-        pin9(RangeQuery.range(RealData.lemire(s), RangeArgs(from = Some(5000L), to = Some(100000L),
-          aggs = Seq("twa"), bucketMs = 1000L)))),
-      // EMPTY + LOCF needs real gaps: every-97th-sample sparsification
-      // against 50-tick buckets (both sides apply the same predicate)
-      "ts_lemire_empty_locf" -> ((s, _) =>
-        RangeQuery.range(RealData.lemireSparse(s), RangeArgs(from = Some(9700L), to = Some(38800L),
-          aggs = Seq("last"), bucketMs = 50L, empty = true))),
-      // duplicate-policy fold over real doubles: a second write at every
-      // ts (value - 1) resolved under MIN
-      "ts_lemire_dup_min" -> ((s, _) => {
-        val base = RealData.lemire(s)
-        WritePath.applyDupPolicy(
-          base.withColumn("seq", lit(1L)).unionByName(
-            base.withColumn("value", col("value") - 1.0).withColumn("seq", lit(2L))),
-          "min")
-      }),
-      "ts_lemire_revrange_count" -> ((s, _) =>
-        pin9(RangeQuery.range(RealData.lemire(s), RangeArgs(
-          aggs = Seq("avg"), bucketMs = 1000L, reverse = true, count = Some(10))))),
-      // multi-series surface on real data: the interleaved lon/lat
-      // positions split into two series, GROUPBY their shared dataset
-      // label, max-reduce across the per-series daily averages
-      "ts_lemire_mrange_groupby" -> ((s, _) =>
-        pin9(Multi.mrangeGroupBy(RealData.lemireSplit(s), RealData.lemireLabels(s),
-          Seq(Multi.parsePred("axis=(lon,lat)")),
-          RangeArgs(from = Some(1000L), to = Some(90000L), aggs = Seq("avg"), bucketMs = 1000L),
-          groupByLabel = "dataset", reducer = "max"))),
-      // compaction fan-out on real data: two rules, one scan
-      "ts_lemire_compaction" -> ((s, _) =>
-        pin9(Compaction.materializeAll(RealData.lemireSplit(s),
-          Seq(Compaction.Rule("avg", 1000L), Compaction.Rule("max", 2000L))))),
-
-      // ---- real-LABEL goldens (VERDICT r05 missing #2): the Berkeley
-      // Earth GlobalLandTemperaturesByMajorCity dataset decoded from
-      // the reference's own RDB fixture (tests/flow/rdbs, README:1-15)
-      // — 100 cities × 2 metrics with REAL city/country labels, and
-      // `metric` genuinely absent on the uncertainty series.
-      // MRANGE GROUPBY country REDUCE avg across real multi-city label
-      // groups (49 countries), yearly buckets over the 1970-2013 span
-      "ts_glt_mrange_groupby" -> ((s, _) =>
-        pin9(Multi.mrangeGroupBy(GltData.samples(s), GltData.labels(s),
-          Seq(Multi.parsePred("metric=temperature"),
-            Multi.parsePred("country=(Brazil,China,India,Canada,Turkey)")),
-          RangeArgs(from = Some(0L), to = Some(GLT_END), aggs = Seq("avg"),
-            bucketMs = 365 * DAY),
-          groupByLabel = "country", reducer = "avg"))),
-      // SELECTED_LABELS over a REAL absent label: `metric` exists only
-      // on the temperature series, so the uncertainty rows reply null
-      "ts_glt_selected_labels" -> ((s, _) => {
-        val labs = GltData.labels(s)
-        val per = Multi.mrange(GltData.samples(s), labs,
-          Seq(Multi.parsePred("country=(Brazil,India)")),
-          RangeArgs(from = Some(0L), to = Some(GLT_END), aggs = Seq("avg"),
-            bucketMs = 5 * 365 * DAY))
-        pin9(per.join(broadcast(labs), Seq("series"))
-          .select(col("series"), col("ts"), col("avg_value"),
-            element_at(col("labels"), "metric").as("label_metric"),
-            element_at(col("labels"), "country").as("label_country")))
-      }),
-      // COMPACTION_POLICY over the real dataset: yearly avg + biennial
-      // max auto-rules with reference dest naming/labels/retention
-      "ts_glt_compaction_policy" -> ((s, _) => {
-        val metas = Catalog.autoRules("avg:365d:3650d;max:730d:3650d", "")
-        val rules = metas.map { case (_, rm) =>
-          Compaction.Rule(rm.agg, rm.bucketMs, rm.alignMs) }
-        def bySuffix(f: Catalog.SeriesMeta => String) = metas.map { case (meta, _) =>
-          when(col("series").endsWith(meta.series), lit(f(meta)))
-        }.reduceRight((a, b) => a.otherwise(b))
-        pin9(Compaction.materializeAll(GltData.samples(s), rules)
-          .select(col("series"), col("ts"), col("value"),
-            bySuffix(_.labels("aggregation")).as("label_aggregation"),
-            bySuffix(_.labels("time_bucket")).as("label_time_bucket"),
-            bySuffix(_.retentionMs.toString).cast("long").as("retention_ms")))
-      }),
-
-      // real-data GAP-FILL goldens (VERDICT r06 #6). The decoded GLT
-      // fixture has NO missing months (verified: zero interior gaps,
-      // zero NaNs — the rdb creator loads a complete 1970..2013 span),
-      // so EMPTY semantics are exercised against the data's own monthly
-      // cadence: 10-day buckets leave ~2 of every 3 buckets genuinely
-      // sample-free, and LOCF must carry each real month across them
-      "ts_glt_empty_locf" -> ((s, _) =>
-        RangeQuery.range(
-          GltData.samples(s).filter(col("series").isin(GLT_GAP_SERIES: _*)),
-          RangeArgs(from = Some(0L), to = Some(GLT_END), aggs = Seq("last"),
-            bucketMs = 10 * DAY, empty = true))),
-      // TWA over real monthly spacing: month lengths differ, so every
-      // annual bucket boundary lands mid-interval and the head/tail
-      // interpolation anchors on genuinely irregular neighbours
-      "ts_glt_twa" -> ((s, _) =>
-        pin9(RangeQuery.range(
-          GltData.samples(s).filter(col("series").isin(GLT_GAP_SERIES: _*)),
-          RangeArgs(from = Some(0L), to = Some(GLT_END), aggs = Seq("twa"),
-            bucketMs = 365 * DAY)))),
-
-      // ---- round-10 analytics extensions (beyond-reference) ----
-      // Holt double-exponential smoothing: per-series sequential fold
-      // (one shuffle by series), recursive-CTE oracle, bit-identical
-      "ts_range_holt" -> ((s, dir) =>
-        Smoothing.holt(monthSamples(s, dir), sf = 0.4, tf = 0.3,
-          fromMs = Some(T0), toMs = Some(T31))),
-      // Holt linear point forecast: 7 daily steps past each series'
-      // last sample off the final (level, trend) — same per-series
-      // O(n) scan as holt, output series x horizon
-      "ts_range_forecast" -> ((s, dir) =>
-        Smoothing.holtForecast(monthSamples(s, dir), sf = 0.4, tf = 0.3,
-          horizon = 7, stepMs = DAY, fromMs = Some(T0), toMs = Some(T31))),
-      // the seasonal forecast: Holt-Winters final (level, trend, m
-      // slots) projected h steps — ditto one scan, series x horizon out
-      "ts_range_hw_forecast" -> ((s, dir) =>
-        Smoothing.holtWintersForecast(monthSamples(s, dir), alpha = 0.5,
-          beta = 0.3, gamma = 0.4, m = 24, horizon = 6, stepMs = 12 * HOUR,
-          fromMs = Some(T0), toMs = Some(T31))),
-      // Holt-Winters additive: holt + an m-slot seasonal component,
-      // same per-series fold contract; the oracle's recursive CTE
-      // carries the seasonal state as a DOUBLE[] column
-      "ts_range_holt_winters" -> ((s, dir) =>
-        Smoothing.holtWinters(monthSamples(s, dir), alpha = 0.5,
-          beta = 0.3, gamma = 0.4, m = 24,
-          fromMs = Some(T0), toMs = Some(T31))),
-      // PromQL topk/bottomk: per-bucket cross-series ranking — the
-      // WindowGroupLimit partial-top-k shape, shuffle O(buckets×k)
-      "ts_topk_series" -> ((s, dir) =>
-        TopK.topkSeries(monthSamples(s, dir), k = 5, agg = "avg",
-          bucketMs = DAY, fromMs = Some(T0), toMs = Some(T31))),
-      "ts_bottomk_series" -> ((s, dir) =>
-        TopK.topkSeries(monthSamples(s, dir), k = 3, agg = "sum",
-          bucketMs = 2 * DAY, bottom = true,
-          fromMs = Some(T0), toMs = Some(T31))),
-      // SAX symbolization: PAA + per-series z-norm + 4-letter word —
-      // everything after the PAA agg bounded by series×buckets
-      // fleet motif discovery: top-20 recurring 4-symbol SAX shapes
-      // across all series (overlapping occurrences + distinct-series
-      // support); m-gram explode stays series x buckets bounded
-      "ts_sax_motifs" -> ((s, dir) =>
-        Sax.motifs(monthSamples(s, dir), bucketMs = DAY, m = 4, k = 20,
-          fromMs = Some(T0), toMs = Some(T31))),
-      // matrix profile: per-window z-normalized nearest-neighbor
-      // distance over each series' daily profile — motifs are the
-      // minima, the discord is the maximum; exact distances next to
-      // SAX's symbolic counts
-      "ts_matrix_profile" -> ((s, dir) =>
-        graft.ts.MatrixProfile.profile(monthSamples(s, dir),
-          bucketMs = DAY, m = 7, fromMs = Some(T0), toMs = Some(T31))),
-      // the STOMP long-profile path (rolling-dot recurrence, O(1) per
-      // cell, no w²-row join): same distances as the pairs path by
-      // construction — the identical DuckDB oracle derivation checks
-      // the recurrence itself, at distinct parameters (m=4) so the two
-      // routes cannot mask each other
-      "ts_matrix_profile_stomp" -> ((s, dir) =>
-        graft.ts.MatrixProfile.profileStomp(monthSamples(s, dir),
-          bucketMs = DAY, m = 4, fromMs = Some(T0), toMs = Some(T31))),
-      // the operability layer over the profile: per-series top-k
-      // discords (largest nn distance — the anomalies) and motif
-      // windows (smallest — the repeated shapes); rank windows compile
-      // to WindowGroupLimit so the full profile never leaves executors
-      "ts_mp_discords" -> ((s, dir) =>
-        graft.ts.MatrixProfile.discords(monthSamples(s, dir),
-          bucketMs = DAY, m = 7, k = 2, fromMs = Some(T0), toMs = Some(T31))),
-      "ts_mp_motifs" -> ((s, dir) =>
-        graft.ts.MatrixProfile.motifWindows(monthSamples(s, dir),
-          bucketMs = DAY, m = 7, k = 2, fromMs = Some(T0), toMs = Some(T31))),
-      // AB-join profile: where does click_3's daily shape occur in
-      // view_3 — the cross-series variant (no exclusion zone; the
-      // trivial-match hazard is a self-join artifact)
-      "ts_mp_join" -> ((s, dir) =>
-        graft.ts.MatrixProfile.joinProfile(monthSamples(s, dir),
-          bucketMs = DAY, m = 7, a = "click_7", b = "view_34",
-          fromMs = Some(T0), toMs = Some(T31))),
-      // rolling-origin forecast backtest: fit holt on the first 21
-      // days, score 6 daily forecasts against the held-out actuals —
-      // the evaluation primitive that makes the forecast surface
-      // operable (threshold mae/rmse before trusting projections)
-      "ts_forecast_backtest" -> ((s, dir) =>
-        graft.ts.Backtest.holtBacktest(monthSamples(s, dir),
-          sf = 0.5, tf = 0.2, splitMs = T0 + 21 * DAY, horizon = 6,
-          bucketMs = DAY, fromMs = Some(T0), toMs = Some(T31))),
-      // MULTI-origin sweep (the k=1 query above is its special case):
-      // three fit origins, per-(series, origin) rows + a pooled
-      // per-series row (origin NULL) over all scored forecasts —
-      // ROLLUP minus the grand total on both engines
-      "ts_forecast_backtest_rolling" -> ((s, dir) =>
-        graft.ts.Backtest.holtBacktestRolling(monthSamples(s, dir),
-          sf = 0.5, tf = 0.2,
-          origins = Seq(T0 + 14 * DAY, T0 + 18 * DAY, T0 + 22 * DAY),
-          horizon = 5, bucketMs = DAY, fromMs = Some(T0), toMs = Some(T31))),
-      "ts_sax_words" -> ((s, dir) =>
-        Sax.saxWords(monthSamples(s, dir), bucketMs = 2 * DAY,
-          fromMs = Some(T0), toMs = Some(T31))),
-      // robust MAD outliers: modified z-score, median-based — two
-      // exact-percentile windows on ONE shuffle by series
-      "ts_range_mad" -> ((s, dir) =>
-        Anomaly.mad(monthSamples(s, dir), threshold = 2.5,
-          fromMs = Some(T0), toMs = Some(T31))),
-      // per-series OLS trend + predict_linear at T31+7d: one hash agg
-      // of regression moments, map-side combined
-      "ts_range_trend" -> ((s, dir) =>
-        Trend.fit(monthSamples(s, dir), predictAtMs = T31 + 7 * DAY,
-          fromMs = Some(T0), toMs = Some(T31))),
-      // fixed-width value histogram [0,120)/24: shuffle volume bounded
-      // by series×bins, independent of sample count
-      "ts_range_histogram" -> ((s, dir) =>
-        Histogram.valueHistogram(monthSamples(s, dir),
-          lo = 0.0, hi = 120.0, nbins = 24,
-          fromMs = Some(T0), toMs = Some(T31))),
-      // quantile ESTIMATE interpolated from the bounded histogram (the
-      // PromQL histogram_quantile shape — the 100-TB quantile path:
-      // only series×bins partials ever shuffle)
-      "ts_histogram_quantile" -> ((s, dir) =>
-        Histogram.histogramQuantile(monthSamples(s, dir),
-          lo = 0.0, hi = 120.0, nbins = 24, q = 0.95,
-          fromMs = Some(T0), toMs = Some(T31))),
-      // DDSketch log-bucketed histogram + quantile (VLDB'19): the
-      // RELATIVE-error, fully-mergeable quantile sketch — same
-      // series×buckets bounded shuffle, bucket count ~= log_gamma of
-      // the value span, accuracy self-described by the emitted
-      // [q_lo, q_hi) = [gamma^b, gamma^(b+1)) bracket
-      "ts_range_ddsketch" -> ((s, dir) =>
-        Histogram.ddsketchHistogram(monthSamples(s, dir), gamma = 1.02,
-          fromMs = Some(T0), toMs = Some(T31))),
-      "ts_ddsketch_quantile" -> ((s, dir) =>
-        Histogram.ddsketchQuantile(monthSamples(s, dir), gamma = 1.02,
-          q = 0.95, fromMs = Some(T0), toMs = Some(T31))),
-      // per-(series, week) DDSketch table — the materialized
-      // quantile-sketch-per-interval shape; one map-side-combined agg
-      "ts_ddsketch_windowed" -> ((s, dir) =>
-        Histogram.ddsketchWindowed(monthSamples(s, dir), gamma = 1.05,
-          windowMs = 7 * DAY, fromMs = Some(T0), toMs = Some(T31))),
-      // THREE-STORE DDSketch (the paper's full value-domain contract:
-      // negative/zero/positive stores) over CENTERED values so all
-      // three stores carry mass; one map-side-combined agg
-      "ts_ddsketch_signed" -> ((s, dir) =>
-        Histogram.ddsketchHistogramSigned(
-          monthSamples(s, dir).withColumn("value", col("value") - 50.0),
-          gamma = 1.05, fromMs = Some(T0), toMs = Some(T31))),
-      "ts_ddsketch_signed_quantile" -> ((s, dir) =>
-        Histogram.ddsketchQuantileSigned(
-          monthSamples(s, dir).withColumn("value", col("value") - 50.0),
-          gamma = 1.05, q = 0.5, fromMs = Some(T0), toMs = Some(T31))),
-      // one THREE-STORE sketch per (series, week): the signed windowed
-      // family twin — window key folded into the same single agg
-      "ts_ddsketch_signed_windowed" -> ((s, dir) =>
-        Histogram.ddsketchWindowedSigned(
-          monthSamples(s, dir).withColumn("value", col("value") - 50.0),
-          gamma = 1.05, windowMs = 7 * DAY,
-          fromMs = Some(T0), toMs = Some(T31))),
-      // bounded-size collapsing store (VLDB'19 §2.4): at most
-      // maxBuckets buckets per series, lower buckets deterministically
-      // folded into the floor bucket (collapse is explicit opt-in;
-      // the strict default raise_errors on budget overflow)
-      "ts_ddsketch_collapsed" -> ((s, dir) =>
-        Histogram.ddsketchHistogramCollapsed(monthSamples(s, dir),
-          gamma = 1.02, maxBuckets = 12, strict = false,
-          fromMs = Some(T0), toMs = Some(T31))),
-      // PERSISTED sketch state: bootstrap + two versioned merges over a
-      // ts-partition of the month, then read the live generation — the
-      // mergeability contract (== the one-shot sketch over the union,
-      // exact integer equality) hashed by the driver; each merge scans
-      // only its batch plus the model-sized prior state
-      // STREAMING sketch maintenance: the ingest stream's micro-batches
-      // fold into the versioned state as they arrive (foreachBatch ->
-      // mergeSketch); final live generation == the one-shot sketch
-      "ts_ddsketch_stream_state" -> ((s, dir) =>
-        graft.ts.SketchStore.streamingSketchOnce(s, monthSamples(s, dir),
-          graft.Scratch.dir("graft_sketch_ss_q_").toString,
-          gamma = 1.02, fromMs = Some(T0), toMs = Some(T31), nChunks = 4)),
-      "ts_ddsketch_incremental" -> ((s, dir) => {
-        val stateDir = graft.Scratch.dir("graft_sketch_store_q_").toString
-        val cut1 = T0 + 10 * DAY; val cut2 = T0 + 20 * DAY
-        val samples = monthSamples(s, dir)
-        graft.ts.SketchStore.writeSketchVersioned(
-          s, samples.filter(col("ts") < cut1), stateDir, gamma = 1.02)
-        graft.ts.SketchStore.mergeSketch(
-          s, samples.filter(col("ts") >= cut1 && col("ts") < cut2),
-          stateDir, gamma = 1.02)
-        graft.ts.SketchStore.mergeSketch(
-          s, samples.filter(col("ts") >= cut2), stateDir, gamma = 1.02)
-        graft.ts.SketchStore.readSketch(s, stateDir)
-      }),
-      // persisted THREE-STORE signed state: bootstrap + merge with the
-      // store column folded into the merge key (inferred from the live
-      // schema) — same exact-integer mergeability contract, hashed
-      // against the one-shot signed sketch SQL
-      "ts_ddsketch_signed_incremental" -> ((s, dir) => {
-        val stateDir = graft.Scratch.dir("graft_sketch_sgn_q_").toString
-        val cut = T0 + 15 * DAY
-        val samples = monthSamples(s, dir)
-          .withColumn("value", col("value") - 50.0)
-        graft.ts.SketchStore.writeSketchVersioned(
-          s, samples.filter(col("ts") < cut), stateDir,
-          gamma = 1.05, signed = true)
-        graft.ts.SketchStore.mergeSketch(
-          s, samples.filter(col("ts") >= cut), stateDir, gamma = 1.05)
-        graft.ts.SketchStore.readSketch(s, stateDir)
-      }),
-      // the PRODUCTION quantile read: walked off the persisted state
-      // ALONE (no samples rescan — the read plan scans only the
-      // model-sized state table, pinned by PlanShapeSpec) — hashed
-      // against the one-shot quantile SQL via the merge contract
-      "ts_ddsketch_state_quantile" -> ((s, dir) => {
-        val stateDir = graft.Scratch.dir("graft_sketch_q_read_").toString
-        val cut = T0 + 15 * DAY
-        val samples = monthSamples(s, dir)
-        graft.ts.SketchStore.writeSketchVersioned(
-          s, samples.filter(col("ts") < cut), stateDir, gamma = 1.02)
-        graft.ts.SketchStore.mergeSketch(
-          s, samples.filter(col("ts") >= cut), stateDir, gamma = 1.02)
-        graft.ts.SketchStore.quantile(s, stateDir, gamma = 1.02, q = 0.9)
-      }),
-      // parallel LTTB downsample: one representative point per day via
-      // centroid-anchored max-triangle-area selection
-      "ts_downsample_lttb" -> ((s, dir) =>
-        Lttb.downsample(monthSamples(s, dir), bucketMs = DAY,
-          fromMs = Some(T0), toMs = Some(T31))),
-      // windowed EWMA smoothing: collect_list over a bounded ROWS
-      // frame + one aggregate fold, single shuffle by series
-      "ts_range_ewma" -> ((s, dir) =>
-        Smoothing.ewma(monthSamples(s, dir), alpha = 0.3, span = 16,
-          fromMs = Some(T0), toMs = Some(T31))),
-      // per-series autocorrelation function at row-lags 1..7: maxLag
-      // lag windows on one exchange, every lag's corr in ONE hash agg
-      "ts_range_acf" -> ((s, dir) =>
-        Trend.acf(monthSamples(s, dir), maxLag = 7,
-          fromMs = Some(T0), toMs = Some(T31))),
-      // rolling trailing-window p90 (exact interpolation over a
-      // span-bounded sorted frame) and per-series winsorization —
-      // both single-shuffle window shapes
-      "ts_rolling_quantile" -> ((s, dir) =>
-        Rolling.rollingQuantile(monthSamples(s, dir), q = 0.9, span = 20,
-          fromMs = Some(T0), toMs = Some(T31))),
-      "ts_range_winsorize" -> ((s, dir) =>
-        Rolling.winsorize(monthSamples(s, dir), qLo = 0.05, qHi = 0.95,
-          fromMs = Some(T0), toMs = Some(T31))),
-      // seasonal (hour-of-day) baseline profile + cohort anomaly:
-      // "anomalous vs this hour's usual", not vs global stats —
-      // profile shuffle bounded by series×24; anomaly is one shuffle
-      // by the finer (series, season) key
-      "ts_seasonal_profile" -> ((s, dir) =>
-        Seasonal.profile(monthSamples(s, dir), mode = "hod",
-          fromMs = Some(T0), toMs = Some(T31))),
-      // dow cohorts: dense enough at every fixture SF to clear the
-      // minN gate (hod cohorts at sf<=0.01 have <5 members/series and
-      // legally score nothing — a 0-row green is a weak check)
-      "ts_seasonal_anomaly" -> ((s, dir) =>
-        Seasonal.anomaly(monthSamples(s, dir), threshold = 2.0, mode = "dow",
-          fromMs = Some(T0), toMs = Some(T31))),
-      "ts_seasonal_profile_dow" -> ((s, dir) =>
-        Seasonal.profile(monthSamples(s, dir), mode = "dow",
-          fromMs = Some(T0), toMs = Some(T31))),
-      // CUSUM change detection: normalized cumulative deviation sum,
-      // four analytic windows on one exchange by series
-      "ts_range_cusum" -> ((s, dir) =>
-        Changepoint.cusum(monthSamples(s, dir), threshold = 0.6,
-          fromMs = Some(T0), toMs = Some(T31))),
-      // classical additive seasonal-trend decomposition over daily
-      // buckets, weekly period: moving-average trend + zero-sum
-      // seasonal indices + remainder, one pass over raw samples
-      "ts_range_decompose" -> ((s, dir) =>
-        Seasonal.decompose(monthSamples(s, dir), bucketMs = DAY, period = 7,
-          fromMs = Some(T0), toMs = Some(T31))),
-      // seasonal-ADJUSTED anomaly: z-score on the decomposition's
-      // remainder — trend absorbs drift, season absorbs periodic load,
-      // what's flagged is unexplained by the series' own structure
-      "ts_decompose_anomaly" -> ((s, dir) =>
-        Seasonal.remainderAnomaly(monthSamples(s, dir), bucketMs = DAY,
-          period = 7, threshold = 1.5, fromMs = Some(T0), toMs = Some(T31))),
-      // offline changepoint LOCALIZATION: greedy binary segmentation of
-      // the daily grid — WHERE the mean shifted and how much SSE each
-      // split explained (cusum's excursion flags only the region); the
-      // oracle replays both recursion levels as window/QUALIFY CTEs
-      "ts_changepoint_binseg" -> ((s, dir) =>
-        graft.ts.Changepoint.binseg(monthSamples(s, dir), bucketMs = DAY,
-          levels = 2, minSize = 2, fromMs = Some(T0), toMs = Some(T31))),
-      // Theil-Sen ROBUST trend: median of pairwise grid slopes +
-      // median-residual intercept — outlier buckets that drag the OLS
-      // ts_trend line leave this one untouched
-      "ts_trend_theilsen" -> ((s, dir) =>
-        Trend.theilSen(monthSamples(s, dir), bucketMs = DAY,
-          fromMs = Some(T0), toMs = Some(T31))),
-      // gap report: inter-arrival gaps > 2d per series (presence
-      // semantics — NaN samples still count as arrivals)
-      "ts_range_gaps" -> ((s, dir) =>
-        Sessions.gaps(monthSamples(s, dir), thresholdMs = 2 * DAY,
-          fromMs = Some(T0), toMs = Some(T31))),
-      // DTW distances between daily-profile pairs: per-pair O(n·m)
-      // typed DP (parallel ACROSS pairs); the oracle replays the DP
-      // as a recursive-CTE anti-diagonal wavefront
-      "ts_dtw_pair" -> ((s, dir) =>
-        Dtw.pairwise(monthSamples(s, dir), bucketMs = DAY,
-          seriesSet = dtwSeries, fromMs = Some(T0), toMs = Some(T31))),
-      // DTW as a SEARCH primitive: top-10 series most similar to the
-      // probe's daily profile (full-corpus grid agg, broadcast probe,
-      // distributed TakeOrdered cut on the (distance, series) order)
-      "ts_dtw_nearest" -> ((s, dir) =>
-        Dtw.nearest(monthSamples(s, dir), bucketMs = DAY,
-          probe = "click_7", k = 10, fromMs = Some(T0), toMs = Some(T31))),
-      // the SCALE path for DTW search: a sound global-envelope lower
-      // bound prunes candidates before the O(n*m) DP (seed k by LB,
-      // cut at their k-th exact distance) — result == brute force,
-      // hence the shared oracle
-      "ts_dtw_nearest_pruned" -> ((s, dir) =>
-        Dtw.nearestPruned(monthSamples(s, dir), bucketMs = DAY,
-          probe = "view_7", k = 8, fromMs = Some(T0), toMs = Some(T31))),
-      // Sakoe-Chiba BANDED search with the classic LB_Keogh sliding
-      // envelope (sound only under the band — the reason the
-      // unconstrained path above uses the global envelope); oracle =
-      // the same wavefront with the band guard + length-feasibility
-      // filter, so result == banded brute force
-      "ts_dtw_nearest_banded" -> ((s, dir) =>
-        Dtw.nearestPrunedBanded(monthSamples(s, dir), bucketMs = DAY,
-          probe = "click_7", k = 8, band = 3,
-          fromMs = Some(T0), toMs = Some(T31))),
-      // STREAMING per-series anomaly scoring: prefix z-score via
-      // flatMapGroupsWithState (constant state per series), replayed
-      // in time-ordered micro-batches; the oracle re-derives the
-      // same semantics as a cumulative window — the state path is
-      // hash-checked against a closed form
-      // Since r14 the five series-keyed monitors (z-score, CUSUM,
-      // rolling quantile, gaps, seasonal cohorts) are slices of ONE shared
-      // pass — the production shape: one ingest stream, N monitors,
-      // one stateful shuffle (StreamMonitors scaladoc; the spec pins
-      // every slice bit-equal to its individual one-shot twin, whose
-      // oracles these queries keep). ts_stream_shared_pass below
-      // carries the pass's real cost in the bench (cacheKey = None
-      // forces a fresh run every rep).
-      "ts_anomaly_stream" -> ((s, dir) =>
-        graft.ts.StreamMonitors.zscoreSlice(sharedMonitors(s, dir))),
-      // streaming SEASONAL anomaly: per-(series, dow-cohort) prefix
-      // state — "this Monday vs previous Mondays", at arrival time
-      "ts_seasonal_stream" -> ((s, dir) =>
-        graft.ts.StreamMonitors.seasonalSlice(sharedMonitors(s, dir))),
-      // streaming rolling median: bounded ring state per series; the
-      // time-ordered replay makes the stateful stream EQUAL the batch
-      // operator, whose SQL twin is the oracle (batch-duality)
-      "ts_rolling_stream" -> ((s, dir) =>
-        graft.ts.StreamMonitors.rollingSlice(sharedMonitors(s, dir))),
-      // streaming CUSUM drift detection: running sum of prefix-z
-      // terms (5 scalars of state per series); the oracle is the
-      // closed form — two stacked cumulative windows
-      "ts_cusum_stream" -> ((s, dir) =>
-        graft.ts.StreamMonitors.cusumSlice(sharedMonitors(s, dir))),
-      // STREAMING session windows via Spark's NATIVE session_window
-      // stateful operator (both engines merge on diff <= gap); shares
-      // the batch sessionRange oracle — engine-managed session state
-      // must reproduce the closed-form lag/cumsum derivation
-      "ts_session_stream" -> ((s, dir) =>
-        StreamSessions.sessionStreamOnce(s, monthSamples(s, dir),
-          agg = "avg", gapMs = 12 * HOUR,
-          fromMs = Some(T0), toMs = Some(T31), nChunks = 2)),
-      // STREAMING gap detection: the outage page fires when the pipe
-      // comes back — one long of state per series; oracle = the batch
-      // gap report (bracketed-gap duality)
-      "ts_gaps_stream" -> ((s, dir) =>
-        graft.ts.StreamMonitors.gapsSlice(sharedMonitors(s, dir))),
-      // the shared pass itself, bench-visible: a FRESH multi-monitor
-      // run every invocation (no cache), oracle = the tagged union of
-      // the four monitors' oracles
-      "ts_stream_shared_pass" -> ((s, dir) =>
-        graft.ts.StreamMonitors.monitorsOnce(s, monthSamples(s, dir),
-          zThreshold = 2.5, cusumThreshold = 3.0, q = 0.5, span = 10,
-          gapThresholdMs = 2 * DAY, seasonalThreshold = 2.0, seasonalMode = "dow",
-          fromMs = Some(T0), toMs = Some(T31),
-          nChunks = 2, cacheKey = None,
-          burnShortMs = 2 * DAY, burnLongMs = 7 * DAY, burnHopMs = DAY,
-          burnBudgetPerSec = 4.0e-4, burnThreshold = 1.5,
-          hampelSpan = 3, hampelK = 3.0,
-          sketchGamma = 1.05, sketchWindowMs = 7 * DAY)),
-      // streaming SLO burn-rate: THE canonical paging monitor, folded
-      // into the shared pass's state (bounded pending-window map); a
-      // hop window emits when the replay passes its end, so the slice
-      // equals the batch ts_burn_rate restricted to closed windows
-      "ts_burn_rate_stream" -> ((s, dir) =>
-        graft.ts.StreamMonitors.burnSlice(sharedMonitors(s, dir))),
-      // streaming Hampel filter: the robust cleaning monitor folded
-      // into the shared pass (ring state = the centered batch window
-      // of the row span back); tail rows with incomplete future
-      // windows never emit, so the slice equals batch ts_hampel
-      // restricted to rows with >= span successors
-      "ts_hampel_stream" -> ((s, dir) =>
-        graft.ts.StreamMonitors.hampelSlice(sharedMonitors(s, dir))),
-      // streaming windowed DDSketch: the quantile family's streaming
-      // twin, folded into the shared pass (open-window bucket map
-      // state, <= log_gamma buckets); a tumbling window emits its
-      // (bucket, n) sketch rows when the replay passes its end, so the
-      // slice equals batch ddsketchWindowed restricted to closed
-      // windows
-      "ts_ddsketch_stream" -> ((s, dir) =>
-        graft.ts.StreamMonitors.ddsketchSlice(sharedMonitors(s, dir))),
-
-      // ---- reference-SERIALIZED mid-bucket state goldens (VERDICT r06
-      // #5): 1.4.9_with_avg_ctx.rdb carries an AVG rule's RUNNING
-      // context (sum 8.0, count 2.0, open bucket 0) alongside its
-      // source's raw samples. Engine route: recompute the in-flight
-      // bucket from the RAW samples through the normal LATEST read;
-      // oracle route: finalize the reference's serialized context
-      // (ctx_val/ctx_cnt). Two independent derivations that must meet —
-      // the expected values come from the reference's own state, not
-      // our batch oracle.
-      "ts_rdb_avg_ctx" -> ((s, _) =>
-        RdbState.rules.map { case (src, r) =>
-          Compaction.latest(
-            RdbState.samples(s).filter(col("series") === src),
-            Compaction.Rule(r.agg, r.bucketMs, r.alignMs))
-            .select(lit(r.dest).as("series"), col("ts"), col("value"))
-        }.reduce(_ unionByName _)),
-      // the reference test's follow-up `TS.ADD ts1 1500 100`
-      // (test_rdbs.py:82-84) closes bucket 0: the engine's flushed
-      // materialization over samples+late must equal the reference's
-      // context flush ([[0, 4]] in the flow test's own assertion)
-      "ts_rdb_avg_ctx_flush" -> ((s, _) => {
-        import s.implicits._
-        val late = Seq(RdbState.FollowUpAdd).toDF("series", "ts", "value")
-        RdbState.rules.map { case (src, r) =>
-          Compaction.materialize(
-            RdbState.samples(s).filter(col("series") === src)
-              .unionByName(late.filter(col("series") === src)),
-            Compaction.Rule(r.agg, r.bucketMs, r.alignMs))
-            .select(lit(r.dest).as("series"), col("ts"), col("value"))
-        }.reduce(_ unionByName _)
-      }),
-    )
-
-  /** Last GLT sample timestamp (2013-08-01; the reference's rdb creator
-    * skips pre-epoch rows, so the series span is 1970..2013). */
-  private val GLT_END = 1375315200000L
-
-  /** Series for the gap-fill goldens: real temperature + its paired
-    * uncertainty series (different value distributions, same cadence). */
-  private val GLT_GAP_SERIES = Seq(
-    "AverageTemperature:Toronto", "AverageTemperatureUncertainty:Toronto",
-    "AverageTemperature:Karachi")
-  private val GLT_GAP_IN = GLT_GAP_SERIES.map(s => s"'$s'").mkString(", ")
-
-  private val annQueryIds: Seq[Long] = Seq(0L, 97L, 194L, 291L, 388L, 485L)
-  // distinct ids for the SQL-surface twin so the two entries cannot
-  // mask each other's results
-  private val sqlAnnQueryIds: Seq[Long] = Seq(11L, 108L, 205L, 302L, 399L, 496L)
-
-  /** One flushed compaction rule as SQL over the `samples` CTE —
-    * shared by both multirule oracles. */
-  private def flushedRuleOracleSql(agg: String, aggSql: String, dur: Long): String =
-    s"""SELECT series || '_${agg.toUpperCase}_$dur' AS series, bucket AS ts, value FROM (
-       |  SELECT *, max(bucket) OVER (PARTITION BY series) AS maxb FROM (
-       |    SELECT series, ${TSModel.bucketStartSql("ts", dur)} AS bucket,
-       |           $aggSql AS value
-       |    FROM samples GROUP BY 1, 2)
-       |) WHERE bucket < maxb""".stripMargin
-
-  /** Flushed TWA dest (batch and streaming paths share it — the
-    * streaming runner converges to the batch materialization). */
-  private def twaFlushedOracleSql: String =
-    s"""WITH twa AS (
-       |${Twa.sql(DAY, 0L, None, None, None)}
-       |), agg AS (
-       |  SELECT series, bucket, twa_value AS value FROM twa
-       |) SELECT series || '_TWA_$DAY' AS series, bucket AS ts, value
-       |  FROM (SELECT *, max(bucket) OVER (PARTITION BY series) AS maxb FROM agg)
-       |  WHERE bucket < maxb""".stripMargin
-
-  /** Fixture labels plus an OPTIONAL `tier` label on the user%3==0
-    * subset (ts_mrange_selected_labels: absent labels must reply
-    * null). */
-  private def tieredLabels(s: SparkSession, dir: String): DataFrame =
-    TSModel.labels(s, dir).select(col("series"),
-      when(element_at(col("labels"), "user").cast("int") % 3 === 0,
-        map_concat(col("labels"), map(lit("tier"), lit("gold"))))
-        .otherwise(col("labels")).as("labels"))
-
-  /** Astral-plane docs planted into text_char_entropy on both sides:
-    * emoji (U+1F600..) and musical symbols (U+1D11E) are supplementary
-    * codepoints — 2 UTF-16 units, 1 codepoint — so entropy_bits and
-    * distinct_chars diverge if either side counts units. It's a
-    * possessive apostrophe too (the oracle literal must escape it). */
-  private val entropyPlantDocs: Seq[(Long, String)] = Seq(
-    (9100000L, "emoji run 😀😀😁 and clef 𝄞 in one doc"),
-    (9100001L, "Ada's 🚀🚀🚀 rocket text"))
-
-  /** URL-bearing docs planted into text_domain_freq on both sides:
-    * mixed-case hosts, repeated domains, multiple URLs per doc, and an
-    * apostrophe (the oracle interpolates these as SQL literals — the
-    * hostile plant proves the '' escaping, ADVICE r05). */
-  private val domainPlantTexts: Seq[String] = Seq(
-    "see https://example.com/a and https://example.com/b plus http://data.example.org/x",
-    "mirror at https://Example.COM/z and https://cdn.foo.net/y then https://example.com again",
-    "O'Brien's mirror: https://example.com/obrien and https://cdn.foo.net/o'b")
-
-  /** Orders as a second samples source: one series per customer. */
-  private def ordersSamples(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"$dir/orders.parquet")
-      .select(
-        concat(lit("cust_"), col("o_custkey")).as("series"),
-        unix_millis(col("o_orderdate").cast("timestamp")).as("ts"), // NTZ -> UTC instant
-        col("o_totalprice").as("value"))
-
-  private val ordersCte: String =
-    """WITH samples AS (
-      |  SELECT 'cust_' || CAST(o_custkey AS VARCHAR) AS series,
-      |         epoch_ms(o_orderdate) AS ts, o_totalprice AS value
-      |  FROM orders
-      |)""".stripMargin
-
-  /** Hour-coarsened samples: collapses each series' samples into hourly
-    * duplicate groups so duplicate policies have real work to do. The
-    * fixture carries no NaN duplicate collisions, so three synthetic
-    * series plant the reference NaN-fold cases (valid-wins under
-    * FIRST/LAST, NaN-first poisoning under MIN/MAX/SUM — reference
-    * generic_chunk.c:62-96); the oracle plants the identical rows. */
-  private def dupSamples(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val nan = Double.NaN
-    val plant = Seq(
-      ("nan_a", 0L, nan, 1L), ("nan_a", 0L, 5.0, 2L), ("nan_a", 0L, 3.0, 3L),
-      ("nan_b", 0L, 5.0, 1L), ("nan_b", 0L, nan, 2L), ("nan_b", 0L, 2.0, 3L),
-      ("nan_c", 0L, nan, 1L), ("nan_c", 0L, nan, 2L))
-      .toDF("series", "ts", "value", "seq")
-    TSModel.samplesWithSeq(s, dir)
-      .withColumn("ts", TSModel.bucketStart(col("ts"), HOUR))
-      .unionByName(plant)
-  }
-
-  private val dupCte: String =
-    s"""WITH dsamples AS (
-       |  SELECT event_type || '_' || CAST(user_id AS VARCHAR) AS series,
-       |         ${TSModel.bucketStartSql("epoch_ms(ts)", HOUR)} AS ts,
-       |         value, event_id AS seq
-       |  FROM events
-       |  UNION ALL
-       |  SELECT * FROM (VALUES
-       |    ('nan_a', 0::BIGINT, 'NaN'::DOUBLE, 1::BIGINT),
-       |    ('nan_a', 0::BIGINT, 5.0::DOUBLE, 2::BIGINT),
-       |    ('nan_a', 0::BIGINT, 3.0::DOUBLE, 3::BIGINT),
-       |    ('nan_b', 0::BIGINT, 5.0::DOUBLE, 1::BIGINT),
-       |    ('nan_b', 0::BIGINT, 'NaN'::DOUBLE, 2::BIGINT),
-       |    ('nan_b', 0::BIGINT, 2.0::DOUBLE, 3::BIGINT),
-       |    ('nan_c', 0::BIGINT, 'NaN'::DOUBLE, 1::BIGINT),
-       |    ('nan_c', 0::BIGINT, 'NaN'::DOUBLE, 2::BIGINT)
-       |  ) v(series, ts, value, seq)
-       |)""".stripMargin
-
-  def oracleSql: Map[String, String] =
-    rangeQueries.map { case (n, (a, s)) => n -> rangeO(a, s) } ++
-    graft.ts.Tsbs.oracles ++ Map(
-      "ts_range_filter_ts" ->
-        s"""${TSModel.samplesCte} SELECT series, ts, value FROM samples
-           |WHERE series = '$oneSeries' AND ts IN ($filterTsListSql)""".stripMargin,
-      "ts_range_count" ->
-        s"""SELECT * FROM (${rangeO(RangeArgs(from = Some(T0), to = Some(T31),
-             aggs = Seq("avg"), bucketMs = DAY), Some(oneSeries))})
-           |ORDER BY ts LIMIT 7""".stripMargin,
-      "ts_range_twa" ->
-        s"""SELECT series, bucket AS ts, twa_value FROM (
-           |${Twa.sql(DAY, 0L, Some(T0), Some(T31), seriesPred(oneSeries))})""".stripMargin,
-      "ts_range_twa_empty" ->
-        s"""SELECT series, bucket AS ts, twa_value FROM (
-           |${Twa.emptySql(6 * HOUR, 0L, Some(T0), Some(T31), seriesPred(oneSeries))})""".stripMargin,
-      "ts_range_empty_sum" -> emptySumOracle,
-      "ts_range_empty_filter_value" -> emptyFilterValueOracle,
-      "ts_range_empty_multi" -> emptyMultiOracle,
-      "ts_range_empty_locf" -> emptyLocfOracle,
-      "ts_range_twa_filter_value" ->
-        s"""SELECT series, bucket AS ts, twa_value FROM (
-           |${Twa.sql(DAY, 0L, Some(T0), Some(T31), seriesPred(oneSeries),
-                      Some("value >= 50.0 AND value <= 200.0"))})""".stripMargin,
-      "ts_catalog_lifecycle" -> Catalog.lifecycleSql(),
-      "ts_queryindex" ->
-        s"""WITH ${Multi.labelsCte}
-           |SELECT series FROM series_labels
-           |WHERE "type" = 'click' AND "user" NOT IN ('1', '2', '3')""".stripMargin,
-      "ts_mget" ->
-        s"""${TSModel.samplesCte}, ${Multi.labelsCte}
-           |SELECT series, (max(struct_pack(t := ts, v := value))).t AS ts,
-           |       (max(struct_pack(t := ts, v := value))).v AS value
-           |FROM samples JOIN series_labels USING (series)
-           |WHERE "type" = 'purchase' GROUP BY series""".stripMargin,
-      "ts_get" ->
-        s"""${TSModel.samplesCte}
-           |SELECT series, (max(struct_pack(t := ts, v := value))).t AS ts,
-           |       (max(struct_pack(t := ts, v := value))).v AS value
-           |FROM samples WHERE series = '$oneSeries' GROUP BY series""".stripMargin,
-      "ts_mrange_filtered" ->
-        s"""${TSModel.samplesCte}, ${Multi.labelsCte}, matched AS (
-           |  SELECT series FROM series_labels
-           |  WHERE "type" IN ('click','view') AND "user" IN ('1','2','3','4','5','6','7')
-           |), agg AS (
-           |  SELECT series, ${TSModel.bucketStartSql("ts", 2 * DAY)} AS bucket, ${Aggs.sql("max")}
-           |  FROM samples JOIN matched USING (series)
-           |  WHERE ts >= $T0 AND ts <= $T31 GROUP BY 1, 2
-           |) SELECT series, bucket AS ts, max_value FROM agg WHERE max_value IS NOT NULL""".stripMargin,
-      "ts_mrange_groupby" ->
-        s"""${TSModel.samplesCte}, ${Multi.labelsCte}, per AS (
-           |  SELECT series, ${TSModel.bucketStartSql("ts", DAY)} AS bucket, ${Aggs.sql("avg")}
-           |  FROM samples JOIN series_labels USING (series)
-           |  WHERE ts >= $T0 AND ts <= $T31
-           |    AND "type" IN ('click','view','purchase','signup','error')
-           |  GROUP BY 1, 2
-           |) SELECT 'type=' || "type" AS series, bucket AS ts,
-           |         coalesce(sum(avg_value) FILTER (WHERE NOT isnan(avg_value)), 'NaN'::DOUBLE) AS avg_value
-           |  FROM per JOIN series_labels USING (series)
-           |  WHERE avg_value IS NOT NULL GROUP BY 1, 2""".stripMargin,
-      // streaming twin: the final merged sink must land on the exact
-      // same relation the batch operator computes
-      "ts_mrange_groupby_stream" ->
-        s"""${TSModel.samplesCte}, ${Multi.labelsCte}, per AS (
-           |  SELECT series, ${TSModel.bucketStartSql("ts", DAY)} AS bucket, ${Aggs.sql("avg")}
-           |  FROM samples JOIN series_labels USING (series)
-           |  WHERE ts >= $T0 AND ts <= $T31
-           |    AND "type" IN ('click','view','purchase','signup','error')
-           |  GROUP BY 1, 2
-           |) SELECT 'type=' || "type" AS series, bucket AS ts,
-           |         coalesce(sum(avg_value) FILTER (WHERE NOT isnan(avg_value)), 'NaN'::DOUBLE) AS avg_value
-           |  FROM per JOIN series_labels USING (series)
-           |  WHERE avg_value IS NOT NULL GROUP BY 1, 2""".stripMargin,
-      "ts_mrange_groupby_std" ->
-        s"""${TSModel.samplesCte}, ${Multi.labelsCte}, per AS (
-           |  SELECT series, ${TSModel.bucketStartSql("ts", 2 * DAY)} AS bucket, ${Aggs.sql("avg")}
-           |  FROM samples JOIN series_labels USING (series)
-           |  WHERE ts >= $T0 AND ts <= $T31
-           |    AND "type" IN ('click','view','purchase')
-           |  GROUP BY 1, 2
-           |) SELECT 'user=' || "user" AS series, bucket AS ts,
-           |         coalesce(stddev_pop(avg_value) FILTER (WHERE NOT isnan(avg_value)), 'NaN'::DOUBLE) AS avg_value
-           |  FROM per JOIN series_labels USING (series)
-           |  WHERE avg_value IS NOT NULL GROUP BY 1, 2""".stripMargin,
-      // streaming twin shares the batch std.p oracle verbatim
-      "ts_mrange_groupby_std_stream" ->
-        s"""${TSModel.samplesCte}, ${Multi.labelsCte}, per AS (
-           |  SELECT series, ${TSModel.bucketStartSql("ts", 2 * DAY)} AS bucket, ${Aggs.sql("avg")}
-           |  FROM samples JOIN series_labels USING (series)
-           |  WHERE ts >= $T0 AND ts <= $T31
-           |    AND "type" IN ('click','view','purchase')
-           |  GROUP BY 1, 2
-           |) SELECT 'user=' || "user" AS series, bucket AS ts,
-           |         coalesce(stddev_pop(avg_value) FILTER (WHERE NOT isnan(avg_value)), 'NaN'::DOUBLE) AS avg_value
-           |  FROM per JOIN series_labels USING (series)
-           |  WHERE avg_value IS NOT NULL GROUP BY 1, 2""".stripMargin,
-      // per-series TWA then cross-series reduce: Twa.sql (the full
-      // boundary-interpolation oracle) as the per-series leg, the usual
-      // label-join reduce on top; round-9 both sides. Batch query and
-      // streaming twin share this verbatim.
-      "ts_mrange_groupby_twa" -> mrangeGroupByTwaOracle,
-      "ts_mrange_groupby_twa_stream" -> mrangeGroupByTwaOracle,
-      "ts_sql_tvf_mrange_groupby_twa" -> mrangeGroupByTwaOracle,
-      "ts_mrange_groupby_empty" ->
-        s"""${TSModel.samplesCte}, ${Multi.labelsCte}, agg AS (
-           |  SELECT series, ${TSModel.bucketStartSql("ts", DAY)} AS bucket,
-           |         sum(value) FILTER (WHERE NOT isnan(value)) AS v
-           |  FROM samples JOIN series_labels USING (series)
-           |  WHERE ts >= $T0 AND ts <= $T31 AND "type" IN ('click','view')
-           |  GROUP BY 1, 2
-           |), bounds AS (
-           |  SELECT series, min(bucket) AS lo, max(bucket) AS hi FROM agg GROUP BY 1
-           |), spine AS (
-           |  SELECT series, unnest(generate_series(lo, hi, $DAY)) AS bucket FROM bounds
-           |), filled AS (
-           |  SELECT spine.series, spine.bucket, coalesce(v, 0.0) AS v
-           |  FROM spine LEFT JOIN agg USING (series, bucket)
-           |)
-           |SELECT 'type=' || "type" AS series, bucket AS ts,
-           |       coalesce(sum(v) FILTER (WHERE NOT isnan(v)), 'NaN'::DOUBLE) AS sum_value
-           |FROM filled JOIN series_labels USING (series)
-           |GROUP BY 1, 2""".stripMargin,
-      "ts_mrange_groupby_multi" ->
-        s"""${TSModel.samplesCte}, ${Multi.labelsCte}, per AS (
-           |  SELECT series, ${TSModel.bucketStartSql("ts", 2 * DAY)} AS bucket,
-           |         ${Aggs.sql("min")}, ${Aggs.sql("max")}
-           |  FROM samples JOIN series_labels USING (series)
-           |  WHERE ts >= $T0 AND ts <= $T31
-           |    AND "type" IN ('click','view','purchase')
-           |  GROUP BY 1, 2
-           |) SELECT 'type=' || "type" AS series, bucket AS ts,
-           |         coalesce(sum(min_value) FILTER (WHERE NOT isnan(min_value)), 'NaN'::DOUBLE) AS min_value,
-           |         coalesce(sum(max_value) FILTER (WHERE NOT isnan(max_value)), 'NaN'::DOUBLE) AS max_value
-           |  FROM per JOIN series_labels USING (series)
-           |  WHERE min_value IS NOT NULL OR max_value IS NOT NULL
-           |  GROUP BY 1, 2""".stripMargin,
-      // streaming twin shares the batch multi-agg oracle verbatim
-      "ts_mrange_groupby_multi_stream" ->
-        s"""${TSModel.samplesCte}, ${Multi.labelsCte}, per AS (
-           |  SELECT series, ${TSModel.bucketStartSql("ts", 2 * DAY)} AS bucket,
-           |         ${Aggs.sql("min")}, ${Aggs.sql("max")}
-           |  FROM samples JOIN series_labels USING (series)
-           |  WHERE ts >= $T0 AND ts <= $T31
-           |    AND "type" IN ('click','view','purchase')
-           |  GROUP BY 1, 2
-           |) SELECT 'type=' || "type" AS series, bucket AS ts,
-           |         coalesce(sum(min_value) FILTER (WHERE NOT isnan(min_value)), 'NaN'::DOUBLE) AS min_value,
-           |         coalesce(sum(max_value) FILTER (WHERE NOT isnan(max_value)), 'NaN'::DOUBLE) AS max_value
-           |  FROM per JOIN series_labels USING (series)
-           |  WHERE min_value IS NOT NULL OR max_value IS NOT NULL
-           |  GROUP BY 1, 2""".stripMargin,
-      "ts_mrange_withlabels" ->
-        s"""${TSModel.samplesCte}, ${Multi.labelsCte}, matched AS (
-           |  SELECT series, "type", "user" FROM series_labels WHERE "user" IN ('1','2','3')
-           |), agg AS (
-           |  SELECT series, ${TSModel.bucketStartSql("ts", 7 * DAY)} AS bucket, ${Aggs.sql("avg")}
-           |  FROM samples JOIN matched USING (series)
-           |  WHERE ts >= $T0 AND ts <= $T31 GROUP BY 1, 2
-           |) SELECT series, bucket AS ts, avg_value,
-           |         "type" AS label_type, "user" AS label_user
-           |  FROM agg JOIN matched USING (series) WHERE avg_value IS NOT NULL""".stripMargin,
-      "ts_mrange_selected_labels" ->
-        s"""${TSModel.samplesCte}, ${Multi.labelsCte}, matched AS (
-           |  SELECT series, "user",
-           |         CASE WHEN CAST("user" AS INT) % 3 = 0 THEN 'gold' END AS tier
-           |  FROM series_labels WHERE "user" IN ('1','2','3','4','5','6')
-           |), agg AS (
-           |  SELECT series, ${TSModel.bucketStartSql("ts", 7 * DAY)} AS bucket, ${Aggs.sql("avg")}
-           |  FROM samples JOIN matched USING (series)
-           |  WHERE ts >= $T0 AND ts <= $T31 GROUP BY 1, 2
-           |) SELECT series, bucket AS ts, avg_value,
-           |         "user" AS label_user, tier AS label_tier
-           |  FROM agg JOIN matched USING (series) WHERE avg_value IS NOT NULL""".stripMargin,
-      "ts_nrange_pivot" ->
-        s"""${TSModel.samplesCte}, agg AS (
-           |  SELECT series, ${TSModel.bucketStartSql("ts", DAY)} AS bucket, ${Aggs.sql("avg")}
-           |  FROM samples WHERE series IN ('click_1','click_2','click_3')
-           |    AND ts >= $T0 AND ts <= $T31 GROUP BY 1, 2
-           |) SELECT bucket AS ts,
-           |    coalesce(max(avg_value) FILTER (WHERE series = 'click_1'), 'NaN'::DOUBLE) AS click_1,
-           |    coalesce(max(avg_value) FILTER (WHERE series = 'click_2'), 'NaN'::DOUBLE) AS click_2,
-           |    coalesce(max(avg_value) FILTER (WHERE series = 'click_3'), 'NaN'::DOUBLE) AS click_3
-           |  FROM agg WHERE avg_value IS NOT NULL GROUP BY 1""".stripMargin,
-      // reverse variant: the driver compare is order-insensitive, so the
-      // ascending oracle pins the row SET produced by the reverse path
-      "ts_nrange_pivot_rev" ->
-        s"""${TSModel.samplesCte}, agg AS (
-           |  SELECT series, ${TSModel.bucketStartSql("ts", DAY)} AS bucket, ${Aggs.sql("avg")}
-           |  FROM samples WHERE series IN ('click_1','click_2','click_3')
-           |    AND ts >= $T0 AND ts <= $T31 GROUP BY 1, 2
-           |) SELECT bucket AS ts,
-           |    coalesce(max(avg_value) FILTER (WHERE series = 'click_1'), 'NaN'::DOUBLE) AS click_1,
-           |    coalesce(max(avg_value) FILTER (WHERE series = 'click_2'), 'NaN'::DOUBLE) AS click_2,
-           |    coalesce(max(avg_value) FILTER (WHERE series = 'click_3'), 'NaN'::DOUBLE) AS click_3
-           |  FROM agg WHERE avg_value IS NOT NULL GROUP BY 1""".stripMargin,
-      "ts_nrange_per_key_aggs" ->
-        s"""${TSModel.samplesCte}, agg AS (
-           |  SELECT series, ${TSModel.bucketStartSql("ts", 2 * DAY)} AS bucket,
-           |         ${Aggs.sql("avg")}, ${Aggs.sql("max")}, ${Aggs.sql("count")}
-           |  FROM samples WHERE series IN ('click_1','click_2','click_3')
-           |    AND ts >= $T0 AND ts <= $T31 GROUP BY 1, 2
-           |) SELECT bucket AS ts,
-           |    coalesce(max(avg_value) FILTER (WHERE series = 'click_1'), 'NaN'::DOUBLE) AS click_1_avg,
-           |    coalesce(max(max_value) FILTER (WHERE series = 'click_2'), 'NaN'::DOUBLE) AS click_2_max,
-           |    coalesce(max(CAST(count_value AS DOUBLE)) FILTER (WHERE series = 'click_3'), 'NaN'::DOUBLE) AS click_3_count
-           |  FROM agg GROUP BY 1""".stripMargin,
-      "ts_querylabels_values" ->
-        s"""WITH ${Multi.labelsCte}
-           |SELECT DISTINCT "type" AS value FROM series_labels""".stripMargin,
-      "ts_querylabels_names" ->
-        "SELECT unnest(['type', 'user']) AS label",
-      "ts_querylabels_values_filtered" ->
-        s"""WITH ${Multi.labelsCte}
-           |SELECT DISTINCT "user" AS value FROM series_labels
-           |WHERE "type" = 'purchase' AND "user" IN ('1','2','3','4')""".stripMargin,
-      // reference NaN fold (handleDuplicateSample generic_chunk.c:62-96):
-      // FIRST/LAST -> the first/last VALID value (NaN only when all are
-      // NaN); MIN/MAX/SUM -> NaN when the first-arriving sample is NaN
-      // (later valid writes are rejected), else the agg of valid values
-      "ts_dup_policy_last" ->
-        s"""$dupCte SELECT series, ts,
-           |  coalesce((max(struct_pack(s := seq, v := value)) FILTER (WHERE NOT isnan(value))).v,
-           |           'NaN'::DOUBLE) AS value
-           |FROM dsamples GROUP BY series, ts""".stripMargin,
-      "ts_dup_policy_first" ->
-        s"""$dupCte SELECT series, ts,
-           |  coalesce((min(struct_pack(s := seq, v := value)) FILTER (WHERE NOT isnan(value))).v,
-           |           'NaN'::DOUBLE) AS value
-           |FROM dsamples GROUP BY series, ts""".stripMargin,
-      "ts_dup_policy_min" ->
-        s"""$dupCte SELECT series, ts,
-           |  CASE WHEN isnan((min(struct_pack(s := seq, v := value))).v) THEN 'NaN'::DOUBLE
-           |       ELSE min(value) FILTER (WHERE NOT isnan(value)) END AS value
-           |FROM dsamples GROUP BY series, ts""".stripMargin,
-      "ts_dup_policy_sum" ->
-        s"""$dupCte SELECT series, ts,
-           |  CASE WHEN isnan((min(struct_pack(s := seq, v := value))).v) THEN 'NaN'::DOUBLE
-           |       ELSE sum(value) FILTER (WHERE NOT isnan(value)) END AS value
-           |FROM dsamples GROUP BY series, ts""".stripMargin,
-      "ts_dup_policy_max" ->
-        s"""$dupCte SELECT series, ts,
-           |  CASE WHEN isnan((min(struct_pack(s := seq, v := value))).v) THEN 'NaN'::DOUBLE
-           |       ELSE max(value) FILTER (WHERE NOT isnan(value)) END AS value
-           |FROM dsamples GROUP BY series, ts""".stripMargin,
-      "ts_dup_policy_block" ->
-        s"${TSModel.samplesCte} SELECT series, ts, value FROM samples",
-      // maddStatus differential: the reference's sequential retention +
-      // duplicate checks re-derived with the same two windows
-      "ts_madd_status" ->
-        s"""$dupCte, msamples AS (
-           |  SELECT * FROM dsamples
-           |  UNION ALL
-           |  SELECT * FROM (VALUES
-           |    ('ret_a', ${100 * DAY}::BIGINT, 1.0::DOUBLE, 1::BIGINT),
-           |    ('ret_a', ${5 * DAY}::BIGINT, 2.0::DOUBLE, 2::BIGINT),
-           |    ('ret_a', ${95 * DAY}::BIGINT, 3.0::DOUBLE, 3::BIGINT)
-           |  ) v(series, ts, value, seq)
-           |), pm AS (
-           |  SELECT series, ts, value, seq,
-           |    max(ts) OVER (PARTITION BY series ORDER BY seq
-           |                  ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS prev_max
-           |  FROM msamples
-           |), r1 AS (
-           |  SELECT *, (prev_max IS NOT NULL AND ts < prev_max
-           |             AND prev_max - ts > ${10 * DAY}) AS ret_rej
-           |  FROM pm
-           |), fs AS (
-           |  SELECT *, min(CASE WHEN NOT ret_rej
-           |                     THEN struct_pack(s := seq, v := value) END)
-           |              OVER (PARTITION BY series, ts) AS f
-           |  FROM r1
-           |)
-           |SELECT series, ts, value, seq,
-           |  CASE WHEN ret_rej THEN FALSE
-           |       WHEN seq = (f).s THEN TRUE ELSE FALSE END AS ok,
-           |  CASE WHEN ret_rej THEN 'TSDB: Timestamp is older than retention'
-           |       WHEN seq = (f).s THEN NULL
-           |       ELSE '${WritePath.upsertErr}' END AS err
-           |FROM fs""".stripMargin,
-      "ts_dup_policy_per_series" ->
-        s"""$dupCte, ${Multi.labelsCte}
-           |SELECT series, ts,
-           |  CASE "type"
-           |    WHEN 'click' THEN
-           |      CASE WHEN isnan((min(struct_pack(s := seq, v := value))).v) THEN 'NaN'::DOUBLE
-           |           ELSE min(value) FILTER (WHERE NOT isnan(value)) END
-           |    WHEN 'view' THEN
-           |      CASE WHEN isnan((min(struct_pack(s := seq, v := value))).v) THEN 'NaN'::DOUBLE
-           |           ELSE max(value) FILTER (WHERE NOT isnan(value)) END
-           |    WHEN 'purchase' THEN
-           |      CASE WHEN isnan((min(struct_pack(s := seq, v := value))).v) THEN 'NaN'::DOUBLE
-           |           ELSE sum(value) FILTER (WHERE NOT isnan(value)) END
-           |    WHEN 'signup' THEN
-           |      coalesce((min(struct_pack(s := seq, v := value)) FILTER (WHERE NOT isnan(value))).v,
-           |               'NaN'::DOUBLE)
-           |    ELSE
-           |      coalesce((max(struct_pack(s := seq, v := value)) FILTER (WHERE NOT isnan(value))).v,
-           |               'NaN'::DOUBLE)
-           |  END AS value
-           |FROM dsamples LEFT JOIN series_labels USING (series)
-           |GROUP BY series, ts, "type"""".stripMargin,
-      "ts_mrange_count" ->
-        s"""${TSModel.samplesCte}, ${Multi.labelsCte}, agg AS (
-           |  SELECT series, ${TSModel.bucketStartSql("ts", DAY)} AS bucket, ${Aggs.sql("avg")}
-           |  FROM samples JOIN series_labels USING (series)
-           |  WHERE "type" IN ('click','view') AND ts >= $T0 AND ts <= $T31
-           |  GROUP BY 1, 2
-           |) SELECT series, bucket AS ts, avg_value FROM agg
-           |  WHERE avg_value IS NOT NULL
-           |  QUALIFY row_number() OVER (PARTITION BY series ORDER BY bucket) <= 5""".stripMargin,
-      "ts_mrange_latest" ->
-        s"""${TSModel.samplesCte}, ${Multi.labelsCte}, agg AS (
-           |  SELECT series, ${TSModel.bucketStartSql("ts", DAY)} AS bucket,
-           |         avg(value) FILTER (WHERE NOT isnan(value)) AS value
-           |  FROM samples JOIN series_labels USING (series)
-           |  WHERE "type" = 'click' GROUP BY 1, 2
-           |) SELECT series || '_AVG_$DAY' AS series, bucket AS ts, value FROM agg""".stripMargin,
-      "ts_mrange_latest_count_rev" ->
-        s"""${TSModel.samplesCte}, ${Multi.labelsCte}, agg AS (
-           |  SELECT series, ${TSModel.bucketStartSql("ts", DAY)} AS bucket,
-           |         avg(value) FILTER (WHERE NOT isnan(value)) AS value
-           |  FROM samples JOIN series_labels USING (series)
-           |  WHERE "type" = 'click' GROUP BY 1, 2
-           |) SELECT series || '_AVG_$DAY' AS series, bucket AS ts, value FROM agg
-           |  QUALIFY row_number() OVER (PARTITION BY series ORDER BY bucket DESC) <= 3""".stripMargin,
-      "ts_mrange_nolatest" ->
-        s"""${TSModel.samplesCte}, ${Multi.labelsCte}, agg AS (
-           |  SELECT series, ${TSModel.bucketStartSql("ts", DAY)} AS bucket,
-           |         avg(value) FILTER (WHERE NOT isnan(value)) AS value
-           |  FROM samples JOIN series_labels USING (series)
-           |  WHERE "type" = 'click' GROUP BY 1, 2
-           |) SELECT series || '_AVG_$DAY' AS series, bucket AS ts, value
-           |  FROM (SELECT *, max(bucket) OVER (PARTITION BY series) AS maxb FROM agg)
-           |  WHERE bucket < maxb""".stripMargin,
-      "ts_mget_latest" ->
-        s"""${TSModel.samplesCte}, ${Multi.labelsCte}, agg AS (
-           |  SELECT series, ${TSModel.bucketStartSql("ts", DAY)} AS bucket,
-           |         max(value) FILTER (WHERE NOT isnan(value)) AS value
-           |  FROM samples JOIN series_labels USING (series)
-           |  WHERE "type" = 'purchase' GROUP BY 1, 2
-           |) SELECT series || '_MAX_$DAY' AS series,
-           |         (max(struct_pack(t := bucket, v := value))).t AS ts,
-           |         (max(struct_pack(t := bucket, v := value))).v AS value
-           |  FROM agg GROUP BY 1""".stripMargin,
-      // derived from series_labels under the SAME predicates (not the
-      // hardcoded unfiltered answer — ADVICE r02)
-      "ts_querylabels_names_filtered" ->
-        s"""WITH ${Multi.labelsCte}
-           |SELECT DISTINCT label FROM (
-           |  SELECT unnest(['type', 'user']) AS label FROM series_labels
-           |  WHERE "type" = 'click' AND "user" IN ('1','2','3')
-           |)""".stripMargin,
-      "ts_querylabels_names_nomatch" ->
-        s"""WITH ${Multi.labelsCte}
-           |SELECT DISTINCT label FROM (
-           |  SELECT unnest(['type', 'user']) AS label FROM series_labels
-           |  WHERE "type" = 'tombstone'
-           |)""".stripMargin,
-      "ts_retention" ->
-        s"""${TSModel.samplesCte}
-           |SELECT series, ts, value FROM (
-           |  SELECT series, ts, value, max(ts) OVER (PARTITION BY series) AS last_ts
-           |  FROM samples
-           |) WHERE ts >= last_ts - ${10 * DAY}""".stripMargin,
-      "ts_del_range" ->
-        s"""${TSModel.samplesCte}
-           |SELECT series, ts, value FROM samples
-           |WHERE series = '$oneSeries'
-           |  AND NOT (ts BETWEEN ${T0 + 10 * DAY} AND ${T0 + 20 * DAY})""".stripMargin,
-      "ts_incrby_replay" ->
-        s"""${TSModel.samplesCte}, d AS (
-           |  SELECT series, ts, sum(value) AS delta FROM samples
-           |  WHERE series = '$oneSeries' GROUP BY series, ts
-           |) SELECT series, ts,
-           |    sum(delta) OVER (PARTITION BY series ORDER BY ts
-           |                     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS value
-           |  FROM d""".stripMargin,
-      "ts_compaction_batch" ->
-        s"""${TSModel.samplesCte}, agg AS (
-           |  SELECT series, ${TSModel.bucketStartSql("ts", DAY)} AS bucket,
-           |         avg(value) FILTER (WHERE NOT isnan(value)) AS value
-           |  FROM samples GROUP BY 1, 2
-           |) SELECT series || '_AVG_$DAY' AS series, bucket AS ts, value
-           |  FROM (SELECT *, max(bucket) OVER (PARTITION BY series) AS maxb FROM agg)
-           |  WHERE bucket < maxb""".stripMargin,
-      "ts_compaction_multirule" ->
-        s"""${TSModel.samplesCte}
-           |${flushedRuleOracleSql("avg", "avg(value) FILTER (WHERE NOT isnan(value))", DAY)}
-           |UNION ALL
-           |${flushedRuleOracleSql("max", "max(value) FILTER (WHERE NOT isnan(value))", 2 * DAY)}
-           |UNION ALL
-           |${flushedRuleOracleSql("sum", "sum(value) FILTER (WHERE NOT isnan(value))", DAY)}""".stripMargin,
-      "ts_compaction_twa" -> twaFlushedOracleSql,
-      // the TWA leg IS the shared flushed-TWA oracle (review r04: a
-      // third inline copy would drift from the val the other two TWA
-      // queries check against)
-      "ts_compaction_multirule_twa" ->
-        s"""${TSModel.samplesCte}
-           |${flushedRuleOracleSql("avg", "avg(value) FILTER (WHERE NOT isnan(value))", DAY)}
-           |UNION ALL
-           |${flushedRuleOracleSql("max", "max(value) FILTER (WHERE NOT isnan(value))", 2 * DAY)}
-           |UNION ALL
-           |SELECT * FROM (
-           |$twaFlushedOracleSql
-           |)""".stripMargin,
-      "ts_compaction_latest" ->
-        s"""${TSModel.samplesCte}, agg AS (
-           |  SELECT series, ${TSModel.bucketStartSql("ts", DAY)} AS bucket,
-           |         max(value) FILTER (WHERE NOT isnan(value)) AS value
-           |  FROM samples GROUP BY 1, 2
-           |) SELECT series || '_MAX_$DAY' AS series,
-           |         (max(struct_pack(t := bucket, v := value))).t AS ts,
-           |         (max(struct_pack(t := bucket, v := value))).v AS value
-           |  FROM agg GROUP BY 1""".stripMargin,
-      // streaming TWA converges to the batch materialization — same
-      // flushed-TWA oracle by construction
-      "ts_compaction_stream_twa" -> twaFlushedOracleSql,
-      "ts_compaction_stream" ->
-        s"""${TSModel.samplesCte}
-           |SELECT series || '_SUM_$DAY' AS series,
-           |       ${TSModel.bucketStartSql("ts", DAY)} AS ts,
-           |       sum(value) FILTER (WHERE NOT isnan(value)) AS value
-           |FROM samples GROUP BY 1, 2""".stripMargin,
-      "ts_compaction_stream_update" ->
-        s"""${TSModel.samplesCte}
-           |SELECT series || '_SUM_$DAY' AS series,
-           |       ${TSModel.bucketStartSql("ts", DAY)} AS ts,
-           |       sum(value) FILTER (WHERE NOT isnan(value)) AS value
-           |FROM samples GROUP BY 1, 2""".stripMargin,
-      "ts_compaction_stream_multirule" ->
-        s"""${TSModel.samplesCte}
-           |SELECT series || '_SUM_$DAY' AS series,
-           |       ${TSModel.bucketStartSql("ts", DAY)} AS ts,
-           |       sum(value) FILTER (WHERE NOT isnan(value)) AS value
-           |FROM samples GROUP BY 1, 2
-           |UNION ALL
-           |SELECT series || '_MAX_${2 * DAY}' AS series,
-           |       ${TSModel.bucketStartSql("ts", 2 * DAY)} AS ts,
-           |       max(value) FILTER (WHERE NOT isnan(value)) AS value
-           |FROM samples GROUP BY 1, 2""".stripMargin,
-      "ts_mrange_raw" ->
-        s"""${TSModel.samplesCte}, ${Multi.labelsCte}
-           |SELECT series, ts, value FROM samples JOIN series_labels USING (series)
-           |WHERE "type" = 'signup' AND "user" IN ('2','4','6')
-           |  AND ts >= ${T0 + 3 * DAY} AND ts <= ${T0 + 9 * DAY}""".stripMargin,
-      "ts_mrange_empty" -> {
-        val b = TSModel.bucketStartSql("ts", 12 * HOUR)
-        s"""${TSModel.samplesCte}, ${Multi.labelsCte}, matched AS (
-           |  SELECT series FROM series_labels
-           |  WHERE "type" = 'signup' AND "user" IN ('1','3','5')
-           |), agg AS (
-           |  SELECT series, $b AS bucket, sum(value) FILTER (WHERE NOT isnan(value)) AS sum_value
-           |  FROM samples JOIN matched USING (series)
-           |  WHERE ts >= $T0 AND ts <= $T31 GROUP BY 1, 2
-           |), spine AS (
-           |  SELECT series, unnest(generate_series(min(bucket), max(bucket), ${12 * HOUR})) AS bucket
-           |  FROM agg GROUP BY series
-           |) SELECT spine.series, spine.bucket AS ts, coalesce(sum_value, 0.0) AS sum_value
-           |  FROM spine LEFT JOIN agg USING (series, bucket)""".stripMargin
-      },
-      "ts_mrevrange" ->
-        s"""${TSModel.samplesCte}, ${Multi.labelsCte}, agg AS (
-           |  SELECT series, ${TSModel.bucketStartSql("ts", 7 * DAY)} AS bucket, ${Aggs.sql("count")}
-           |  FROM samples JOIN series_labels USING (series)
-           |  WHERE "type" = 'error' AND ts >= $T0 AND ts <= $T31 GROUP BY 1, 2
-           |) SELECT series, bucket AS ts, count_value FROM agg""".stripMargin,
-      "ts_mrange_excludeempty" ->
-        s"""${TSModel.samplesCte}, ${Multi.labelsCte}, agg AS (
-           |  SELECT series, ${TSModel.bucketStartSql("ts", 31 * DAY)} AS bucket, ${Aggs.sql("max")}
-           |  FROM samples JOIN series_labels USING (series)
-           |  WHERE "type" = 'view' AND ts >= $T0 AND ts <= $T31
-           |    AND value >= 250.0 AND value <= 10000.0
-           |  GROUP BY 1, 2
-           |) SELECT series, bucket AS ts, max_value FROM agg WHERE max_value IS NOT NULL""".stripMargin,
-      "ts_orders_mrange_avg" ->
-        s"""$ordersCte, agg AS (
-           |  SELECT series, ${TSModel.bucketStartSql("ts", 28 * DAY)} AS bucket,
-           |         ${Aggs.sql("avg")}, ${Aggs.sql("count")}
-           |  FROM samples GROUP BY 1, 2
-           |) SELECT series, bucket AS ts, avg_value, count_value
-           |  FROM agg WHERE avg_value IS NOT NULL OR count_value IS NOT NULL""".stripMargin,
-      "ts_orders_mget" ->
-        s"""$ordersCte
-           |SELECT series, (max(struct_pack(t := ts, v := value))).t AS ts,
-           |       (max(struct_pack(t := ts, v := value))).v AS value
-           |FROM samples GROUP BY series""".stripMargin,
-      "ts_read_cursor" ->
-        s"""${TSModel.samplesCte}
-           |SELECT series, ts, value FROM samples
-           |WHERE series = '$oneSeries' AND ts >= ${T0 + 15 * DAY}
-           |ORDER BY ts LIMIT 50""".stripMargin,
-      "ts_read_max_count" ->
-        s"""${TSModel.samplesCte}
-           |SELECT series, ts, value FROM samples
-           |WHERE series = '$oneSeries' AND ts >= 0
-           |ORDER BY ts LIMIT 25""".stripMargin,
-      // sequential IGNORE semantics as a recursive CTE: state
-      // (last_ts, last_v) advances row by row exactly like the
-      // executor-side streaming filter
-      "ts_ignore_filter" -> ignoreFilterOracle,
-      "ts_ignore_filter_per_series" -> ignorePerSeriesOracle,
-      // the streaming ingest replay has identical sequential semantics
-      // (same state machine, fed by micro-batches instead of one pass)
-      "ts_ingest_stream" -> ignoreFilterOracle,
-      "text_tokens" -> Text.tokenCountsSql,
-      "text_quality" -> Text.qualityMetricsSql,
-      "text_langid" -> Text.languageIdSql,
-      "text_fingerprint" -> Text.fingerprintSql,
-      "dedup_exact" -> Dedup.exactSql,
-      "dedup_ngram_jaccard" -> Dedup.ngramJaccardPairsSql(0.5, 300),
-      // the LSH path must reproduce the quadratic ground truth exactly
-      // (banding recall ≈ 1 at the planted-duplicate similarity)
-      "dedup_minhash_lsh" -> Dedup.ngramJaccardPairsSql(0.5, 300),
-      "dedup_embedding_cosine" -> Dedup.embeddingCosinePairsSql(0.4, 300),
-      "pipeline_contamination" -> CorpusPipeline.contaminationSql("doc_id < 3", 5L),
-      "pipeline_contamination_fuzzy" -> CorpusPipeline.contaminationFuzzySql(
-        benchPred = "doc_id < 50", trainPred = "doc_id >= 50"),
-      "pipeline_contamination_bloom" -> CorpusPipeline.contaminationSql("doc_id < 3", 5L),
-      "pipeline_contamination_frac" ->
-        CorpusPipeline.contaminationFractionSql("doc_id < 3", n = 5),
-      // exact oracles for the full-table LSH paths — valid because the
-      // fixture's true pair sets are all planted near-duplicates
-      // (jac >= 0.889 / cos ~ 1), where banding recall is
-      // deterministically 1 with the fixed seeds (verified by
-      // cross-check at both SFs); the LSH output must therefore EQUAL
-      // the exact threshold pair set
-      "dedup_minhash_lsh_full" -> Dedup.ngramJaccardPairsSql(0.5, Long.MaxValue),
-      // the last dedup path with no hash check closes: exact quadratic
-      // hamming ground truth (VERDICT r02 missing #2)
-      "dedup_simhash_pairs" -> Dedup.simhashPairsSql(3),
-      "dedup_cosine_lsh" ->
-        """WITH uni AS (
-          |  SELECT vec_id, embedding FROM embeddings
-          |  UNION ALL
-          |  SELECT vec_id + 10000000,
-          |         list_prepend(embedding[1] + CAST(0.001 AS FLOAT), embedding[2:])
-          |  FROM embeddings WHERE vec_id < 10
-          |), scored AS (
-          |  SELECT a.vec_id AS i, b.vec_id AS j,
-          |    list_cosine_similarity(CAST(a.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[])) AS cos
-          |  FROM uni a, uni b WHERE a.vec_id < b.vec_id
-          |) SELECT * FROM scored WHERE cos >= 0.95""".stripMargin,
-      "text_word_freq" -> Text.wordFrequencySql(20),
-      "dedup_corpus_keep" ->
-        s"""WITH pairs AS (${Dedup.ngramJaccardPairsSql(0.5, 300)})
-           |SELECT doc_id, n_chars FROM documents
-           |WHERE doc_id < 300 AND doc_id NOT IN (SELECT j FROM pairs)""".stripMargin,
-      "ann_topk" -> Similarity.bruteForceTopKSql(annQueryIds, 5),
-      "pq_codes" -> PQ.codesSql(m = 4, d = 16, ksub = 8, iters = 2),
-      "pq_codes_sampled" ->
-        PQ.codesSampledSql(m = 4, d = 16, ksub = 8, iters = 2, sampleMax = 64),
-      "ann_pq_adc" -> PQ.adcTopKSql(annQueryIds, 5, m = 4, d = 16, ksub = 8, iters = 2),
-      "sq8_codes" -> graft.pipeline.SQ.codesSql,
-      "ann_sq8_topk" -> graft.pipeline.SQ.adcTopKSql(annQueryIds, 5),
-      "ann_ivfpq_topk" -> PQ.ivfAdcTopKSql(annQueryIds, 5,
-        m = 4, d = 16, ksub = 8, iters = 2,
-        coarse = Similarity.syntheticCentroids(16, 64), nProbe = 4),
-      "ann_ivfpq_residual_topk" -> PQ.ivfAdcResidualTopKSql(annQueryIds, 5,
-        m = 4, d = 16, ksub = 8, iters = 2,
-        coarse = Similarity.syntheticCentroids(16, 64), nProbe = 4),
-      "ann_ivf_sq8_topk" -> graft.pipeline.SQ.ivfSq8TopKSql(annQueryIds, 5,
-        coarse = Similarity.syntheticCentroids(16, 64), nProbe = 4),
-      "ann_binary_topk" -> graft.pipeline.BQ.hammingTopKSql(annQueryIds, 5),
-      "ann_binary_rerank_topk" ->
-        graft.pipeline.BQ.rerankTopKSql(annQueryIds, 5, 20),
-      "ann_recall_binary_rerank" -> Similarity.recallSql(
-        graft.pipeline.BQ.rerankTopKSql(annQueryIds, 5, 20), annQueryIds, 5),
-      "emb_label_drift" -> Similarity.labelCentroidDriftSql,
-      "pipeline_sql_tvf_label_drift" ->
-        s"SELECT * FROM (${Similarity.labelCentroidDriftSql}) WHERE n_vecs >= 45",
-      "ann_recall_binary" -> Similarity.recallSql(
-        graft.pipeline.BQ.hammingTopKSql(annQueryIds, 5), annQueryIds, 5),
-      "ann_sql_topk" -> Similarity.bruteForceTopKSql(sqlAnnQueryIds, 5),
-      "ts_sql_tvf_range" -> RangeQuery.rangeSql(
-        RangeArgs(from = Some(T0), to = Some(T31), aggs = Seq("max"),
-          bucketMs = 2 * DAY, alignMs = HOUR),
-        Some(s"series = '$oneSeries'")),
-      "ts_sql_tvf_mrange" ->
-        s"""${TSModel.samplesCte}, ${Multi.labelsCte}, matched AS (
-           |  SELECT series FROM series_labels
-           |  WHERE "type" = 'click' AND "user" IN ('2','4','6')
-           |), agg AS (
-           |  SELECT series, ${TSModel.bucketStartSql("ts", 3 * DAY)} AS bucket, ${Aggs.sql("max")}
-           |  FROM samples JOIN matched USING (series)
-           |  WHERE ts >= $T0 AND ts <= $T31 GROUP BY 1, 2
-           |) SELECT series, bucket AS ts, max_value FROM agg WHERE max_value IS NOT NULL""".stripMargin,
-      "ts_source_csv_range" -> RangeQuery.rangeSql(
-        RangeArgs(from = Some(T0), to = Some(T31),
-          aggs = Seq("avg", "count"), bucketMs = 3 * DAY),
-        Some(s"series = '$oneSeries'")),
-      "ts_sql_tvf_nrange" ->
-        s"""${TSModel.samplesCte}, agg AS (
-           |  SELECT series, ${TSModel.bucketStartSql("ts", 2 * DAY)} AS bucket, ${Aggs.sql("sum")}
-           |  FROM samples WHERE series IN ('click_2','click_4','view_1')
-           |    AND ts >= $T0 AND ts <= $T31 GROUP BY 1, 2
-           |) SELECT bucket AS ts,
-           |    coalesce(max(sum_value) FILTER (WHERE series = 'click_2'), 'NaN'::DOUBLE) AS click_2,
-           |    coalesce(max(sum_value) FILTER (WHERE series = 'click_4'), 'NaN'::DOUBLE) AS click_4,
-           |    coalesce(max(sum_value) FILTER (WHERE series = 'view_1'), 'NaN'::DOUBLE) AS view_1
-           |  FROM agg WHERE sum_value IS NOT NULL GROUP BY 1""".stripMargin,
-      "ts_sql_tvf_mget" ->
-        s"""${TSModel.samplesCte}, ${Multi.labelsCte}
-           |SELECT series, (max(struct_pack(t := ts, v := value))).t AS ts,
-           |       (max(struct_pack(t := ts, v := value))).v AS value
-           |FROM samples JOIN series_labels USING (series)
-           |WHERE "user" IN ('1','3','5') GROUP BY series""".stripMargin,
-      "ts_sql_tvf_mrange_groupby" ->
-        s"""${TSModel.samplesCte}, ${Multi.labelsCte}, per AS (
-           |  SELECT series, ${TSModel.bucketStartSql("ts", 7 * DAY)} AS bucket, ${Aggs.sql("avg")}
-           |  FROM samples JOIN series_labels USING (series)
-           |  WHERE ts >= $T0 AND ts <= $T31 AND "type" IN ('click','view')
-           |  GROUP BY 1, 2
-           |) SELECT 'type=' || "type" AS series, bucket AS ts,
-           |         coalesce(max(avg_value) FILTER (WHERE NOT isnan(avg_value)), 'NaN'::DOUBLE) AS avg_value
-           |  FROM per JOIN series_labels USING (series)
-           |  WHERE avg_value IS NOT NULL GROUP BY 1, 2""".stripMargin,
-      "ts_sql_range_agg" ->
-        s"""${TSModel.samplesCte}
-           |SELECT series, ${TSModel.bucketStartSql("ts", 6 * HOUR, HOUR)} AS bucket,
-           |       avg(value) AS avg_value, max(value) AS max_value,
-           |       count(value) AS cnt
-           |FROM samples
-           |WHERE NOT isnan(value) AND ts BETWEEN $T0 AND ${T0 + 7 * DAY}
-           |  AND series LIKE 'click%'
-           |GROUP BY series, bucket""".stripMargin,
-      "ann_serving_topk" ->
-        Similarity.bruteForceTopKExternalSql(Similarity.syntheticQueries(4, 64), 5),
-      "ann_ivf_full_probe" -> Similarity.bruteForceTopKSql(annQueryIds, 5),
-      "ann_ivf_topk" ->
-        Similarity.ivfTopKQuantizedSql(annQueryIds, 5,
-          Similarity.syntheticCentroids(16, 64), nProbe = 4),
-      "ann_recall_ivf" ->
-        Similarity.ivfRecallSql(annQueryIds, 5,
-          Similarity.syntheticCentroids(16, 64), nProbe = 4),
-      "ann_recall_pq" -> Similarity.recallSql(
-        PQ.adcTopKSql(annQueryIds, 5, m = 4, d = 16, ksub = 8, iters = 2),
-        annQueryIds, 5),
-      "ann_recall_sq8" -> Similarity.recallSql(
-        graft.pipeline.SQ.adcTopKSql(annQueryIds, 5), annQueryIds, 5),
-      "ann_recall_ivfpq" -> Similarity.recallSql(
-        PQ.ivfAdcTopKSql(annQueryIds, 5, m = 4, d = 16, ksub = 8, iters = 2,
-          coarse = Similarity.syntheticCentroids(16, 64), nProbe = 4),
-        annQueryIds, 5),
-      "ann_recall_ivfpq_residual" -> Similarity.recallSql(
-        PQ.ivfAdcResidualTopKSql(annQueryIds, 5, m = 4, d = 16, ksub = 8,
-          iters = 2, coarse = Similarity.syntheticCentroids(16, 64), nProbe = 4),
-        annQueryIds, 5),
-      "ann_recall_ivfsq8" -> Similarity.recallSql(
-        graft.pipeline.SQ.ivfSq8TopKSql(annQueryIds, 5,
-          coarse = Similarity.syntheticCentroids(16, 64), nProbe = 4),
-        annQueryIds, 5),
-      "dedup_cc_canonical" ->
-        Dedup.ccCanonicalMappingSql(Dedup.ngramJaccardPairsSql(0.5, 300), 300),
-      "dedup_priority_keep" ->
-        Dedup.priorityKeepSql(Dedup.ngramJaccardPairsSql(0.5, 300), 300,
-          Map("src13" -> 0, "src14" -> 1, "src10" -> 2, "src5" -> 3),
-          defaultPriority = 9),
-      "pipeline_corpus_filter" ->
-        graft.pipeline.CorpusPipeline.filteredCorpusSql(Dedup.ngramJaccardPairsSql(0.5, 300)),
-      "pipeline_stratified_sample" ->
-        graft.pipeline.CorpusPipeline.stratifiedSampleSql(Map("en" -> 0.8), defaultRate = 0.25),
-      "pipeline_source_cap" ->
-        graft.pipeline.CorpusPipeline.sourceCapSql(cap = 10),
-      "pipeline_quality_percentile" ->
-        graft.pipeline.CorpusPipeline.qualityPercentileKeepSql(dropFrac = 0.25),
-      "pipeline_pack_sequences" ->
-        graft.pipeline.CorpusPipeline.packSequencesSql(budgetTokens = 2048L, nShards = 8),
-      "pipeline_mix_temperature" ->
-        graft.pipeline.CorpusPipeline.mixByTemperatureSql(target = 300L),
-      "pipeline_chunk_documents" ->
-        graft.pipeline.Chunking.chunkSql(chunkTokens = 16, overlapTokens = 4),
-      "pipeline_dsir_select" ->
-        graft.pipeline.Dsir.selectSql("lang = 'en'", nBuckets = 64, keepFrac = 0.3),
-      "pipeline_classifier_weights" ->
-        graft.pipeline.QualityClassifier.trainSql("lang = 'en'",
-          nBuckets = 32, iters = 5, lr = 4.0),
-      "pipeline_classifier_filter" ->
-        graft.pipeline.QualityClassifier.scoreFilterSql("lang = 'en'",
-          nBuckets = 32, iters = 5, lr = 4.0, keepFrac = 0.3),
-      "pipeline_classifier_sampled" ->
-        graft.pipeline.QualityClassifier.trainSampledSql("lang = 'en'",
-          nBuckets = 32, iters = 5, lr = 4.0, sampleMax = 300),
-      "text_tfidf" -> Text.tfIdfSql(),
-      "text_corpus_stats" -> Text.corpusStatsSql,
-      "text_vocab_approx" -> Text.vocabApproxCheckedSql,
-      "text_heavy_hitters_approx" -> Text.heavyHittersApproxSql(),
-      "text_redact" -> Text.redactSql,
-      "text_repetition" -> Text.repetitionSql,
-      "text_char_entropy" -> Text.charEntropySql(entropyPlantDocs),
-      "text_domain_freq" -> Text.domainFrequencySql(20, domainPlantTexts),
-      "text_unigram_logprob" -> Text.unigramLogProbSql,
-      "text_bigram_logprob" -> Text.bigramLogProbSql(lambda = 0.7),
-      "dedup_span_ngrams" -> Dedup.duplicatedSpansSql(),
-      "dedup_semantic_pairs" ->
-        Similarity.semanticPairsSql(0.4, Similarity.syntheticCentroids(16, 64)),
-      "mm_resize" -> Multimodal.resizeSql(),
-      "mm_frame_sample" -> Multimodal.frameSampleSql(),
-      "mm_decode_real" -> Multimodal.decodeImagesSql(),
-      "mm_resize_real" -> Multimodal.decodeImagesSql(scale = 2),
-      "mm_image_phash_pairs" -> Multimodal.imagePhashPairsSql(maxDist = 3),
-      "mm_audio_decode_real" -> Multimodal.decodeAudioSql(),
-      "mm_audio_resample_real" -> Multimodal.decodeAudioSql(factor = 2),
-      "mm_video_frames_real" -> Multimodal.sampleVideoFramesSql(nFrames = 4, rate = 2),
-      "dedup_stream_exact" -> graft.pipeline.StreamDedup.documentsDedupOnceSql,
-      "dedup_stream_minhash_gate" -> graft.pipeline.StreamDedup.minhashGateSql(),
-      "dedup_incremental_admit" ->
-        graft.pipeline.IncrementalAdmit.admitSql(split = 400L),
-      "dedup_incremental_chain" ->
-        graft.pipeline.IncrementalAdmit.admitSql(split = 300L),
-      "pipeline_decontaminate" ->
-        graft.pipeline.CorpusPipeline.decontaminatedCorpusSql("doc_id < 3", minShared = 5L),
-      "pipeline_sql_tvf_decontaminate" ->
-        graft.pipeline.CorpusPipeline.decontaminatedCorpusSql("doc_id < 5", minShared = 3L),
-      "pipeline_sql_tvf_mix_temperature" ->
-        graft.pipeline.CorpusPipeline.mixByTemperatureSql(target = 200L),
-      "pipeline_sql_tvf_boilerplate" ->
-        graft.pipeline.Dedup.boilerplateSegmentsSql(w = 4, minDocs = 4),
-      "pipeline_sql_tvf_boilerplate_clean" ->
-        graft.pipeline.Dedup.removeBoilerplateSql(w = 4, minDocs = 4),
-      "pipeline_sql_tvf_keep" ->
-        s"""WITH pairs AS (${graft.pipeline.Dedup.ngramJaccardPairsSql(0.6, 250)})
-           |SELECT * FROM documents
-           |WHERE doc_id < 250 AND doc_id NOT IN (SELECT j FROM pairs)""".stripMargin,
-      "pipeline_sql_tvf_classifier_score" ->
-        graft.pipeline.QualityClassifier.scoreWithWeightsSql(tvfScoreWeightsMap, 32),
-      "ts_decompose_anomaly" -> Seasonal.remainderAnomalySql(
-        bucketMs = DAY, period = 7, threshold = 1.5,
-        fromMs = Some(T0), toMs = Some(T31)),
-      "ts_changepoint_binseg" -> graft.ts.Changepoint.binsegSql(
-        bucketMs = DAY, levels = 2, minSize = 2,
-        fromMs = Some(T0), toMs = Some(T31)),
-      "ts_trend_theilsen" -> Trend.theilSenSql(
-        bucketMs = DAY, fromMs = Some(T0), toMs = Some(T31)),
-      "ts_sql_tvf_decompose_anomaly" -> Seasonal.remainderAnomalySql(
-        bucketMs = DAY, period = 5, threshold = 1.2,
-        fromMs = Some(T0), toMs = Some(T31)),
-      "ts_sql_tvf_corr_matrix" -> AsOf.pearsonMatrixSql(
-        Seq("click_12", "view_142", "click_17", "click_90"),
-        bucketMs = 2 * DAY, fromMs = Some(T0), toMs = Some(T31)),
-      "pipeline_sql_tvf_source_cap" ->
-        graft.pipeline.CorpusPipeline.sourceCapSql(cap = 7),
-      "pipeline_sql_tvf_contamination" ->
-        graft.pipeline.CorpusPipeline.contaminationSql("doc_id < 4", minShared = 4L),
-      "pipeline_sql_tvf_contamination_frac" ->
-        graft.pipeline.CorpusPipeline.contaminationFractionSql("doc_id < 4", n = 4),
-      "pipeline_sql_tvf_contamination_fuzzy" ->
-        graft.pipeline.CorpusPipeline.contaminationFuzzySql(
-          "doc_id < 40", "doc_id >= 40"),
-      "pipeline_sql_tvf_ann_recall" ->
-        Similarity.ivfRecallSql(annQueryIds, 5,
-          Similarity.syntheticCentroids(16, 64), nProbe = 3),
-      "pipeline_sql_tvf_admit" ->
-        graft.pipeline.IncrementalAdmit.admitSql(split = 350L),
-      "pipeline_sql_tvf_langid" ->
-        s"SELECT * FROM (${Text.languageIdSql}) WHERE doc_id < 450",
-      "pipeline_sql_tvf_source_divergence" ->
-        Text.sourceDivergenceMomentsSql(topN = 200),
-      "pipeline_sql_tvf_quality" ->
-        s"SELECT * FROM (${Text.qualityMetricsSql}) WHERE doc_id >= 50",
-      "pipeline_sql_tvf_tokens" ->
-        s"SELECT * FROM (${Text.tokenCountsSql}) WHERE doc_id % 2 = 0",
-      "pipeline_sql_tvf_stratified" ->
-        graft.pipeline.CorpusPipeline.stratifiedSampleSql(
-          Map("en" -> 0.5), defaultRate = 0.3),
-      "pipeline_sql_tvf_pack" ->
-        graft.pipeline.CorpusPipeline.packSequencesSql(
-          budgetTokens = 1024L, nShards = 4),
-      "pipeline_sql_tvf_chunk" ->
-        graft.pipeline.Chunking.chunkSql(chunkTokens = 24, overlapTokens = 8),
-      "pipeline_sql_tvf_dedup_pairs" -> Dedup.ngramJaccardPairsSql(0.6, 250),
-      "pipeline_sql_tvf_dsir" ->
-        graft.pipeline.Dsir.selectSql("lang = 'en'", nBuckets = 32, keepFrac = 0.4),
-      "pipeline_sql_tvf_quality_percentile" ->
-        graft.pipeline.CorpusPipeline.qualityPercentileKeepSql(dropFrac = 0.4),
-      "pipeline_sql_tvf_ann_topk" ->
-        Similarity.bruteForceTopKSql(Seq(0L, 194L, 388L), 4),
-      "pipeline_sql_tvf_ann_ivf" ->
-        Similarity.ivfTopKQuantizedSql(Seq(97L, 291L, 485L), 4,
-          Similarity.syntheticCentroids(16, 64), nProbe = 2),
-      "dedup_boilerplate_segments" -> Dedup.boilerplateSegmentsSql(),
-      "dedup_boilerplate_clean" -> Dedup.removeBoilerplateSql(),
-      "cluster_kmeans_assign" -> Clustering.kmeansAssignSql(),
-      "cluster_kmeans_sizes" -> Clustering.kmeansSizesSql(),
-      "cluster_kmeans_assign_sampled" ->
-        Clustering.kmeansAssignSampledSql(k = 10, iters = 2, sampleMax = 64),
-      "dedup_semantic_kmeans" -> Clustering.semanticPairsKmeansSql(0.4),
-      "ts_range_sliding" -> Sliding.slidingRangeSql("avg",
-        windowMs = DAY, hopMs = 6 * HOUR, fromMs = Some(T0), toMs = Some(T31)),
-      "ts_range_sliding_count" -> Sliding.slidingRangeSql("count",
-        windowMs = DAY, hopMs = 6 * HOUR, fromMs = Some(T0), toMs = Some(T31)),
-      "ts_range_quantiles" -> Quantiles.bucketQuantilesSql(
-        Seq(0.5, 0.9, 0.99), bucketMs = DAY,
-        fromMs = Some(T0), toMs = Some(T31)),
-      "ts_asof_join" -> AsOf.asofJoinSql("click_7", "view_7",
-        fromMs = Some(T0), toMs = Some(T31)),
-      "ts_asof_join_tolerance" -> AsOf.asofJoinSql("click_7", "view_7",
-        toleranceMs = Some(2 * DAY), fromMs = Some(T0), toMs = Some(T31)),
-      "ts_corr_pair" -> AsOf.pearsonSql("click_7", "view_7",
-        bucketMs = DAY, fromMs = Some(T0), toMs = Some(T31)),
-      "ts_range_zscore" -> Anomaly.zscoreSql(2.0,
-        fromMs = Some(T0), toMs = Some(T31)),
-      "ts_resample_linear" -> Resample.linearSql(stepMs = 12 * HOUR,
-        fromMs = Some(T0), toMs = Some(T31)),
-      "ts_sql_tvf_resample" -> Resample.linearSql(stepMs = 8 * HOUR,
-        fromMs = Some(T0), toMs = Some(T31)),
-      "ts_sql_tvf_corr" -> AsOf.pearsonSql("click_3", "view_3",
-        bucketMs = 2 * DAY, fromMs = Some(T0), toMs = Some(T31)),
-      "ts_sql_tvf_delta_rate" -> Rates.deltaRateSql(bucketMs = 12 * HOUR,
-        fromMs = Some(T0), toMs = Some(T31)),
-      "ts_range_holt" -> Smoothing.holtSql(sf = 0.4, tf = 0.3,
-        fromMs = Some(T0), toMs = Some(T31)),
-      "ts_range_forecast" -> Smoothing.holtForecastSql(sf = 0.4, tf = 0.3,
-        horizon = 7, stepMs = DAY, fromMs = Some(T0), toMs = Some(T31)),
-      "ts_range_hw_forecast" -> Smoothing.holtWintersForecastSql(alpha = 0.5,
-        beta = 0.3, gamma = 0.4, m = 24, horizon = 6, stepMs = 12 * HOUR,
-        fromMs = Some(T0), toMs = Some(T31)),
-      "ts_range_ccf" -> AsOf.ccfSql("click_7", "view_7",
-        bucketMs = DAY, maxLag = 7, fromMs = Some(T0), toMs = Some(T31)),
-      "ts_rolling_corr" -> AsOf.rollingCorrSql("click_7", "error_17",
-        bucketMs = DAY, span = 7, fromMs = Some(T0), toMs = Some(T31)),
-      "ts_corr_matrix" -> AsOf.pearsonMatrixSql(
-        Seq("click_7", "view_34", "view_15", "click_117", "view_50", "view_12"),
-        bucketMs = DAY, fromMs = Some(T0), toMs = Some(T31)),
-      "ts_corr_matrix_filter" -> AsOf.pearsonMatrixByFilterSql(
-        Seq(Multi.parsePred("user=(7,15,34,117)")),
-        bucketMs = DAY, fromMs = Some(T0), toMs = Some(T31)),
-      "ts_sql_tvf_corr_matrix_filter" -> AsOf.pearsonMatrixByFilterSql(
-        Seq(Multi.parsePred("user=(12,50,142)")),
-        bucketMs = 2 * DAY, fromMs = Some(T0), toMs = Some(T31)),
-      "ts_session_stream" -> Sessions.sessionRangeSql("avg", gapMs = 12 * HOUR,
-        fromMs = Some(T0), toMs = Some(T31)),
-      "text_zipf_fit" -> Text.zipfFitSql(topN = 100),
-      "text_source_divergence" -> Text.sourceDivergenceMomentsSql(
-        topN = 300),
-      "ts_range_holt_winters" -> Smoothing.holtWintersSql(alpha = 0.5,
-        beta = 0.3, gamma = 0.4, m = 24,
-        fromMs = Some(T0), toMs = Some(T31)),
-      "ts_topk_series" -> TopK.topkSeriesSql(k = 5, agg = "avg",
-        bucketMs = DAY, fromMs = Some(T0), toMs = Some(T31)),
-      "ts_bottomk_series" -> TopK.topkSeriesSql(k = 3, agg = "sum",
-        bucketMs = 2 * DAY, bottom = true,
-        fromMs = Some(T0), toMs = Some(T31)),
-      "ts_sax_motifs" -> Sax.motifsSql(bucketMs = DAY, m = 4, k = 20,
-        fromMs = Some(T0), toMs = Some(T31)),
-      "ts_matrix_profile" -> graft.ts.MatrixProfile.profileSql(
-        bucketMs = DAY, m = 7, fromMs = Some(T0), toMs = Some(T31)),
-      "ts_matrix_profile_stomp" -> graft.ts.MatrixProfile.profileSql(
-        bucketMs = DAY, m = 4, fromMs = Some(T0), toMs = Some(T31)),
-      "ts_mp_discords" -> graft.ts.MatrixProfile.extremaSql(
-        bucketMs = DAY, m = 7, k = 2, discord = true,
-        fromMs = Some(T0), toMs = Some(T31)),
-      "ts_mp_motifs" -> graft.ts.MatrixProfile.extremaSql(
-        bucketMs = DAY, m = 7, k = 2, discord = false,
-        fromMs = Some(T0), toMs = Some(T31)),
-      "ts_mp_join" -> graft.ts.MatrixProfile.joinProfileSql(
-        bucketMs = DAY, m = 7, a = "click_7", b = "view_34",
-        fromMs = Some(T0), toMs = Some(T31)),
-      "ts_forecast_backtest" -> graft.ts.Backtest.holtBacktestSql(
-        sf = 0.5, tf = 0.2, splitMs = T0 + 21 * DAY, horizon = 6,
-        bucketMs = DAY, fromMs = Some(T0), toMs = Some(T31)),
-      "ts_forecast_backtest_rolling" -> graft.ts.Backtest.holtBacktestRollingSql(
-        sf = 0.5, tf = 0.2,
-        origins = Seq(T0 + 14 * DAY, T0 + 18 * DAY, T0 + 22 * DAY),
-        horizon = 5, bucketMs = DAY, fromMs = Some(T0), toMs = Some(T31)),
-      "ts_sax_words" -> Sax.saxWordsSql(bucketMs = 2 * DAY,
-        fromMs = Some(T0), toMs = Some(T31)),
-      "ts_range_mad" -> Anomaly.madSql(2.5,
-        fromMs = Some(T0), toMs = Some(T31)),
-      "ts_range_trend" -> Trend.fitSql(predictAtMs = T31 + 7 * DAY,
-        fromMs = Some(T0), toMs = Some(T31)),
-      "ts_range_histogram" -> Histogram.valueHistogramSql(
-        lo = 0.0, hi = 120.0, nbins = 24,
-        fromMs = Some(T0), toMs = Some(T31)),
-      "ts_histogram_quantile" -> Histogram.histogramQuantileSql(
-        lo = 0.0, hi = 120.0, nbins = 24, q = 0.95,
-        fromMs = Some(T0), toMs = Some(T31)),
-      "ts_range_ddsketch" -> Histogram.ddsketchHistogramSql(gamma = 1.02,
-        fromMs = Some(T0), toMs = Some(T31)),
-      "ts_ddsketch_windowed" -> Histogram.ddsketchWindowedSql(gamma = 1.05,
-        windowMs = 7 * DAY, fromMs = Some(T0), toMs = Some(T31)),
-      "ts_ddsketch_signed" -> Histogram.ddsketchHistogramSignedSql(gamma = 1.05,
-        fromMs = Some(T0), toMs = Some(T31), cte = centeredSamplesCte),
-      "ts_ddsketch_signed_quantile" -> Histogram.ddsketchQuantileSignedSql(
-        gamma = 1.05, q = 0.5, fromMs = Some(T0), toMs = Some(T31),
-        cte = centeredSamplesCte),
-      "ts_ddsketch_signed_windowed" -> Histogram.ddsketchWindowedSignedSql(
-        gamma = 1.05, windowMs = 7 * DAY, fromMs = Some(T0), toMs = Some(T31),
-        cte = centeredSamplesCte),
-      "ts_ddsketch_collapsed" -> Histogram.ddsketchHistogramCollapsedSql(
-        gamma = 1.02, maxBuckets = 12, fromMs = Some(T0), toMs = Some(T31)),
-      // signed mergeability oracle: persisted state == one-shot signed
-      "ts_ddsketch_signed_incremental" -> Histogram.ddsketchHistogramSignedSql(
-        gamma = 1.05, fromMs = Some(T0), toMs = Some(T31),
-        cte = centeredSamplesCte),
-      // state-only quantile read == one-shot quantile (merge contract)
-      "ts_ddsketch_state_quantile" -> Histogram.ddsketchQuantileSql(
-        gamma = 1.02, q = 0.9, fromMs = Some(T0), toMs = Some(T31)),
-      "ts_sql_tvf_ddsketch_signed" -> Histogram.ddsketchHistogramSignedSql(
-        gamma = 1.05, fromMs = Some(T0), toMs = Some(T31),
-        cte = centeredSamplesCte),
-      "ts_sql_tvf_ddsketch_signed_quantile" -> Histogram.ddsketchQuantileSignedSql(
-        gamma = 1.05, q = 0.5, fromMs = Some(T0), toMs = Some(T31),
-        cte = centeredSamplesCte),
-      "ts_sql_tvf_ddsketch_signed_windowed" -> Histogram.ddsketchWindowedSignedSql(
-        gamma = 1.05, windowMs = 7 * DAY, fromMs = Some(T0), toMs = Some(T31),
-        cte = centeredSamplesCte),
-      "ts_sql_tvf_ddsketch_collapsed" -> Histogram.ddsketchHistogramCollapsedSql(
-        gamma = 1.02, maxBuckets = 12, fromMs = Some(T0), toMs = Some(T31)),
-      // the mergeability oracle: any batching == the one-shot sketch
-      "ts_ddsketch_incremental" -> Histogram.ddsketchHistogramSql(gamma = 1.02,
-        fromMs = Some(T0), toMs = Some(T31)),
-      "ts_ddsketch_stream_state" -> Histogram.ddsketchHistogramSql(gamma = 1.02,
-        fromMs = Some(T0), toMs = Some(T31)),
-      "ts_ddsketch_quantile" -> Histogram.ddsketchQuantileSql(gamma = 1.02,
-        q = 0.95, fromMs = Some(T0), toMs = Some(T31)),
-      "ts_downsample_lttb" -> Lttb.downsampleSql(bucketMs = DAY,
-        fromMs = Some(T0), toMs = Some(T31)),
-      "ts_sql_tvf_cusum" -> Changepoint.cusumSql(0.8,
-        fromMs = Some(T0), toMs = Some(T31)),
-      "ts_sql_tvf_changepoint" -> graft.ts.Changepoint.binsegSql(
-        bucketMs = 2 * DAY, levels = 3, minSize = 3,
-        fromMs = Some(T0), toMs = Some(T31)),
-      "ts_sql_tvf_theilsen" -> Trend.theilSenSql(
-        bucketMs = 2 * DAY, fromMs = Some(T0), toMs = Some(T31)),
-      "ts_sql_tvf_hampel" -> Rolling.hampelSql(span = 5, k = 3.0,
-        fromMs = Some(T0), toMs = Some(T31)),
-      "ts_sql_tvf_burn_rate" -> Rates.burnRateSql(shortMs = DAY,
-        longMs = 7 * DAY, hopMs = DAY, budgetPerSec = 3.0e-4,
-        threshold = 2.0, fromMs = Some(T0), toMs = Some(T31)),
-      "ts_sql_tvf_asof" -> AsOf.asofJoinSql("view_3", "click_5",
-        toleranceMs = Some(3 * DAY), fromMs = Some(T0), toMs = Some(T31)),
-      "ts_sql_tvf_seasonal" -> Seasonal.anomalySql(1.7, "dow",
-        fromMs = Some(T0), toMs = Some(T31)),
-      "ts_sql_tvf_winsorize" -> Rolling.winsorizeSql(0.1, 0.9,
-        fromMs = Some(T0), toMs = Some(T31)),
-      "ts_sql_tvf_holt_winters" -> Smoothing.holtWintersSql(alpha = 0.5,
-        beta = 0.3, gamma = 0.4, m = 24,
-        fromMs = Some(T0), toMs = Some(T31)),
-      "ts_sql_tvf_holt" -> Smoothing.holtSql(sf = 0.5, tf = 0.2,
-        fromMs = Some(T0), toMs = Some(T31)),
-      "ts_sql_tvf_topk" -> TopK.topkSeriesSql(k = 4, agg = "max",
-        bucketMs = 2 * DAY, fromMs = Some(T0), toMs = Some(T31)),
-      "ts_sql_tvf_sax" -> Sax.saxWordsSql(bucketMs = 3 * DAY,
-        fromMs = Some(T0), toMs = Some(T31)),
-      "ts_sql_tvf_motifs" -> Sax.motifsSql(bucketMs = 2 * DAY, m = 3, k = 10,
-        fromMs = Some(T0), toMs = Some(T31)),
-      "ts_sql_tvf_hw_forecast" -> Smoothing.holtWintersForecastSql(
-        alpha = 0.5, beta = 0.3, gamma = 0.4, m = 24, horizon = 4,
-        stepMs = DAY, fromMs = Some(T0), toMs = Some(T31)),
-      "ts_sql_tvf_rolling_corr" -> AsOf.rollingCorrSql("click_3", "view_3",
-        bucketMs = 2 * DAY, span = 5, fromMs = Some(T0), toMs = Some(T31)),
-      "ts_sql_tvf_zscore" -> Anomaly.zscoreSql(2.3,
-        fromMs = Some(T0), toMs = Some(T31)),
-      "ts_sql_tvf_histogram" -> Histogram.valueHistogramSql(
-        lo = 0.0, hi = 150.0, nbins = 15,
-        fromMs = Some(T0), toMs = Some(T31)),
-      "ts_sql_tvf_histogram_quantile" -> Histogram.histogramQuantileSql(
-        lo = 0.0, hi = 150.0, nbins = 15, q = 0.5,
-        fromMs = Some(T0), toMs = Some(T31)),
-      "ts_sql_tvf_ddsketch_windowed" -> Histogram.ddsketchWindowedSql(
-        gamma = 1.1, windowMs = 7 * DAY, fromMs = Some(T0), toMs = Some(T31)),
-      "ts_sql_tvf_ddsketch" -> Histogram.ddsketchQuantileSql(gamma = 1.05,
-        q = 0.5, fromMs = Some(T0), toMs = Some(T31)),
-      "ts_sql_tvf_ewma" -> Smoothing.ewmaSql(alpha = 0.25, span = 12,
-        fromMs = Some(T0), toMs = Some(T31)),
-      "ts_sql_tvf_acf" -> Trend.acfSql(maxLag = 5,
-        fromMs = Some(T0), toMs = Some(T31)),
-      "ts_range_ewma" -> Smoothing.ewmaSql(alpha = 0.3, span = 16,
-        fromMs = Some(T0), toMs = Some(T31)),
-      "ts_range_cusum" -> Changepoint.cusumSql(0.6,
-        fromMs = Some(T0), toMs = Some(T31)),
-      "ts_range_acf" -> Trend.acfSql(maxLag = 7,
-        fromMs = Some(T0), toMs = Some(T31)),
-      "ts_rolling_quantile" -> Rolling.rollingQuantileSql(q = 0.9, span = 20,
-        fromMs = Some(T0), toMs = Some(T31)),
-      "ts_range_winsorize" -> Rolling.winsorizeSql(qLo = 0.05, qHi = 0.95,
-        fromMs = Some(T0), toMs = Some(T31)),
-      "ts_seasonal_profile" -> Seasonal.profileSql("hod",
-        fromMs = Some(T0), toMs = Some(T31)),
-      "ts_seasonal_anomaly" -> Seasonal.anomalySql(2.0, "dow",
-        fromMs = Some(T0), toMs = Some(T31)),
-      "ts_seasonal_profile_dow" -> Seasonal.profileSql("dow",
-        fromMs = Some(T0), toMs = Some(T31)),
-      "ts_anomaly_stream" -> StreamAnomaly.zscoreStreamSql(2.5,
-        fromMs = Some(T0), toMs = Some(T31)),
-      "ts_stream_shared_pass" -> graft.ts.StreamMonitors.monitorsSql(
-        zThreshold = 2.5, cusumThreshold = 3.0, q = 0.5, span = 10,
-        gapThresholdMs = 2 * DAY, seasonalThreshold = 2.0, seasonalMode = "dow",
-        fromMs = Some(T0), toMs = Some(T31),
-        burnShortMs = 2 * DAY, burnLongMs = 7 * DAY, burnHopMs = DAY,
-        burnBudgetPerSec = 4.0e-4, burnThreshold = 1.5,
-        hampelSpan = 3, hampelK = 3.0,
-        sketchGamma = 1.05, sketchWindowMs = 7 * DAY),
-      "ts_ddsketch_stream" -> Histogram.ddsketchWindowedSql(gamma = 1.05,
-        windowMs = 7 * DAY, fromMs = Some(T0), toMs = Some(T31),
-        closedOnly = true),
-      "ts_hampel_stream" -> Rolling.hampelSql(span = 3, k = 3.0,
-        fromMs = Some(T0), toMs = Some(T31), closedOnly = true),
-      "ts_burn_rate_stream" -> Rates.burnRateSql(shortMs = 2 * DAY,
-        longMs = 7 * DAY, hopMs = DAY, budgetPerSec = 4.0e-4,
-        threshold = 1.5, fromMs = Some(T0), toMs = Some(T31),
-        closedOnly = true),
-      "ts_seasonal_stream" -> StreamAnomaly.seasonalStreamSql(2.0, "dow",
-        fromMs = Some(T0), toMs = Some(T31)),
-      "ts_rolling_stream" -> Rolling.rollingQuantileSql(q = 0.5, span = 10,
-        fromMs = Some(T0), toMs = Some(T31)),
-      "ts_cusum_stream" -> StreamAnomaly.cusumStreamSql(3.0,
-        fromMs = Some(T0), toMs = Some(T31)),
-      "ts_range_decompose" -> Seasonal.decomposeSql(bucketMs = DAY, period = 7,
-        fromMs = Some(T0), toMs = Some(T31)),
-      "ts_range_gaps" -> Sessions.gapsSql(thresholdMs = 2 * DAY,
-        fromMs = Some(T0), toMs = Some(T31)),
-      "ts_dtw_pair" -> Dtw.pairwiseSql(bucketMs = DAY, seriesSet = dtwSeries,
-        fromMs = Some(T0), toMs = Some(T31)),
-      "ts_dtw_nearest" -> Dtw.nearestSql(bucketMs = DAY,
-        probe = "click_7", k = 10, fromMs = Some(T0), toMs = Some(T31)),
-      "ts_dtw_nearest_pruned" -> Dtw.nearestSql(bucketMs = DAY,
-        probe = "view_7", k = 8, fromMs = Some(T0), toMs = Some(T31)),
-      "ts_dtw_nearest_banded" -> Dtw.nearestBandedSql(bucketMs = DAY,
-        probe = "click_7", k = 8, band = 3,
-        fromMs = Some(T0), toMs = Some(T31)),
-      "ts_sql_tvf_dtw_banded" -> Dtw.nearestBandedSql(bucketMs = 2 * DAY,
-        probe = "view_7", k = 5, band = 2,
-        fromMs = Some(T0), toMs = Some(T31)),
-      "ts_sql_tvf_matrix_profile_stomp" -> graft.ts.MatrixProfile.profileSql(
-        bucketMs = 2 * DAY, m = 4, fromMs = Some(T0), toMs = Some(T31)),
-      "ts_sql_tvf_mp_discords" -> graft.ts.MatrixProfile.extremaSql(
-        bucketMs = 2 * DAY, m = 5, k = 3, discord = true,
-        fromMs = Some(T0), toMs = Some(T31)),
-      "ts_sql_tvf_mp_motifs" -> graft.ts.MatrixProfile.extremaSql(
-        bucketMs = 2 * DAY, m = 5, k = 3, discord = false,
-        fromMs = Some(T0), toMs = Some(T31)),
-      "ts_sql_tvf_mp_join" -> graft.ts.MatrixProfile.joinProfileSql(
-        bucketMs = DAY, m = 5, a = "view_15", b = "click_117",
-        fromMs = Some(T0), toMs = Some(T31)),
-      "ts_sql_tvf_matrix_profile" -> graft.ts.MatrixProfile.profileSql(
-        bucketMs = 2 * DAY, m = 5, fromMs = Some(T0), toMs = Some(T31)),
-      "ts_sql_tvf_backtest" -> graft.ts.Backtest.holtBacktestSql(
-        sf = 0.4, tf = 0.3, splitMs = T0 + 14 * DAY, horizon = 5,
-        bucketMs = 2 * DAY, fromMs = Some(T0), toMs = Some(T31)),
-      "ts_sql_tvf_backtest_rolling" -> graft.ts.Backtest.holtBacktestRollingSql(
-        sf = 0.4, tf = 0.3, origins = Seq(T0 + 12 * DAY, T0 + 20 * DAY),
-        horizon = 4, bucketMs = 2 * DAY, fromMs = Some(T0), toMs = Some(T31)),
-      "ts_gaps_stream" -> Sessions.gapsSql(thresholdMs = 2 * DAY,
-        fromMs = Some(T0), toMs = Some(T31)),
-      "ts_hampel" -> Rolling.hampelSql(span = 3, k = 3.0,
-        fromMs = Some(T0), toMs = Some(T31)),
-      "ts_burn_rate" -> Rates.burnRateSql(shortMs = 2 * DAY,
-        longMs = 7 * DAY, hopMs = DAY, budgetPerSec = 4.0e-4,
-        threshold = 1.5, fromMs = Some(T0), toMs = Some(T31)),
-      "ts_range_irate" -> Rates.instantSql(bucketMs = DAY,
-        fromMs = Some(T0), toMs = Some(T31)),
-      "ts_sql_tvf_irate" -> Rates.instantSql(bucketMs = 2 * DAY,
-        fromMs = Some(T0), toMs = Some(T31)),
-      "ts_sql_tvf_gaps" -> Sessions.gapsSql(thresholdMs = 3 * DAY,
-        fromMs = Some(T0), toMs = Some(T31)),
-      "ts_sql_tvf_decompose" -> Seasonal.decomposeSql(bucketMs = DAY,
-        period = 5, fromMs = Some(T0), toMs = Some(T31)),
-      "ts_sql_tvf_forecast" -> Smoothing.holtForecastSql(sf = 0.5, tf = 0.2,
-        horizon = 5, stepMs = 12 * HOUR, fromMs = Some(T0), toMs = Some(T31)),
-      "ts_sql_tvf_ccf" -> AsOf.ccfSql("click_3", "view_3",
-        bucketMs = 2 * DAY, maxLag = 5, fromMs = Some(T0), toMs = Some(T31)),
-      "ts_sql_tvf_dtw" -> Dtw.pairwiseSql(bucketMs = 2 * DAY,
-        seriesSet = dtwSeries, fromMs = Some(T0), toMs = Some(T31)),
-      "ts_sql_tvf_dtw_nearest" -> Dtw.nearestSql(bucketMs = 2 * DAY,
-        probe = "view_3", k = 6, fromMs = Some(T0), toMs = Some(T31)),
-      "ts_sql_tvf_sliding" -> Sliding.slidingRangeSql("avg",
-        windowMs = DAY, hopMs = 6 * HOUR, fromMs = Some(T0), toMs = Some(T31)),
-      "ts_sql_tvf_session" -> Sessions.sessionRangeSql("avg", gapMs = 12 * HOUR,
-        fromMs = Some(T0), toMs = Some(T31)),
-      "ts_sql_tvf_rate" -> Rates.deltaRateSql(bucketMs = DAY,
-        fromMs = Some(T0), toMs = Some(T31)),
-      "ts_sql_tvf_resets" -> Rates.resetsSql(bucketMs = 2 * DAY,
-        fromMs = Some(T0), toMs = Some(T31)),
-      "ts_sql_tvf_increase" -> Rates.increaseSql(bucketMs = 2 * DAY,
-        fromMs = Some(T0), toMs = Some(T31)),
-      "ts_sql_tvf_quantiles" -> Quantiles.bucketQuantilesSql(
-        Seq(0.5, 0.9, 0.99), bucketMs = DAY,
-        fromMs = Some(T0), toMs = Some(T31)),
-      "ts_sql_tvf_mad" -> Anomaly.madSql(1.8,
-        fromMs = Some(T0), toMs = Some(T31)),
-      "ts_sql_tvf_trend" -> Trend.fitSql(predictAtMs = T31 + 14 * DAY,
-        fromMs = Some(T0), toMs = Some(T31)),
-      "ts_sql_tvf_lttb" -> Lttb.downsampleSql(bucketMs = 2 * DAY,
-        fromMs = Some(T0), toMs = Some(T31)),
-      "ts_range_quantiles_approx" -> Quantiles.bucketQuantilesApproxCheckedSql(
-        bucketMs = DAY, fromMs = Some(T0), toMs = Some(T31)),
-      "ts_range_mad_approx" -> Anomaly.madApproxCheckedSql(
-        fromMs = Some(T0), toMs = Some(T31)),
-      "ts_range_delta_rate" -> Rates.deltaRateSql(bucketMs = DAY,
-        fromMs = Some(T0), toMs = Some(T31)),
-      "ts_range_increase" -> Rates.increaseSql(bucketMs = DAY,
-        fromMs = Some(T0), toMs = Some(T31)),
-      "ts_range_resets" -> Rates.resetsSql(bucketMs = DAY,
-        fromMs = Some(T0), toMs = Some(T31)),
-      "ts_range_session" -> Sessions.sessionRangeSql("avg", gapMs = 12 * HOUR,
-        fromMs = Some(T0), toMs = Some(T31)),
-      "ts_range_session_max" -> Sessions.sessionRangeSql("max", gapMs = 2 * DAY,
-        fromMs = Some(T0), toMs = Some(T31)),
-      "ts_compaction_policy" ->
-        s"""${TSModel.samplesCte}
-           |SELECT *, 'AVG' AS label_aggregation, '3600000' AS label_time_bucket,
-           |       ${86400000L} AS retention_ms FROM (
-           |${flushedRuleOracleSql("avg", "avg(value) FILTER (WHERE NOT isnan(value))", 3600000L)})
-           |UNION ALL
-           |SELECT *, 'MAX', '60000', ${2 * 86400000L} FROM (
-           |${flushedRuleOracleSql("max", "max(value) FILTER (WHERE NOT isnan(value))", 60000L)})
-           |UNION ALL
-           |SELECT *, 'SUM', '${2 * 3600000L}', ${86400000L} FROM (
-           |${flushedRuleOracleSql("sum", "sum(value) FILTER (WHERE NOT isnan(value))", 2 * 3600000L)})""".stripMargin,
-      // ---- real-data goldens over the bundled lemire_canada series
-      "ts_lemire_range_multi" -> pin9Sql(RangeQuery.rangeSql(
-        RangeArgs(aggs = Seq("min", "max", "avg", "sum", "count", "std.p"),
-          bucketMs = 1000L),
-        None, cte = RealData.lemireCte),
-        "min_value", "max_value", "avg_value", "sum_value", "std_p_value"),
-      "ts_lemire_twa" -> pin9Sql(
-        s"""SELECT series, bucket AS ts, twa_value FROM (
-           |${Twa.sql(1000L, 0L, Some(5000L), Some(100000L), None,
-                      cte = RealData.lemireCte)})""".stripMargin,
-        "twa_value"),
-      "ts_lemire_empty_locf" -> lemireLocfOracle,
-      "ts_lemire_dup_min" ->
-        s"""${RealData.lemireCte}, dup AS (
-           |  SELECT series, ts, value FROM samples
-           |  UNION ALL
-           |  SELECT series, ts, value - 1.0 AS value FROM samples
-           |) SELECT series, ts, min(value) AS value FROM dup GROUP BY 1, 2""".stripMargin,
-      "ts_lemire_revrange_count" -> pin9Sql(
-        s"""SELECT * FROM (${RangeQuery.rangeSql(
-             RangeArgs(aggs = Seq("avg"), bucketMs = 1000L),
-             None, cte = RealData.lemireCte)})
-           |ORDER BY ts DESC LIMIT 10""".stripMargin,
-        "avg_value"),
-      "ts_lemire_mrange_groupby" -> pin9Sql(
-        s"""${RealData.lemireSplitCte}, ${RealData.lemireLabelsCte}, per AS (
-           |  SELECT series, ${TSModel.bucketStartSql("ts", 1000L)} AS bucket, ${Aggs.sql("avg")}
-           |  FROM samples JOIN lem_labels USING (series)
-           |  WHERE ts >= 1000 AND ts <= 90000 AND axis IN ('lon','lat')
-           |  GROUP BY 1, 2
-           |) SELECT 'dataset=' || dataset AS series, bucket AS ts,
-           |         coalesce(max(avg_value) FILTER (WHERE NOT isnan(avg_value)), 'NaN'::DOUBLE) AS avg_value
-           |  FROM per JOIN lem_labels USING (series)
-           |  WHERE avg_value IS NOT NULL GROUP BY 1, 2""".stripMargin,
-        "avg_value"),
-      "ts_lemire_compaction" -> pin9Sql(
-        s"""${RealData.lemireSplitCte}
-           |${flushedRuleOracleSql("avg", "avg(value) FILTER (WHERE NOT isnan(value))", 1000L)}
-           |UNION ALL
-           |${flushedRuleOracleSql("max", "max(value) FILTER (WHERE NOT isnan(value))", 2000L)}""".stripMargin,
-        "value"),
-      // ---- real-LABEL goldens over the GLT fixture
-      "ts_glt_mrange_groupby" -> pin9Sql(
-        s"""${GltData.samplesCte}, ${GltData.labelsWideCte}, per AS (
-           |  SELECT series, ${TSModel.bucketStartSql("ts", 365 * DAY)} AS bucket, ${Aggs.sql("avg")}
-           |  FROM samples JOIN glt_labels USING (series)
-           |  WHERE ts >= 0 AND ts <= $GLT_END AND metric = 'temperature'
-           |    AND country IN ('Brazil','China','India','Canada','Turkey')
-           |  GROUP BY 1, 2
-           |) SELECT 'country=' || country AS series, bucket AS ts,
-           |         coalesce(avg(avg_value) FILTER (WHERE NOT isnan(avg_value)), 'NaN'::DOUBLE) AS avg_value
-           |  FROM per JOIN glt_labels USING (series)
-           |  WHERE avg_value IS NOT NULL GROUP BY 1, 2""".stripMargin,
-        "avg_value"),
-      "ts_glt_selected_labels" -> pin9Sql(
-        s"""${GltData.samplesCte}, ${GltData.labelsWideCte}, matched AS (
-           |  SELECT series, metric, country FROM glt_labels
-           |  WHERE country IN ('Brazil','India')
-           |), agg AS (
-           |  SELECT series, ${TSModel.bucketStartSql("ts", 5 * 365 * DAY)} AS bucket, ${Aggs.sql("avg")}
-           |  FROM samples JOIN matched USING (series)
-           |  WHERE ts >= 0 AND ts <= $GLT_END GROUP BY 1, 2
-           |) SELECT series, bucket AS ts, avg_value,
-           |         metric AS label_metric, country AS label_country
-           |  FROM agg JOIN matched USING (series) WHERE avg_value IS NOT NULL""".stripMargin,
-        "avg_value"),
-      "ts_glt_compaction_policy" -> pin9Sql(
-        s"""${GltData.samplesCte}
-           |SELECT *, 'AVG' AS label_aggregation, '${365 * DAY}' AS label_time_bucket,
-           |       ${3650 * DAY} AS retention_ms FROM (
-           |${flushedRuleOracleSql("avg", "avg(value) FILTER (WHERE NOT isnan(value))", 365 * DAY)})
-           |UNION ALL
-           |SELECT *, 'MAX', '${730 * DAY}', ${3650 * DAY} FROM (
-           |${flushedRuleOracleSql("max", "max(value) FILTER (WHERE NOT isnan(value))", 730 * DAY)})""".stripMargin,
-        "value"),
-      // real-data gap-fill twins (shared locfOracle / Twa.sql shapes
-      // over the GLT samples CTE)
-      "ts_glt_empty_locf" ->
-        locfOracle(GltData.samplesCte, 10 * DAY, 0L, GLT_END,
-          s"series IN ($GLT_GAP_IN)"),
-      "ts_glt_twa" -> pin9Sql(
-        s"""SELECT series, bucket AS ts, twa_value FROM (
-           |${Twa.sql(365 * DAY, 0L, Some(0L), Some(GLT_END),
-                      Some(s"series IN ($GLT_GAP_IN)"), None, GltData.samplesCte)})""".stripMargin,
-        "twa_value"),
-      // ---- reference-serialized mid-bucket state: the oracle reads
-      // ONLY the rule-context CSV (dest naming, bucket geometry and the
-      // running sum/count all from the reference's own serialization) —
-      // the engine side reads ONLY the raw samples
-      "ts_rdb_avg_ctx" ->
-        s"""WITH ${RdbState.rulesCte}
-           |SELECT dest AS series, start_bucket AS ts,
-           |       ctx_val / ctx_cnt AS value
-           |FROM rdb_rules WHERE ctx_cnt > 0""".stripMargin,
-      "ts_rdb_avg_ctx_flush" ->
-        s"""WITH ${RdbState.rulesCte}
-           |SELECT dest AS series, start_bucket AS ts,
-           |       ctx_val / ctx_cnt AS value
-           |FROM rdb_rules
-           |WHERE ctx_cnt > 0 AND (1500 - 1500 % bucket_ms) > start_bucket""".stripMargin,
-      "mm_features" ->
-        """SELECT doc_id AS media_id, CAST(strlen(text) AS BIGINT) AS n_bytes,
-          |  list_avg([ord(substring(text, CAST(i AS INT), 1))
-          |            for i in generate_series(1, strlen(text))]) AS mean_byte
-          |FROM documents""".stripMargin,
-      "ts_info" ->
-        s"""${TSModel.samplesCte}
-           |SELECT series, count(value) AS total_samples,
-           |       min(ts) AS first_timestamp, max(ts) AS last_timestamp,
-           |       (max(struct_pack(t := ts, v := value))).v AS last_value
-           |FROM samples GROUP BY series""".stripMargin,
-      "ts_info_full" ->
-        s"""${TSModel.samplesCte}, clamped AS (
-           |  SELECT series, ts, value FROM (
-           |    SELECT series, ts, value, max(ts) OVER (PARTITION BY series) AS last_ts
-           |    FROM samples
-           |  ) WHERE ts >= last_ts - ${10 * DAY}
-           |), base AS (
-           |  SELECT series, count(value) AS total_samples,
-           |         min(ts) AS first_timestamp, max(ts) AS last_timestamp,
-           |         (max(struct_pack(t := ts, v := value))).v AS last_value
-           |  FROM clamped GROUP BY series
-           |)
-           |SELECT series, total_samples, first_timestamp, last_timestamp, last_value,
-           |       CAST(${10 * DAY} AS BIGINT) AS retention_ms,
-           |       (total_samples + 255) // 256 AS chunk_count,
-           |       CAST(4096 AS BIGINT) AS chunk_size_bytes,
-           |       ((total_samples + 255) // 256) * 4096 AS memory_usage_bytes,
-           |       'last' AS duplicate_policy
-           |FROM base""".stripMargin,
-      "ts_info_debug" ->
-        s"""${TSModel.samplesCte}, rn AS (
-           |  SELECT series, ts,
-           |         row_number() OVER (PARTITION BY series ORDER BY ts, value) AS rn
-           |  FROM samples
-           |)
-           |SELECT series, CAST((rn - 1) // 8 AS BIGINT) AS chunk_idx,
-           |       min(ts) AS start_ts, max(ts) AS end_ts,
-           |       count(*) AS n_samples,
-           |       CAST(128 AS BIGINT) AS size_bytes,
-           |       128.0 / count(*) AS bytes_per_sample
-           |FROM rn GROUP BY series, chunk_idx""".stripMargin,
-    )
-
-  /** Sequential IGNORE semantics as a recursive CTE: state
-    * (last_ts, last_v) advances row by row exactly like the
-    * executor-side streaming filter. Shared by the batch ignore filter
-    * and the streaming ingest replay (same state machine). */
-  private val ignoreFilterOracle: String =
-    s"""WITH RECURSIVE samples AS (
-       |  SELECT event_type || '_' || CAST(user_id AS VARCHAR) AS series,
-       |         epoch_ms(ts) AS ts, value
-       |  FROM events
-       |), ord AS (
-       |  SELECT series, ts, value,
-       |         row_number() OVER (PARTITION BY series ORDER BY ts, value) AS rn
-       |  FROM samples
-       |), step AS (
-       |  SELECT series, rn, ts, value, TRUE AS kept, ts AS last_ts, value AS last_v
-       |  FROM ord WHERE rn = 1
-       |  UNION ALL
-       |  SELECT o.series, o.rn, o.ts, o.value,
-       |         NOT (NOT isnan(o.value) AND NOT isnan(s.last_v)
-       |              AND o.ts - s.last_ts <= ${12 * HOUR}
-       |              AND abs(o.value - s.last_v) <= 50.0) AS kept,
-       |         CASE WHEN (NOT isnan(o.value) AND NOT isnan(s.last_v)
-       |              AND o.ts - s.last_ts <= ${12 * HOUR}
-       |              AND abs(o.value - s.last_v) <= 50.0)
-       |              THEN s.last_ts ELSE o.ts END AS last_ts,
-       |         CASE WHEN (NOT isnan(o.value) AND NOT isnan(s.last_v)
-       |              AND o.ts - s.last_ts <= ${12 * HOUR}
-       |              AND abs(o.value - s.last_v) <= 50.0)
-       |              THEN s.last_v ELSE o.value END AS last_v
-       |  FROM step s JOIN ord o ON o.series = s.series AND o.rn = s.rn + 1
-       |)
-       |SELECT series, ts, value FROM step WHERE kept""".stripMargin
-
-  /** Per-series IGNORE oracle: the same recursive-CTE state machine
-    * with thresholds and the LAST-policy gate resolved from the series
-    * name prefix (series = event_type '_' user — signup series carry
-    * FIRST policy, so their gate is off). */
-  private val ignorePerSeriesOracle: String = {
-    val mtd = s"CASE WHEN o.series LIKE 'click%' THEN ${12 * HOUR} " +
-      s"WHEN o.series LIKE 'view%' THEN ${6 * HOUR} " +
-      s"WHEN o.series LIKE 'signup%' THEN ${12 * HOUR} ELSE 0 END"
-    val mvd = "CASE WHEN o.series LIKE 'click%' THEN 50.0 " +
-      "WHEN o.series LIKE 'view%' THEN 20.0 " +
-      "WHEN o.series LIKE 'signup%' THEN 50.0 ELSE 0.0 END"
-    val drop = s"(o.series NOT LIKE 'signup%' AND NOT isnan(o.value) " +
-      s"AND NOT isnan(s.last_v) AND o.ts - s.last_ts <= ($mtd) " +
-      s"AND abs(o.value - s.last_v) <= ($mvd))"
-    s"""WITH RECURSIVE samples AS (
-       |  SELECT event_type || '_' || CAST(user_id AS VARCHAR) AS series,
-       |         epoch_ms(ts) AS ts, value
-       |  FROM events
-       |), ord AS (
-       |  SELECT series, ts, value,
-       |         row_number() OVER (PARTITION BY series ORDER BY ts, value) AS rn
-       |  FROM samples
-       |), step AS (
-       |  SELECT series, rn, ts, value, TRUE AS kept, ts AS last_ts, value AS last_v
-       |  FROM ord WHERE rn = 1
-       |  UNION ALL
-       |  SELECT o.series, o.rn, o.ts, o.value,
-       |         NOT $drop AS kept,
-       |         CASE WHEN $drop THEN s.last_ts ELSE o.ts END AS last_ts,
-       |         CASE WHEN $drop THEN s.last_v ELSE o.value END AS last_v
-       |  FROM step s JOIN ord o ON o.series = s.series AND o.rn = s.rn + 1
-       |)
-       |SELECT series, ts, value FROM step WHERE kept""".stripMargin
-  }
-
-  /** Shared oracle for the batch + streaming GROUPBY-with-per-series-TWA
-    * queries: [[Twa.sql]] (full boundary-interpolation semantics, range
-    * edges clipped, neighbours outside [from, to] visible) as the
-    * per-series leg, then the standard label-join reduce; round-9 on
-    * the output (trapezoid integral then reduce = stacked float
-    * reductions). */
-  private def mrangeGroupByTwaOracle: String = {
-    val matched =
-      """series IN (SELECT series FROM series_labels WHERE "type" IN ('click','view','purchase'))"""
-    s"""WITH ${Multi.labelsCte}, per AS (
-       |${Twa.sql(DAY, 0L, Some(T0), Some(T31), Some(matched),
-                  cte = s"${TSModel.samplesCte}, ${Multi.labelsCte}")}
-       |)
-       |SELECT 'type=' || "type" AS series, bucket AS ts,
-       |       round(coalesce(avg(twa_value) FILTER (WHERE NOT isnan(twa_value)), 'NaN'::DOUBLE), 9) AS twa_value
-       |FROM per JOIN series_labels USING (series)
-       |GROUP BY 1, 2""".stripMargin
-  }
-
-  private def emptySumOracle: String = {
-    val b = TSModel.bucketStartSql("ts", 6 * HOUR)
-    s"""${TSModel.samplesCte}, agg AS (
-       |  SELECT series, $b AS bucket, sum(value) FILTER (WHERE NOT isnan(value)) AS sum_value
-       |  FROM samples WHERE series = '$oneSeries' AND ts >= $T0 AND ts <= $T31 GROUP BY 1, 2
-       |), spine AS (
-       |  SELECT series, unnest(generate_series(min(bucket), max(bucket), ${6 * HOUR})) AS bucket
-       |  FROM agg GROUP BY series
-       |) SELECT spine.series, spine.bucket AS ts, coalesce(sum_value, 0.0) AS sum_value
-       |  FROM spine LEFT JOIN agg USING (series, bucket)""".stripMargin
-  }
-
-  /** EMPTY × FILTER_BY_VALUE oracle: spine bounds come from the buckets
-    * that still hold value-passing samples, so filtered-out edge
-    * buckets are stripped (reference edge-strip semantics,
-    * tests/flow/test_ts_range_empty_filter_stress.py). */
-  private def emptyFilterValueOracle: String = {
-    val b = TSModel.bucketStartSql("ts", 6 * HOUR)
-    s"""${TSModel.samplesCte}, agg AS (
-       |  SELECT series, $b AS bucket, sum(value) FILTER (WHERE NOT isnan(value)) AS sum_value
-       |  FROM samples WHERE series = '$oneSeries' AND ts >= $T0 AND ts <= $T31
-       |    AND value >= 50.0 AND value <= 200.0 GROUP BY 1, 2
-       |), spine AS (
-       |  SELECT series, unnest(generate_series(min(bucket), max(bucket), ${6 * HOUR})) AS bucket
-       |  FROM agg GROUP BY series
-       |) SELECT spine.series, spine.bucket AS ts, coalesce(sum_value, 0.0) AS sum_value
-       |  FROM spine LEFT JOIN agg USING (series, bucket)""".stripMargin
-  }
-
-  /** Mixed-aggregator EMPTY oracle: one spine, per-class fills (sum and
-    * count -> 0, avg -> NaN, last -> LOCF). */
-  private def emptyMultiOracle: String = {
-    val b = TSModel.bucketStartSql("ts", 6 * HOUR)
-    s"""${TSModel.samplesCte}, agg AS (
-       |  SELECT series, $b AS bucket,
-       |         sum(value) FILTER (WHERE NOT isnan(value)) AS sum_value,
-       |         avg(value) FILTER (WHERE NOT isnan(value)) AS avg_value,
-       |         (max(struct_pack(t := ts, v := value)) FILTER (WHERE NOT isnan(value))).v AS last_value,
-       |         count(value) FILTER (WHERE NOT isnan(value)) AS count_value
-       |  FROM samples WHERE series = '$oneSeries' AND ts >= $T0 AND ts <= $T31 GROUP BY 1, 2
-       |), spine AS (
-       |  SELECT series, unnest(generate_series(min(bucket), max(bucket), ${6 * HOUR})) AS bucket
-       |  FROM agg GROUP BY series
-       |) SELECT spine.series, spine.bucket AS ts,
-       |         coalesce(sum_value, 0.0) AS sum_value,
-       |         coalesce(avg_value, 'NaN'::DOUBLE) AS avg_value,
-       |         last_value(last_value IGNORE NULLS)
-       |           OVER (PARTITION BY spine.series ORDER BY spine.bucket
-       |                 ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS last_value,
-       |         coalesce(count_value, 0) AS count_value
-       |  FROM spine LEFT JOIN agg USING (series, bucket)""".stripMargin
-  }
-
-  /** ONE EMPTY+LOCF oracle shape (agg → per-series spine → LOCF
-    * window) for every source — review r05: the lemire variant was a
-    * near-verbatim copy that would silently go stale on a semantics
-    * fix. `pred` is an optional extra WHERE conjunct ("" for none). */
-  private def locfOracle(
-      cte: String, bucketMs: Long, from: Long, to: Long, pred: String): String = {
-    val b = TSModel.bucketStartSql("ts", bucketMs)
-    val extra = if (pred.isEmpty) "" else s"$pred AND "
-    s"""$cte, agg AS (
-       |  SELECT series, $b AS bucket,
-       |         (max(struct_pack(t := ts, v := value)) FILTER (WHERE NOT isnan(value))).v AS last_value
-       |  FROM samples WHERE ${extra}ts >= $from AND ts <= $to GROUP BY 1, 2
-       |), spine AS (
-       |  SELECT series, unnest(generate_series(min(bucket), max(bucket), $bucketMs)) AS bucket
-       |  FROM agg GROUP BY series
-       |) SELECT spine.series, spine.bucket AS ts,
-       |         last_value(last_value IGNORE NULLS)
-       |           OVER (PARTITION BY spine.series ORDER BY spine.bucket
-       |                 ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS last_value
-       |  FROM spine LEFT JOIN agg USING (series, bucket)""".stripMargin
-  }
-
-  private def lemireLocfOracle: String =
-    locfOracle(RealData.lemireSparseCte, 50L, 9700L, 38800L, "")
-
-  private def emptyLocfOracle: String =
-    locfOracle(TSModel.samplesCte, 6 * HOUR, T0, T31, s"series = '$oneSeries'")
+  /** `SPARK_GRAFT_ONLY=q1,q2` (Bench and Verify) as a [[select]]
+    * argument: empty when unset, i.e. every query. */
+  def onlyNames: Seq[String] =
+    sys.env.get("SPARK_GRAFT_ONLY").toSeq
+      .flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty)
 }

@@ -21,38 +21,31 @@ import org.apache.spark.sql.functions._
  */
 object RealData {
 
-  /** Absolute path of the bundled series file. The resource may live
-    * inside the packaged jar (sbt exportJars / spark-submit), where no
-    * filesystem path exists — extract it once to a deterministic temp
-    * path that BOTH the Spark reader and the driver's later DuckDB
-    * process (running [[lemireCte]] from oracle_sql.json) can open. */
+  /** Absolute path of the bundled series file, extracted once from the
+    * classpath to a deterministic temp path that BOTH the Spark reader
+    * and the driver's later DuckDB process (running [[lemireCte]] from
+    * oracle_sql.json) can open. The path does not depend on the checkout
+    * location, so two checkouts of one commit emit identical oracles,
+    * and it works when the resource lives inside a packaged jar. */
   lazy val lemirePath: String = {
-    // preferred: the checked-in resource file itself (sbt runs from the
-    // repo root) — a stable absolute path that outlives this JVM, so
-    // the driver's separate DuckDB process can always open it
-    val inRepo = java.nio.file.Paths.get(
-      "src/main/resources/fixtures/lemire_canada.txt")
-    if (java.nio.file.Files.exists(inRepo)) inRepo.toAbsolutePath.toString
-    else {
-      val target = java.nio.file.Paths.get(
-        System.getProperty("java.io.tmpdir"), "graft_fixtures", "lemire_canada.txt")
-      val in = getClass.getResourceAsStream("/fixtures/lemire_canada.txt")
-      require(in != null, "bundled fixture /fixtures/lemire_canada.txt missing from classpath")
-      val bytes = in.readAllBytes(); in.close()
-      if (!java.nio.file.Files.exists(target) ||
-          !java.util.Arrays.equals(java.nio.file.Files.readAllBytes(target), bytes)) {
-        java.nio.file.Files.createDirectories(target.getParent)
-        // write-then-atomic-move: concurrent JVMs (sbt test + Bench) must
-        // never expose a half-written file to each other or to the
-        // driver's later DuckDB read of this path
-        val tmp = java.nio.file.Files.createTempFile(target.getParent, "lemire_", ".tmp")
-        java.nio.file.Files.write(tmp, bytes)
-        java.nio.file.Files.move(tmp, target,
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-      }
-      target.toAbsolutePath.toString
+    val target = java.nio.file.Paths.get(
+      System.getProperty("java.io.tmpdir"), "graft_fixtures", "lemire_canada.txt")
+    val in = getClass.getResourceAsStream("/fixtures/lemire_canada.txt")
+    require(in != null, "bundled fixture /fixtures/lemire_canada.txt missing from classpath")
+    val bytes = in.readAllBytes(); in.close()
+    if (!java.nio.file.Files.exists(target) ||
+        !java.util.Arrays.equals(java.nio.file.Files.readAllBytes(target), bytes)) {
+      java.nio.file.Files.createDirectories(target.getParent)
+      // write-then-atomic-move: concurrent JVMs (sbt test + Bench) must
+      // never expose a half-written file to each other or to the
+      // driver's later DuckDB read of this path
+      val tmp = java.nio.file.Files.createTempFile(target.getParent, "lemire_", ".tmp")
+      java.nio.file.Files.write(tmp, bytes)
+      java.nio.file.Files.move(tmp, target,
+        java.nio.file.StandardCopyOption.REPLACE_EXISTING,
+        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
     }
+    target.toAbsolutePath.toString
   }
 
   /** The series exactly as the reference flow test writes it:

@@ -2,6 +2,7 @@ package graft.ts
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.queries.Q
 
 /**
  * TSBS devops baseline queries — the reference's OWN benchmark
@@ -176,40 +177,68 @@ object Tsbs {
     Multi.mget(cpuSamples(spark, sfDir), cpuLabels(spark, sfDir),
       Seq(InSet("metric", Metrics)))
 
-  // ---- the registered query set + DuckDB oracles --------------------
+  // ---- the registered query set -----------------------------------
 
-  /** The headline TSBS rows: name → builder. Time constants per the
-    * sparse-fixture scaling documented above. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "tsbs_single_groupby_1_1_1" -> ((s, d) =>
-      singleGroupby(s, d, 1, Seq("host_78"), T0, T0 + 31 * DAY - 1, DAY)),
-    "tsbs_single_groupby_1_1_12" -> ((s, d) =>
-      singleGroupby(s, d, 1, Seq("host_78"), T0, T0 + 13 * DAY - 1, HOUR)),
-    "tsbs_single_groupby_1_8_1" -> ((s, d) =>
-      singleGroupby(s, d, 1, Hosts8, T0, T0 + 31 * DAY - 1, DAY)),
-    "tsbs_single_groupby_5_1_1" -> ((s, d) =>
-      singleGroupby(s, d, 5, Seq("host_78"), T0, T0 + 31 * DAY - 1, DAY)),
-    "tsbs_single_groupby_5_8_1" -> ((s, d) =>
-      singleGroupby(s, d, 5, Hosts8, T0, T0 + 31 * DAY - 1, DAY)),
-    "tsbs_cpu_max_all_1" -> ((s, d) =>
-      cpuMaxAll(s, d, Seq("host_78"), T0, T0 + 8 * DAY - 1, DAY)),
-    "tsbs_cpu_max_all_8" -> ((s, d) =>
-      cpuMaxAll(s, d, Hosts8, T0, T0 + 8 * DAY - 1, DAY)),
-    "tsbs_double_groupby_1" -> ((s, d) =>
-      doubleGroupby(s, d, 1, T0, T0 + 12 * DAY - 1, DAY)),
-    "tsbs_double_groupby_5" -> ((s, d) =>
-      doubleGroupby(s, d, 5, T0, T0 + 12 * DAY - 1, DAY)),
-    "tsbs_double_groupby_all" -> ((s, d) =>
-      doubleGroupby(s, d, Metrics.size, T0, T0 + 12 * DAY - 1, DAY)),
-    "tsbs_groupby_orderby_limit" -> ((s, d) =>
-      groupbyOrderbyLimit(s, d, T0 + 20 * DAY, DAY, 5)),
-    "tsbs_high_cpu_1" -> ((s, d) =>
-      highCpu(s, d, Some(Seq("host_78")), 90.0, T0, T0 + 31 * DAY - 1)),
-    "tsbs_high_cpu_all" -> ((s, d) =>
-      highCpu(s, d, None, 90.0, T0, T0 + 31 * DAY - 1)),
-    "tsbs_lastpoint" -> ((s, d) => lastpoint(s, d)),
-    "tsbs_ingestion" -> ((s, d) => ingestOnce(s, d))
-  )
+  /** The headline TSBS rows, each builder bound to its oracle by one
+    * parameter set. Time constants per the sparse-fixture scaling
+    * documented above. */
+  lazy val registry: Seq[Q] = Seq(
+    singleGroupbyQ("tsbs_single_groupby_1_1_1", 1, Seq("host_78"), 31, DAY),
+    singleGroupbyQ("tsbs_single_groupby_1_1_12", 1, Seq("host_78"), 13, HOUR),
+    singleGroupbyQ("tsbs_single_groupby_1_8_1", 1, Hosts8, 31, DAY),
+    singleGroupbyQ("tsbs_single_groupby_5_1_1", 5, Seq("host_78"), 31, DAY),
+    singleGroupbyQ("tsbs_single_groupby_5_8_1", 5, Hosts8, 31, DAY),
+    cpuMaxAllQ("tsbs_cpu_max_all_1", Seq("host_78")),
+    cpuMaxAllQ("tsbs_cpu_max_all_8", Hosts8),
+    doubleGroupbyQ("tsbs_double_groupby_1", 1),
+    doubleGroupbyQ("tsbs_double_groupby_5", 5),
+    doubleGroupbyQ("tsbs_double_groupby_all", Metrics.size),
+    Q("tsbs_groupby_orderby_limit",
+      (s, d) => groupbyOrderbyLimit(s, d, T0 + 20 * DAY, DAY, 5),
+      s"""${groupbyMaxSql(None, 1, None, T0 + 20 * DAY, DAY)}
+         |ORDER BY ts DESC LIMIT 5""".stripMargin),
+    highCpuQ("tsbs_high_cpu_1", Some("host_78")),
+    highCpuQ("tsbs_high_cpu_all", None),
+    Q("tsbs_lastpoint", lastpoint,
+      s"""$cpuCte
+         |SELECT series,
+         |  (max(struct_pack(t := ts, v := value))).t AS ts,
+         |  (max(struct_pack(t := ts, v := value))).v AS value
+         |FROM samples GROUP BY series""".stripMargin),
+    Q("tsbs_ingestion", (s, d) => ingestOnce(s, d), ingestSql))
+
+  /** single-groupby over the first `days` of the month: one host is a
+    * per-series MAX, several a cross-host GROUPBY REDUCE max. */
+  private def singleGroupbyQ(name: String, nMetrics: Int, hosts: Seq[String],
+      days: Int, bucketMs: Long): Q = {
+    val toMs = T0 + days * DAY - 1
+    Q(name, (s, d) => singleGroupby(s, d, nMetrics, hosts, T0, toMs, bucketMs),
+      if (hosts.size == 1) maxAggSql(hosts, nMetrics, T0, toMs, bucketMs)
+      else groupbyMaxSql(Some(hosts), nMetrics, Some(T0), toMs, bucketMs))
+  }
+
+  private def cpuMaxAllQ(name: String, hosts: Seq[String]): Q = {
+    val toMs = T0 + 8 * DAY - 1
+    Q(name, (s, d) => cpuMaxAll(s, d, hosts, T0, toMs, DAY),
+      maxAggSql(hosts, Metrics.size, T0, toMs, DAY))
+  }
+
+  private def doubleGroupbyQ(name: String, nMetrics: Int): Q = {
+    val toMs = T0 + 12 * DAY - 1
+    Q(name, (s, d) => doubleGroupby(s, d, nMetrics, T0, toMs, DAY),
+      doubleGroupbySql(nMetrics, T0, toMs, DAY))
+  }
+
+  /** high-cpu over one host (`Some`) or every host (`None`). */
+  private def highCpuQ(name: String, host: Option[String]): Q = {
+    val hostPred = host.map(h => s"hostname = '$h' AND ").getOrElse("")
+    Q(name, (s, d) => highCpu(s, d, host.map(Seq(_)), 90.0, T0, T0 + 31 * DAY - 1),
+      s"""$cpuCte
+         |SELECT series, ts, value FROM samples
+         |WHERE ${hostPred}metric = 'usage_user'
+         |  AND value >= 90.0 AND value <= 100.0
+         |  AND ts >= $T0 AND ts <= ${T0 + 31 * DAY - 1}""".stripMargin)
+  }
 
   private def bkt(durMs: Long) = TSModel.bucketStartSql("ts", durMs)
 
@@ -249,49 +278,6 @@ object Tsbs {
        |)
        |GROUP BY metric, ts""".stripMargin
   }
-
-  def oracles: Map[String, String] = Map(
-    "tsbs_single_groupby_1_1_1" ->
-      maxAggSql(Seq("host_78"), 1, T0, T0 + 31 * DAY - 1, DAY),
-    "tsbs_single_groupby_1_1_12" ->
-      maxAggSql(Seq("host_78"), 1, T0, T0 + 13 * DAY - 1, HOUR),
-    "tsbs_single_groupby_1_8_1" ->
-      groupbyMaxSql(Some(Hosts8), 1, Some(T0), T0 + 31 * DAY - 1, DAY),
-    "tsbs_single_groupby_5_1_1" ->
-      maxAggSql(Seq("host_78"), 5, T0, T0 + 31 * DAY - 1, DAY),
-    "tsbs_single_groupby_5_8_1" ->
-      groupbyMaxSql(Some(Hosts8), 5, Some(T0), T0 + 31 * DAY - 1, DAY),
-    "tsbs_cpu_max_all_1" ->
-      maxAggSql(Seq("host_78"), Metrics.size, T0, T0 + 8 * DAY - 1, DAY),
-    "tsbs_cpu_max_all_8" ->
-      maxAggSql(Hosts8, Metrics.size, T0, T0 + 8 * DAY - 1, DAY),
-    "tsbs_double_groupby_1" -> doubleGroupbySql(1, T0, T0 + 12 * DAY - 1, DAY),
-    "tsbs_double_groupby_5" -> doubleGroupbySql(5, T0, T0 + 12 * DAY - 1, DAY),
-    "tsbs_double_groupby_all" ->
-      doubleGroupbySql(Metrics.size, T0, T0 + 12 * DAY - 1, DAY),
-    "tsbs_groupby_orderby_limit" ->
-      s"""${groupbyMaxSql(None, 1, None, T0 + 20 * DAY, DAY)}
-         |ORDER BY ts DESC LIMIT 5""".stripMargin,
-    "tsbs_high_cpu_1" ->
-      s"""$cpuCte
-         |SELECT series, ts, value FROM samples
-         |WHERE hostname = 'host_78' AND metric = 'usage_user'
-         |  AND value >= 90.0 AND value <= 100.0
-         |  AND ts >= $T0 AND ts <= ${T0 + 31 * DAY - 1}""".stripMargin,
-    "tsbs_high_cpu_all" ->
-      s"""$cpuCte
-         |SELECT series, ts, value FROM samples
-         |WHERE metric = 'usage_user'
-         |  AND value >= 90.0 AND value <= 100.0
-         |  AND ts >= $T0 AND ts <= ${T0 + 31 * DAY - 1}""".stripMargin,
-    "tsbs_lastpoint" ->
-      s"""$cpuCte
-         |SELECT series,
-         |  (max(struct_pack(t := ts, v := value))).t AS ts,
-         |  (max(struct_pack(t := ts, v := value))).v AS value
-         |FROM samples GROUP BY series""".stripMargin,
-    "tsbs_ingestion" -> ingestSql
-  )
 
   /**
    * TSBS devops INGESTION parity (the reference's throughput-mode spec

@@ -8,10 +8,15 @@ same column names and types in the same order (DuckDB's DESCRIBE of the
 parquet dump), and the same rows as multisets: `EXCEPT ALL` both ways,
 so a duplicated or dropped row counts. Values compare exactly.
 
-Prints one line per differing query and a summary line; exits 1 on any
-difference, 0 when every query matches.
+The two sides' oracle_sql.json files are compared too: the key sets,
+then the SQL text per key, byte for byte.
+
+Prints a `DIFF <query>` line per differing dump, a `DIFF-ORACLE <query>`
+line per differing or one-sided oracle, and a summary line; exits 1 on
+any difference, 0 when every dump and every oracle matches.
 """
 import glob
+import json
 import os
 import sys
 
@@ -53,6 +58,39 @@ def compare(con, a, b):
     return None
 
 
+def load_oracles(out):
+    """The oracle_sql.json map of one Verify output (None when absent)."""
+    path = os.path.join(out, "oracle_sql.json")
+    if not os.path.exists(path):
+        return None
+    with open(path, encoding="utf-8") as f:
+        return json.load(f)
+
+
+def diff_oracles(parent, change):
+    """Print a DIFF-ORACLE line per key whose SQL differs or that only one
+    side declares; return the number of such keys."""
+    po, co = load_oracles(parent), load_oracles(change)
+    if po is None or co is None:
+        side = "parent" if po is None else "change"
+        print(f"DIFF-ORACLE oracle_sql.json: missing in {side}")
+        return 1
+    bad = 0
+    for k in sorted(po.keys() | co.keys()):
+        if k not in co or k not in po:
+            reason = "missing in " + ("change" if k not in co else "parent")
+        elif po[k] != co[k]:
+            a, b = po[k], co[k]
+            at = next((i for i, (x, y) in enumerate(zip(a, b)) if x != y), min(len(a), len(b)))
+            reason = f"SQL differs at char {at}: {a[at:at + 60]!r} != {b[at:at + 60]!r}"
+        else:
+            continue
+        bad += 1
+        print(f"DIFF-ORACLE {k}: {reason}")
+    print(f"compared {len(po.keys() | co.keys())} oracles: {bad} differ")
+    return bad
+
+
 def main(argv):
     if len(argv) != 3:
         print(__doc__, file=sys.stderr)
@@ -73,7 +111,8 @@ def main(argv):
             bad += 1
             print(f"DIFF {q}: {reason}")
     print(f"compared {len(pq | cq)} queries: {bad} differ")
-    return 1 if bad else 0
+    bad_oracles = diff_oracles(parent, change)
+    return 1 if bad or bad_oracles else 0
 
 
 if __name__ == "__main__":
