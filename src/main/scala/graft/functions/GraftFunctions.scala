@@ -126,6 +126,16 @@ object GraftFunctions {
   // so label filters are evaluated on the driver and ts_queryindex runs
   // no Spark job. All arguments must be literals (they select the plan,
   // not row values).
+  //
+  // The samples TVFs read `graft_samples` through TSModel.seriesStore: a
+  // series-ordered, cached snapshot of the view, built by the first TVF
+  // call over a source and found again by Spark's CacheManager for every
+  // later registration of the same source (same parquet path). It holds
+  // the rows read when it was built: a write through Spark's writers to
+  // that path refreshes it; a source rewritten outside Spark needs
+  // `spark.catalog.refreshByPath`. The label-filtered reads (ts_mrange,
+  // ts_mget) read the view as registered, so their plan and row order
+  // stay those of Multi.mrange / Multi.mget over the same frame.
   // -----------------------------------------------------------------
 
   /** The samples / labels views the ts_* TVFs read. */
@@ -317,7 +327,7 @@ object GraftFunctions {
 
   private val GroupByClause = "(?i)\\bGROUPBY\\s+(\\S+)\\s+REDUCE\\s+(\\S+)".r
 
-  private def samples(spark: SparkSession): DataFrame = spark.table(SamplesView)
+  private def samples(spark: SparkSession): DataFrame = TSModel.seriesStore(spark.table(SamplesView))
   private def docs(spark: SparkSession): DataFrame = spark.table(DocumentsView)
 
   /** The pipeline TVFs' query-id list ('q1 q2 ...'). */
@@ -354,15 +364,15 @@ object GraftFunctions {
             RangeQuery.parseOptions(raw.substring(0, g.start) + " " + raw.substring(g.end), a.from, a.to)))
         }
       groupBy match {
-        case Some((label, reducer, ra)) => Multi.mrangeGroupBy(samples(s), s.table(LabelsView),
+        case Some((label, reducer, ra)) => Multi.mrangeGroupBy(s.table(SamplesView), s.table(LabelsView),
           preds, ra, groupByLabel = label, reducer = reducer)
-        case None => Multi.mrange(samples(s), s.table(LabelsView), preds, rangeArgs(a))
+        case None => Multi.mrange(s.table(SamplesView), s.table(LabelsView), preds, rangeArgs(a))
       }
     },
     // TS.GET: last sample of one series
     tvf("ts_get", "series:str") { (s, a) => Multi.get(samples(s), a.str("series")) },
     tvf("ts_mget", "filter:preds") { (s, a) =>
-      Multi.mget(samples(s), s.table(LabelsView), a.preds("filter"))
+      Multi.mget(s.table(SamplesView), s.table(LabelsView), a.preds("filter"))
     },
     tvf("ts_queryindex", "filter:preds") { (s, a) =>
       Multi.queryIndex(s.table(LabelsView), a.preds("filter"))

@@ -1,8 +1,10 @@
 package graft.ts
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, LongType, TimestampNTZType, TimestampType}
+import org.apache.spark.storage.StorageLevel
 
 /**
  * Core data model: the Spark-native equivalent of the reference's
@@ -13,11 +15,16 @@ import org.apache.spark.sql.types.{DataType, LongType, TimestampNTZType, Timesta
  * reference: src/indexer.h:17-21) is a separate small DataFrame
  * `(series STRING, labels MAP<STRING,STRING>)`.
  *
- * Scale design: at 100 TB the samples table is parquet partitioned by
- * date(ts) (and optionally bucketed by series). All operators below are
- * built so that the `series`/`ts` predicates reach the parquet scan
- * (partition pruning + row-group min/max skipping play the role of the
- * reference's rax chunk-seek, reference: src/series_iterator.c:21-138).
+ * Scale design: at 100 TB the samples table is parquet bucketed by
+ * series and sorted by (series, ts) ([[writeBucketed]]): per-series
+ * operators over it need no shuffle, and predicates on its native
+ * `series`/`ts` columns reach the parquet scan. The fixture's wide
+ * `events` table stores neither column, so predicates on the derived
+ * [[samples]] columns stay above the scan and every read decodes the
+ * whole table. The serving tier (the ts_* SQL table functions) reads
+ * [[seriesStore]] instead: a series-ordered in-memory copy, the
+ * analogue of the reference's per-key chunks seeked by first
+ * timestamp (reference: src/series_iterator.c:21-138).
  * The labels DataFrame is O(#series) — tiny relative to samples — kept
  * in driver memory and always broadcast when joined.
  */
@@ -95,14 +102,54 @@ object TSModel {
       .saveAsTable(table)
 
   /**
-   * Pushdown-friendly samples loader: series-key and time-range
-   * predicates are decomposed onto the *source* columns
-   * (event_type/user_id and the raw ns timestamp), so they appear in
-   * the parquet scan's PushedFilters and prune row groups — the exact
-   * analogue of the reference's rax chunk-seek (reference:
-   * src/series_iterator.c:21-138). Filtering the derived `series`/`ts`
-   * columns instead would evaluate above the Project and read
-   * everything.
+   * The serving tier's samples store: `samples` range-partitioned by
+   * `series`, sorted by (series, ts) inside each partition and cached,
+   * so a one-series read decodes only the cached batches whose
+   * `series` bounds hold the key, and a per-series window or aggregation needs
+   * no exchange (the range partitioning satisfies its distribution).
+   *
+   * Spark's CacheManager is the memo: it matches cached data by
+   * canonical plan, so a view re-registered over the same source (the
+   * same parquet path) finds the store built for the first one. The
+   * store is materialized here only when no cached copy exists yet.
+   *
+   * Snapshot contract: the store holds the rows read when it was built.
+   * A write through Spark's writers to a path it reads refreshes it
+   * (the writers call `recacheByPath`); a source rewritten outside
+   * Spark needs `spark.catalog.refreshByPath(path)` first.
+   *
+   * Limits: the store holds O(samples) in memory (spilling to disk
+   * under the default storage level), so it serves the serving tier
+   * only. The 100 TB path stays [[writeBucketed]] parquet: a frame that
+   * reads a table bucketed by series is returned as it is, since its
+   * files already keep each series together and its scan takes the
+   * pushed `series`/`ts` predicates.
+   */
+  def seriesStore(samples: DataFrame): DataFrame =
+    if (bucketedBySeries(samples)) samples
+    else {
+      val store = samples.repartitionByRange(col("series")).sortWithinPartitions("series", "ts")
+      if (store.storageLevel == StorageLevel.NONE) store.cache().count()
+      store
+    }
+
+  private def bucketedBySeries(samples: DataFrame): Boolean =
+    samples.queryExecution.analyzed.exists {
+      case r: LogicalRelation =>
+        r.catalogTable.flatMap(_.bucketSpec).exists(_.bucketColumnNames == Seq("series"))
+      case _ => false
+    }
+
+  /**
+   * Samples loader with the series-key and time-range predicates
+   * decomposed onto the *source* columns (event_type/user_id and the
+   * native timestamp), so they appear in the parquet scan's
+   * PushedFilters instead of above the Project on the derived
+   * `series`/`ts` columns. Pushed filters prune row groups only where
+   * the file's min/max statistics separate them: on a fixture whose
+   * files interleave every series over the whole time span, the scan
+   * still reads every row, and only the storage order (a bucketed,
+   * sorted table or [[seriesStore]]) reduces the rows read.
    *
    * In a production deployment the long format is the storage format
    * (series a physical column, table partitioned by date(ts), sorted by

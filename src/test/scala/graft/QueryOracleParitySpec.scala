@@ -2,9 +2,10 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** `SparkEntry.queries` and `SparkEntry.oracleSql` are parallel maps
-  * declared far apart: every query needs its DuckDB oracle and every
-  * oracle a query, or the differential check silently skips one. */
+/** `SparkEntry.queries` and `SparkEntry.oracleSql` are both derived
+  * from the one `Q(name, build, oracle)` record per query in
+  * `SparkEntry.registry`, so their key sets agree by construction; this
+  * keeps the two maps the differential check reads from drifting apart. */
 class QueryOracleParitySpec extends AnyFunSuite {
   test("SparkEntry.queries and SparkEntry.oracleSql declare the same keys") {
     val queries = SparkEntry.queries.keySet

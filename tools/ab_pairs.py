@@ -8,7 +8,9 @@ Pair i runs `python3 <dir>/perfbench/run.py --workload W --seed N
 --seconds T --trace 0` once in each checkout, both on seed
 N = first_seed + i and both for T = the `run_seconds` of the change
 checkout's BENCHMARK.json. Even pairs run the parent first, odd pairs the change
-first, so a drift in host load does not always favour one side. Each
+first, so a drift in host load does not always favour one side. The pair
+count must be even: an odd count runs the parent first once more than the
+change, which biases the verdict against the side that runs second. Each
 checkout builds itself on its first run. The end-to-end metrics, their
 direction and the run length come from the change checkout's
 BENCHMARK.json. For every metric it prints each side's median and
@@ -58,6 +60,9 @@ def main():
     ap.add_argument("--pairs", type=int, default=10)
     ap.add_argument("--first-seed", type=int, default=7)
     args = ap.parse_args()
+    if args.pairs < 2 or args.pairs % 2:
+        ap.error(f"--pairs must be a positive even number (got {args.pairs}): an odd count "
+                 "runs the parent first once more than the change")
     parent, change = args.parent.resolve(), args.change.resolve()
     bench = json.loads((change / "BENCHMARK.json").read_text())
     seconds = bench["run_seconds"]

@@ -18,7 +18,7 @@ import statistics
 import sys
 from pathlib import Path
 
-LAYERS = ["exec.jobs", "exec.tasks", "scan.records_read", "exec.cpu_ms",
+LAYERS = ["exec.jobs", "exec.stages", "exec.tasks", "scan.records_read", "exec.cpu_ms",
           "functions.analyze_ms"]
 
 
