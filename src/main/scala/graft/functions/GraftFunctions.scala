@@ -127,15 +127,14 @@ object GraftFunctions {
   // no Spark job. All arguments must be literals (they select the plan,
   // not row values).
   //
-  // The samples TVFs read `graft_samples` through TSModel.seriesStore: a
-  // series-ordered, cached snapshot of the view, built by the first TVF
-  // call over a source and found again by Spark's CacheManager for every
-  // later registration of the same source (same parquet path). It holds
-  // the rows read when it was built: a write through Spark's writers to
-  // that path refreshes it; a source rewritten outside Spark needs
-  // `spark.catalog.refreshByPath`. The label-filtered reads (ts_mrange,
-  // ts_mget) read the view as registered, so their plan and row order
-  // stay those of Multi.mrange / Multi.mget over the same frame.
+  // Every samples TVF reads `graft_samples` through TSModel.seriesStore
+  // (`samples` below, the one reader of the view): a series-ordered,
+  // cached snapshot of the view, built by the first TVF call over a
+  // source and found again by Spark's CacheManager for every later
+  // registration of the same source (same parquet path). It holds the
+  // rows read when it was built: a write through Spark's writers to that
+  // path refreshes it; a source rewritten outside Spark needs
+  // `spark.catalog.refreshByPath`.
   // -----------------------------------------------------------------
 
   /** The samples / labels views the ts_* TVFs read. */
@@ -364,15 +363,15 @@ object GraftFunctions {
             RangeQuery.parseOptions(raw.substring(0, g.start) + " " + raw.substring(g.end), a.from, a.to)))
         }
       groupBy match {
-        case Some((label, reducer, ra)) => Multi.mrangeGroupBy(s.table(SamplesView), s.table(LabelsView),
+        case Some((label, reducer, ra)) => Multi.mrangeGroupBy(samples(s), s.table(LabelsView),
           preds, ra, groupByLabel = label, reducer = reducer)
-        case None => Multi.mrange(s.table(SamplesView), s.table(LabelsView), preds, rangeArgs(a))
+        case None => Multi.mrange(samples(s), s.table(LabelsView), preds, rangeArgs(a))
       }
     },
     // TS.GET: last sample of one series
     tvf("ts_get", "series:str") { (s, a) => Multi.get(samples(s), a.str("series")) },
     tvf("ts_mget", "filter:preds") { (s, a) =>
-      Multi.mget(s.table(SamplesView), s.table(LabelsView), a.preds("filter"))
+      Multi.mget(samples(s), s.table(LabelsView), a.preds("filter"))
     },
     tvf("ts_queryindex", "filter:preds") { (s, a) =>
       Multi.queryIndex(s.table(LabelsView), a.preds("filter"))

@@ -336,17 +336,20 @@ class ExtensionsSpec extends AnyFunSuite {
     samples.createOrReplaceTempView(GraftFunctions.SamplesView)
     labels.createOrReplaceTempView(GraftFunctions.LabelsView)
     val T0 = 1704067200000L; val DAY = 86400000L
+    // neither side orders its rows: compare the exact multisets
+    def sorted(df: org.apache.spark.sql.DataFrame) =
+      df.collect().toSeq.sortBy(_.toString)
     val tvf = spark.sql(
       s"SELECT * FROM ts_mrange('type=click user=(2,4,6)', $T0, ${T0 + 31 * DAY}, 'sum', ${3 * DAY})")
     val api = graft.ts.Multi.mrange(samples, labels,
       Seq(graft.ts.Multi.parsePred("type=click"), graft.ts.Multi.parsePred("user=(2,4,6)")),
       graft.ts.RangeQuery.RangeArgs(from = Some(T0), to = Some(T0 + 31 * DAY),
         aggs = Seq("sum"), bucketMs = 3 * DAY))
-    assert(tvf.collect().toSeq == api.collect().toSeq)
+    assert(sorted(tvf) == sorted(api))
     // the positional aggregator is case-insensitive
-    assert(spark.sql(
-      s"SELECT * FROM ts_mrange('type=click user=(2,4,6)', $T0, ${T0 + 31 * DAY}, 'SUM', ${3 * DAY})")
-      .collect().toSeq == api.collect().toSeq)
+    assert(sorted(spark.sql(
+      s"SELECT * FROM ts_mrange('type=click user=(2,4,6)', $T0, ${T0 + 31 * DAY}, 'SUM', ${3 * DAY})"))
+      == sorted(api))
     // 7-arg GROUPBY/REDUCE form
     val g = spark.sql(
       s"SELECT * FROM ts_mrange('type=(click,view)', $T0, ${T0 + 31 * DAY}, 'avg', ${7 * DAY}, 'type', 'max')")
@@ -355,10 +358,10 @@ class ExtensionsSpec extends AnyFunSuite {
       graft.ts.RangeQuery.RangeArgs(from = Some(T0), to = Some(T0 + 31 * DAY),
         aggs = Seq("avg"), bucketMs = 7 * DAY),
       groupByLabel = "type", reducer = "max")
-    assert(g.collect().toSeq == gApi.collect().toSeq)
-    assert(spark.sql(
-      s"SELECT * FROM ts_mrange('type=(click,view)', $T0, ${T0 + 31 * DAY}, 'AVG', ${7 * DAY}, 'type', 'max')")
-      .collect().toSeq == gApi.collect().toSeq)
+    assert(sorted(g) == sorted(gApi))
+    assert(sorted(spark.sql(
+      s"SELECT * FROM ts_mrange('type=(click,view)', $T0, ${T0 + 31 * DAY}, 'AVG', ${7 * DAY}, 'type', 'max')"))
+      == sorted(gApi))
   }
 
   test("read-command TVFs (get / mget / queryindex / querylabels) == Column API") {

@@ -6,6 +6,7 @@ import org.apache.spark.sql.{DataFrame, GraftSessionBridge}
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.functions.GraftFunctions
@@ -14,8 +15,7 @@ import graft.ts.{GltData, TSModel}
 /**
  * The label index lives in driver memory, like the reference's posting
  * dicts (indexer.c:132-170): label lookups are answered from driver
- * rows, and a label-filtered query reads the events table once, for
- * its samples only.
+ * rows, and a label-filtered query reads its samples once.
  */
 class LabelIndexSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   import SparkTest._
@@ -70,7 +70,7 @@ class LabelIndexSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     assert(jobs.get() == 0, s"${jobs.get()} Spark jobs for a label-index lookup")
   }
 
-  test("ts_mrange, ts_mget and GROUPBY REDUCE scan the events table once") {
+  test("ts_mrange, ts_mget and GROUPBY REDUCE read the samples once") {
     registerViews()
     val queries = Seq(
       s"SELECT * FROM ts_mrange('type=click', $T0, $T31, 'AGGREGATION avg 86400000')",
@@ -81,8 +81,14 @@ class LabelIndexSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       val df = spark.sql(q)
       assert(df.collect().nonEmpty, q)
       val plan = df.queryExecution.executedPlan
-      val scans = collectWithSubqueries(plan) { case f: FileSourceScanExec => f }
-      assert(scans.size == 1, s"$q\n$plan")
+      // one samples leaf: the parquet events scan or the cached series store
+      val reads = collectWithSubqueries(plan) {
+        case f: FileSourceScanExec => f
+        case m: InMemoryTableScanExec => m
+      }
+      assert(reads.size == 1, s"$q\n$plan")
+      // over the fixture's view, that leaf is the store, not the parquet
+      assert(collectWithSubqueries(plan) { case f: FileSourceScanExec => f }.isEmpty, s"$q\n$plan")
     }
   }
 }

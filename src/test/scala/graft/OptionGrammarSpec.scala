@@ -75,7 +75,8 @@ class OptionGrammarSpec extends AnyFunSuite {
     val mapi = Multi.mrangeGroupBy(samples, labels, Seq(Multi.parsePred("type=(click,view)")),
       RangeArgs(from = Some(from), to = Some(to), aggs = Seq("avg"), bucketMs = 7 * DAY),
       groupByLabel = "type", reducer = "max")
-    assert(mtvf.collect().toSeq == mapi.collect().toSeq)
+    // unordered on both sides: compare the exact multisets
+    assert(mtvf.collect().toSeq.sortBy(_.toString) == mapi.collect().toSeq.sortBy(_.toString))
   }
 
   test("GROUPBY reducers are case-insensitive in both ts_mrange forms") {

@@ -1,7 +1,8 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Path, Paths}
 import java.util.concurrent.atomic.AtomicInteger
+import scala.jdk.CollectionConverters._
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, GraftSessionBridge}
 import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
@@ -17,8 +18,8 @@ import graft.ts.TSModel
  * the `graft_samples` view ([[TSModel.seriesStore]]), like the
  * reference's per-key chunks: a request scans cached batches, not the
  * parquet source, and the store is built once per source, not once per
- * view registration. (The label-filtered ts_mrange / ts_mget read the
- * view itself; LabelIndexSpec pins their single parquet scan.)
+ * view registration. The `samples` accessor is the only reader of the
+ * view in `GraftFunctions`, so no table function keeps a path of its own.
  */
 class SeriesStoreSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   import SparkTest._
@@ -61,7 +62,12 @@ class SeriesStoreSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
         s"SELECT * FROM ts_range('click_7', $T0, $T31, 'AGGREGATION avg 86400000')",
         "SELECT * FROM ts_get('click_7')",
         "SELECT * FROM ts_info('click_7')",
-        s"SELECT * FROM ts_rate($T0, $T31, 86400000)")) {
+        s"SELECT * FROM ts_rate($T0, $T31, 86400000)",
+        s"SELECT * FROM ts_mrange('type=click', $T0, $T31, 'AGGREGATION avg 86400000')",
+        s"SELECT * FROM ts_mrange('type=(click,view)', $T0, $T31, " +
+          "'AGGREGATION max 86400000 GROUPBY user REDUCE sum')",
+        s"SELECT * FROM ts_mrange('type=(click,view)', $T0, $T31, 'avg', 86400000, 'type', 'max')",
+        "SELECT * FROM ts_mget('type=(click,view)')")) {
       val plan = executed(q)
       assert(collectWithSubqueries(plan) { case m: InMemoryTableScanExec => m }.nonEmpty, s"$q\n$plan")
       assert(collectWithSubqueries(plan) { case f: FileSourceScanExec => f }.isEmpty, s"$q\n$plan")
@@ -101,5 +107,39 @@ class SeriesStoreSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       write(Seq(("k", 1L, 10.0), ("k", 3L, 30.0), ("k", 4L, 40.0)).toDF("series", "ts", "value"))
       assert(values() == Seq(10.0, 30.0, 40.0))
     } finally TSModel.seriesStore(spark.table(GraftFunctions.SamplesView)).unpersist()
+  }
+
+  private val SamplesRead = """table\((\w+\.)?SamplesView\)""".r
+
+  /** `path:line` of every read of the samples view in a `.scala` file
+    * under `root`, with the line. */
+  private def samplesReads(root: Path): Seq[(String, String)] = {
+    val files = Files.walk(root)
+    try files.iterator.asScala.filter(_.toString.endsWith(".scala")).toSeq.sorted
+      .flatMap { p =>
+        Files.readAllLines(p).asScala.zipWithIndex.collect {
+          case (line, i) if SamplesRead.findFirstIn(line).nonEmpty => (s"$p:${i + 1}", line.trim)
+        }
+      }
+    finally files.close()
+  }
+
+  test("the samples accessor is the one reader of the samples view in graft.functions") {
+    val dir = Paths.get("src/main/scala/graft/functions")
+    assume(Files.isDirectory(dir), "src/main not under the working directory")
+    val reads = samplesReads(dir)
+    assert(reads.size == 1 && reads.head._2.startsWith("private def samples("),
+      s"read the samples view through GraftFunctions.samples:\n${reads.map(_._1).mkString("\n")}")
+  }
+
+  test("negative control: a second read of the samples view is caught") {
+    val dir = Files.createTempDirectory("samples_lint_")
+    val copy = dir.resolve("Copy.scala")
+    Files.write(copy, Seq(
+      "private def samples(spark: SparkSession): DataFrame = TSModel.seriesStore(spark.table(SamplesView))",
+      "Multi.mget(s.table(SamplesView), s.table(LabelsView), preds)",
+      "spark.table(GraftFunctions.SamplesView)",
+      "s.table(LabelsView)").asJava)
+    assert(samplesReads(dir).map(_._1) == Seq(s"$copy:1", s"$copy:2", s"$copy:3"))
   }
 }
